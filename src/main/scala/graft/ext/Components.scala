@@ -39,15 +39,29 @@ object Components {
     componentsWithRounds(edges, aCol, bCol, maxIters)._1
 
   /** Edge ceiling for the driver union-find fast path (rows; conf
-    * `graft.cc.driverMaxEdges`, 0 disables). 200k edges collect to a
-    * few MB — comfortably bounded driver work — while every graph
-    * above it takes the distributed rounds unchanged. Micro-batch
-    * near-dup graphs (the overwhelmingly common case) are thousands of
-    * edges, and for them the fast path replaces ~15 tiny jobs (the
-    * two-leg union/distinct/checkpoint + 3 jobs per label round) with
-    * ONE collect.
+    * `graft.cc.driverMaxEdges`, an integer in [0, Int.MaxValue - 1], 0
+    * disables). 200k edges collect to a few MB — comfortably bounded
+    * driver work — while every graph above it takes the distributed
+    * rounds unchanged. Micro-batch near-dup graphs (the overwhelmingly
+    * common case) are thousands of edges; for them the fast path is ONE
+    * bounded collect of the edge plan (one job plus the AQE stage jobs
+    * of the verify join that produces the edges), where the loop costs
+    * a two-leg union/distinct checkpoint plus 3 jobs per label round.
     */
-  val DriverMaxEdgesDefault: Long = 200000L
+  val DriverMaxEdgesDefault: Int = 200000
+
+  /** `graft.cc.driverMaxEdges`, failing loudly on a value outside the
+    * accepted range instead of a raw NumberFormatException.
+    */
+  private def driverMaxEdges(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.conf.getOption("graft.cc.driverMaxEdges").fold(DriverMaxEdgesDefault) {
+      raw =>
+        val v = raw.trim.toIntOption
+        require(v.exists(x => x >= 0 && x < Int.MaxValue),
+          s"graft.cc.driverMaxEdges must be an integer in [0, ${Int.MaxValue - 1}] " +
+            s"(0 disables the driver fast path); got '$raw'")
+        v.get
+    }
 
   /** [[components]] plus the number of rounds run — spec-facing, so the
     * O(log n) convergence bound is pinned by a test, not a comment.
@@ -62,25 +76,29 @@ object Components {
     // shuffle, the labels init and every per-round job. Labels return
     // as a local relation, so downstream anti-joins broadcast for free.
     val sparkE = edges.sparkSession
-    val maxDriver = sparkE.conf.getOption("graft.cc.driverMaxEdges")
-      .map(_.toLong).getOrElse(DriverMaxEdgesDefault)
-    // ONE materialization of the (possibly expensive) edge plan, shared
-    // by the size probe, the fast path's collect, and — oversized — the
-    // loop's sym build (whose union otherwise re-executes the whole
-    // upstream verify join on its second leg). An eager localCheckpoint,
-    // not a limit probe: `limit(n).collect()` escalates through partial
-    // partition scans (1, 4, 16, … — a separate job each, re-running
-    // non-cached upstream work every step), where checkpoint + count +
-    // collect is one full pass plus two cache-read jobs.
-    val ed = edges
-      .select(col(aCol).cast("long").as("x"), col(bCol).cast("long").as("y"))
-      .localCheckpoint(true)
-    if (maxDriver > 0 && ed.count() <= maxDriver) {
-      val probe = ed.collect()
-      if (!probe.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-        return (driverComponents(sparkE, probe), 0)
-      // null-keyed: the loop's join semantics own that edge case
+    val maxDriver = driverMaxEdges(sparkE)
+    // cached: the bounded collect's job fills the cache, so the
+    // oversized or null-keyed fallback checkpoints from it instead of
+    // re-running the (possibly expensive) upstream verify join
+    val (ed, release) = org.apache.spark.sql.graft.GraftSqlShims.cachedBatch(
+      edges.select(col(aCol).cast("long").as("x"), col(bCol).cast("long").as("y")),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    // ONE bounded collect answers both "does it fit?" and "what is it?"
+    // (8 jobs on the benchmark's 2000-doc micro-batch: the collect plus
+    // the AQE stages of the verify join that produces the edges, which
+    // run as cachedBatch plans it). The fallback's checkpoint below
+    // reads the cache, and it also keeps the sym union from re-running
+    // the edge plan on its second leg.
+    val fast =
+      (if (maxDriver > 0) graft.core.BoundedCollect.rows(ed, maxDriver) else None)
+        // null-keyed: the loop's join semantics own that edge case
+        .filterNot(_.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+    if (fast.isDefined) {
+      release()
+      return (driverComponents(sparkE, fast.get), 0)
     }
+    val edC = ed.localCheckpoint(true)
+    release()
     // Eager localCheckpoint, not persist: each round's plan embeds
     // several copies of the previous round's (labels joins a groupBy over
     // labels, then joins itself twice), so without lineage TRUNCATION the
@@ -88,8 +106,8 @@ object Components {
     // exponential — the classic iterative-DataFrame trap. Checkpointing
     // materializes each stage and replaces its plan with a flat scan,
     // keeping every round O(edges).
-    val sym = ed
-      .union(ed.select(col("y").as("x"), col("x").as("y")))
+    val sym = edC
+      .union(edC.select(col("y").as("x"), col("x").as("y")))
       .distinct()
       .localCheckpoint(true)
     var labels = sym.select(col("x").as("id")).distinct()

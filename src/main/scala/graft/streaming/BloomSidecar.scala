@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Bloom-filter sidecar files for an append-only segmented index — the
@@ -114,6 +115,46 @@ private[graft] object BloomSidecar {
         BloomFilter.create(ExpectedItems, Fpp))(
       (f, row) => { f.putString(row.getString(0)); f },
       (a, b) => { a.mergeInPlace(b); a })
+
+  /** The index rows a batch probe needs, or None when nothing can
+    * match — the gate-and-probe step shared by [[Ingest]] (fingerprints)
+    * and both [[NearDupSink]] folds (band hashes, bucket ids).
+    *
+    * The merged sidecar at `dir` filters `rows` MAP-SIDE on `bloomKey`
+    * (the sidecar's key expression): a row it rejects cannot match any
+    * bloomed segment (an unbloomed segment is the crash window routing
+    * has always tolerated). ONE bounded collect then returns the
+    * bloom-positive distinct `keyCol` values, and that single job
+    * decides everything: none → the index at `segDir` is never read; at
+    * most [[Ingest.PointProbeMaxKeys]] → a stats+bloom pruned segment
+    * read (VERDICT r10 #4); more → the full snapshot read. Callers
+    * probe ALL of `rows` against the result: every row that can match
+    * has a bloom-positive key, and every index row under such a key is
+    * read, so routing and pruning never change a probe's answer.
+    */
+  def probe(spark: SparkSession, dir: String, segDir: String,
+            rows: DataFrame, bloomKey: Column,
+            keyCol: String): Option[DataFrame] = {
+    // read first, even for an empty index: keeps the cache's per-fold
+    // cost at one listing plus the sidecars appended since the last call
+    val filter = readCached(spark, dir)
+    if (graft.ext.ManifestTable.snapshot(spark, segDir).files.isEmpty) None
+    else {
+      val hot = filter.fold(rows) { bf =>
+        val bc = spark.sparkContext.broadcast(bf)
+        val mightHit = udf((k: String) =>
+          k != null && bc.value.mightContainString(k))
+        rows.filter(mightHit(bloomKey.cast("string")))
+      }
+      graft.core.BoundedCollect.distinct(hot, keyCol,
+          Ingest.PointProbeMaxKeys) match {
+        case Some(keys) if keys.isEmpty => None
+        case Some(keys) => Some(graft.ext.ManifestTable.readWhere(spark,
+          segDir, graft.ext.ManifestTable.inPredicate(keyCol, keys.toSeq)))
+        case None => Some(graft.ext.ManifestTable.read(spark, segDir))
+      }
+    }
+  }
 
   /** Fold many sidecars into one. Deletes only the files listed at its
     * snapshot, so a sidecar appended mid-fold survives; a crash between

@@ -89,18 +89,6 @@ object Ingest {
           org.apache.spark.sql.types.StringType))))
   }
 
-  /** The index rows whose `fp` is one of `fps` — a stats+bloom-pruned
-    * segment read; exact for any join keyed on those fingerprints.
-    */
-  private def readIndexFor(spark: SparkSession, indexDir: String,
-                           fps: Seq[String]): DataFrame = {
-    val seg = segmentsPath(indexDir)
-    if (graft.ext.ManifestTable.snapshot(spark, seg).files.isEmpty)
-      readIndex(spark, indexDir)
-    else graft.ext.ManifestTable.readWhere(spark, seg,
-      graft.ext.ManifestTable.inPredicate("fp", fps))
-  }
-
   /** Periodic index maintenance: many per-batch segments → few
     * right-sized files CLUSTERED on `fp` (each compacted file then
     * covers a near-disjoint fingerprint range, so even stats-only
@@ -187,55 +175,27 @@ object Ingest {
     * as with any content-keyed dedup.
     *
     * Returns the persisted survivors plus a release thunk for the
-    * bloom-routed path's intermediate (the dedup'd+fingerprinted batch,
-    * persisted so the gate action, the fresh branch, and the candidate
-    * branch share ONE dropDuplicates shuffle instead of three) — callers
-    * invoke it after their first action materializes the survivors.
+    * dedup'd+fingerprinted batch (persisted so the probe's bounded
+    * collect and the anti-join share ONE dropDuplicates shuffle) —
+    * callers invoke it after their first action materializes the
+    * survivors.
     */
   private def dedupQuality(batch: DataFrame, indexDir: String,
                            textCol: String): (DataFrame, () => Unit) = {
     val spark = batch.sparkSession
-    // readCached: steady-state cost per micro-batch is one directory
-    // listing + one new-sidecar open, not O(#segments) opens (VERDICT
-    // r9 #5); stale-positive sharing is safe by the sidecar contract
-    val (deduped, release) = BloomSidecar.readCached(spark, bloomPath(indexDir)) match {
-      case None =>
-        (StreamDedup.dedupAgainstIndex(
-          batch.dropDuplicates(Seq(textCol)), readIndex(spark, indexDir),
-          textCol), () => ())
-      case Some(bf) =>
-        val bc = spark.sparkContext.broadcast(bf)
-        // null fp (null text) routes "fresh", matching left_anti's
-        // null-never-matches; the quality filter drops it either way
-        val mightDup = udf((fp: String) =>
-          fp != null && bc.value.mightContainString(fp))
-        val local = graft.core.Caches.track(
-          batch.dropDuplicates(Seq(textCol))
-            .withColumn("fp", md5(col(textCol)))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-        val candidates = local.filter(mightDup(col("fp")))
-        val fresh = local.filter(!mightDup(col("fp"))).drop("fp")
-        // bounded candidate sets (the common case — only rows the global
-        // bloom flagged) read the index PRUNED to segments that might
-        // hold a candidate fingerprint; big sets fall back to the full
-        // snapshot read. No distinct(): `local` is already text-deduped,
-        // so its md5 fingerprints are unique — the distinct was a pure
-        // extra shuffle plus the CollectLimit escalation jobs over it
-        // (guide §2.4: remove shuffles on already-unique data)
-        val candFps = candidates.select("fp")
-          .take(PointProbeMaxKeys + 1)
-        val out =
-          if (candFps.isEmpty) fresh // zero candidates: index never read
-          else {
-            val idx =
-              if (candFps.length <= PointProbeMaxKeys)
-                readIndexFor(spark, indexDir, candFps.map(_.getString(0)).toSeq)
-              else readIndex(spark, indexDir)
-            fresh.unionByName(
-              candidates.join(idx, Seq("fp"), "left_anti").drop("fp"))
-          }
-        (out, () => { local.unpersist(); () })
-    }
+    // a null fp (null text) never matches, so left_anti keeps it; the
+    // quality filter drops it either way
+    val local = graft.core.Caches.track(
+      batch.dropDuplicates(Seq(textCol))
+        .withColumn("fp", md5(col(textCol)))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+    // every row is anti-joined: routing only picks which index rows
+    // the probe reads (none, the bloom-positive fingerprints', or all)
+    val deduped = BloomSidecar.probe(spark, bloomPath(indexDir),
+        segmentsPath(indexDir), local, col("fp"), "fp")
+      .fold(local)(idx => local.join(idx, Seq("fp"), "left_anti"))
+      .drop("fp")
+    val release = () => { local.unpersist(); () }
     (graft.core.Caches.track(
       QualityFilter.withQualityAudit(deduped, textCol)
         .filter(col("keep"))
@@ -254,7 +214,7 @@ object Ingest {
     * backfill ([[ingestBatchCommitted]]) still lands after a replay —
     * idempotence belongs to the corpus commit, duplicates here are
     * harmless (an anti-join is idempotent in its right side). The
-    * `bloomCols` per-FILE blooms serve [[readIndexFor]]'s point-probe
+    * `bloomCols` per-FILE blooms serve [[BloomSidecar.probe]]'s point-probe
     * pruning; the merged [[BloomSidecar]] keeps serving map-side
     * routing — different grain, both O(batch) to maintain.
     */

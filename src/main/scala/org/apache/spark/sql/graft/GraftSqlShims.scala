@@ -32,6 +32,26 @@ object GraftSqlShims {
       .internalCreateDataFrame(rdd, df.schema, isStreaming = false)
   }
 
+  /** [[asBatch]] over rows cached at the RDD level, plus the thunk that
+    * releases them. Planning `df` here runs its AQE stage jobs (under
+    * the caller's call site, as a Dataset action would name them); the
+    * cache then fills inside the first job that reads the frame and adds
+    * no job of its own, where a `Dataset.persist` of a frame about to be
+    * collected cost two more jobs per call on the corpus_ingest
+    * benchmark.
+    */
+  def cachedBatch(df: org.apache.spark.sql.DataFrame,
+                  level: org.apache.spark.storage.StorageLevel)
+  : (org.apache.spark.sql.DataFrame, () => Unit) = {
+    val sc = df.sparkSession.sparkContext
+    val site = sc.getCallSite()
+    val rdd = withCallSite(sc, site.shortForm, site.longForm)(
+      df.queryExecution.toRdd).map(_.copy()).persist(level)
+    (df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rdd, df.schema, isStreaming = false),
+      () => { rdd.unpersist(blocking = false); () })
+  }
+
   /** A computed BATCH frame re-marked as a streaming micro-batch — what
     * a V1 `Source.getBatch` must return for a part it cannot express as
     * a file-list relation (the restore commit's synthesized snapshot
@@ -44,6 +64,20 @@ object GraftSqlShims {
     df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, df.schema, isStreaming = true)
   }
+
+  /** Runs `body` with its jobs' call site pinned to (`short`, `long`)
+    * — `SparkContext.setCallSite(CallSite)` is `private[spark]`. This is
+    * how an engine helper that runs its own jobs names its CALLER in
+    * the UI and in listener events, as a Dataset action does. An outer
+    * call site, when one is set, is left in force.
+    */
+  def withCallSite[T](sc: org.apache.spark.SparkContext, short: String,
+                      long: String)(body: => T): T =
+    if (sc.getLocalProperty(org.apache.spark.util.CallSite.LONG_FORM) != null) body
+    else {
+      sc.setCallSite(org.apache.spark.util.CallSite(short, long))
+      try body finally sc.clearCallSite()
+    }
 
   /** `DataType.sameType` (type equality ignoring nullability) is
     * `private[sql]` — the schema-align paths compare through this seam

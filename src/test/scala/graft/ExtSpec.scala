@@ -637,6 +637,34 @@ class ExtSpec extends SparkSpec {
     } finally spark.conf.unset("graft.cc.driverMaxEdges")
   }
 
+  test("components' null-keyed fallback evaluates the edge plan once") {
+    // the bounded collect reads every edge, finds a null key and hands
+    // the graph to the loop: the loop must reuse those rows, not re-run
+    // the (in a fold: verify-join) plan that produced them
+    val seen = spark.sparkContext.longAccumulator("components-edge-rows")
+    val tick = udf((a: Long) => { seen.add(1); a }).asNondeterministic()
+    val edges = spark.range(0, 6, 1, 2).select(tick($"id").as("a"),
+      when($"id" =!= 5, $"id" + 1).as("b"))
+    val (labels, rounds) = graft.ext.Components.componentsWithRounds(edges)
+    assert(rounds > 0, "a null-keyed graph must take the distributed loop")
+    assert(labels.count() > 0)
+    assert(seen.value === 6L)
+  }
+
+  test("components rejects a driver edge ceiling outside its range loudly") {
+    val edges = Seq((1L, 2L)).toDF("a", "b")
+    for (bad <- Seq("lots", "-1", "2147483647")) {
+      spark.conf.set("graft.cc.driverMaxEdges", bad)
+      try {
+        val e = intercept[IllegalArgumentException](
+          graft.ext.Components.components(edges))
+        assert(e.getMessage.contains("graft.cc.driverMaxEdges") &&
+          e.getMessage.contains("[0, 2147483646]") &&
+          e.getMessage.contains(s"'$bad'"), e.getMessage)
+      } finally spark.conf.unset("graft.cc.driverMaxEdges")
+    }
+  }
+
   test("nearDupKeep keeps one representative per near-dup cluster") {
     val dup = corpus.filter($"id" < 100)
       .select(($"id" + 500).as("id"), $"text") // exact copies of the 4 base docs

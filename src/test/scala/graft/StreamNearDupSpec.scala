@@ -291,6 +291,50 @@ class StreamNearDupSpec extends SparkSpec {
     assert(segCount() === 8L)
   }
 
+  test("committed near-dup sink on batches past the point-probe key bound") {
+    // 4 bands x 300 docs = ~1200 band hashes per batch, past
+    // Ingest.PointProbeMaxKeys (1024) — the benchmark's batch shape,
+    // which the small fixtures above never reach
+    val root = java.nio.file.Files.createTempDirectory("graft-ndbig").toString
+    val (corpusDir, indexDir) = (s"$root/corpus", s"$root/index")
+    val rnd = new scala.util.Random(17)
+    def doc(): Seq[String] = Seq.fill(60 + rnd.nextInt(20))(s"w${rnd.nextInt(5000)}")
+    val texts0 = Seq.fill(300)(doc())
+    val b0 = texts0.zipWithIndex.map { case (t, i) => (i.toLong, t.mkString(" ")) }
+      .toDF("id", "text")
+    // b1: 280 fresh docs plus 20 planted near-dups of b0 docs (last word
+    // replaced: one 3-shingle of ~70 differs)
+    val planted = (0 until 20).map(i =>
+      (1000L + i, (texts0(i * 7).init :+ "zzplanted").mkString(" ")))
+    val fresh = (0 until 280).map(i => (2000L + i, doc().mkString(" ")))
+    val b1 = (planted ++ fresh).toDF("id", "text")
+    val keys = StreamNearDup.buildMinHashIndex(b1, "id", "text")
+      .select("band_hash").distinct().count()
+    assert(keys > graft.streaming.Ingest.PointProbeMaxKeys,
+      s"fixture must exceed the point-probe bound, has $keys band hashes")
+    def corpusIds() = graft.ext.ManifestTable.read(spark, corpusDir)
+      .select("id").as[Long].collect().toSet
+    def segCount() =
+      graft.streaming.NearDupSink.readIndex(spark, indexDir).get.count()
+    assert(graft.streaming.NearDupSink.ingestBatchCommitted(
+      b0, corpusDir, indexDir, "b0"))
+    assert(corpusIds() === (0L until 300L).toSet)
+    assert(graft.streaming.NearDupSink.ingestBatchCommitted(
+      b1, corpusDir, indexDir, "b1"))
+    // planted near-dups drop against the index, every fresh doc lands
+    assert(corpusIds() === (0L until 300L).toSet ++ fresh.map(_._1))
+    val segs = segCount()
+    assert(segs === 4L * 580)
+    // replay: every survivor's band hashes are bloom-positive now (more
+    // than the point-probe bound, so the probe reads the full index) and
+    // each probes est 1.0 against its own indexed copy — nothing lands,
+    // not even index rows
+    assert(!graft.streaming.NearDupSink.ingestBatchCommitted(
+      b1, corpusDir, indexDir, "b1"))
+    assert(corpusIds().size === 580)
+    assert(segCount() === segs)
+  }
+
   test("committed embed sink: corpus exactly-once by batch id, bucket index self-heals") {
     val root = java.nio.file.Files.createTempDirectory("graft-ndecommit").toString
     val (corpusDir, indexDir) = (s"$root/corpus", s"$root/index")
