@@ -9,11 +9,12 @@ import scala.annotation.tailrec
   * data files are immutable and written OUT OF VIEW, and a single
   * versioned manifest file names the table's exact current contents.
   *
-  * Why this exists: plain-directory sinks ([[Compact]], the
-  * [[graft.streaming.Ingest]] corpus) are honest about their windows —
+  * Why this exists: a bare parquet directory has three windows —
   * at-least-once appends after a crash, transiently-duplicated rows
-  * during compaction, readers racing writers. All three disappear when
-  * visibility is a manifest swap instead of a directory listing:
+  * during an in-place compaction, readers racing writers. All three
+  * disappear when visibility is a manifest swap instead of a directory
+  * listing, which is why every sink in the repo (the ingest corpus and
+  * its indexes, corpus stats, the vector store) commits through here:
   *
   *   - APPEND: data files land under `data/` with UUID names (invisible
   *     — readers only trust the manifest), then one new manifest version
@@ -25,8 +26,7 @@ import scala.annotation.tailrec
   *   - COMPACT: rewritten files commit in ONE manifest swap that drops
   *     the originals in the same version. A concurrent reader resolves
   *     either the old snapshot or the new one, never a mix, never a
-  *     duplicate — the atomicity [[Compact]] documents as impossible
-  *     for bare directories.
+  *     duplicate — an atomicity bare directories cannot offer.
   *   - ISOLATION: a reader pins the manifest version it resolved;
   *     every file it reads is immutable, so its snapshot cannot change
   *     underneath the query.
@@ -1790,13 +1790,6 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     conf.getOption("graft.write.rebalance").forall(_.toBoolean) &&
       conf.get("spark.sql.adaptive.enabled", "true").toBoolean
   }
-
-  /** [[rebalanced]] for PLAIN parquet sinks outside the manifest layer
-    * (the ingest corpus appends): same conf/AQE gate, no caller-layout
-    * probe — those sinks own their frames end to end.
-    */
-  private[graft] def rebalancedPlain(df: DataFrame): DataFrame =
-    if (rebalanceOn(df)) df.hint("rebalance") else df
 
   /** True when the staged frame already carries a DELIBERATE output
     * layout the rebalance must not override: a `coalesce(n)` (an

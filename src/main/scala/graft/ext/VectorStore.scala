@@ -3,26 +3,25 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Centroid-partitioned vector store — the PERSISTENCE layer under the
-  * IVF search family: vectors land in parquet partitioned by their
-  * coarse-quantizer cell (`centroid_id=<c>/` directories), so a search
-  * probing `nprobe` cells is a PARTITION-PRUNED scan reading nprobe/k of
-  * the corpus from disk — the listing never touches the other
-  * directories (the spec pins `PartitionFilters` in the executed plan).
-  * At 100 TB this is the difference between an ANN query costing a full
-  * corpus scan and costing only its probed cells; the same layout serves
-  * batch backfill and a streaming `foreachBatch(append)` sink.
+/** Cell-clustered vector store — the PERSISTENCE layer under the IVF
+  * search family: vectors land in a [[ManifestTable]] with their
+  * coarse-quantizer cell as a plain `centroid_id` column, each append
+  * clustered by (centroid_id, id) into near-disjoint per-file ranges, so
+  * a search probing `nprobe` cells prunes on the driver against the
+  * manifest's commit-time file stats and reads ~nprobe/k of the corpus
+  * from disk (the spec pins the executed scan's file count). At 100 TB
+  * this is the difference between an ANN query costing a full corpus
+  * scan and costing only its probed cells; the same store serves batch
+  * backfill and a streaming `foreachBatch` sink keyed by epoch.
   *
   * Centroids FREEZE at store creation (the first append seeds them from
   * its k lowest-id vectors, the same seeding as [[Similarity.withCell]];
   * pass pre-trained [[Similarity.kmeansCentroids]] output via `init` for
-  * trained cells) and persist under `_centroids` — an underscore path,
-  * invisible to the partitioned read. Every later append assigns
-  * against the SAME centroids, so cells stay consistent across appends
-  * and the assignment is a broadcast projection over the batch — no
-  * shuffle, O(batch) per append. Re-clustering is a rebuild into a new
-  * store directory (standard for IVF indexes — cell identity IS the
-  * physical layout).
+  * trained cells) and persist under `_centroids`, beside the manifest
+  * table. Every later append assigns against the SAME centroids, so
+  * cells stay consistent across appends and the assignment is a
+  * broadcast projection over the batch — no shuffle, O(batch) per
+  * append. Re-clustering is [[retrain]]: one atomic rewrite.
   */
 object VectorStore {
 
@@ -102,14 +101,14 @@ object VectorStore {
       .write.mode("errorifexists").parquet(centroidsPath(dir))
 
   /** Freeze a product-quantization codebook — (sub, cid, cv) as produced
-    * by [[Similarity.pqTrain]] — under the store's `_pq` path (underscore
-    * = invisible to the partitioned read, like `_centroids`). Must be
+    * by [[Similarity.pqTrain]] — under the store's `_pq` path, beside
+    * `_centroids`. Must be
     * called BEFORE the appends whose rows should carry codes: the
     * codebook freezes like the coarse centroids do, every append encodes
     * against the same one, and re-training is a rebuild into a new store
     * directory. Appends that PREDATE the codebook have no `pq_code`
     * column; [[searchPq]] falls back to the exact path on such stores
-    * (same contract as the q8 schema note on [[append]]).
+    * (same contract as the q8 schema note on [[appendCommitted]]).
     */
   def initPq(codebook: DataFrame, dir: String): Unit =
     codebook.select(col("sub").cast("int").as("sub"),
@@ -125,34 +124,8 @@ object VectorStore {
     else None
   }
 
-  /** Append a batch of vectors. The first append on an uninitialized
-    * store seeds centroids from its `k` lowest-id vectors — literally the
-    * k smallest id VALUES present (`orderBy(id).limit(k)`), not ids
-    * 0..k-1, so a first batch whose ids start anywhere still seeds a
-    * full centroid set (VERDICT r9 #2: the old `id < k` filter seeded an
-    * EMPTY set for a batch starting at 1000, silently breaking the
-    * store). Deterministic and oracle-replayable; later appends ignore
-    * `k` and assign against the frozen centroids.
-    *
-    * Schema note: appends since the q8 column landed write (vec, q8,
-    * scale) rows; a store whose EARLIER appends predate q8 has
-    * mixed-schema files, and a plain parquet read of such a store infers
-    * a file-sample-dependent schema. [[searchQuantized]] falls back to
-    * the exact float path when q8 is absent from the inferred schema;
-    * for the quantized path on an old store, rebuild it (re-append into
-    * a fresh directory — compaction alone inherits the mixed schema).
-    */
-  def append(vecs: DataFrame, dir: String, k: Int = 16,
-             idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val assigned = encodeBatch(vecs, dir, k, idCol, vecCol)
-    assigned.write.partitionBy("centroid_id").mode("append").parquet(dir)
-  }
-
-  /** The shared append-side pipeline: seed-or-load centroids, coarse
-    * assignment, q8, PQ codes when a codebook is frozen. Both layouts
-    * ([[append]]'s hive-partitioned directories and
-    * [[appendCommitted]]'s manifest table) write exactly this frame, so
-    * a search runs identically against either.
+  /** The append-side pipeline: seed-or-load centroids, coarse
+    * assignment, q8, PQ codes when a codebook is frozen.
     */
   private def encodeBatch(vecs: DataFrame, dir: String, k: Int,
                           idCol: String, vecCol: String): DataFrame = {
@@ -168,24 +141,33 @@ object VectorStore {
       .fold(assigned)(cb => withPq(assigned, vecCol, cb))
   }
 
-  /** [[append]] through a [[ManifestTable]] commit — ONE storage story
-    * for the vector store and the corpus/index tables (VERDICT r10 #5):
-    * the encoded batch clusters by (centroid_id, id) into near-disjoint
-    * per-file ranges and commits atomically under `batchId`, which buys
-    * the store everything the manifest layer gives every other sink —
-    * idempotent replay (a crash-repeated micro-batch is a no-op, where
-    * [[append]]'s bare directory append duplicates rows), snapshot
-    * isolation against concurrent compaction, TIME TRAVEL (search a
-    * pinned historical version via `asOfVersion`), and stats+bloom
-    * pruning from the same commit-time footer harvest.
+  /** Append a batch of vectors as ONE atomic [[ManifestTable]] commit
+    * under `batchId`: the encoded batch clusters by (centroid_id, id)
+    * into near-disjoint per-file ranges, which buys the store everything
+    * the manifest layer gives every other sink — idempotent replay (a
+    * crash-repeated micro-batch is a no-op), snapshot isolation against
+    * concurrent compaction, TIME TRAVEL (search a pinned historical
+    * version via `asOfVersion`), and stats+bloom pruning from the same
+    * commit-time footer harvest: a probe's `centroid_id IN (cells)`
+    * prunes files on the driver against the in-memory manifest, and the
+    * rerank's `id IN (candidates)` also prunes via the per-file id
+    * blooms. Returns false on an absorbed (replayed) `batchId`.
     *
-    * Cell pruning moves from hive `PartitionFilters` to manifest stats:
-    * `centroid_id` is a plain clustered column, so a probe's
-    * `centroid_id IN (cells)` prunes files on the driver against the
-    * in-memory manifest — same O(probed cells) scan, and the rerank's
-    * `id IN (candidates)` NOW also prunes via the per-file id blooms,
-    * which the hive layout could never do. Returns false on an absorbed
-    * (replayed) `batchId`.
+    * The first append on an uninitialized store seeds centroids from its
+    * `k` lowest-id vectors — literally the k smallest id VALUES present
+    * (`orderBy(id).limit(k)`), not ids 0..k-1, so a first batch whose
+    * ids start anywhere still seeds a full centroid set (VERDICT r9 #2:
+    * the old `id < k` filter seeded an EMPTY set for a batch starting
+    * at 1000, silently breaking the store). Deterministic and
+    * oracle-replayable; later appends ignore `k` and assign against the
+    * frozen centroids.
+    *
+    * Schema note: appends since the q8 column landed write (vec, q8,
+    * scale) rows. [[searchQuantized]] falls back to the exact float path
+    * when no commit carries q8; a store whose EARLIER appends predate q8
+    * reads those rows with a null q8, so for the quantized path on such
+    * a store, rebuild it (re-append into a fresh directory — compaction
+    * alone keeps the nulls).
     */
   def appendCommitted(vecs: DataFrame, dir: String, batchId: String,
                       k: Int = 16, idCol: String = "vec_id",
@@ -199,17 +181,10 @@ object VectorStore {
       dir, batchId, bloomCols = Seq(idCol))
   }
 
-  /** True when `dir` holds a manifest-committed store (vs the hive
-    * `centroid_id=` layout) — the read paths branch on this.
-    */
-  def isCommitted(spark: SparkSession, dir: String): Boolean =
-    ManifestTable.snapshot(spark, dir).files.nonEmpty
-
-  /** Re-cluster a manifest-backed store's accumulated append files into
+  /** Re-cluster the store's accumulated append files into
     * ~`targetFileBytes` files ordered by (centroid_id, id) — one atomic
-    * manifest swap, id blooms rebuilt. The committed-layout sibling of
-    * [[compactCells]]; skipping power is BUILT here (tight per-file cell
-    * ranges), appends pay no write-path tax.
+    * manifest swap, id blooms rebuilt. Skipping power is BUILT here
+    * (tight per-file cell ranges), appends pay no write-path tax.
     */
   def compactCommitted(spark: SparkSession, dir: String,
                        targetFileBytes: Long = 128L * 1024 * 1024,
@@ -249,26 +224,10 @@ object VectorStore {
       .drop("allc")
   }
 
-  /** Compact every cell's accumulated small append files in place —
-    * [[Compact.compactParquet]] per `centroid_id=` leaf directory (the
-    * flat-layout rule applies per LEAF of a partitioned table; whole-
-    * table compaction would flatten the cells). Same concurrency
-    * contract as Compact: an append landing mid-compaction survives.
-    * Returns (input files, output files) summed over cells.
-    */
-  def compactCells(spark: SparkSession, dir: String,
-                   targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val fs = hadoopFs(spark, dir)
-    fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("centroid_id="))
-      .map(s => Compact.compactParquet(spark, s.getPath.toString, targetFileBytes))
-      .foldLeft((0, 0)) { case ((a, b), (x, y)) => (a + x, b + y) }
-  }
-
   /** Top-`topK` cosine neighbors of `q` among the vectors in its
     * `nprobe` nearest cells (squared-L2 cell ranking, cid tiebreak —
-    * the [[Similarity]] convention). The scan is partition-pruned to
-    * those cells; ties in the final cut break by ascending id. Emits
+    * the [[Similarity]] convention). The scan is file-pruned to those
+    * cells; ties in the final cut break by ascending id. Emits
     * (idCol, cos6).
     */
   def search(spark: SparkSession, dir: String, q: Seq[Double],
@@ -304,13 +263,13 @@ object VectorStore {
     * A store written before the q8 column existed has no `q8` field in
     * its schema; rather than fail inside the coarse pass, this falls
     * back to the exact float [[search]] (same results, full-width scan)
-    * — see the [[append]] schema note for the rebuild path.
+    * — see the [[appendCommitted]] schema note for the rebuild path.
     */
   def searchQuantized(spark: SparkSession, dir: String, q: Seq[Double],
                       nprobe: Int = 2, topK: Int = 10, rerank: Int = 4,
                       idCol: String = "vec_id", vecCol: String = "embedding",
                       excludeId: Option[Long] = None): DataFrame = {
-    if (!readStore(spark, dir).schema.fieldNames.contains("q8"))
+    if (!ManifestTable.read(spark, dir).schema.fieldNames.contains("q8"))
       return search(spark, dir, q, nprobe, topK, idCol, vecCol, excludeId)
     val qCol = array(q.map(lit): _*)
     val candidates = coarseCandidates(spark, dir, q, nprobe, topK * rerank,
@@ -329,11 +288,11 @@ object VectorStore {
     * k (dist², cid) structs, slice nprobe), the store scan joins the
     * exploded (query, cell) rows on `centroid_id`, and the per-query
     * top-k is a sorted-slice AGGREGATE (k-element lists through the
-    * shuffle, no global rank window). With dynamic partition pruning the
-    * probed-cells join prunes the scan to the UNION of all queries'
-    * cells at runtime; static pruning is impossible here because the
-    * cell set is data-dependent — this is exactly the query shape DPP
-    * exists for. Emits (qid, nn_rank, nn_id, cos4), rank 1-based by
+    * shuffle, no global rank window). The store scan is pruned to the
+    * UNION of all queries' cells: that set is data-dependent, but
+    * bounded by k (a PARAMETER — at most every centroid), so one tiny
+    * driver job collects it and the manifest prunes to just those
+    * cells' files. Emits (qid, nn_rank, nn_id, cos4), rank 1-based by
     * (cosine desc, id).
     *
     * `excludeSelf` (default true) drops corpus rows whose id equals the
@@ -362,18 +321,12 @@ object VectorStore {
             ce.getField("cid").cast("long").as("cid")))),
         x => x.getField("cid")), 1, nprobe))
       .select(col("qid"), col("q_vec"), explode(col("probe")).as("centroid_id"))
-    // Manifest store: the union of all queries' probed cells is bounded
-    // by k (a PARAMETER — at most every centroid), so one tiny driver
-    // job collects it and the scan prunes to just those cells' files;
-    // the hive layout gets the same effect from DPP on the join below.
+    val cells = qCells.select("centroid_id").distinct()
+      .collect().map(_.getLong(0))
     val store =
-      if (isCommitted(spark, dir)) {
-        val cells = qCells.select("centroid_id").distinct()
-          .collect().map(_.getLong(0))
-        if (cells.isEmpty) ManifestTable.read(spark, dir).where(lit(false))
-        else ManifestTable.readWhere(spark, dir,
-          ManifestTable.inPredicate("centroid_id", cells.toSeq))
-      } else spark.read.parquet(dir)
+      if (cells.isEmpty) ManifestTable.read(spark, dir).where(lit(false))
+      else ManifestTable.readWhere(spark, dir,
+        ManifestTable.inPredicate("centroid_id", cells.toSeq))
     val probed = store.join(broadcast(qCells), Seq("centroid_id"))
     (if (excludeSelf) probed.filter(col(idCol) =!= col("qid")) else probed)
       .select(col("qid"),
@@ -411,7 +364,7 @@ object VectorStore {
                idCol: String = "vec_id", vecCol: String = "embedding",
                excludeId: Option[Long] = None): DataFrame = {
     val cbOpt = readPqCodebook(spark, dir)
-    if (cbOpt.isEmpty || !readStore(spark, dir).schema.fieldNames.contains("pq_code"))
+    if (cbOpt.isEmpty || !ManifestTable.read(spark, dir).schema.fieldNames.contains("pq_code"))
       return search(spark, dir, q, nprobe, topK, idCol, vecCol, excludeId)
     val candidates = pqCoarse(spark, dir, q, nprobe, topK * rerank,
       idCol, excludeId).collect().map(_.getLong(0))
@@ -481,11 +434,10 @@ object VectorStore {
 
   /** The cell-pruned scan under both search paths: `q`'s `nprobe`
     * nearest cells by squared L2 (cid tiebreak — the [[Similarity]]
-    * convention), centroids ranked on the driver (k rows). On a hive
-    * store the cells prune as `PartitionFilters`; on a manifest store
-    * they prune driver-side against commit-time file stats, and a
-    * non-empty `candIds` (the rerank's bounded candidate set) ALSO
-    * prunes via the per-file id blooms before the pushed-down IN scan.
+    * convention), centroids ranked on the driver (k rows). The cells
+    * prune driver-side against commit-time file stats, and a non-empty
+    * `candIds` (the rerank's bounded candidate set) ALSO prunes via the
+    * per-file id blooms before the pushed-down IN scan.
     * `asOfVersion` pins a historical manifest version — time-travel
     * ANN: the search runs against the exact store as of that commit.
     */
@@ -502,28 +454,13 @@ object VectorStore {
       .map(r => (r.getLong(0), l2sq(r.getSeq[Double](1))))
       .sortBy { case (cid, d) => (d, cid) }
       .take(nprobe).map(_._1)
-    val base =
-      if (asOfVersion.nonEmpty || isCommitted(spark, dir)) {
-        val pred = ManifestTable.inPredicate("centroid_id", cells.toSeq) +
-          (if (candIds.nonEmpty)
-             " AND " + ManifestTable.inPredicate(idCol, candIds)
-           else "")
-        ManifestTable.readWhere(spark, dir, pred, asOfVersion)
-      } else {
-        val b = spark.read.parquet(dir)
-          .filter(col("centroid_id").isin(cells: _*))
-        if (candIds.nonEmpty) b.filter(col(idCol).isin(candIds: _*)) else b
-      }
+    val pred = ManifestTable.inPredicate("centroid_id", cells.toSeq) +
+      (if (candIds.nonEmpty)
+         " AND " + ManifestTable.inPredicate(idCol, candIds)
+       else "")
+    val base = ManifestTable.readWhere(spark, dir, pred, asOfVersion)
     excludeId.fold(base)(i => base.filter(col(idCol) =!= i))
   }
-
-  /** The store's rows under either layout — manifest snapshot when one
-    * exists, the hive directory tree otherwise. Schema checks and full
-    * scans go through here so both layouts serve every search path.
-    */
-  private def readStore(spark: SparkSession, dir: String): DataFrame =
-    if (isCommitted(spark, dir)) ManifestTable.read(spark, dir)
-    else spark.read.parquet(dir)
 
   /** Drift diagnostics for the frozen coarse quantizer: mean squared
     * distance of every stored vector to ITS cell's centroid (the
@@ -531,7 +468,7 @@ object VectorStore {
     * data distribution walks away from them) and the largest cell's
     * fraction of the corpus (frozen centroids funnel drifted data into
     * whichever old cells sit nearest, so imbalance is the smoking gun:
-    * a probe into a bloated cell scans a corpus-sized partition and the
+    * a probe into a bloated cell scans a corpus-sized cell and the
     * IVF pruning story collapses). One corpus scan, centroids broadcast.
     */
   final case class DriftStats(rows: Long, meanSqDist: Double,
@@ -541,7 +478,7 @@ object VectorStore {
                  vecCol: String = "embedding"): DriftStats = {
     val cents = readCentroids(spark, dir).getOrElse(
       throw new IllegalStateException(s"no vector store at $dir"))
-    val rows = readStore(spark, dir)
+    val rows = ManifestTable.read(spark, dir)
     val r = rows
       .join(broadcast(cents), rows("centroid_id") === cents("cid"))
       .agg(count(lit(1)).as("n"),
@@ -566,8 +503,7 @@ object VectorStore {
     * re-clustered by (centroid_id, id) with id blooms rebuilt), then
     * the `_centroids` directory flips by rename. q8/PQ codes ride along
     * unchanged (they encode the VECTOR, not the cell). Requires a
-    * manifest-committed store; the hive layout's cells ARE directories,
-    * so its re-cluster is a rebuild into a new store dir by design.
+    * non-empty store.
     *
     * Replays of an absorbed `opId` are no-ops (false). The swap is two
     * steps (data commit, then centroid rename): a search racing the
@@ -580,9 +516,8 @@ object VectorStore {
               k: Int = 16, iters: Int = 2,
               idCol: String = "vec_id", vecCol: String = "embedding",
               filesOut: Int = 8): Boolean = {
-    require(isCommitted(spark, dir),
-      s"retrain needs a manifest-committed store at $dir (the hive " +
-        "layout rebuilds into a new directory — cells are its paths)")
+    require(ManifestTable.snapshot(spark, dir).files.nonEmpty,
+      s"retrain needs a non-empty store at $dir")
     if (ManifestTable.snapshot(spark, dir).batchIds.contains(opId))
       return false
     val rows = ManifestTable.read(spark, dir)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ext.{MinHashLSH, Multimodal, Sampling, Similarity, TextAnalysis}
@@ -297,11 +297,12 @@ object ExtQueries {
   }
 
   /** Multi-batch replay of the self-maintaining corpus sink
-    * ([[graft.streaming.Ingest.ingestBatch]] — VERDICT r8 #3: the
+    * ([[graft.streaming.Ingest.ingestBatchCommitted]] — VERDICT r8 #3: the
     * cross-batch dedup/crash semantics were spec-only): the planted-PII
     * corpus splits into three deterministic micro-batches (doc_id % 3),
     * plus a cross-batch duplicate copy of every doc_id % 5 == 0 document
-    * planted ONE batch later; the batches fold through ingestBatch into
+    * planted ONE batch later; the batches fold through
+    * ingestBatchCommitted (batch i under id "b<i>") into
     * a fresh corpus+index and the FINAL corpus is the result.
     * First-arrival-by-batch-order decides survivors, so the DuckDB
     * oracle replays the sequential fold as one window rank over
@@ -310,7 +311,7 @@ object ExtQueries {
     * is never indexed, fails identically in its own batch, and leaves
     * the corpus unchanged either way). Texts are unique WITHIN each
     * batch by construction (the planted suffix embeds the source
-    * doc_id; the copy lands in a different batch), so ingestBatch's
+    * doc_id; the copy lands in a different batch), so the fold's
     * arbitrary in-batch dropDuplicates survivor never makes the result
     * nondeterministic.
     */
@@ -325,23 +326,24 @@ object ExtQueries {
     // stateless pass
     val planted = plantedPiiDocs(s, d).filter(col("doc_id") < 250)
     // one materialization of the fold input, shared by the three batch
-    // slices (see trainIngestReplay); released per bench pass
+    // slices (see trainIngestPlant); released per bench pass
     val seeded = graft.core.Caches.track(planted
       .select(col("doc_id").cast("long").as("doc_id"), col("text"),
         (col("doc_id") % 3).cast("long").as("b"))
       .unionByName(planted.filter(col("doc_id") % 5 === 0)
         .select((col("doc_id") + 1000000).cast("long").as("doc_id"),
           col("text"), ((col("doc_id") + 1) % 3).cast("long").as("b")))
-      .coalesce(8) // fixed-size plant; see trainIngestReplay
+      .coalesce(8) // fixed-size plant; see trainIngestPlant
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
     val (corpus, index) = (s"$root/corpus", s"$root/index")
     (0L until 3L).foreach { i =>
-      graft.streaming.Ingest.ingestBatch(
+      graft.streaming.Ingest.ingestBatchCommitted(
         seeded.filter(col("b") === i).select("doc_id", "text"),
-        corpus, index)
+        corpus, index, s"b$i")
     }
     seeded.unpersist()
-    s.read.parquet(corpus).select("doc_id", "text").orderBy("doc_id")
+    graft.ext.ManifestTable.read(s, corpus)
+      .select("doc_id", "text").orderBy("doc_id")
   }
 
   /** Batched multi-query search served FROM the persistent store: the
@@ -445,7 +447,7 @@ object ExtQueries {
   }
 
   /** Multi-batch replay of the self-maintaining NEAR-dup corpus sink
-    * ([[graft.streaming.NearDupSink.ingestBatch]]): batch 0 is a
+    * ([[graft.streaming.NearDupSink.ingestBatchCommitted]]): batch 0 is a
     * two-level planted corpus over a document subset (each original with
     * its drop-8 mutation — exercising within-batch keep-one), batch 1 is
     * the drop-16 mutations (near-dup to batch 0's surviving originals —
@@ -465,11 +467,11 @@ object ExtQueries {
       new java.net.URI(root), s.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(root), true)
     // one scan of the planted subset, shared by b0's two legs and b1
-    // (see trainIngestReplay); released per bench pass
+    // (see trainIngestPlant); released per bench pass
     val docs = graft.core.Caches.track(
       t(s, d, "documents").filter(col("doc_id") < 100)
         .select(col("doc_id"), col("text"))
-        .coalesce(8) // fixed-size plant; see trainIngestReplay
+        .coalesce(8) // fixed-size plant; see trainIngestPlant
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
     val b0 = docs.select(col("doc_id").cast("long").as("id"), col("text"))
       .unionByName(docs.select((col("doc_id") + 100000).cast("long").as("id"),
@@ -477,15 +479,15 @@ object ExtQueries {
     val b1 = docs.select((col("doc_id") + 200000).cast("long").as("id"),
       expr("substring(text, 1, length(text) - 16)").as("text"))
     val (corpus, index) = (s"$root/corpus", s"$root/index")
-    graft.streaming.NearDupSink.ingestBatch(b0, corpus, index, "id", "text")
-    graft.streaming.NearDupSink.ingestBatch(b1, corpus, index, "id", "text")
+    graft.streaming.NearDupSink.ingestBatchCommitted(b0, corpus, index, "b0")
+    graft.streaming.NearDupSink.ingestBatchCommitted(b1, corpus, index, "b1")
     docs.unpersist()
-    s.read.parquet(corpus).select("id").orderBy("id")
+    graft.ext.ManifestTable.read(s, corpus).select("id").orderBy("id")
   }
 
   /** Incremental corpus-statistics fold ([[graft.streaming.StatsSink]]):
     * documents split into 3 deterministic micro-batches (doc_id % 3),
-    * each appending its per-language partial-aggregate segment; the
+    * each committing its per-language partial-aggregate segment; the
     * result is the merge-on-read total. The oracle is a SINGLE-PASS
     * DuckDB aggregate over the whole table — hash-equality certifies
     * that the per-batch partials fold to exactly the one-shot answer
@@ -502,9 +504,10 @@ object ExtQueries {
     fs.delete(new org.apache.hadoop.fs.Path(root), true)
     val docs = t(s, d, "documents")
     (0L until 3L).foreach { i =>
-      graft.streaming.StatsSink.append(docs.filter(col("doc_id") % 3 === i), root)
+      graft.streaming.StatsSink.appendCommitted(
+        docs.filter(col("doc_id") % 3 === i), root, s"b$i")
     }
-    graft.streaming.StatsSink.read(s, root).orderBy("lang")
+    graft.streaming.StatsSink.readCommitted(s, root).orderBy("lang")
   }
 
   /** Cell-pruned ANN search over the MANIFEST-COMMITTED
@@ -513,8 +516,8 @@ object ExtQueries {
     * consistently; batch ids make a replay a no-op), the query vector's
     * 2 nearest cells are probed, and only the files whose commit-time
     * stats admit those cells are scanned (VectorStoreSpec pins
-    * `pruneInfo`; the hive `PartitionFilters` layout remains covered in
-    * spec). The oracle assigns every vector to the same seeded
+    * `pruneInfo` and the executed scan's file count). The oracle assigns
+    * every vector to the same seeded
     * centroids and takes the same (cos DESC, id) top-10 inside the
     * probed cells — layout changes nothing about search semantics.
     */
@@ -524,9 +527,8 @@ object ExtQueries {
       new java.net.URI(root), s.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(root), true)
     val e = t(s, d, "embeddings")
-    // manifest-committed store (VERDICT r10 #5): same encoded rows, but
-    // appends are atomic idempotent commits and the probe prunes files
-    // from manifest stats instead of hive PartitionFilters
+    // manifest-committed store (VERDICT r10 #5): appends are atomic
+    // idempotent commits and the probe prunes files from manifest stats
     graft.ext.VectorStore.appendCommitted(
       e.filter(col("vec_id") < 1000), root, "b0")
     graft.ext.VectorStore.appendCommitted(
@@ -611,158 +613,121 @@ object ExtQueries {
       .orderBy(col("cos6").desc, col("vec_id"))
   }
 
-  /** The COMPLETE training-data ingest fold
-    * ([[graft.streaming.Ingest.ingestBatchFull]]): exact dedup → quality
-    * filter → PII scrub → near-dup dedup, both indexes self-maintaining,
-    * folded over 2 deterministic batches. The plant layers every stage:
-    * exact copies of every doc_id % 7 = 0 document land one batch later
-    * (killed by the exact index), drop-8 near-mutations of every
-    * doc_id % 9 = 0 document land one batch later (killed by the
-    * signature probe on SCRUBBED text), quality failures drop
-    * per-batch, PII scrubs everywhere. The DuckDB replay collapses the
-    * exact stage to a window rank (first arrival by batch), audits and
-    * scrubs the winners, then runs the per-batch near-dup keep + probe
-    * chains — the same sequential semantics, stage for stage.
+  /** The seeded plant the three train-ingest fixtures fold: the
+    * PII-planted documents with doc_id < 200, split into 2 batches by
+    * parity, plus exact copies of every doc_id % 7 = 0 document and
+    * drop-8 near-mutations of every doc_id % 9 = 0 document, each
+    * landing one batch later. `withLang` carries the source document's
+    * `lang` through every leg (a planted copy keeps its source's
+    * language). Columns: doc_id, text, [lang,] b.
+    *
+    * Persisted ONCE (guide §2.4/§5: the three planted union legs each
+    * re-scan documents.parquet, and without this every per-batch slice
+    * re-executed the whole union — the single largest cost of the pass
+    * in the r22 job profile); released per bench pass. The coalesce:
+    * the plant is FIXED-SIZE (doc_id bound), so a handful of cached
+    * partitions is the right task-count floor — without it the cache
+    * inherits the 3 legs x spread(32) = 96 partitions and every
+    * per-batch slice scan pays 96 tasks for ~200 rows.
     */
-  def trainIngestReplay(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/train_ingest"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
-    val planted = plantedPiiDocs(s, d).filter(col("doc_id") < 200)
-    // persist the fold's input ONCE (guide §2.4/§5: the three planted
-    // union legs each re-scan documents.parquet, and without this every
-    // per-batch slice re-executed the whole union — the single largest
-    // cost of the pass in the r22 job profile); released per bench pass
-    val seeded = graft.core.Caches.track(planted
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"),
-        (col("doc_id") % 2).cast("long").as("b"))
-      .unionByName(planted.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 1000000).cast("long").as("doc_id"),
-          col("text"), ((col("doc_id") + 1) % 2).cast("long").as("b")))
-      .unionByName(planted.filter(col("doc_id") % 9 === 0)
-        .select((col("doc_id") + 2000000).cast("long").as("doc_id"),
-          expr("substring(text, 1, greatest(length(text) - 8, 0))").as("text"),
-          ((col("doc_id") + 1) % 2).cast("long").as("b")))
-      // coalesce: the plant is FIXED-SIZE (doc_id bound), so a handful of
-      // cached partitions is the right task-count floor — without it the
-      // cache inherits the 3 legs x spread(32) = 96 partitions and every
-      // per-batch slice scan pays 96 tasks for ~200 rows
-      .coalesce(8)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-    val (corpus, exactIdx, nearIdx) =
-      (s"$root/corpus", s"$root/exact_index", s"$root/near_index")
-    (0L until 2L).foreach { i =>
-      graft.streaming.Ingest.ingestBatchFull(
-        seeded.filter(col("b") === i).select("doc_id", "text"),
-        corpus, exactIdx, nearIdx, idCol = "doc_id")
-    }
-    seeded.unpersist()
-    s.read.parquet(corpus).select("doc_id", "text").orderBy("doc_id")
+  private def trainIngestPlant(s: SparkSession, d: String,
+                               withLang: Boolean): DataFrame = {
+    val pii = plantedPiiDocs(s, d).filter(col("doc_id") < 200)
+    val planted =
+      if (withLang) pii.join(t(s, d, "documents").select("doc_id", "lang"), "doc_id")
+      else pii
+    def leg(rows: DataFrame, idOffset: Long, text: Column, batch: Column) =
+      rows.select(Seq((col("doc_id") + idOffset).cast("long").as("doc_id"),
+          text.as("text")) ++ (if (withLang) Seq(col("lang")) else Nil) :+
+        batch.cast("long").as("b"): _*)
+    graft.core.Caches.track(
+      leg(planted, 0L, col("text"), col("doc_id") % 2)
+        .unionByName(leg(planted.filter(col("doc_id") % 7 === 0), 1000000L,
+          col("text"), (col("doc_id") + 1) % 2))
+        .unionByName(leg(planted.filter(col("doc_id") % 9 === 0), 2000000L,
+          expr("substring(text, 1, greatest(length(text) - 8, 0))"),
+          (col("doc_id") + 1) % 2))
+        .coalesce(8)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
   }
 
-  /** The same complete fold as [[trainIngestReplay]] run through
-    * [[graft.streaming.Ingest.ingestBatchFullCommitted]] — the
-    * effectively-once variant — with the LAST batch crash-replayed: the
-    * corpus manifest absorbs the replay on its batch id and the final
-    * table equals the single-run chain exactly, which is the property
-    * the commit discipline exists to guarantee. The oracle is the SAME
-    * sequential DuckDB replay as `train_ingest_replay` (a no-op replay
-    * contributes nothing), so hash-equality certifies that
-    * effectively-once changed the failure semantics and NOTHING about
-    * the data.
+  /** Folds [[trainIngestPlant]] through
+    * [[graft.streaming.Ingest.ingestBatchFullCommitted]] into a fresh
+    * corpus + both indexes under `root`, batch i under id "b<i>";
+    * `withStats` threads a committed stats store (`root/stats`) through
+    * the chain, `replayLast` crash-replays the last batch under its
+    * original id. Returns the corpus dir.
     */
-  def trainIngestCommittedReplay(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/train_ingest_committed"
+  private def trainIngestFold(s: SparkSession, d: String, root: String,
+                              withStats: Boolean = false,
+                              replayLast: Boolean = false): String = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), s.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(root), true)
-    val planted = plantedPiiDocs(s, d).filter(col("doc_id") < 200)
-    // one materialization of the fold input, shared by all three fold
-    // calls (see trainIngestReplay); released per bench pass
-    val seeded = graft.core.Caches.track(planted
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"),
-        (col("doc_id") % 2).cast("long").as("b"))
-      .unionByName(planted.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 1000000).cast("long").as("doc_id"),
-          col("text"), ((col("doc_id") + 1) % 2).cast("long").as("b")))
-      .unionByName(planted.filter(col("doc_id") % 9 === 0)
-        .select((col("doc_id") + 2000000).cast("long").as("doc_id"),
-          expr("substring(text, 1, greatest(length(text) - 8, 0))").as("text"),
-          ((col("doc_id") + 1) % 2).cast("long").as("b")))
-      // coalesce: the plant is FIXED-SIZE (doc_id bound), so a handful of
-      // cached partitions is the right task-count floor — without it the
-      // cache inherits the 3 legs x spread(32) = 96 partitions and every
-      // per-batch slice scan pays 96 tasks for ~200 rows
-      .coalesce(8)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-    val (corpus, exactIdx, nearIdx) =
-      (s"$root/corpus", s"$root/exact_index", s"$root/near_index")
-    (0L until 2L).foreach { i =>
-      graft.streaming.Ingest.ingestBatchFullCommitted(
-        seeded.filter(col("b") === i).select("doc_id", "text"),
-        corpus, exactIdx, nearIdx, s"b$i", idCol = "doc_id")
-    }
-    // crash-replay of the last batch under its original id: corpus and
-    // stats manifests no-op, the indexes self-heal — the corpus must not
-    // move (the at-least-once window ingestBatchFull documents, closed)
-    graft.streaming.Ingest.ingestBatchFullCommitted(
-      seeded.filter(col("b") === 1L).select("doc_id", "text"),
-      corpus, exactIdx, nearIdx, "b1", idCol = "doc_id")
+    val seeded = trainIngestPlant(s, d, withLang = withStats)
+    val cols = if (withStats) Seq("doc_id", "text", "lang") else Seq("doc_id", "text")
+    val corpus = s"$root/corpus"
+    def fold(i: Long): Unit = graft.streaming.Ingest.ingestBatchFullCommitted(
+      seeded.filter(col("b") === i).select(cols.map(col): _*),
+      corpus, s"$root/exact_index", s"$root/near_index", s"b$i",
+      idCol = "doc_id", statsDir = if (withStats) Some(s"$root/stats") else None)
+    (0L until 2L).foreach(fold)
+    if (replayLast) fold(1L)
     seeded.unpersist()
+    corpus
+  }
+
+  /** The COMPLETE training-data ingest fold
+    * ([[graft.streaming.Ingest.ingestBatchFullCommitted]]): exact dedup →
+    * quality filter → PII scrub → near-dup dedup, both indexes
+    * self-maintaining, folded over the 2 batches of
+    * [[trainIngestPlant]]. The plant layers every stage: exact copies
+    * land one batch later (killed by the exact index), drop-8
+    * near-mutations land one batch later (killed by the signature probe
+    * on SCRUBBED text), quality failures drop per-batch, PII scrubs
+    * everywhere. The DuckDB replay collapses the exact stage to a window
+    * rank (first arrival by batch), audits and scrubs the winners, then
+    * runs the per-batch near-dup keep + probe chains — the same
+    * sequential semantics, stage for stage.
+    */
+  def trainIngestReplay(s: SparkSession, d: String): DataFrame = {
+    val corpus = trainIngestFold(s, d, "/tmp/graft_fix/train_ingest")
     graft.ext.ManifestTable.read(s, corpus)
       .select("doc_id", "text").orderBy("doc_id")
   }
 
-  /** The same complete fold as [[trainIngestReplay]] with `statsDir`
-    * wired through (VERDICT r9 #6): the full chain now maintains
-    * [[graft.streaming.StatsSink]] segments over its FINAL survivors —
-    * the rows that land in the corpus — so this emits the merged
-    * per-language totals and the oracle recomputes them from its own
-    * sequential replay of the chain. Hash-equality certifies both that
-    * the stats hook observes exactly the corpus content and that the
-    * per-batch partials fold to the one-shot answer. `lang` rides the
-    * whole chain (joined from `documents`; a planted mutation keeps its
-    * source doc's language).
+  /** [[trainIngestReplay]] with the LAST batch crash-replayed under its
+    * original id: the corpus manifest absorbs the replay on its batch id
+    * and the final table equals the single-run chain exactly, which is
+    * the property the commit discipline exists to guarantee. The oracle
+    * is the SAME sequential DuckDB replay as `train_ingest_replay` (a
+    * no-op replay contributes nothing), so hash-equality certifies that
+    * the replay changed NOTHING about the data.
+    */
+  def trainIngestCommittedReplay(s: SparkSession, d: String): DataFrame = {
+    val corpus = trainIngestFold(s, d, "/tmp/graft_fix/train_ingest_committed",
+      replayLast = true)
+    graft.ext.ManifestTable.read(s, corpus)
+      .select("doc_id", "text").orderBy("doc_id")
+  }
+
+  /** [[trainIngestReplay]] with `statsDir` wired through (VERDICT r9 #6):
+    * the full chain maintains committed [[graft.streaming.StatsSink]]
+    * segments over its FINAL survivors — the rows that land in the
+    * corpus — so this emits the merged per-language totals and the
+    * oracle recomputes them from its own sequential replay of the chain.
+    * Hash-equality certifies both that the stats hook observes exactly
+    * the corpus content and that the per-batch partials fold to the
+    * one-shot answer.
     */
   def trainIngestStatsReplay(s: SparkSession, d: String): DataFrame = {
     val root = "/tmp/graft_fix/train_ingest_stats"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
-    val langs = t(s, d, "documents").select(col("doc_id"), col("lang"))
-    val planted = plantedPiiDocs(s, d).filter(col("doc_id") < 200)
-      .join(langs, "doc_id")
-    // one materialization of the fold input (see trainIngestReplay) —
-    // here it also folds the langs join into the single pass
-    val seeded = graft.core.Caches.track(planted
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"),
-        col("lang"), (col("doc_id") % 2).cast("long").as("b"))
-      .unionByName(planted.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 1000000).cast("long").as("doc_id"),
-          col("text"), col("lang"),
-          ((col("doc_id") + 1) % 2).cast("long").as("b")))
-      .unionByName(planted.filter(col("doc_id") % 9 === 0)
-        .select((col("doc_id") + 2000000).cast("long").as("doc_id"),
-          expr("substring(text, 1, greatest(length(text) - 8, 0))").as("text"),
-          col("lang"), ((col("doc_id") + 1) % 2).cast("long").as("b")))
-      .coalesce(8) // fixed-size plant; see trainIngestReplay
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-    val (corpus, exactIdx, nearIdx, stats) =
-      (s"$root/corpus", s"$root/exact_index", s"$root/near_index",
-        s"$root/stats")
-    (0L until 2L).foreach { i =>
-      graft.streaming.Ingest.ingestBatchFull(
-        seeded.filter(col("b") === i).select("doc_id", "text", "lang"),
-        corpus, exactIdx, nearIdx, idCol = "doc_id",
-        statsDir = Some(stats))
-    }
-    seeded.unpersist()
-    graft.streaming.StatsSink.read(s, stats).orderBy("lang")
+    trainIngestFold(s, d, root, withStats = true)
+    graft.streaming.StatsSink.readCommitted(s, s"$root/stats").orderBy("lang")
   }
 
   /** The cosine-family fold: 2 batches through
-    * [[graft.streaming.NearDupSink.ingestBatchEmbed]] — batch 0 is an
+    * [[graft.streaming.NearDupSink.ingestBatchEmbedCommitted]] — batch 0 is an
     * embeddings subset, batch 1 is +0.01 perturbations of half (cosine
     * ≈ 0.998 to their sources — dropped by the cross-batch probe) plus
     * NEGATED copies of the other half (cosine −1, complementary buckets
@@ -778,11 +743,11 @@ object ExtQueries {
       new java.net.URI(root), s.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(root), true)
     // one scan of the planted subset, shared by b0/pert/neg (see
-    // trainIngestReplay); released per bench pass
+    // trainIngestPlant); released per bench pass
     val e = graft.core.Caches.track(
       t(s, d, "embeddings").filter(col("vec_id") < 128)
         .select(col("vec_id"), col("embedding"))
-        .coalesce(8) // fixed-size plant; see trainIngestReplay
+        .coalesce(8) // fixed-size plant; see trainIngestPlant
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
     val b0 = e.select(col("vec_id").cast("long").as("id"),
       transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -794,11 +759,11 @@ object ExtQueries {
       (col("vec_id") + 200000).cast("long").as("id"),
       transform(col("embedding"), x => x.cast("double") * lit(-1.0)).as("v"))
     val (corpus, index) = (s"$root/corpus", s"$root/index")
-    graft.streaming.NearDupSink.ingestBatchEmbed(b0, corpus, index)
-    graft.streaming.NearDupSink.ingestBatchEmbed(
-      pert.unionByName(neg), corpus, index)
+    graft.streaming.NearDupSink.ingestBatchEmbedCommitted(b0, corpus, index, "b0")
+    graft.streaming.NearDupSink.ingestBatchEmbedCommitted(
+      pert.unionByName(neg), corpus, index, "b1")
     e.unpersist()
-    s.read.parquet(corpus).select("id").orderBy("id")
+    graft.ext.ManifestTable.read(s, corpus).select("id").orderBy("id")
   }
 
   /** Repetition signals over planted-repetition documents: every even
@@ -3416,18 +3381,25 @@ object ExtQueries {
       .orderBy("a_id", "b_id")
   }
 
-  /** Small-files compaction roundtrip: documents written as 16 tiny
-    * parquet files, compacted in place to one right-sized file, read
-    * back — content identical (the oracle is the source table), file
-    * count pinned by the spec.
+  /** Small-files compaction roundtrip: documents appended to a
+    * [[graft.ext.ManifestTable]] as 16 small files (a keyed repartition
+    * is layout intent, so the optimized write keeps it), compacted in
+    * ONE manifest swap to a single right-sized file, read back — content
+    * identical (the oracle is the source table).
     */
   def compactRoundtrip(s: SparkSession, d: String): DataFrame = {
     val work = "/tmp/graft_fix/compact_work"
-    t(s, d, "documents").select(col("doc_id"), col("text"))
-      .repartition(16).write.mode("overwrite").parquet(work)
-    graft.ext.Compact.compactParquet(s, work,
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(work), s.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(work), true)
+    graft.ext.ManifestTable.append(
+      t(s, d, "documents").select(col("doc_id"), col("text"))
+        .repartition(16, col("doc_id")), work, "b0")
+    val (before, after) = graft.ext.ManifestTable.compact(s, work,
       targetFileBytes = 1024L * 1024 * 1024)
-    s.read.parquet(work).orderBy("doc_id")
+    require(before == 16 && after == 1,
+      s"compaction folded $before files into $after, expected 16 into 1")
+    graft.ext.ManifestTable.read(s, work).orderBy("doc_id")
   }
 
   /** Sketch-based corpus stats made ORACLE-CHECKABLE (VERDICT r9 #4):
@@ -5421,7 +5393,7 @@ object ExtQueries {
     // the COMPLETE ingest fold: exact first-arrival collapse (window
     // rank over md5 by batch order), quality audit + scrub on the
     // winners, then per-batch near-dup keep + cross-batch signature
-    // probe over the SCRUBBED texts — every stage of ingestBatchFull
+    // probe over the SCRUBBED texts — every stage of ingestBatchFullCommitted
     "train_ingest_replay" ->
       s"""WITH RECURSIVE $trainIngestChainSql
          |SELECT id AS doc_id, text FROM qkeep
@@ -5462,7 +5434,7 @@ object ExtQueries {
     // the cosine-family 2-batch fold: per-batch keep-one (bucket-join
     // candidates in 2 hyperplane tables, exact cosine >= 0.9,
     // components), then batch 1's keepers bucket-probe batch 0's
-    // survivors — NearDupSink.ingestBatchEmbed's sequential semantics
+    // survivors — NearDupSink.ingestBatchEmbedCommitted's sequential semantics
     "neardup_embed_corpus_replay" -> {
       val b0 =
         """SELECT CAST(vec_id AS BIGINT) AS id,

@@ -56,7 +56,7 @@ object Ingest {
     * batch with more survivors than this only DEGRADES the
     * false-positive rate — more batches pay the precise anti-join —
     * never correctness, because the bloom only ROUTES (see
-    * [[ingestBatch]]).
+    * [[ingestBatchCommitted]]).
     */
   val BloomExpectedItems: Long = BloomSidecar.ExpectedItems
   val BloomFpp: Double = BloomSidecar.Fpp
@@ -107,58 +107,6 @@ object Ingest {
     graft.ext.ManifestTable.vacuum(spark, segmentsPath(indexDir))
     BloomSidecar.fold(spark, bloomPath(indexDir))
     counts
-  }
-
-  /** Fold ONE batch of arriving documents into a self-maintaining
-    * corpus: batch-local exact dedup, corpus dedup against the persisted
-    * index, quality filter, survivors appended to `corpusDir` scrubbed,
-    * their fingerprints appended as one new index segment plus one bloom
-    * sidecar.
-    *
-    * Corpus dedup is BLOOM-ROUTED: the merged sidecar filter (broadcast,
-    * ~1.2 MB) splits the batch map-side into definitely-new rows — a
-    * bloom has no false negatives — and possible-duplicate candidates;
-    * only the candidates pay the precise anti-join against the full
-    * index, and a batch with ZERO candidates (the common case for fresh
-    * content) skips the index read entirely, making the whole fold
-    * O(batch). The bloom never decides membership — false positives just
-    * route a few extra rows through the anti-join — so a missing or
-    * stale sidecar (crash between segment and bloom writes) costs
-    * latency, never data.
-    *
-    * The index update is what makes a REPLAYED batch self-deduplicating:
-    * once a batch's fingerprints land, re-applying the same batch
-    * anti-joins everything away and appends nothing. Append-then-index
-    * ordering means a crash BETWEEN the two can duplicate that one
-    * batch's survivors in the corpus (at-least-once; clean up by
-    * dedup-on-read — `dropDuplicates` on the text column — or run
-    * [[graft.ext.Compact]] with the stream quiesced); the index-first
-    * ordering would silently LOSE the batch instead, which is the wrong
-    * failure mode for training data.
-    */
-  /** `statsDir`, when set, additionally maintains [[StatsSink]] segments
-    * over the batch's SURVIVORS (the scrubbed rows that land in the
-    * corpus, so totals describe corpus content) — and because a
-    * crash-replayed batch has zero survivors, the composed stats inherit
-    * this fold's replay idempotence, which standalone [[StatsSink]]
-    * cannot offer. Requires a `lang` column on the batch.
-    */
-  def ingestBatch(batch: DataFrame, corpusDir: String, indexDir: String,
-                  textCol: String = "text",
-                  statsDir: Option[String] = None): Unit = {
-    val (kept, release) = dedupQuality(batch, indexDir, textCol)
-    val scrubbed = kept.withColumn(textCol, TextAnalysis.scrubPii(col(textCol)))
-    // optimized write (guide §6): a micro-batch otherwise appends one
-    // tiny file per task partition; the AQE rebalance sizes the output
-    // at runtime (a small batch lands as one file, a huge backfill
-    // splits to advisory-sized files), so the corpus file count grows
-    // with BYTES, not with batches × parallelism
-    graft.ext.ManifestTable.rebalancedPlain(scrubbed)
-      .write.mode("append").parquet(corpusDir)
-    release()
-    statsDir.foreach(d => StatsSink.append(scrubbed, d, textCol))
-    appendExactIndex(indexDir, kept, textCol)
-    kept.unpersist()
   }
 
   /** Stages 1-2 of the fold — bloom-routed exact dedup vs the index,
@@ -233,20 +181,34 @@ object Ingest {
         bf => BloomSidecar.write(spark, bloomPath(indexDir), bf))))
   }
 
-  /** [[ingestBatch]] with the corpus append COMMITTED through
-    * [[graft.ext.ManifestTable]] — the effectively-once variant: the
-    * corpus records each batch id in its manifest, so a crash-REPLAYED
-    * micro-batch can never duplicate its survivors (the plain
-    * [[ingestBatch]]'s documented at-least-once window). The exact
-    * fingerprint index stays an append-only segment store and is
-    * appended UNCONDITIONALLY after the corpus commit, which makes it
+  /** Fold ONE batch of arriving documents into a self-maintaining
+    * corpus: batch-local exact dedup, corpus dedup against the persisted
+    * index, quality filter, survivors appended to `corpusDir` scrubbed
+    * and COMMITTED through [[graft.ext.ManifestTable]] under `batchId`,
+    * their fingerprints appended as one new index segment plus one bloom
+    * sidecar.
+    *
+    * Corpus dedup is BLOOM-ROUTED: the merged sidecar filter (broadcast,
+    * ~1.2 MB) decides map-side which fingerprints might be indexed — a
+    * bloom has no false negatives — and [[BloomSidecar.probe]] reads none
+    * of the index, only the bloom-positive fingerprints' segments, or all
+    * of it. The bloom never decides membership — false positives just
+    * widen the index read — so a missing or stale sidecar (crash between
+    * segment and bloom writes) costs latency, never data.
+    *
+    * Commit contract: the corpus records each batch id in its manifest,
+    * so a crash-REPLAYED micro-batch can never duplicate its survivors.
+    * The exact fingerprint index stays an append-only segment store and
+    * is appended UNCONDITIONALLY after the corpus commit, which makes it
     * self-healing: if a crash lands between the corpus commit and the
     * index append, the replay's survivors re-emerge from dedup (their
     * fingerprints are missing), the corpus append no-ops on the absorbed
     * batch id, and the index append backfills the missing fingerprints.
     * Index duplicates from that healing are harmless — an anti-join
-    * probe is idempotent in its right side. Returns true iff this call
-    * committed new corpus rows.
+    * probe is idempotent in its right side. Once a batch's fingerprints
+    * land, the same content under ANY batch id anti-joins away entirely.
+    * Returns true iff this call committed `batchId` (false: an earlier
+    * commit already absorbed it).
     *
     * `statsDir`, when set, maintains a MANIFEST-COMMITTED
     * [[StatsSink]] store under the SAME batch id, committed BEFORE the
@@ -261,7 +223,8 @@ object Ingest {
     * with the replay oracles): equal texts within a batch carry equal
     * attribution columns, so the arbitrary in-batch dedup survivor
     * cannot flip per-language counts between original run and replay.
-    * Read the totals with [[StatsSink.readCommitted]].
+    * Requires a `lang` column when `statsDir` is set; read the totals
+    * with [[StatsSink.readCommitted]].
     */
   def ingestBatchCommitted(batch: DataFrame, corpusDir: String,
                            indexDir: String, batchId: String,
@@ -280,49 +243,15 @@ object Ingest {
 
   /** The WHOLE training-data ingest as one self-maintaining fold: exact
     * dedup (vs the exact fingerprint index) → quality filter → PII
-    * scrub → NEAR-dup dedup (vs the near-dup signature index, via
-    * [[NearDupSink.ingestBatch]]) → corpus append, with both indexes
-    * maintained O(batch). The near-dup stage runs on SCRUBBED text —
-    * the corpus's content — while the exact index keys arrival text,
-    * so each index is consistent with what probes it on replay.
-    *
-    * Crash ordering: the corpus and near-dup index land (inside
-    * [[NearDupSink.ingestBatch]]) BEFORE the exact index append. A
-    * crash anywhere leaves at-least-once corpus state: on replay,
-    * documents the exact index already absorbed vanish at stage 1;
-    * documents it missed re-run the chain and the near-dup probe drops
-    * them against their own indexed signatures (est 1.0). The wrong
-    * order — exact index first — would silently LOSE a batch.
-    *
-    * `statsDir`, when set, maintains [[StatsSink]] segments over the
-    * chain's FINAL survivors — the scrubbed rows that actually land in
-    * the corpus after the near-dup stage, so totals describe corpus
-    * content (VERDICT r9 #6: the simple sink had this hook, the full
-    * chain did not). Requires a `lang` column on the batch.
-    */
-  def ingestBatchFull(batch: DataFrame, corpusDir: String,
-                      exactIndexDir: String, nearIndexDir: String,
-                      idCol: String = "id", textCol: String = "text",
-                      threshold: Double = 0.6,
-                      minEstJaccard: Double = 0.5,
-                      statsDir: Option[String] = None): Unit = {
-    val (kept, release) = dedupQuality(batch, exactIndexDir, textCol)
-    val scrubbed = graft.core.Caches.track(
-      kept.withColumn(textCol, TextAnalysis.scrubPii(col(textCol)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-    NearDupSink.ingestBatch(scrubbed, corpusDir, nearIndexDir, idCol, textCol,
-      threshold, minEstJaccard, statsDir = statsDir)
-    release()
-    appendExactIndex(exactIndexDir, kept, textCol)
-    scrubbed.unpersist()
-    kept.unpersist()
-  }
-
-  /** [[ingestBatchFull]] with the corpus landed effectively-once — the
-    * COMPLETE chain (exact dedup → quality → PII scrub → near-dup, both
-    * indexes self-maintaining) on the [[ingestBatchCommitted]] commit
-    * discipline, via [[NearDupSink.ingestBatchCommitted]] for the
-    * stats → corpus → near-index tail. Crash windows, in commit order
+    * scrub → NEAR-dup dedup (vs the near-dup signature index) → corpus
+    * commit, both indexes maintained O(batch), on the
+    * [[ingestBatchCommitted]] commit discipline — via
+    * [[NearDupSink.ingestBatchCommitted]] for the stats → corpus →
+    * near-index tail. The near-dup stage runs on SCRUBBED text — the
+    * corpus's content — while the exact index keys arrival text, so each
+    * index is consistent with what probes it on replay. `statsDir`
+    * totals describe the chain's FINAL survivors (requires a `lang`
+    * column). Crash windows, in commit order
     * (stats, corpus, near-dup index, exact index — each later than the
     * last):
     *
@@ -342,8 +271,7 @@ object Ingest {
     * Stats-last would instead lose the batch's totals forever (the
     * replay no-ops on the absorbed corpus id and never revisits them) —
     * the same argument as [[ingestBatchCommitted]], now holding across
-    * the full chain. Returns true iff this call committed new corpus
-    * rows.
+    * the full chain. Returns true iff this call committed `batchId`.
     */
   def ingestBatchFullCommitted(batch: DataFrame, corpusDir: String,
                                exactIndexDir: String, nearIndexDir: String,
@@ -364,29 +292,6 @@ object Ingest {
     scrubbed.unpersist()
     kept.unpersist()
     committed
-  }
-
-  /** [[ingestBatchFull]] wired as a continuously-running sink — the
-    * complete pre-training ingest (dedup both ways, quality, scrubbing,
-    * self-maintaining indexes) behind one `writeStream`.
-    */
-  def pipelineToCorpusFull(docs: DataFrame, corpusDir: String,
-                           exactIndexDir: String, nearIndexDir: String,
-                           idCol: String = "id", textCol: String = "text",
-                           threshold: Double = 0.6,
-                           minEstJaccard: Double = 0.5,
-                           trigger: Trigger = Trigger.ProcessingTime("0 seconds"),
-                           checkpointDir: Option[String] = None,
-                           statsDir: Option[String] = None): StreamingQuery = {
-    val writer = docs.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        ingestBatchFull(batch, corpusDir, exactIndexDir, nearIndexDir,
-          idCol, textCol, threshold, minEstJaccard, statsDir)
-      }
-    checkpointDir.fold(writer)(cp => writer.option("checkpointLocation", cp))
-      .start()
   }
 
   /** [[ingestBatchFullCommitted]] behind one `writeStream` — the full
@@ -442,26 +347,6 @@ object Ingest {
         ingestBatchCommitted(batch, corpusDir, indexDir,
           s"$runPrefix-$epochId", textCol, statsDir)
         ()
-      }
-    checkpointDir.fold(writer)(cp => writer.option("checkpointLocation", cp))
-      .start()
-  }
-
-  /** [[pipeline]] wired as a continuously-running sink: each micro-batch
-    * runs [[ingestBatch]] — dedup vs the corpus so far (including
-    * earlier micro-batches of this same stream), filter, scrub, append,
-    * maintain the index.
-    */
-  def pipelineToCorpus(docs: DataFrame, corpusDir: String, indexDir: String,
-                       textCol: String = "text",
-                       trigger: Trigger = Trigger.ProcessingTime("0 seconds"),
-                       checkpointDir: Option[String] = None,
-                       statsDir: Option[String] = None): StreamingQuery = {
-    val writer = docs.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        ingestBatch(batch, corpusDir, indexDir, textCol, statsDir)
       }
     checkpointDir.fold(writer)(cp => writer.option("checkpointLocation", cp))
       .start()

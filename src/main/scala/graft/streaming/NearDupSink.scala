@@ -2,10 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Self-maintaining NEAR-duplicate corpus sink — the near-dup sibling of
-  * [[Ingest.pipelineToCorpus]] (exact dedup): fold arriving batches into
+  * [[Ingest.ingestBatchCommitted]] (exact dedup): fold arriving batches into
   * a corpus that contains no document near-duplicate to any EARLIER
   * survivor, continuously. This is the online form of the batch
   * `dedup_near_keep` operator, and the missing piece between the static
@@ -19,7 +18,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * audit on by default); (2) CROSS-batch probe of the survivors against
   * the accumulated SIGNATURE index ([[StreamNearDup.probeMinHash]] —
   * banded signature join, MinHash-estimate verify; the index stores
-  * 8·numHashes bytes per document, never text or shingles); (3) append
+  * 8·numHashes bytes per document, never text or shingles); (3) commit
   * the remaining survivors to `corpusDir` and their signature band rows
   * as ONE new index segment — the same O(batch) append-only layout as
   * [[Ingest]], with a [[BloomSidecar]] over band hashes gating the probe:
@@ -43,9 +42,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * survivor's signature is identical to its indexed copy, every
   * position agrees, est_jaccard = 1.0 ≥ any threshold.
   *
-  * Crash ordering is corpus-append THEN index-append, the same
-  * at-least-once choice (and for the same reason) as
-  * [[Ingest.ingestBatch]].
+  * Crash ordering is corpus-commit THEN index-append, the same
+  * self-healing choice (and for the same reason) as
+  * [[Ingest.ingestBatchCommitted]]: the corpus absorbs a replayed batch
+  * id, the unconditional index append backfills.
   */
 object NearDupSink {
 
@@ -74,41 +74,16 @@ object NearDupSink {
     * the naive composition would re-shingle the batch for each. On a
     * micro-batch the signature pass IS the dominant compute, so this is
     * the difference between one and three passes of per-batch latency.
-    */
-  /** `statsDir`, when set, maintains [[StatsSink]] segments over the
-    * fold's SURVIVORS (the rows that land in the corpus) — appended
-    * before the corpus write, mirroring the committed variant's
-    * stats-first ordering. Requires a `lang` column on the batch.
-    */
-  def ingestBatch(batch: DataFrame, corpusDir: String, indexDir: String,
-                  idCol: String = "id", textCol: String = "text",
-                  threshold: Double = 0.6, minEstJaccard: Double = 0.5,
-                  numHashes: Int = 16, bands: Int = 4,
-                  shingleFn: Column => Column =
-                    graft.ext.MinHashLSH.wordShingles(_, 3),
-                  statsDir: Option[String] = None): Unit = {
-    foldAndCommit(batch, indexDir, idCol, textCol, threshold, minEstJaccard,
-      numHashes, bands, shingleFn) { kept =>
-      statsDir.foreach(d => StatsSink.append(kept, d, textCol))
-      // optimized write (guide §6): rebalance so the corpus file count
-      // grows with bytes, not batches x parallelism (same conf/AQE gate
-      // as the staged writes — ADVICE r21 #2)
-      graft.ext.ManifestTable.rebalancedPlain(kept)
-        .write.mode("append").parquet(corpusDir); true
-    }
-    ()
-  }
-
-  /** [[ingestBatch]] with the corpus landed through
-    * [[graft.ext.ManifestTable]] keyed by `batchId` — effectively-once,
-    * the same contract (and the same self-healing index argument) as
-    * [[Ingest.ingestBatchCommitted]]: a crash between the corpus commit
-    * and the signature-segment append leaves the replay's survivors
-    * re-emerging from the probe (their signatures are missing), the
-    * corpus no-oping on the absorbed batch id, and the index append
-    * backfilling the signatures; a second replay probes est 1.0 against
-    * its own indexed copy and converges to a full no-op. Returns true
-    * iff this call committed new corpus rows.
+    *
+    * The corpus lands through [[graft.ext.ManifestTable]] keyed by
+    * `batchId` — effectively-once, the same contract (and the same
+    * self-healing index argument) as [[Ingest.ingestBatchCommitted]]: a
+    * crash between the corpus commit and the signature-segment append
+    * leaves the replay's survivors re-emerging from the probe (their
+    * signatures are missing), the corpus no-oping on the absorbed batch
+    * id, and the index append backfilling the signatures; a second
+    * replay probes est 1.0 against its own indexed copy and converges to
+    * a full no-op. Returns true iff this call committed `batchId`.
     *
     * `statsDir`, when set, maintains a manifest-committed [[StatsSink]]
     * store under the SAME batch id, committed BEFORE the corpus — the
@@ -122,28 +97,12 @@ object NearDupSink {
                            numHashes: Int = 16, bands: Int = 4,
                            shingleFn: Column => Column =
                              graft.ext.MinHashLSH.wordShingles(_, 3),
-                           statsDir: Option[String] = None): Boolean =
-    foldAndCommit(batch, indexDir, idCol, textCol, threshold, minEstJaccard,
-      numHashes, bands, shingleFn) { kept =>
-      statsDir.foreach(d => StatsSink.appendCommitted(kept, d, batchId, textCol))
-      graft.ext.ManifestTable.append(kept, corpusDir, batchId)
-    }
-
-  /** The shared fold: within-batch keep-one, ONE signature pass reused
-    * by the bloom gate + cross-batch probe + segment append, then
-    * `landCorpus(kept)` (whose return value this returns) followed by
-    * the unconditional index-segment + sidecar append.
-    */
-  private def foldAndCommit(batch: DataFrame, indexDir: String,
-                            idCol: String, textCol: String, threshold: Double,
-                            minEstJaccard: Double, numHashes: Int, bands: Int,
-                            shingleFn: Column => Column)
-                           (landCorpus: DataFrame => Boolean): Boolean = {
-    // guard HERE, not only in StreamNearDup's row builders: every public
-    // entry point (ingestBatch / ingestBatchCommitted / pipelineToCorpus)
-    // funnels through this fold, so the raw cast("long") below can never
-    // be reached with a string id that would null out and empty the index
-    graft.core.Ids.requireNumericId(batch, idCol, "NearDupSink.ingestBatch")
+                           statsDir: Option[String] = None): Boolean = {
+    // guard HERE, not only in StreamNearDup's row builders: the raw
+    // cast("long") below must never be reached with a string id that
+    // would null out and empty the index
+    graft.core.Ids.requireNumericId(batch, idCol,
+      "NearDupSink.ingestBatchCommitted")
     val spark = batch.sparkSession
     val within = graft.core.Caches.track(
       graft.ext.Components.nearDupKeep(batch, idCol, textCol, threshold,
@@ -168,7 +127,8 @@ object NearDupSink {
       }
     val kept = graft.core.Caches.track(survivors
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-    val committed = landCorpus(kept)
+    statsDir.foreach(d => StatsSink.appendCommitted(kept, d, batchId, textCol))
+    val committed = graft.ext.ManifestTable.append(kept, corpusDir, batchId)
     // the fold's survivor band rows: a semi-join against the persisted
     // batch rows, NOT a re-shingle of kept; column order re-pinned so
     // every appended segment file carries the identical schema. Single
@@ -179,10 +139,10 @@ object NearDupSink {
           Seq("corpus_id"), "left_semi")
         .select(col("band"), col("band_hash"), col("corpus_id"), col("sig_idx"))
     // manifest-committed segment append under a fresh UUID: the index
-    // append must stay UNCONDITIONAL (self-healing backfill after a
-    // replay — see ingestBatchCommitted); per-file band_hash blooms
-    // serve BloomSidecar.probe's pruned read, the merged sidecar (built
-    // in the SAME pass via SidecarBloomSpec) keeps serving the gate
+    // append must stay UNCONDITIONAL (the self-healing backfill after a
+    // replay); per-file band_hash blooms serve BloomSidecar.probe's
+    // pruned read, the merged sidecar (built in the SAME pass via
+    // SidecarBloomSpec) keeps serving the gate
     graft.ext.ManifestTable.append(bandRows, segmentsPath(indexDir),
       java.util.UUID.randomUUID().toString, bloomCols = Seq("band_hash"),
       sidecarBloom = Some(graft.ext.ManifestTable.SidecarBloomSpec(
@@ -194,61 +154,31 @@ object NearDupSink {
     committed
   }
 
-  /** The cosine-family sibling of [[ingestBatch]] — near-dedup of an
-    * EMBEDDING corpus as batches arrive, completing the self-maintaining
-    * sink family across all three distance families (md5-exact via
-    * [[Ingest]], Jaccard via [[ingestBatch]], cosine here). Per batch:
-    * within-batch keep-one ([[graft.ext.Similarity.embedNearDup]] pairs →
-    * components → min-id representative), cross-batch
-    * [[StreamNearDup.probeEmbed]] against the accumulated hyperplane
-    * bucket index (exact-cosine verify against the vector riding on the
-    * index row), O(batch) segment + sidecar append. The bloom keys are
+  /** The cosine-family sibling of [[ingestBatchCommitted]] — near-dedup
+    * of an EMBEDDING corpus as batches arrive, completing the
+    * self-maintaining sink family across all three distance families
+    * (md5-exact via [[Ingest]], Jaccard via [[ingestBatchCommitted]],
+    * cosine here). Per batch: within-batch keep-one
+    * ([[graft.ext.Similarity.embedNearDup]] pairs → components → min-id
+    * representative), cross-batch [[StreamNearDup.probeEmbed]] against
+    * the accumulated hyperplane bucket index (exact-cosine verify against
+    * the vector riding on the index row), corpus commit keyed by
+    * `batchId`, O(batch) segment + sidecar append. The bloom keys are
     * `tbl:bucket` strings, so the gate skips the index read when no
     * batch vector lands in any occupied bucket of any table.
     *
-    * Same preconditions and crash ordering as [[ingestBatch]]; vectors
-    * replay-idempotently because an identical vector lands in its own
-    * bucket in every table and cosines 1.0 against its indexed copy.
-    */
-  def ingestBatchEmbed(batch: DataFrame, corpusDir: String, indexDir: String,
-                       idCol: String = "id", vecCol: String = "v",
-                       minCos: Double = 0.9, bits: Int = 6, dims: Int = 64,
-                       tables: Int = 2): Unit = {
-    foldAndCommitEmbed(batch, indexDir, idCol, vecCol, minCos, bits, dims,
-      tables) { kept =>
-      // optimized write (guide §6): rebalance so the corpus file count
-      // grows with bytes, not batches x parallelism (same conf/AQE gate
-      // as the staged writes — ADVICE r21 #2)
-      graft.ext.ManifestTable.rebalancedPlain(kept)
-        .write.mode("append").parquet(corpusDir); true
-    }
-    ()
-  }
-
-  /** [[ingestBatchEmbed]] through [[graft.ext.ManifestTable]] keyed by
-    * `batchId` — effectively-once with the self-healing bucket index,
-    * completing the committed-sink family across all three distance
-    * families (md5-exact, Jaccard, cosine): an identical replayed
-    * vector re-emerges only while its indexed copy is missing, then
+    * Same preconditions and commit contract as [[ingestBatchCommitted]]:
+    * an identical replayed vector re-emerges only while its indexed copy
+    * is missing (it lands in its own bucket in every table), then
     * cosines 1.0 against it and converges to a no-op.
     */
   def ingestBatchEmbedCommitted(batch: DataFrame, corpusDir: String,
                                 indexDir: String, batchId: String,
                                 idCol: String = "id", vecCol: String = "v",
                                 minCos: Double = 0.9, bits: Int = 6,
-                                dims: Int = 64, tables: Int = 2): Boolean =
-    foldAndCommitEmbed(batch, indexDir, idCol, vecCol, minCos, bits, dims,
-      tables) { kept =>
-      graft.ext.ManifestTable.append(kept, corpusDir, batchId)
-    }
-
-  private def foldAndCommitEmbed(batch: DataFrame, indexDir: String,
-                                 idCol: String, vecCol: String,
-                                 minCos: Double, bits: Int, dims: Int,
-                                 tables: Int)
-                                (landCorpus: DataFrame => Boolean): Boolean = {
+                                dims: Int = 64, tables: Int = 2): Boolean = {
     graft.core.Ids.requireNumericId(batch, idCol,
-      "NearDupSink.ingestBatchEmbed")
+      "NearDupSink.ingestBatchEmbedCommitted")
     val spark = batch.sparkSession
     val pairs = graft.ext.Similarity.embedNearDup(batch, idCol, vecCol,
       minCos, bits, dims, tables)
@@ -259,7 +189,7 @@ object NearDupSink {
       batch.join(drop, Seq(idCol), "left_anti")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
     // one bucket pass over the batch, reused by gate + probe + segment
-    // append — same single-pass layout as [[ingestBatch]]
+    // append — same single-pass layout as [[ingestBatchCommitted]]
     val rows = graft.core.Caches.track(
       StreamNearDup.buildEmbedIndex(within, idCol, vecCol, bits, dims, tables)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
@@ -281,7 +211,7 @@ object NearDupSink {
       }
     val kept = graft.core.Caches.track(survivors
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-    val committed = landCorpus(kept)
+    val committed = graft.ext.ManifestTable.append(kept, corpusDir, batchId)
     // single consumer (the append) since the sidecar build moved inside
     // the append's bloom pass — no persist needed; the sidecar key stays
     // the `tbl:bucket` composite the gate checks
@@ -317,22 +247,5 @@ object NearDupSink {
     graft.ext.ManifestTable.vacuum(spark, segmentsPath(indexDir))
     BloomSidecar.fold(spark, bloomPath(indexDir))
     counts
-  }
-
-  /** [[ingestBatch]] wired as a continuously-running streaming sink. */
-  def pipelineToCorpus(docs: DataFrame, corpusDir: String, indexDir: String,
-                       idCol: String = "id", textCol: String = "text",
-                       threshold: Double = 0.6, minEstJaccard: Double = 0.5,
-                       trigger: Trigger = Trigger.ProcessingTime("0 seconds"),
-                       checkpointDir: Option[String] = None): StreamingQuery = {
-    val writer = docs.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        ingestBatch(batch, corpusDir, indexDir, idCol, textCol,
-          threshold, minEstJaccard)
-      }
-    checkpointDir.fold(writer)(cp => writer.option("checkpointLocation", cp))
-      .start()
   }
 }

@@ -27,19 +27,19 @@ import graft.functions.TextFunctions
   * (same algebra at sketch precision); one-shot sketch queries over a
   * static corpus are [[graft.ext.TextAnalysis.approxCorpusStats]].
   *
-  * Composition with the ingest fold: call [[append]] on the SURVIVORS of
-  * [[Ingest.ingestBatch]] (the scrubbed frame that lands in the corpus)
-  * and the stats stay consistent with corpus content — and because a
-  * crash-replayed batch contributes zero survivors, the composed sink
-  * inherits the ingest fold's replay idempotence. Standalone (no dedup
-  * upstream), a replayed batch double-counts: put the sink behind the
-  * same foreachBatch as the corpus append, never in front.
+  * Storage: every segment is COMMITTED through [[graft.ext.ManifestTable]]
+  * under the batch id of the batch it describes ([[appendCommitted]]),
+  * so a crash-replayed batch finds its id in the manifest and no-ops
+  * instead of double-counting — standalone, or composed with the ingest
+  * folds ([[Ingest.ingestBatchCommitted]],
+  * [[NearDupSink.ingestBatchCommitted]]), which commit the stats of
+  * their SURVIVORS under the corpus batch id so totals describe corpus
+  * content. Reads ([[readCommitted]], [[readWithDistinct]]) see one
+  * manifest snapshot.
   *
   * Maintenance: segments are one-row-scale, so the only growth is FILE
-  * COUNT — [[graft.ext.Compact.compactParquet]] folds them (its
-  * at-least-once visible window means a stats read racing a compaction
-  * can transiently double-count; read-after-quiesce for exact audits,
-  * exactly the "row-counting reader" caveat Compact documents).
+  * COUNT — [[compact]] folds them in one atomic manifest swap, so a
+  * stats read sees the pre- or the post-compaction files, never both.
   */
 object StatsSink {
 
@@ -57,18 +57,9 @@ object StatsSink {
         sum(length(col(textCol)).cast("long")).cast("long").as("n_chars"),
         hll_sketch_agg(col(textCol)).as("text_sketch"))
 
-  /** Append one batch's partial-aggregate segment. O(batch): one
-    * map-side-combined groupBy over the batch, a ~per-language-row
-    * write, nothing read.
-    */
-  def append(batch: DataFrame, statsDir: String, textCol: String = "text",
-             langCol: String = "lang"): Unit =
-    batchStats(batch, textCol, langCol)
-      .coalesce(1)
-      .write.mode("append").parquet(statsDir)
-
-  /** The fixed segment schema [[batchStats]] writes — passed explicitly
-    * on reads so no segment read pays a schema-inference job.
+  /** The fixed segment schema [[batchStats]] writes — the schema of the
+    * empty store, so both readers aggregate one frame shape whether or
+    * not a batch has committed yet.
     */
   private val segmentSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("lang",
@@ -82,35 +73,42 @@ object StatsSink {
     org.apache.spark.sql.types.StructField("text_sketch",
       org.apache.spark.sql.types.BinaryType)))
 
+  /** One batch's partial-aggregate segment, committed through
+    * [[graft.ext.ManifestTable]] keyed by `batchId`. O(batch): one
+    * map-side-combined groupBy over the batch, a ~per-language-row
+    * write, nothing read. A crash-replayed batch finds its id in the
+    * manifest and no-ops instead of double-counting. Returns true iff
+    * committed.
+    */
+  def appendCommitted(batch: DataFrame, statsDir: String, batchId: String,
+                      textCol: String = "text",
+                      langCol: String = "lang"): Boolean =
+    graft.ext.ManifestTable.append(
+      batchStats(batch, textCol, langCol).coalesce(1), statsDir, batchId)
+
+  /** The committed segment rows, or an empty frame with the segment
+    * schema before the first non-empty commit.
+    */
+  private def segments(spark: SparkSession, statsDir: String): DataFrame =
+    if (graft.ext.ManifestTable.snapshot(spark, statsDir).files.isEmpty)
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], segmentSchema)
+    else graft.ext.ManifestTable.read(spark, statsDir)
+
   /** Corpus totals so far: the segment rows re-aggregated — kilobytes
     * in, one row per language out, corpus never touched. Exact columns
     * only (the `corpus_stats_replay` oracle surface); distinct-content
-    * estimates live on [[readWithDistinct]]. Empty frame (same schema)
+    * estimates live on [[readWithDistinct]]. Empty frame (same columns)
     * before the first batch.
     */
-  def read(spark: SparkSession, statsDir: String): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(statsDir), spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(statsDir)))
-      spark.read.schema(segmentSchema).parquet(statsDir)
-        .groupBy("lang")
-        .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"),
-          sum("n_chars").as("n_chars"))
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("lang",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("n_docs",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_tokens",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_chars",
-          org.apache.spark.sql.types.LongType))))
-  }
+  def readCommitted(spark: SparkSession, statsDir: String): DataFrame =
+    segments(spark, statsDir)
+      .groupBy("lang")
+      .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"),
+        sum("n_chars").as("n_chars"))
 
-  /** [[read]] plus the statistic sums CANNOT maintain: distinct text
-    * content per language, via per-batch Datasketches HLL sketches
+  /** [[readCommitted]] plus the statistic sums CANNOT maintain: distinct
+    * text content per language, via per-batch Datasketches HLL sketches
     * (`hll_sketch_agg` at append time) union-merged at read. Sketch
     * registers are max-per-bucket, so the merge of per-batch partials is
     * IDENTICAL to a one-shot sketch — the same associativity contract as
@@ -121,40 +119,20 @@ object StatsSink {
     * the one corpus statistic for which that is true without an index.
     */
   def readWithDistinct(spark: SparkSession, statsDir: String): DataFrame =
-    spark.read.schema(segmentSchema).parquet(statsDir)
+    segments(spark, statsDir)
       .groupBy("lang")
       .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"),
         sum("n_chars").as("n_chars"),
         hll_sketch_estimate(hll_union_agg(col("text_sketch")))
           .as("n_distinct_est"))
 
-  /** [[append]] through [[graft.ext.ManifestTable]] keyed by `batchId` —
-    * the effectively-once variant for a STANDALONE stats store (no
-    * dedup upstream to absorb replays): a crash-replayed batch finds
-    * its id in the manifest and no-ops instead of double-counting.
-    * Read back with [[readCommitted]]. Returns true iff committed.
-    */
-  def appendCommitted(batch: DataFrame, statsDir: String, batchId: String,
-                      textCol: String = "text",
-                      langCol: String = "lang"): Boolean =
-    graft.ext.ManifestTable.append(
-      batchStats(batch, textCol, langCol).coalesce(1), statsDir, batchId)
-
-  /** [[read]] over a manifest-committed stats store. */
-  def readCommitted(spark: SparkSession, statsDir: String): DataFrame =
-    if (graft.ext.ManifestTable.snapshot(spark, statsDir).files.isEmpty)
-      read(spark, statsDir + "/__nonexistent__") // the empty frame, same schema
-    else graft.ext.ManifestTable.read(spark, statsDir)
-      .groupBy("lang")
-      .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"),
-        sum("n_chars").as("n_chars"))
-
-  /** Segment-file maintenance: many per-batch files → few. Row contents
-    * are preserved (re-aggregation stays a read-time concern), so the
-    * pass is [[graft.ext.Compact.compactParquet]] with its concurrency
-    * contract unchanged.
+  /** Segment-file maintenance: many per-batch files → few, in ONE
+    * manifest swap ([[graft.ext.ManifestTable.compact]]). Row contents
+    * are preserved (re-aggregation stays a read-time concern) and the
+    * batch-id history survives, so replays stay no-ops after a
+    * compaction. Returns (input files, output files).
     */
   def compact(spark: SparkSession, statsDir: String,
               targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) =
-    graft.ext.Compact.compactParquet(spark, statsDir, targetFileBytes)
+    graft.ext.ManifestTable.compact(spark, statsDir, targetFileBytes)
 }

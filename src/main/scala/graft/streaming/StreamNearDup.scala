@@ -200,7 +200,7 @@ object StreamNearDup {
   /** [[probeMinHash]] over PREBUILT probe band rows
     * (probe_id, sig_p, band, band_hash) — the seam that lets a caller
     * who already materialized the batch's band rows (e.g.
-    * [[NearDupSink.ingestBatch]], which needs them again for the segment
+    * [[NearDupSink.ingestBatchCommitted]], which needs them again for the segment
     * append) probe without a second shingle+signature pass. Index-shaped
     * rows ([[buildMinHashIndex]]) convert by renaming
     * corpus_id→probe_id, sig_idx→sig_p.

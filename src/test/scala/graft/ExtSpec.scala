@@ -317,61 +317,6 @@ class ExtSpec extends SparkSpec {
     }
   }
 
-  test("compaction shrinks a many-small-files dir, preserving content exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cmp").toString + "/t"
-    val rows = (0 until 200).map(i => (i.toLong, s"doc $i"))
-    rows.toDF("id", "text").repartition(8).write.parquet(dir)
-    def files() = new java.io.File(dir).listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
-    assert(files() === 8)
-    val (before, after) = graft.ext.Compact.compactParquet(spark, dir,
-      targetFileBytes = 1024L * 1024 * 1024)
-    assert(before === 8 && after === 1)
-    assert(files() === 1)
-    // content identical, nothing lost or duplicated
-    val back = spark.read.parquet(dir).as[(Long, String)].collect().sortBy(_._1)
-    assert(back.toSeq === rows)
-    // a second compaction is a no-op shape-wise
-    assert(graft.ext.Compact.compactParquet(spark, dir,
-      targetFileBytes = 1024L * 1024 * 1024) === ((1, 1)))
-  }
-
-  test("compaction tolerates a concurrent append and never hides the table") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cmpc").toString + "/t"
-    val rows = (0 until 100).map(i => (i.toLong, s"doc $i"))
-    rows.toDF("id", "text").repartition(4).write.parquet(dir)
-    var midCount = -1L
-    val (before, after) = graft.ext.Compact.compactParquet(spark, dir,
-      targetFileBytes = 1024L * 1024 * 1024,
-      beforeSwap = () => {
-        // a concurrent writer appends while the staged rewrite exists
-        Seq((1000L, "late arrival")).toDF("id", "text")
-          .coalesce(1).write.mode("append").parquet(dir)
-        // a concurrent reader sees a COMPLETE table: the stage dir is
-        // `_`-prefixed (invisible to parquet listing), the originals are
-        // untouched — 100 original rows plus the late append, no dups
-        midCount = spark.read.parquet(dir).count()
-      })
-    assert(before === 4 && after === 1)
-    assert(midCount === 101L)
-    // the concurrent append SURVIVES the swap (the old implementation's
-    // whole-directory rename destroyed it); nothing lost or duplicated
-    val back = spark.read.parquet(dir).as[(Long, String)].collect().sortBy(_._1)
-    assert(back.toSeq === rows :+ (1000L, "late arrival"))
-  }
-
-  test("compaction rejects a partitioned (subdirectory) layout rather than flattening it") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cmpp").toString + "/t"
-    Seq((1L, "a", "x"), (2L, "b", "y")).toDF("id", "text", "p")
-      .write.partitionBy("p").parquet(dir)
-    val e = intercept[IllegalArgumentException] {
-      graft.ext.Compact.compactParquet(spark, dir)
-    }
-    assert(e.getMessage.contains("flat layout"))
-    // the table is untouched by the rejected call
-    assert(spark.read.parquet(dir).count() === 2L)
-  }
-
   test("as-of join auto-renames colliding payload and never matches null keys") {
     val left = Seq(
       (1L, Option("u1"), 10L, "L1"), (2L, Option("u1"), 20L, "L2"),

@@ -215,13 +215,13 @@ class PropertySpec extends SparkSpec {
     val docs = (1 to 80).map(i =>
       (i.toLong, randomWords(rnd, 1 + rnd.nextInt(8)),
         Seq("en", "de", "fr")(rnd.nextInt(3)))).toDF("id", "text", "lang")
-    def totals(dir: String) = graft.streaming.StatsSink.read(spark, dir)
+    def totals(dir: String) = graft.streaming.StatsSink.readCommitted(spark, dir)
       .as[(String, Long, Long, Long)].collect().toSeq.sorted
     val oneShot = "/tmp/graft_test/stats_prop_oneshot"
     org.apache.hadoop.fs.FileSystem.get(new java.net.URI(oneShot),
         spark.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(oneShot), true)
-    graft.streaming.StatsSink.append(docs, oneShot)
+    graft.streaming.StatsSink.appendCommitted(docs, oneShot, "all")
     (1 to 3).foreach { trial =>
       val k = 2 + rnd.nextInt(4)
       val dir = s"/tmp/graft_test/stats_prop_${trial}_$k"
@@ -229,7 +229,8 @@ class PropertySpec extends SparkSpec {
           spark.sparkContext.hadoopConfiguration)
         .delete(new org.apache.hadoop.fs.Path(dir), true)
       (0 until k).foreach { i =>
-        graft.streaming.StatsSink.append(docs.filter($"id" % k === i), dir)
+        graft.streaming.StatsSink.appendCommitted(docs.filter($"id" % k === i),
+          dir, s"b$i")
       }
       assert(totals(dir) === totals(oneShot), s"split k=$k diverged")
     }

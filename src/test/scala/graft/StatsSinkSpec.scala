@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.streaming.StatsSink
 
-/** Incremental corpus statistics: per-batch partial-aggregate segments
-  * must fold to exactly the one-shot aggregate, under any batching, with
-  * compaction invisible to totals.
+/** Incremental corpus statistics: per-batch partial-aggregate segments,
+  * committed under their batch ids, must fold to exactly the one-shot
+  * aggregate, under any batching, with compaction invisible to totals.
   */
 class StatsSinkSpec extends SparkSpec {
 
@@ -30,19 +30,23 @@ class StatsSinkSpec extends SparkSpec {
   }
 
   private def totals(dir: String): Map[String, (Long, Long, Long)] =
-    StatsSink.read(spark, dir).collect().map { r =>
+    StatsSink.readCommitted(spark, dir).collect().map { r =>
       (if (r.isNullAt(0)) "∅" else r.getString(0)) ->
         ((r.getLong(1), if (r.isNullAt(2)) -1L else r.getLong(2),
           if (r.isNullAt(3)) -1L else r.getLong(3)))
     }.toMap
 
+  /** `docs` split into 3 batches by doc_id % 3, committed as b0..b2. */
+  private def fold3(dir: String): Unit =
+    (0L until 3L).foreach { i =>
+      StatsSink.appendCommitted(docs.filter(col("doc_id") % 3 === i), dir, s"b$i")
+    }
+
   test("3-batch fold equals the one-shot aggregate (associativity)") {
     val dir = tmp("fold")
-    (0L until 3L).foreach { i =>
-      StatsSink.append(docs.filter(col("doc_id") % 3 === i), dir)
-    }
+    fold3(dir)
     val oneShot = tmp("oneshot")
-    StatsSink.append(docs, oneShot)
+    StatsSink.appendCommitted(docs, oneShot, "all")
     assert(totals(dir) === totals(oneShot))
     assert(totals(dir)("en") === ((2L, 7L, 34L)))
     assert(totals(dir)("fr") === ((2L, 5L, 20L)))
@@ -50,24 +54,38 @@ class StatsSinkSpec extends SparkSpec {
 
   test("empty store reads as an empty frame with the stats schema") {
     val dir = tmp("empty")
-    val r = StatsSink.read(spark, dir)
+    val r = StatsSink.readCommitted(spark, dir)
     assert(r.columns.toSeq === Seq("lang", "n_docs", "n_tokens", "n_chars"))
     assert(r.count() === 0L)
   }
 
+  test("readWithDistinct on an empty store returns zero rows with the sketch column") {
+    val dir = tmp("empty_distinct")
+    val r = StatsSink.readWithDistinct(spark, dir)
+    assert(r.columns.toSeq ===
+      Seq("lang", "n_docs", "n_tokens", "n_chars", "n_distinct_est"))
+    assert(r.count() === 0L)
+    // a store whose only commit was an empty batch is still empty
+    StatsSink.appendCommitted(docs.filter(lit(false)), dir, "b0")
+    assert(StatsSink.readWithDistinct(spark, dir).count() === 0L)
+  }
+
   test("an empty batch appends a no-op segment (composed-replay idempotence)") {
     val dir = tmp("noop")
-    StatsSink.append(docs, dir)
+    StatsSink.appendCommitted(docs, dir, "b0")
     val before = totals(dir)
-    // a crash-replayed ingest batch contributes zero survivors: the
-    // composed stats append must leave totals unchanged
-    StatsSink.append(docs.filter(lit(false)), dir)
+    // an ingest batch re-sent under a fresh id contributes zero
+    // survivors: the composed stats commit must leave totals unchanged
+    assert(StatsSink.appendCommitted(docs.filter(lit(false)), dir, "b1"))
+    assert(totals(dir) === before)
+    // and a replay under an absorbed id is refused outright
+    assert(!StatsSink.appendCommitted(docs, dir, "b0"))
     assert(totals(dir) === before)
   }
 
   test("null language rolls up under its own group, never dropped") {
     val dir = tmp("nulllang")
-    StatsSink.append(docs, dir)
+    StatsSink.appendCommitted(docs, dir, "b0")
     val t = totals(dir)
     assert(t.contains("∅"))
     assert(t.values.map(_._1).sum === 6L)
@@ -75,11 +93,9 @@ class StatsSinkSpec extends SparkSpec {
 
   test("distinct-content sketches: batch-fold merge equals one-shot, estimate matches exact") {
     val dir = tmp("hll_fold")
-    (0L until 3L).foreach { i =>
-      StatsSink.append(docs.filter(col("doc_id") % 3 === i), dir)
-    }
+    fold3(dir)
     val oneShot = tmp("hll_oneshot")
-    StatsSink.append(docs, oneShot)
+    StatsSink.appendCommitted(docs, oneShot, "all")
     def est(d: String): Map[String, Long] =
       StatsSink.readWithDistinct(spark, d).collect()
         .filter(!_.isNullAt(0))
@@ -93,12 +109,13 @@ class StatsSinkSpec extends SparkSpec {
 
   test("compaction folds segment files without changing totals") {
     val dir = tmp("compact")
-    (0L until 3L).foreach { i =>
-      StatsSink.append(docs.filter(col("doc_id") % 3 === i), dir)
-    }
+    fold3(dir)
     val before = totals(dir)
     val (in, out) = StatsSink.compact(spark, dir)
     assert(in === 3 && out === 1)
+    assert(totals(dir) === before)
+    // the batch-id history survives the swap: a replay stays a no-op
+    assert(!StatsSink.appendCommitted(docs, dir, "b1"))
     assert(totals(dir) === before)
   }
 }

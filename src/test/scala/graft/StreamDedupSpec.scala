@@ -131,21 +131,21 @@ class StreamDedupSpec extends SparkSpec {
     def mk(id: Long, tail: String) = (id,
       s"the corpus document tagged $tail is about a river and a forest " +
         "with the sun over the hills and a road to the valley by the old mill")
-    graft.streaming.Ingest.ingestBatch(
+    graft.streaming.Ingest.ingestBatchCommitted(
       Seq(mk(1, "one"), mk(2, "two"), mk(3, "three")).toDF("id", "text"),
-      corpus, index)
+      corpus, index, "b0")
     val after1 = segFiles()
     assert(rowsIn(after1) === 3L)
     // batch 2: two repeats of known content + one new doc — the NEW
     // segment files hold exactly the 1 survivor fingerprint, not 4
-    graft.streaming.Ingest.ingestBatch(
+    graft.streaming.Ingest.ingestBatchCommitted(
       Seq(mk(10, "one"), mk(11, "two"), mk(4, "four")).toDF("id", "text"),
-      corpus, index)
+      corpus, index, "b1")
     val newSeg = segFiles() -- after1
     assert(rowsIn(newSeg) === 1L,
       "per-batch index write must be O(batch survivors), not O(corpus)")
     assert(graft.streaming.Ingest.readIndex(spark, index).count() === 4L)
-    assert(spark.read.parquet(corpus).count() === 4L)
+    assert(graft.ext.ManifestTable.read(spark, corpus).count() === 4L)
     // each batch also leaves one bloom sidecar (batch 2 ran bloom-routed:
     // two known docs were candidates, the fresh one took the map-side path)
     def bloomFiles() = new java.io.File(s"$index/bloom").listFiles()
@@ -158,9 +158,9 @@ class StreamDedupSpec extends SparkSpec {
     assert(bloomFiles() === 1)
     assert(graft.streaming.Ingest.readIndex(spark, index).count() === 4L)
     // post-compaction, known content still dedups away entirely
-    graft.streaming.Ingest.ingestBatch(
-      Seq(mk(20, "four")).toDF("id", "text"), corpus, index)
-    assert(spark.read.parquet(corpus).count() === 4L)
+    graft.streaming.Ingest.ingestBatchCommitted(
+      Seq(mk(20, "four")).toDF("id", "text"), corpus, index, "b2")
+    assert(graft.ext.ManifestTable.read(spark, corpus).count() === 4L)
   }
 
   test("point probes read the exact index pruned to matching segments") {
@@ -173,9 +173,9 @@ class StreamDedupSpec extends SparkSpec {
       s"the corpus document tagged $tail is about a river and a forest " +
         "with the sun over the hills and a road to the valley by the old mill")
     (0 until 3).foreach { b =>
-      graft.streaming.Ingest.ingestBatch(
+      graft.streaming.Ingest.ingestBatchCommitted(
         Seq(mk(b * 10L, s"alpha$b"), mk(b * 10L + 1, s"beta$b"))
-          .toDF("id", "text"), corpus, index)
+          .toDF("id", "text"), corpus, index, s"b$b")
     }
     // cluster the segments on fp: each compacted file covers a
     // near-disjoint fingerprint range, so a point probe prunes on stats
@@ -192,9 +192,9 @@ class StreamDedupSpec extends SparkSpec {
       s"selective probe must read 1 of $total segment files, read $kept")
     // and the pruned path changes nothing semantically: a replay of that
     // known text still dedups away entirely
-    graft.streaming.Ingest.ingestBatch(
-      Seq((99L, mk(0, "alpha0")._2)).toDF("id", "text"), corpus, index)
-    assert(spark.read.parquet(corpus).count() === 6L)
+    graft.streaming.Ingest.ingestBatchCommitted(
+      Seq((99L, mk(0, "alpha0")._2)).toDF("id", "text"), corpus, index, "b3")
+    assert(graft.ext.ManifestTable.read(spark, corpus).count() === 6L)
     assert(graft.streaming.Ingest.readIndex(spark, index).count() === 6L)
   }
 
@@ -209,9 +209,9 @@ class StreamDedupSpec extends SparkSpec {
       "where the people sell bread and fruit in the morning so mail a note " +
       "to trader@mart.io for the full list")
     val source = MemoryStream[(Long, String)]
-    val q = graft.streaming.Ingest.pipelineToCorpusFull(
+    val q = graft.streaming.Ingest.pipelineToCorpusFullCommitted(
       source.toDS().toDF("id", "text"), corpus, exactIdx, nearIdx,
-      checkpointDir = Some(s"$root/cp"))
+      runPrefix = "run", checkpointDir = Some(s"$root/cp"))
     // batch 1: clean unique A, quality junk, PII-bearing C
     source.addData(a, (2L, "short junk"), c)
     q.processAllAvailable()
@@ -226,17 +226,19 @@ class StreamDedupSpec extends SparkSpec {
     source.addData((13L, c._2))
     q.processAllAvailable()
     q.stop()
-    def state() = spark.read.parquet(corpus)
+    def state() = graft.ext.ManifestTable.read(spark, corpus)
       .select("id", "text").as[(Long, String)].collect().sortBy(_._1).toSeq
     val after = state()
     assert(after.map(_._1) === Seq(1L, 3L, 12L))
     assert(after.count(_._2.contains("<EMAIL>")) === 1)
-    // post-crash replay of batch 2 through the batch API: idempotent
-    graft.streaming.Ingest.ingestBatchFull(
+    // batch 2's content again under a FRESH batch id (a re-sent batch,
+    // not a replayed epoch): the manifest cannot absorb it, so the
+    // content itself must dedup — exact index, then signature probe
+    graft.streaming.Ingest.ingestBatchFullCommitted(
       Seq((10L, a._2), (11L, a._2.substring(0, a._2.length - 8)),
         (12L, "the fourth document concerns mountain trails and river " +
           "crossings on the long hike to the northern ridge camp by the lake"))
-        .toDF("id", "text"), corpus, exactIdx, nearIdx)
+        .toDF("id", "text"), corpus, exactIdx, nearIdx, "resend-1")
     assert(state() === after)
   }
 
@@ -285,9 +287,9 @@ class StreamDedupSpec extends SparkSpec {
       "where the people sell bread and fruit in the morning light so mail " +
       "a note to trader@mart.io")
     val source = MemoryStream[(Long, String)]
-    val q = graft.streaming.Ingest.pipelineToCorpus(
+    val q = graft.streaming.Ingest.pipelineToCorpusCommitted(
       source.toDS().toDF("id", "text"), corpus, index,
-      checkpointDir = Some(s"$root/cp"))
+      runPrefix = "run", checkpointDir = Some(s"$root/cp"))
     // batch 1: A and B, plus an in-batch exact duplicate of A
     source.addData(docA, docB, (10L, docA._2))
     q.processAllAvailable()
@@ -300,16 +302,17 @@ class StreamDedupSpec extends SparkSpec {
     source.addData((12L, docC._2))
     q.processAllAvailable()
     q.stop()
-    def corpusTexts() = spark.read.parquet(corpus)
+    def corpusTexts() = graft.ext.ManifestTable.read(spark, corpus)
       .select("text").as[String].collect().sorted.toSeq
     val after = corpusTexts()
     assert(after.size === 3, s"expected A,B,C once each, got ${after.size}")
     assert(after.count(_.contains("<EMAIL>")) === 1)
     assert(graft.streaming.Ingest.readIndex(spark, index).count() === 3)
-    // post-crash replay of the last micro-batch: its fingerprints are
-    // already in the index, so re-ingesting appends nothing
-    graft.streaming.Ingest.ingestBatch(
-      Seq((11L, docA._2), docC).toDF("id", "text"), corpus, index)
+    // the second micro-batch's content again under a fresh batch id: its
+    // fingerprints are already in the index, so re-ingesting appends
+    // nothing even though the manifest has never seen this id
+    graft.streaming.Ingest.ingestBatchCommitted(
+      Seq((11L, docA._2), docC).toDF("id", "text"), corpus, index, "resend-1")
     assert(corpusTexts() === after)
     assert(graft.streaming.Ingest.readIndex(spark, index).count() === 3)
   }
@@ -459,22 +462,24 @@ class StreamDedupSpec extends SparkSpec {
         s"over the hills and a road to the valley by the old mill", lang)
     val b0 = Seq(doc(1, "first", "en"), doc(2, "second", "de"))
     val b1 = Seq(doc(3, "third", "en"), (4L, b0.head._2, "en")) // 4 = exact dup of 1
-    Seq(b0, b1).foreach { b =>
-      graft.streaming.Ingest.ingestBatch(b.toDF("id", "text", "lang"),
-        corpus, index, statsDir = Some(stats))
+    Seq(b0, b1).zipWithIndex.foreach { case (b, i) =>
+      graft.streaming.Ingest.ingestBatchCommitted(b.toDF("id", "text", "lang"),
+        corpus, index, s"b$i", statsDir = Some(stats))
     }
-    def totals() = graft.streaming.StatsSink.read(spark, stats)
+    def totals() = graft.streaming.StatsSink.readCommitted(spark, stats)
       .orderBy("lang").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     // stats describe the CORPUS (survivors), not arrivals: the dup of 1
     // never lands, so en counts 2, de counts 1 — exactly the corpus
-    val fromCorpus = spark.read.parquet(corpus).groupBy("lang").count()
+    val fromCorpus = graft.ext.ManifestTable.read(spark, corpus)
+      .groupBy("lang").count()
       .orderBy("lang").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(totals() === fromCorpus)
     assert(totals() === Seq(("de", 1L), ("en", 2L)))
-    // crash-replay of batch 1: zero survivors → a no-op stats segment —
-    // the composed sink inherits the fold's replay idempotence
-    graft.streaming.Ingest.ingestBatch(b1.toDF("id", "text", "lang"),
-      corpus, index, statsDir = Some(stats))
+    // batch 1 re-sent under a fresh id: zero survivors → an empty stats
+    // segment — the composed stats inherit the fold's content dedup,
+    // not only the manifest's batch-id idempotence
+    graft.streaming.Ingest.ingestBatchCommitted(b1.toDF("id", "text", "lang"),
+      corpus, index, "resend-1", statsDir = Some(stats))
     assert(totals() === Seq(("de", 1L), ("en", 2L)))
   }
 }

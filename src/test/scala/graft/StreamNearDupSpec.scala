@@ -144,17 +144,11 @@ class StreamNearDupSpec extends SparkSpec {
     // the sink folds hit the same guard before touching corpus or index
     val dir = java.nio.file.Files.createTempDirectory("graft-ndsink-strid").toString
     // guarded AT the sink boundary (VERDICT r10 #3), not only
-    // transitively via the row builders — all four entry points
+    // transitively via the row builders — both entry points
     for (err <- Seq(
-      intercept[IllegalArgumentException](
-        graft.streaming.NearDupSink.ingestBatch(strDocs,
-          s"$dir/corpus", s"$dir/index")),
       intercept[IllegalArgumentException](
         graft.streaming.NearDupSink.ingestBatchCommitted(strDocs,
           s"$dir/corpus", s"$dir/index", "b0")),
-      intercept[IllegalArgumentException](
-        graft.streaming.NearDupSink.ingestBatchEmbed(vecDocs,
-          s"$dir/ecorpus", s"$dir/eindex", bits = 2, dims = 2)),
       intercept[IllegalArgumentException](
         graft.streaming.NearDupSink.ingestBatchEmbedCommitted(vecDocs,
           s"$dir/ecorpus", s"$dir/eindex", "b0", bits = 2, dims = 2))))
@@ -184,8 +178,9 @@ class StreamNearDupSpec extends SparkSpec {
       .toDF("id", "text")
     val b1 = Seq((10L, a.substring(0, a.length - 4)), (11L, e))
       .toDF("id", "text")
-    graft.streaming.NearDupSink.ingestBatch(b0, corpusDir, indexDir)
-    def corpusIds() = spark.read.parquet(corpusDir)
+    assert(graft.streaming.NearDupSink.ingestBatchCommitted(
+      b0, corpusDir, indexDir, "b0"))
+    def corpusIds() = graft.ext.ManifestTable.read(spark, corpusDir)
       .select("id").as[Long].collect().sorted.toSeq
     // within-batch: the near-dup pair (1, 2) collapses to the MIN id
     assert(corpusIds() === Seq(1L, 3L))
@@ -194,7 +189,8 @@ class StreamNearDupSpec extends SparkSpec {
     val files1 = new java.io.File(s"$indexDir/segments/data").listFiles()
       .map(_.getName).filter(_.endsWith(".parquet")).toSet
     assert(segRows().count() === 2L * 4)  // bands × survivors
-    graft.streaming.NearDupSink.ingestBatch(b1, corpusDir, indexDir)
+    assert(graft.streaming.NearDupSink.ingestBatchCommitted(
+      b1, corpusDir, indexDir, "b1"))
     // cross-batch: 10 is a near-dup of indexed 1 (signature-estimate
     // probe) and drops; fresh 11 survives
     assert(corpusIds() === Seq(1L, 3L, 11L))
@@ -207,15 +203,19 @@ class StreamNearDupSpec extends SparkSpec {
     def blooms() = new java.io.File(s"$indexDir/bloom").listFiles()
       .count(_.getName.endsWith(".bloom"))
     assert(blooms() === 2)
-    // replaying batch 1 appends nothing: identical signatures estimate
-    // jaccard 1.0 against their own indexed copies
-    graft.streaming.NearDupSink.ingestBatch(b1, corpusDir, indexDir)
+    // batch 1's content re-sent under a fresh id appends nothing — to
+    // the corpus or the index: identical signatures estimate jaccard 1.0
+    // against their own indexed copies
+    val segsBefore = segRows().count()
+    graft.streaming.NearDupSink.ingestBatchCommitted(
+      b1, corpusDir, indexDir, "resend-1")
     assert(corpusIds() === Seq(1L, 3L, 11L))
+    assert(segRows().count() === segsBefore)
     val (nin, nout) = graft.streaming.NearDupSink.compactIndex(spark, indexDir)
     assert(nin >= 2 && nout === 1 && blooms() === 1)
     // post-compaction the probe still sees everything
-    graft.streaming.NearDupSink.ingestBatch(
-      Seq((20L, a)).toDF("id", "text"), corpusDir, indexDir)
+    graft.streaming.NearDupSink.ingestBatchCommitted(
+      Seq((20L, a)).toDF("id", "text"), corpusDir, indexDir, "b2")
     assert(corpusIds() === Seq(1L, 3L, 11L))
     // VERDICT r10 #4: re-cluster into small band_hash-ranged files — a
     // selective band-hash probe then reads a strict subset of segments
@@ -236,18 +236,12 @@ class StreamNearDupSpec extends SparkSpec {
       "under the warm sun near the old red barn"
     val e = "another unique story concerning mountain trails and river " +
       "crossings on the long hike to the northern ridge camp"
-    // simple sink: stats segments describe exactly the fold's survivors —
-    // the near-dup of `a` (id 2) is dropped from corpus AND stats
+    // stats describe exactly the fold's survivors — the near-dup of `a`
+    // (id 2) is dropped from corpus AND stats — and land under the batch
+    // id, so a replay of the same batch id leaves them untouched (no
+    // double count)
     val b0 = Seq((1L, a, "en"), (2L, a.substring(0, a.length - 8), "en"),
       (3L, e, "de")).toDF("id", "text", "lang")
-    graft.streaming.NearDupSink.ingestBatch(b0, s"$root/corpus",
-      s"$root/index", statsDir = Some(s"$root/stats"))
-    val stats = graft.streaming.StatsSink.read(spark, s"$root/stats")
-      .orderBy("lang").collect()
-    assert(stats.map(r => (r.getString(0), r.getLong(1))).toSeq ===
-      Seq(("de", 1L), ("en", 1L)))
-    // committed variant: stats land under the batch id, so a replay of
-    // the same batch id leaves them untouched (no double count)
     graft.streaming.NearDupSink.ingestBatchCommitted(b0, s"$root/ccorpus",
       s"$root/cindex", "b0", statsDir = Some(s"$root/cstats"))
     def cstats() = graft.streaming.StatsSink
@@ -255,6 +249,10 @@ class StreamNearDupSpec extends SparkSpec {
       .orderBy("lang").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(cstats() === Seq(("de", 1L), ("en", 1L)))
+    val corpusLangs = graft.ext.ManifestTable.read(spark, s"$root/ccorpus")
+      .groupBy("lang").count().orderBy("lang").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(cstats() === corpusLangs)
     graft.streaming.NearDupSink.ingestBatchCommitted(b0, s"$root/ccorpus",
       s"$root/cindex", "b0", statsDir = Some(s"$root/cstats"))
     assert(cstats() === Seq(("de", 1L), ("en", 1L)))
@@ -368,21 +366,22 @@ class StreamNearDupSpec extends SparkSpec {
     def scaled(f: Double) = base.map(_ * f)
     val ortho = Seq(-0.1, 0.8, -0.3, 0.4, -0.2, 0.5, -0.4, 0.3)
     val b0 = Seq((1L, base), (2L, scaled(1.01)), (3L, ortho)).toDF("id", "v")
-    graft.streaming.NearDupSink.ingestBatchEmbed(b0, corpusDir, indexDir,
-      bits = 4, dims = 8)
-    def ids() = spark.read.parquet(corpusDir)
+    graft.streaming.NearDupSink.ingestBatchEmbedCommitted(b0, corpusDir,
+      indexDir, "b0", bits = 4, dims = 8)
+    def ids() = graft.ext.ManifestTable.read(spark, corpusDir)
       .select("id").as[Long].collect().sorted.toSeq
     // scaled copy is cosine 1.0 to base -> within-batch keep-one keeps 1
     assert(ids() === Seq(1L, 3L))
     // cross-batch: 10 ~ base drops via the bucket probe; the NEGATED
     // vector lands in complementary buckets in every table and survives
     val b1 = Seq((10L, base.map(_ + 0.001)), (11L, base.map(-_))).toDF("id", "v")
-    graft.streaming.NearDupSink.ingestBatchEmbed(b1, corpusDir, indexDir,
-      bits = 4, dims = 8)
+    graft.streaming.NearDupSink.ingestBatchEmbedCommitted(b1, corpusDir,
+      indexDir, "b1", bits = 4, dims = 8)
     assert(ids() === Seq(1L, 3L, 11L))
-    // replay appends nothing (identical vector, cosine 1.0 to its copy)
-    graft.streaming.NearDupSink.ingestBatchEmbed(b1, corpusDir, indexDir,
-      bits = 4, dims = 8)
+    // re-sent under a fresh id, b1 appends nothing (identical vector,
+    // cosine 1.0 to its copy)
+    graft.streaming.NearDupSink.ingestBatchEmbedCommitted(b1, corpusDir,
+      indexDir, "resend-1", bits = 4, dims = 8)
     assert(ids() === Seq(1L, 3L, 11L))
   }
 }
