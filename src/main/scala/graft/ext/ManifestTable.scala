@@ -1617,8 +1617,7 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
              bloomCols: Seq[String] = Nil,
              bloomFpp: Double = 0.01,
              partitionBy: Seq[String] = Nil,
-             ndvCols: Seq[String] = Nil,
-             sidecarBloom: Option[SidecarBloomSpec] = None): Boolean = {
+             ndvCols: Seq[String] = Nil): Boolean = {
     // IDENTITY tables wrap the attempt in the standard conflict-rebase
     // loop: a racing append that advanced a mark aborts this one's
     // commit (overlapping minted ranges must never publish), and the
@@ -1626,10 +1625,10 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     // the overwhelmingly common case — take the attempt directly.
     if (identityOf(snapshot(df0.sparkSession, dir)).isEmpty)
       appendOnce(df0, dir, batchId, beforeCommit, bloomCols, bloomFpp,
-        partitionBy, ndvCols, sidecarBloom)
+        partitionBy, ndvCols)
     else retryOnConflict(df0.sparkSession, dir, batchId, attempts = 5)(
       appendOnce(df0, dir, batchId, beforeCommit, bloomCols, bloomFpp,
-        partitionBy, ndvCols, sidecarBloom))
+        partitionBy, ndvCols))
   }
 
   private def appendOnce(df0: DataFrame, dir: String, batchId: String,
@@ -1637,8 +1636,7 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
              bloomCols: Seq[String],
              bloomFpp: Double,
              partitionBy: Seq[String],
-             ndvCols: Seq[String],
-             sidecarBloom: Option[SidecarBloomSpec] = None): Boolean = {
+             ndvCols: Seq[String]): Boolean = {
     val spark = df0.sparkSession
     val f = fs(spark, dir)
     val snap0 = snapshot(spark, dir)
@@ -1684,8 +1682,7 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     // replay idempotence is unaffected
     val live = dropEmpty(f, dir, moved, stats)
     buildBlooms(spark, dir, live, bloomCols.map(physName(snap0, _)),
-      stats, bloomFpp, fileSchema = Some(physDf.schema),
-      sidecar = sidecarBloom)
+      stats, bloomFpp, fileSchema = Some(physDf.schema))
     // NDV tracking: declared on the first append (like partitionBy),
     // inherited by every later one; each batch pays one O(batch) pass.
     // Recorded (like every sidecar/stat key) under PHYSICAL names, so a
@@ -2970,6 +2967,13 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
       Option[org.apache.spark.util.sketch.BloomFilter]]()
   private val BloomCacheMax = 4096
 
+  /** Bloom files opened since JVM start — the observable side of the
+    * cache contract (a fold opens each segment's bloom once, not once
+    * per batch).
+    */
+  private[graft] val bloomFilesOpened =
+    new java.util.concurrent.atomic.AtomicLong(0)
+
   private[ext] def readBloom(spark: SparkSession, dir: String, file: String,
                         colName: String)
   : Option[org.apache.spark.util.sketch.BloomFilter] = {
@@ -2982,6 +2986,7 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
         val path = p(key)
         if (!f.exists(path)) None
         else {
+          bloomFilesOpened.incrementAndGet()
           val in = f.open(path)
           try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(in))
           finally in.close()
@@ -2997,19 +3002,58 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     loaded
   }
 
-  /** Build one bloom sidecar per (new data file, requested column) in a
-    * SINGLE distributed pass over just the written batch — O(batch), not
-    * O(table): rows carry their `input_file_name`, partial filters fold
-    * per partition and merge per file. Only plain integral and string
-    * columns participate (the two kinds with a stable hash contract on
-    * both build and probe side); anything else is silently skipped and
-    * simply never prunes. Sidecars land BEFORE the manifest commit, so a
-    * crash strands orphan blooms for [[vacuum]], never a manifest whose
-    * files lack their filters. Bloom pruning answers the query min/max
-    * cannot: a point lookup on a high-cardinality column across
-    * unclustered appends, where every file's [min, max] spans the whole
-    * key space but each file holds ~1/N of the keys.
+  /** Bytes of per-file blooms [[keyGate]] may broadcast. A large,
+    * uncompacted index would otherwise ship its whole bloom layer to
+    * the executors every micro-batch; past this the gate routes every
+    * row instead. Well above the ~1.2 MB of a 1M-key, 1% filter.
     */
+  private val KeyGateMaxBytes = 16L << 20
+
+  /** A map-side "might any live file of `s` hold this `keyCol` value"
+    * predicate over the per-file blooms, in one broadcast. Blooms have
+    * no false negatives, so a row it rejects matches no live file.
+    * None — every row routes — when some live file has no bloom for
+    * `keyCol` (appended without `bloomCols`, or a type blooms skip) or
+    * the blooms together exceed [[KeyGateMaxBytes]]. Typed like
+    * [[Skipping.bloomTest]]: string keys probe `mightContainString`,
+    * integral keys `mightContainLong`. Costs O(live files) per row.
+    */
+  private[graft] def keyGate(spark: SparkSession, dir: String, s: Snapshot,
+                             keyCol: String): Option[Column] = {
+    import org.apache.spark.sql.functions.{col, udf}
+    import org.apache.spark.sql.types._
+    import org.apache.spark.util.sketch.BloomFilter
+    val c = physName(s, keyCol).toLowerCase
+    // the build side's hash contract: strings putString, integrals putLong
+    val isString = tableSchema(s)
+      .flatMap(_.fields.find(_.name.equalsIgnoreCase(keyCol))).map(_.dataType)
+      .collect {
+        case StringType => true
+        case ByteType | ShortType | IntegerType | LongType => false
+      }
+    isString.flatMap { str =>
+      val blooms = Array.newBuilder[BloomFilter]
+      var bytes = 0L
+      val complete = s.files.forall { f =>
+        readBloom(spark, dir, f, c).exists { bf =>
+          bytes += bf.bitSize() / 8
+          blooms += bf
+          bytes <= KeyGateMaxBytes
+        }
+      }
+      if (!complete) None
+      else {
+        val bc = spark.sparkContext.broadcast(blooms.result())
+        val gate =
+          if (str) udf((k: String) =>
+            k != null && bc.value.exists(_.mightContainString(k)))
+          else udf((k: java.lang.Long) =>
+            k != null && bc.value.exists(_.mightContainLong(k)))
+        Some(gate(col(keyCol).cast(if (str) "string" else "long")))
+      }
+    }
+  }
+
   /** HLL precision: lgK = 9 (512 registers, ~3% relative error) — a
     * compact sketch is a few hundred bytes, small enough to live as a
     * manifest line per (file, tracked column) like the min/max stats.
@@ -3095,35 +3139,28 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     }.toMap
   }
 
-  /** A routing-sidecar bloom built IN THE SAME PASS as the per-file
-    * blooms (guide §1: per-batch folds are dominated by action count —
-    * the separate treeAggregate the streaming sinks used to run over the
-    * same rows was one whole extra job per index append). `key` is an
-    * expression over the written rows (cast to string, nulls skipped);
-    * `expectedItems`/`fpp` fix the filter geometry (sidecars must
-    * merge); `sink` receives the merged filter — called once per
-    * successful staging, with an EMPTY filter when every staged file was
-    * dropped as 0-row (parity with the old always-write behavior).
+  /** Build one bloom sidecar per (new data file, requested column) in a
+    * SINGLE distributed pass over just the written batch — O(batch), not
+    * O(table): rows carry their `input_file_name`, partial filters fold
+    * per partition and merge per file. Only plain integral and string
+    * columns participate (the two kinds with a stable hash contract on
+    * both build and probe side); anything else is silently skipped and
+    * simply never prunes. Sidecars land BEFORE the manifest commit, so a
+    * crash strands orphan blooms for [[vacuum]], never a manifest whose
+    * files lack their filters. Bloom pruning answers the query min/max
+    * cannot: a point lookup on a high-cardinality column across
+    * unclustered appends, where every file's [min, max] spans the whole
+    * key space but each file holds ~1/N of the keys.
     */
-  private[graft] case class SidecarBloomSpec(
-      key: org.apache.spark.sql.Column,
-      expectedItems: Long, fpp: Double,
-      sink: org.apache.spark.util.sketch.BloomFilter => Unit)
-
   private[ext] def buildBlooms(spark: SparkSession, dir: String,
                           names: Seq[String], cols: Seq[String],
                           stats: Map[String, FileStats],
                           fpp: Double,
                           fileSchema: Option[org.apache.spark.sql.types.StructType]
-                            = None,
-                          sidecar: Option[SidecarBloomSpec] = None): Unit = {
+                            = None): Unit = {
     import org.apache.spark.sql.functions.{col, input_file_name}
     import org.apache.spark.util.sketch.BloomFilter
-    def emptySidecar(): Unit = sidecar.foreach(sc =>
-      sc.sink(BloomFilter.create(sc.expectedItems, sc.fpp)))
-    if ((cols.isEmpty && sidecar.isEmpty) || names.isEmpty) {
-      emptySidecar(); return
-    }
+    if (cols.isEmpty || names.isEmpty) return
     val f = fs(spark, dir)
     // an explicit schema (the append path knows exactly what it staged)
     // skips the parquet schema-inference JOB the bare read would run —
@@ -3141,18 +3178,12 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
              org.apache.spark.sql.types.StringType => true
         case _ => false
       })))
-    if (usable.isEmpty && sidecar.isEmpty) return
+    if (usable.isEmpty) return
     val expected = names.map(n =>
       n -> math.max(16L, stats.get(n).map(_.rows).getOrElse(1L << 20))).toMap
     val nCols = usable.size
-    // reserved accumulator slot for the sidecar filter — file names come
-    // from paths and are never empty, so ("", -1) cannot collide
-    val sideGeom = sidecar.map(sc => (sc.expectedItems, sc.fpp))
-    val sideCols = sidecar.map(sc =>
-      sc.key.cast("string").as("_graft_sidecar")).toSeq
     val merged = df
-      .select((input_file_name.as("_graft_file") +: usable.map(col)) ++
-        sideCols: _*)
+      .select(input_file_name.as("_graft_file") +: usable.map(col): _*)
       .rdd.mapPartitions { it =>
         val acc = scala.collection.mutable.Map[(String, Int), BloomFilter]()
         it.foreach { row =>
@@ -3170,29 +3201,16 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
             }
             i += 1
           }
-          sideGeom.foreach { case (exp, sfpp) =>
-            if (!row.isNullAt(nCols + 1)) {
-              val bf = acc.getOrElseUpdate(("", -1),
-                BloomFilter.create(exp, sfpp))
-              bf.putString(row.getString(nCols + 1))
-            }
-          }
         }
         acc.iterator
       }
       .reduceByKey { (a, b) => a.mergeInPlace(b); a }
       .collect()
-    if (usable.nonEmpty) f.mkdirs(p(bloomDir(dir)))
-    var sidecarSeen = false
-    merged.foreach {
-      case (("", -1), bf) =>
-        sidecarSeen = true
-        sidecar.foreach(_.sink(bf))
-      case ((file, i), bf) =>
-        val out = f.create(p(bloomPath(dir, file, usable(i))), true)
-        try bf.writeTo(out) finally out.close()
+    f.mkdirs(p(bloomDir(dir)))
+    merged.foreach { case ((file, i), bf) =>
+      val out = f.create(p(bloomPath(dir, file, usable(i))), true)
+      try bf.writeTo(out) finally out.close()
     }
-    if (!sidecarSeen) emptySidecar() // zero non-null keys staged
   }
 
   /** The interleaved-bit z-value of `cols` as one codegen-friendly

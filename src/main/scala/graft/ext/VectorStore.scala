@@ -84,13 +84,24 @@ object VectorStore {
       org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.DoubleType))))
 
-  /** The store's frozen centroids (cid, cv), or None before creation. */
-  def readCentroids(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val fs = hadoopFs(spark, dir)
-    if (fs.exists(new org.apache.hadoop.fs.Path(centroidsPath(dir))))
-      Some(spark.read.schema(centroidsSchema).parquet(centroidsPath(dir)))
-    else None
+  /** A frozen sidecar table read with `schema`, or None before it is
+    * written. Read by its parquet files, not by its directory: Spark's
+    * file source treats a directory named `_…` as hidden and warns on
+    * every read of it, while the files carry ordinary names.
+    */
+  private def readFrozen(spark: SparkSession, table: String,
+                         schema: org.apache.spark.sql.types.StructType)
+  : Option[DataFrame] = {
+    val fs = hadoopFs(spark, table)
+    val path = new org.apache.hadoop.fs.Path(table)
+    if (!fs.exists(path)) None
+    else Some(spark.read.schema(schema).parquet(fs.listStatus(path)
+      .map(_.getPath.toString).filter(_.endsWith(".parquet")).toSeq: _*))
   }
+
+  /** The store's frozen centroids (cid, cv), or None before creation. */
+  def readCentroids(spark: SparkSession, dir: String): Option[DataFrame] =
+    readFrozen(spark, centroidsPath(dir), centroidsSchema)
 
   /** Create the store with explicit centroids — (cid, cv) as produced by
     * [[Similarity.kmeansCentroids]], or any frame with those columns.
@@ -117,12 +128,8 @@ object VectorStore {
       .write.mode("errorifexists").parquet(pqPath(dir))
 
   /** The store's frozen PQ codebook (sub, cid, cv), or None. */
-  def readPqCodebook(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val fs = hadoopFs(spark, dir)
-    if (fs.exists(new org.apache.hadoop.fs.Path(pqPath(dir))))
-      Some(spark.read.schema(pqSchema).parquet(pqPath(dir)))
-    else None
-  }
+  def readPqCodebook(spark: SparkSession, dir: String): Option[DataFrame] =
+    readFrozen(spark, pqPath(dir), pqSchema)
 
   /** The append-side pipeline: seed-or-load centroids, coarse
     * assignment, q8, PQ codes when a codebook is frozen.

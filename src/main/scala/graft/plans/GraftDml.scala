@@ -484,19 +484,20 @@ class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan]
     // side decision survives) and HELD for the command to literalize
     // and print at run time. Correlated ones stay a loud no: compute
     // the per-row value in the USING source.
-    def prefixedRename(e: Expression): Expression = e.transformUp {
-      case org.apache.spark.sql.catalyst.expressions.objects
-          .AssertNotNull(child, _) => child
-      case a: AttributeReference if targetOut.contains(a) =>
-        a.withName("__t_" + a.name).withQualifier(Nil)
-      case a: AttributeReference if sourceOut.contains(a) =>
-        a.withName("__s_" + a.name).withQualifier(Nil)
-    }
+    def prefixedRename(e: Expression): Expression =
+      GraftDmlRule.transformUpWithParameters(e) {
+        case org.apache.spark.sql.catalyst.expressions.objects
+            .AssertNotNull(child, _) => child
+        case a: AttributeReference if targetOut.contains(a) =>
+          a.withName("__t_" + a.name).withQualifier(Nil)
+        case a: AttributeReference if sourceOut.contains(a) =>
+          a.withName("__s_" + a.name).withQualifier(Nil)
+      }
     def prefixed(e: Expression): String = {
       if (e.exists(_.isInstanceOf[PlanExpression[_]]))
         unsupported("subqueries in MERGE conditions or SET expressions " +
           s"are not supported here (got: ${e.sql})")
-      e.transformUp {
+      GraftDmlRule.transformUpWithParameters(e) {
         case org.apache.spark.sql.catalyst.expressions.objects
             .AssertNotNull(child, _) => child
         case a: AttributeReference if targetOut.contains(a) =>
@@ -625,13 +626,32 @@ object GraftDmlRule {
       !f.exists(_.isInstanceOf[
         org.apache.spark.sql.catalyst.expressions.Unevaluable])
 
+  /** `e.transformUp(rule)`, also applied to the `parameters` of
+    * [[org.apache.spark.sql.catalyst.expressions.InheritAnalysisRules]]
+    * nodes (BETWEEN, nvl, ...): they print `.sql` from those
+    * parameters, which are not children, so a plain transform leaves
+    * their qualified attributes and unliteralized subqueries in the
+    * printed SQL.
+    */
+  private[plans] def transformUpWithParameters(e: Expression)(
+      rule: PartialFunction[Expression, Expression]): Expression =
+    e.transformUp(rule.orElse {
+      case r: org.apache.spark.sql.catalyst.expressions.InheritAnalysisRules =>
+        val params = r.parameters
+        r.makeCopy(r.productIterator.map {
+          case p: Expression if params.exists(_ eq p) =>
+            transformUpWithParameters(p)(rule)
+          case other => other.asInstanceOf[AnyRef]
+        }.toArray)
+    })
+
   /** Resolved, subquery-free expression → predicate SQL the manifest
     * row-level API re-parses against the bare table frame: qualifiers
     * dropped, analyzer casts of literals folded back so stats pruning
     * still matches.
     */
   private[plans] def predicateSql(e: Expression): String =
-    e.transformUp {
+    transformUpWithParameters(e) {
       case a: AttributeReference => a.withQualifier(Nil)
       // the analyzer wraps assignments to non-nullable columns in
       // AssertNotNull, which has no SQL spelling — strip it; the
@@ -654,7 +674,7 @@ object GraftDmlRule {
     * [[predicateSql]], with every attribute renamed.
     */
   private[plans] def prefixedSql(e: Expression, prefix: String): String =
-    e.transformUp {
+    transformUpWithParameters(e) {
       case org.apache.spark.sql.catalyst.expressions.objects
           .AssertNotNull(child, _) => child
       case a: AttributeReference =>
@@ -1211,7 +1231,7 @@ object GraftDmlRule {
     import org.apache.spark.sql.catalyst.expressions.{Exists, In, InSubquery, ListQuery, Literal, ScalarSubquery}
     def frame(p: LogicalPlan) =
       org.apache.spark.sql.graft.GraftSqlShims.ofRows(spark, p)
-    val out = e.transformUp {
+    val out = transformUpWithParameters(e) {
       case InSubquery(values, lq: ListQuery) if lq.outerAttrs.isEmpty =>
         if (values.size != 1)
           throw new UnsupportedOperationException(

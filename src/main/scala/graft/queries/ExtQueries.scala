@@ -21,6 +21,18 @@ object ExtQueries {
 
   private def t(s: SparkSession, d: String, name: String) = Tables.load(s, d, name)
 
+  private def fsOf(s: SparkSession, path: String) =
+    org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(path), s.sparkContext.hadoopConfiguration)
+
+  /** `path`, deleted recursively first: the fixture's working root,
+    * fresh on every pass.
+    */
+  private def freshRoot(s: SparkSession, path: String): String = {
+    fsOf(s, path).delete(new org.apache.hadoop.fs.Path(path), true)
+    path
+  }
+
   /** documents ∪ mutated copies — the planted near-dup corpus. */
   private def plantedDocs(s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents")
@@ -316,10 +328,7 @@ object ExtQueries {
     * nondeterministic.
     */
   def ingestCorpusReplay(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/ingest_corpus"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/ingest_corpus")
     // fixed-size plant (doc_id < 250): the query certifies the FOLD —
     // cross-batch dedup, bloom routing, crash/replay semantics — whose
     // cost is per-batch by design; ingest_pipeline times the sf-scaled
@@ -355,10 +364,7 @@ object ExtQueries {
     * changes nothing about the search semantics.
     */
   def vectorStoreSearchMany(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/vector_store_many"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/vector_store_many")
     val e = t(s, d, "embeddings")
     graft.ext.VectorStore.appendCommitted(e, root, "b0")
     val q = e.filter(col("vec_id") % 100 === 7)
@@ -379,10 +385,7 @@ object ExtQueries {
     * were to fall outside the coarse cut.
     */
   def vectorStoreSearchQ8(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/vector_store_q8"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/vector_store_q8")
     val e = t(s, d, "embeddings")
     // manifest-committed: the rerank's candidate-id IN probe now prunes
     // files via the per-file vec_id blooms on top of the pushed-down scan
@@ -427,10 +430,7 @@ object ExtQueries {
     * this row hash-checks the full PQ path, not a recall bound.
     */
   def vectorStoreSearchPq(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/vector_store_pq"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/vector_store_pq")
     val e = t(s, d, "embeddings")
     graft.ext.VectorStore.initPq(graft.ext.Similarity.pqTrain(e), root)
     graft.ext.VectorStore.appendCommitted(
@@ -462,10 +462,7 @@ object ExtQueries {
     * probe replays already time the sf-scaled LSH paths.
     */
   def nearDupCorpusReplay(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/neardup_corpus"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/neardup_corpus")
     // one scan of the planted subset, shared by b0's two legs and b1
     // (see trainIngestPlant); released per bench pass
     val docs = graft.core.Caches.track(
@@ -498,10 +495,7 @@ object ExtQueries {
     * and should scale in the bench.
     */
   def corpusStatsReplay(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/stats_sink"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/stats_sink")
     val docs = t(s, d, "documents")
     (0L until 3L).foreach { i =>
       graft.streaming.StatsSink.appendCommitted(
@@ -522,10 +516,7 @@ object ExtQueries {
     * probed cells — layout changes nothing about search semantics.
     */
   def vectorStoreSearch(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/vector_store"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/vector_store")
     val e = t(s, d, "embeddings")
     // manifest-committed store (VERDICT r10 #5): appends are atomic
     // idempotent commits and the probe prunes files from manifest stats
@@ -558,10 +549,7 @@ object ExtQueries {
     * certifies the entire retrain → reassign → search pipeline.
     */
   def vectorStoreRetrainQ(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/vector_store_retrain"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/vector_store_retrain")
     // both halves as array<double>: appends type-check against the
     // manifest schema, and the oracle's corpus casts identically
     val emb = t(s, d, "embeddings").select(col("vec_id"),
@@ -661,9 +649,7 @@ object ExtQueries {
   private def trainIngestFold(s: SparkSession, d: String, root: String,
                               withStats: Boolean = false,
                               replayLast: Boolean = false): String = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    freshRoot(s, root)
     val seeded = trainIngestPlant(s, d, withLang = withStats)
     val cols = if (withStats) Seq("doc_id", "text", "lang") else Seq("doc_id", "text")
     val corpus = s"$root/corpus"
@@ -738,10 +724,7 @@ object ExtQueries {
     * [[nearDupCorpusReplay]].
     */
   def nearDupEmbedCorpusReplay(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/neardup_embed"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/neardup_embed")
     // one scan of the planted subset, shared by b0/pert/neg (see
     // trainIngestPlant); released per bench pass
     val e = graft.core.Caches.track(
@@ -838,10 +821,7 @@ object ExtQueries {
     * promise up to their documented windows.
     */
   def manifestCorpusReplay(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/manifest_corpus"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/manifest_corpus")
     val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
     def b(i: Long) = docs.filter(col("doc_id") % 3 === i)
     graft.ext.ManifestTable.append(b(0), root, "b0")
@@ -864,10 +844,7 @@ object ExtQueries {
     * path is the difference between opening 3 files and 30 000.
     */
   def manifestSkippingQ(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/manifest_skip"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/manifest_skip")
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     graft.ext.ManifestTable.append(docs, root, "docs")
@@ -894,10 +871,7 @@ object ExtQueries {
     * ingest order.
     */
   def manifestBloomSkippingQ(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/manifest_bloom"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/manifest_bloom")
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     (0 until 3).foreach { i =>
@@ -924,10 +898,7 @@ object ExtQueries {
     * one, not a mix.
     */
   def manifestTimeTravelQ(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/manifest_travel"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/manifest_travel")
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     def b(i: Long) = docs.filter(col("doc_id") % 3 === i)
@@ -952,10 +923,7 @@ object ExtQueries {
     * pruned plan returns exactly the full-scan answer.
     */
   def manifestScanPrunedQ(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/manifest_scan"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/manifest_scan")
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     graft.ext.ManifestTable.append(docs, root, "docs")
@@ -986,10 +954,7 @@ object ExtQueries {
     * The oracle replays the partition filter in DuckDB.
     */
   def manifestPartitionPrunedQ(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/manifest_partition"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/manifest_partition")
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     graft.ext.ManifestTable.append(docs.filter(col("doc_id") % 2 === 0),
@@ -1965,8 +1930,7 @@ object ExtQueries {
     s.sql("CALL graft_fix.system.clone(" +
       "source => 'sqlcln', target => 'sqlcln2')")
     // ZERO data-file copies
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(wh), s.sparkContext.hadoopConfiguration)
+    val fs = fsOf(s, wh)
     val dd = new org.apache.hadoop.fs.Path(s"$wh/sqlcln2/data")
     require(!fs.exists(dd) || fs.listStatus(dd).isEmpty,
       "shallow clone copied data files")
@@ -2383,10 +2347,7 @@ object ExtQueries {
     * cliff is gone. The oracle replays delete + filter in DuckDB.
     */
   def manifestScanDvQ(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/manifest_scan_dv"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/manifest_scan_dv")
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     graft.ext.ManifestTable.append(docs, root, "docs")
@@ -2419,10 +2380,7 @@ object ExtQueries {
     * certifies effectively-once row-level ops.
     */
   def manifestDeleteQ(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/manifest_delete"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/manifest_delete")
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     graft.ext.ManifestTable.append(docs, root, "docs")
@@ -2448,10 +2406,7 @@ object ExtQueries {
     * passed through byte-identical.
     */
   def manifestUpdateQ(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/manifest_update"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/manifest_update")
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     graft.ext.ManifestTable.append(docs, root, "docs")
@@ -2476,10 +2431,7 @@ object ExtQueries {
     * the delete's visible result in DuckDB.
     */
   def manifestDeleteMetaQ(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/manifest_delete_meta"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/manifest_delete_meta")
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     graft.ext.ManifestTable.append(docs, root, "docs",
@@ -2510,10 +2462,7 @@ object ExtQueries {
     * match certifies replaced-exactly and untouched-survive.
     */
   def manifestOverwriteQ(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/manifest_overwrite"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/manifest_overwrite")
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     graft.ext.ManifestTable.append(docs, root, "docs",
@@ -2551,10 +2500,7 @@ object ExtQueries {
     * applies the vectors via a broadcast anti-join on (file, position).
     */
   def manifestDeleteDvQ(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/manifest_delete_dv"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/manifest_delete_dv")
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     graft.ext.ManifestTable.append(docs, root, "docs")
@@ -2591,10 +2537,7 @@ object ExtQueries {
     * per-read anti-join rent on delete-heavy files.
     */
   def manifestDvCompactQ(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/manifest_dv_compact"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/manifest_dv_compact")
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     graft.ext.ManifestTable.append(docs, root, "docs")
@@ -2635,10 +2578,7 @@ object ExtQueries {
     * REQUIRE), unmatched rows are never read back through a rewrite.
     */
   def manifestUpdateDvQ(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/manifest_update_dv"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/manifest_update_dv")
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     graft.ext.ManifestTable.append(docs, root, "docs")
@@ -2667,10 +2607,7 @@ object ExtQueries {
     */
   def manifestCountMetaQ(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = "/tmp/graft_fix/manifest_count_meta"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/manifest_count_meta")
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     graft.ext.ManifestTable.append(docs, root, "docs")
@@ -2691,10 +2628,7 @@ object ExtQueries {
     */
   def manifestMetaMinMaxQ(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = "/tmp/graft_fix/manifest_meta_minmax"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/manifest_meta_minmax")
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     graft.ext.ManifestTable.append(docs.filter(col("doc_id") % 2 === 0),
@@ -2731,10 +2665,7 @@ object ExtQueries {
     * unmatched-insert, and untouched-survive in one row.
     */
   def manifestMergeQ(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/manifest_merge"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/manifest_merge")
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     graft.ext.ManifestTable.append(docs, root, "docs")
@@ -2766,10 +2697,7 @@ object ExtQueries {
     * match certifies exactly-once incremental consumption.
     */
   def manifestChangeFeedQ(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/manifest_feed"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/manifest_feed")
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     def b(i: Long) = docs.filter(col("doc_id") % 3 === i)
@@ -2794,10 +2722,7 @@ object ExtQueries {
     * feed serves provably-insert-only commits regardless of op label.
     */
   def manifestFeedInsertMergeQ(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/manifest_feed_im"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/manifest_feed_im")
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     def b(i: Long) = docs.filter(col("doc_id") % 3 === i)
@@ -2833,10 +2758,7 @@ object ExtQueries {
     * the table's row-level history — the CDC contract itself.
     */
   def manifestCdfQ(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/manifest_cdf"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/manifest_cdf")
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     graft.ext.ManifestTable.append(docs, root, "docs")           // v1
@@ -2870,10 +2792,7 @@ object ExtQueries {
     val wh = "/tmp/graft_fix/wh"
     s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    val root = s"$wh/cdfb"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, s"$wh/cdfb")
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     graft.ext.ManifestTable.append(docs, root, "docs")           // v1
@@ -2905,10 +2824,7 @@ object ExtQueries {
     * dropped across the row ops.
     */
   def manifestCdfStreamReplayQ(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/manifest_cdf_stream"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/manifest_cdf_stream")
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     graft.ext.ManifestTable.append(docs, root, "docs")           // v1
@@ -2955,9 +2871,7 @@ object ExtQueries {
     */
   private def buildCdfDvFixture(s: SparkSession, d: String,
                                 root: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    freshRoot(s, root)
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     graft.ext.ManifestTable.append(docs, root, "docs")           // v1
@@ -3031,9 +2945,7 @@ object ExtQueries {
     */
   private def buildRestoreCdfFixture(s: SparkSession, d: String,
                                      root: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    freshRoot(s, root)
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     graft.ext.ManifestTable.append(docs, root, "docs")           // v1
@@ -3097,10 +3009,7 @@ object ExtQueries {
     * row: O(small bytes) maintenance, not O(table).
     */
   def manifestCompactSmallQ(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/manifest_compact_small"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/manifest_compact_small")
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
     graft.ext.ManifestTable.append(
@@ -3135,10 +3044,7 @@ object ExtQueries {
     * documents table: a hash match certifies the rewind is exact.
     */
   def manifestRestoreQ(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/manifest_restore"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/manifest_restore")
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     graft.ext.ManifestTable.append(docs, root, "docs")            // v1
@@ -3175,10 +3081,7 @@ object ExtQueries {
     val src = "/tmp/graft_fix/manifest_sink_src"
     val dst = "/tmp/graft_fix/manifest_sink_dst"
     val ckpt = "/tmp/graft_fix/manifest_sink_ckpt"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(src), s.sparkContext.hadoopConfiguration)
-    Seq(src, dst, ckpt).foreach(pth =>
-      fs.delete(new org.apache.hadoop.fs.Path(pth), true))
+    Seq(src, dst, ckpt).foreach(freshRoot(s, _))
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     (0 to 2).foreach(k => graft.ext.ManifestTable.append(
@@ -3220,10 +3123,7 @@ object ExtQueries {
     val src = "/tmp/graft_fix/strmsink_src"
     val ckpt = "/tmp/graft_fix/strmsink_ckpt"
     val dst = s"$wh/strmsink"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(src), s.sparkContext.hadoopConfiguration)
-    Seq(src, ckpt, dst).foreach(pth =>
-      fs.delete(new org.apache.hadoop.fs.Path(pth), true))
+    Seq(src, ckpt, dst).foreach(freshRoot(s, _))
     s.sql("DROP TABLE IF EXISTS graft_fix.strmsink")
     s.sql("CREATE TABLE graft_fix.strmsink " +
       "(doc_id BIGINT, lang STRING, n_chars BIGINT) PARTITIONED BY (lang)")
@@ -3262,10 +3162,7 @@ object ExtQueries {
     * consumption through the real streaming engine, not a simulation.
     */
   def manifestStreamReplayQ(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/manifest_stream"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/manifest_stream")
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     def b(i: Long) = docs.filter(col("doc_id") % 3 === i)
@@ -3299,10 +3196,7 @@ object ExtQueries {
     * certifies the schema-on-manifest read end to end.
     */
   def manifestSchemaEvolutionQ(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/manifest_evolve"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/manifest_evolve")
     val docs = t(s, d, "documents")
     graft.ext.ManifestTable.append(
       docs.filter(col("doc_id") % 2 === 0).select(col("doc_id"),
@@ -3327,10 +3221,7 @@ object ExtQueries {
     * rebuilds the two-generation union in DuckDB.
     */
   def manifestPartitionEvolutionQ(s: SparkSession, d: String): DataFrame = {
-    val root = "/tmp/graft_fix/manifest_part_evolve"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = freshRoot(s, "/tmp/graft_fix/manifest_part_evolve")
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     graft.ext.ManifestTable.append(
@@ -3388,10 +3279,7 @@ object ExtQueries {
     * identical (the oracle is the source table).
     */
   def compactRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val work = "/tmp/graft_fix/compact_work"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(work), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(work), true)
+    val work = freshRoot(s, "/tmp/graft_fix/compact_work")
     graft.ext.ManifestTable.append(
       t(s, d, "documents").select(col("doc_id"), col("text"))
         .repartition(16, col("doc_id")), work, "b0")

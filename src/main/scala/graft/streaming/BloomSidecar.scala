@@ -1,151 +1,44 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.udf
-import org.apache.spark.util.sketch.BloomFilter
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Bloom-filter sidecar files for an append-only segmented index — the
-  * shared routing layer under [[Ingest]] (fingerprints) and
-  * [[NearDupSink]] (band hashes). One `.bloom` file per appended
-  * segment; readers merge every file into ONE in-memory filter.
+/** The bloom-routed index probe shared by [[Ingest]] (fingerprints) and
+  * both [[NearDupSink]] folds (band hashes, bucket ids), over the
+  * per-file blooms the index's own manifest commits
+  * ([[graft.ext.ManifestTable.append]] with `bloomCols`). Those blooms
+  * are built before each segment's commit, rebuilt at row-count
+  * geometry by compaction and swept by vacuum, so the routing layer
+  * has no files, crash window or maintenance of its own.
   *
-  * A sidecar never DECIDES membership: a positive routes rows to the
+  * A bloom never DECIDES membership: a positive routes rows to the
   * precise anti-join/probe, a negative proves absence (blooms have no
-  * false negatives). So a missing or stale sidecar — crash between the
-  * segment write and the bloom write, a saturated filter — costs probe
-  * latency, never data.
+  * false negatives). So a segment without a bloom costs probe latency
+  * (the gate turns off), never data.
   */
 private[graft] object BloomSidecar {
 
-  /** Fixed geometry for every sidecar filter, so any set of them merges
-    * (`mergeInPlace` requires identical bit size + hash count). ~1.2 MB
-    * per filter; a segment with more items than `ExpectedItems` only
-    * degrades the false-positive rate — more rows pay the precise
-    * probe — never correctness.
-    */
-  val ExpectedItems = 1000000L
-  val Fpp = 0.01
-
-  /** Sidecar FILES opened since JVM start — observability for the cache
-    * contract (the r10 spec pins "one read + reuse across a fold").
-    */
-  val filesOpened = new java.util.concurrent.atomic.AtomicLong(0)
-
-  private def fs(spark: SparkSession, dir: String) =
-    org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-
-  private def bloomFiles(spark: SparkSession, dir: String) = {
-    val f = fs(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    if (!f.exists(p)) Array.empty[org.apache.hadoop.fs.FileStatus]
-    else f.listStatus(p)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".bloom"))
-  }
-
-  private def readFile(spark: SparkSession, dir: String,
-                       s: org.apache.hadoop.fs.FileStatus): BloomFilter = {
-    filesOpened.incrementAndGet()
-    val in = fs(spark, dir).open(s.getPath)
-    try BloomFilter.readFrom(in) finally in.close()
-  }
-
-  /** The union of every sidecar at `dir`, or None if there are none.
-    * Driver memory is ONE filter regardless of segment count — files
-    * merge as they stream in. Uncached — every call re-opens every
-    * file; streaming folds should use [[readCached]] (VERDICT r9 #5:
-    * with 1-second triggers and daily compaction this was thousands of
-    * driver file-opens per fold).
-    */
-  def read(spark: SparkSession, dir: String): Option[BloomFilter] = {
-    val files = bloomFiles(spark, dir)
-    if (files.isEmpty) return None
-    Some(files.map(readFile(spark, dir, _))
-      .reduce { (a, b) => a.mergeInPlace(b); a })
-  }
-
-  /** [[read]] with a driver-side cache keyed by directory: each call
-    * re-LISTS the directory (one metadata op — the invalidation signal)
-    * and re-OPENS only sidecar files it has not merged yet. Steady-state
-    * micro-batch cost is therefore one listing + one file open (the
-    * batch's own new sidecar), independent of segment count; a fold or
-    * compaction that DELETES files forces one full rebuild (bloom unions
-    * cannot subtract).
-    *
-    * The cached filter object is handed to callers and later mutated by
-    * `mergeInPlace` as new segments arrive. That sharing is safe by the
-    * sidecar contract: extra keys only turn negatives into positives,
-    * and a positive merely routes to the precise anti-join/probe —
-    * correctness never depends on the filter being a point-in-time
-    * snapshot.
-    */
-  def readCached(spark: SparkSession, dir: String): Option[BloomFilter] = {
-    val files = bloomFiles(spark, dir)
-    if (files.isEmpty) { cache.remove(dir); return None }
-    val names = files.map(_.getPath.toString).toSet
-    val cached = cache.get(dir)
-    val next =
-      if (cached != null && cached.files == names) cached
-      else if (cached != null && cached.files.subsetOf(names)) {
-        files.filterNot(s => cached.files.contains(s.getPath.toString))
-          .foreach(s => cached.filter.mergeInPlace(readFile(spark, dir, s)))
-        Cached(names, cached.filter)
-      } else
-        Cached(names, files.map(readFile(spark, dir, _))
-          .reduce { (a, b) => a.mergeInPlace(b); a })
-    cache.put(dir, next)
-    Some(next.filter)
-  }
-
-  private case class Cached(files: Set[String], filter: BloomFilter)
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Cached]()
-
-  def write(spark: SparkSession, dir: String, bf: BloomFilter): Unit = {
-    val out = fs(spark, dir).create(new org.apache.hadoop.fs.Path(
-      s"$dir/seg-${java.util.UUID.randomUUID()}.bloom"))
-    try bf.writeTo(out) finally out.close()
-  }
-
-  /** Distributed build over one string column (executor-side putString,
-    * tree-merged; the driver only ever holds merged filters).
-    */
-  def build(values: DataFrame, colName: String): BloomFilter =
-    values.select(colName).na.drop("all").rdd.treeAggregate(
-        BloomFilter.create(ExpectedItems, Fpp))(
-      (f, row) => { f.putString(row.getString(0)); f },
-      (a, b) => { a.mergeInPlace(b); a })
-
   /** The index rows a batch probe needs, or None when nothing can
-    * match — the gate-and-probe step shared by [[Ingest]] (fingerprints)
-    * and both [[NearDupSink]] folds (band hashes, bucket ids).
+    * match.
     *
-    * The merged sidecar at `dir` filters `rows` MAP-SIDE on `bloomKey`
-    * (the sidecar's key expression): a row it rejects cannot match any
-    * bloomed segment (an unbloomed segment is the crash window routing
-    * has always tolerated). ONE bounded collect then returns the
+    * One snapshot of the index at `segDir` decides both the empty-index
+    * case and the gate: its per-file blooms filter `rows` MAP-SIDE on
+    * `keyCol` ([[graft.ext.ManifestTable.keyGate]]; a row they reject
+    * matches no live segment). ONE bounded collect then returns the
     * bloom-positive distinct `keyCol` values, and that single job
-    * decides everything: none → the index at `segDir` is never read; at
-    * most [[Ingest.PointProbeMaxKeys]] → a stats+bloom pruned segment
-    * read (VERDICT r10 #4); more → the full snapshot read. Callers
-    * probe ALL of `rows` against the result: every row that can match
-    * has a bloom-positive key, and every index row under such a key is
-    * read, so routing and pruning never change a probe's answer.
+    * decides everything: none → the index is never read; at most
+    * [[Ingest.PointProbeMaxKeys]] → a stats+bloom pruned segment read;
+    * more → the full snapshot read. Callers probe ALL of `rows` against
+    * the result: every row that can match has a bloom-positive key, and
+    * every index row under such a key is read, so routing and pruning
+    * never change a probe's answer.
     */
-  def probe(spark: SparkSession, dir: String, segDir: String,
-            rows: DataFrame, bloomKey: Column,
+  def probe(spark: SparkSession, segDir: String, rows: DataFrame,
             keyCol: String): Option[DataFrame] = {
-    // read first, even for an empty index: keeps the cache's per-fold
-    // cost at one listing plus the sidecars appended since the last call
-    val filter = readCached(spark, dir)
-    if (graft.ext.ManifestTable.snapshot(spark, segDir).files.isEmpty) None
+    val snap = graft.ext.ManifestTable.snapshot(spark, segDir)
+    if (snap.files.isEmpty) None
     else {
-      val hot = filter.fold(rows) { bf =>
-        val bc = spark.sparkContext.broadcast(bf)
-        val mightHit = udf((k: String) =>
-          k != null && bc.value.mightContainString(k))
-        rows.filter(mightHit(bloomKey.cast("string")))
-      }
+      val hot = graft.ext.ManifestTable.keyGate(spark, segDir, snap, keyCol)
+        .fold(rows)(rows.filter)
       graft.core.BoundedCollect.distinct(hot, keyCol,
           Ingest.PointProbeMaxKeys) match {
         case Some(keys) if keys.isEmpty => None
@@ -153,22 +46,6 @@ private[graft] object BloomSidecar {
           segDir, graft.ext.ManifestTable.inPredicate(keyCol, keys.toSeq)))
         case None => Some(graft.ext.ManifestTable.read(spark, segDir))
       }
-    }
-  }
-
-  /** Fold many sidecars into one. Deletes only the files listed at its
-    * snapshot, so a sidecar appended mid-fold survives; a crash between
-    * the write and the deletes leaves duplicates, and a bloom union is
-    * idempotent, so readers are correct throughout.
-    */
-  def fold(spark: SparkSession, dir: String): Unit = {
-    val files = bloomFiles(spark, dir)
-    if (files.length > 1) {
-      val f = fs(spark, dir)
-      val merged = files.map(readFile(spark, dir, _))
-        .reduce { (a, b) => a.mergeInPlace(b); a }
-      write(spark, dir, merged)
-      files.foreach(s => f.delete(s.getPath, false))
     }
   }
 }

@@ -50,16 +50,6 @@ object Ingest {
     * anti-joins away entirely and appends nothing.
     */
   private def segmentsPath(indexDir: String) = s"$indexDir/segments"
-  private def bloomPath(indexDir: String) = s"$indexDir/bloom"
-
-  /** Sidecar geometry — see [[BloomSidecar]]: fixed so filters merge; a
-    * batch with more survivors than this only DEGRADES the
-    * false-positive rate — more batches pay the precise anti-join —
-    * never correctness, because the bloom only ROUTES (see
-    * [[ingestBatchCommitted]]).
-    */
-  val BloomExpectedItems: Long = BloomSidecar.ExpectedItems
-  val BloomFpp: Double = BloomSidecar.Fpp
 
   /** Point-probe bound: when a probe's distinct key set fits under this,
     * the index is read through [[graft.ext.ManifestTable.readWhere]] with
@@ -92,8 +82,8 @@ object Ingest {
   /** Periodic index maintenance: many per-batch segments → few
     * right-sized files CLUSTERED on `fp` (each compacted file then
     * covers a near-disjoint fingerprint range, so even stats-only
-    * pruning answers point probes), per-file blooms rebuilt, many
-    * routing sidecars → one. The rewrite commits as one manifest swap,
+    * pruning answers point probes), per-file blooms rebuilt at the
+    * compacted files' row counts. The rewrite commits as one manifest swap,
     * so it is safe WHILE the ingest stream appends — a concurrent
     * append rebases over the swap, a conflicting compaction aborts —
     * and orphaned segment files age out through
@@ -105,7 +95,6 @@ object Ingest {
       segmentsPath(indexDir), targetFileBytes,
       clusterBy = Seq("fp"), bloomCols = Seq("fp"))
     graft.ext.ManifestTable.vacuum(spark, segmentsPath(indexDir))
-    BloomSidecar.fold(spark, bloomPath(indexDir))
     counts
   }
 
@@ -139,8 +128,7 @@ object Ingest {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
     // every row is anti-joined: routing only picks which index rows
     // the probe reads (none, the bloom-positive fingerprints', or all)
-    val deduped = BloomSidecar.probe(spark, bloomPath(indexDir),
-        segmentsPath(indexDir), local, col("fp"), "fp")
+    val deduped = BloomSidecar.probe(spark, segmentsPath(indexDir), local, "fp")
       .fold(local)(idx => local.join(idx, Seq("fp"), "left_anti"))
       .drop("fp")
     val release = () => { local.unpersist(); () }
@@ -154,47 +142,37 @@ object Ingest {
 
   /** O(batch): append the survivors' fingerprints as a new
     * manifest-committed segment — nothing over the accumulated index is
-    * read or shuffled — then the routing bloom sidecar (after the
-    * segment: a segment without its bloom is extra candidates; a bloom
-    * without its segment would be routed to an anti-join that keeps the
-    * rows — both safe). The manifest batch id is a fresh UUID on
-    * purpose: index appends must stay UNCONDITIONAL so the self-healing
-    * backfill ([[ingestBatchCommitted]]) still lands after a replay —
-    * idempotence belongs to the corpus commit, duplicates here are
-    * harmless (an anti-join is idempotent in its right side). The
-    * `bloomCols` per-FILE blooms serve [[BloomSidecar.probe]]'s point-probe
-    * pruning; the merged [[BloomSidecar]] keeps serving map-side
-    * routing — different grain, both O(batch) to maintain.
+    * read or shuffled. The segment's `fp` bloom is built before its
+    * commit, so a committed segment always routes. The manifest batch
+    * id is a fresh UUID on purpose: index appends must stay
+    * UNCONDITIONAL so the self-healing backfill ([[ingestBatchCommitted]])
+    * still lands after a replay — idempotence belongs to the corpus
+    * commit, duplicates here are harmless (an anti-join is idempotent in
+    * its right side). The per-file blooms serve both halves of
+    * [[BloomSidecar.probe]]: the map-side gate and the point-probe
+    * pruning.
     */
   private def appendExactIndex(indexDir: String, kept: DataFrame,
                                textCol: String): Unit = {
-    val spark = kept.sparkSession
-    // the routing sidecar builds INSIDE the append's bloom pass (the
-    // SidecarBloomSpec hook) — one job over the written segment instead
-    // of a separate treeAggregate, and with a single consumer left the
-    // fingerprint frame no longer needs its own persist
-    val newFps = kept.select(md5(col(textCol)).as("fp"))
-    graft.ext.ManifestTable.append(newFps, segmentsPath(indexDir),
-      java.util.UUID.randomUUID().toString, bloomCols = Seq("fp"),
-      sidecarBloom = Some(graft.ext.ManifestTable.SidecarBloomSpec(
-        col("fp"), BloomSidecar.ExpectedItems, BloomSidecar.Fpp,
-        bf => BloomSidecar.write(spark, bloomPath(indexDir), bf))))
+    graft.ext.ManifestTable.append(kept.select(md5(col(textCol)).as("fp")),
+      segmentsPath(indexDir), java.util.UUID.randomUUID().toString,
+      bloomCols = Seq("fp"))
+    ()
   }
 
   /** Fold ONE batch of arriving documents into a self-maintaining
     * corpus: batch-local exact dedup, corpus dedup against the persisted
     * index, quality filter, survivors appended to `corpusDir` scrubbed
     * and COMMITTED through [[graft.ext.ManifestTable]] under `batchId`,
-    * their fingerprints appended as one new index segment plus one bloom
-    * sidecar.
+    * their fingerprints appended as one new index segment.
     *
-    * Corpus dedup is BLOOM-ROUTED: the merged sidecar filter (broadcast,
-    * ~1.2 MB) decides map-side which fingerprints might be indexed — a
-    * bloom has no false negatives — and [[BloomSidecar.probe]] reads none
-    * of the index, only the bloom-positive fingerprints' segments, or all
-    * of it. The bloom never decides membership — false positives just
-    * widen the index read — so a missing or stale sidecar (crash between
-    * segment and bloom writes) costs latency, never data.
+    * Corpus dedup is BLOOM-ROUTED: the index segments' per-file blooms
+    * (one broadcast) decide map-side which fingerprints might be
+    * indexed — a bloom has no false negatives — and
+    * [[BloomSidecar.probe]] reads none of the index, only the
+    * bloom-positive fingerprints' segments, or all of it. The bloom never
+    * decides membership — false positives just widen the index read —
+    * so a segment without a bloom costs latency, never data.
     *
     * Commit contract: the corpus records each batch id in its manifest,
     * so a crash-REPLAYED micro-batch can never duplicate its survivors.

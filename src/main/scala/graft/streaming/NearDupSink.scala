@@ -21,9 +21,9 @@ import org.apache.spark.sql.functions._
   * 8·numHashes bytes per document, never text or shingles); (3) commit
   * the remaining survivors to `corpusDir` and their signature band rows
   * as ONE new index segment — the same O(batch) append-only layout as
-  * [[Ingest]], with a [[BloomSidecar]] over band hashes gating the probe:
-  * a batch none of whose band hashes appear in any sidecar skips the
-  * index read entirely.
+  * [[Ingest]], with the segments' per-file band-hash blooms gating the
+  * probe ([[BloomSidecar.probe]]): a batch none of whose band hashes
+  * any segment's bloom admits skips the index read entirely.
   *
   * Sequential-fold semantics (NOT batch-global clustering): a document
   * is kept iff it is not near-dup to an earlier SURVIVOR. On a
@@ -50,7 +50,6 @@ import org.apache.spark.sql.functions._
 object NearDupSink {
 
   private def segmentsPath(indexDir: String) = s"$indexDir/segments"
-  private def bloomPath(indexDir: String) = s"$indexDir/bloom"
 
   /** The accumulated signature index (band, band_hash, corpus_id,
     * sig_idx), or None before the first batch. The segment store is a
@@ -115,8 +114,8 @@ object NearDupSink {
     // gate and pruned read decided by ONE bounded-collect job (see
     // BloomSidecar.probe): the sink's own jobs on the benchmark's
     // 2000-doc batch are 4 per fold, this probe included
-    val survivors = BloomSidecar.probe(spark, bloomPath(indexDir),
-        segmentsPath(indexDir), rows, col("band_hash"), "band_hash")
+    val survivors = BloomSidecar.probe(spark, segmentsPath(indexDir), rows,
+        "band_hash")
       .fold(within) { index =>
         val hits = StreamNearDup.probeMinHashRows(
             rows.select(col("corpus_id").as("probe_id"),
@@ -132,22 +131,17 @@ object NearDupSink {
     // the fold's survivor band rows: a semi-join against the persisted
     // batch rows, NOT a re-shingle of kept; column order re-pinned so
     // every appended segment file carries the identical schema. Single
-    // consumer (the append) since the sidecar build moved inside the
-    // append's bloom pass — no persist needed
+    // consumer (the append) — no persist needed
     val bandRows =
       rows.join(kept.select(col(idCol).cast("long").as("corpus_id")),
           Seq("corpus_id"), "left_semi")
         .select(col("band"), col("band_hash"), col("corpus_id"), col("sig_idx"))
     // manifest-committed segment append under a fresh UUID: the index
     // append must stay UNCONDITIONAL (the self-healing backfill after a
-    // replay); per-file band_hash blooms serve BloomSidecar.probe's
-    // pruned read, the merged sidecar (built in the SAME pass via
-    // SidecarBloomSpec) keeps serving the gate
+    // replay); its per-file band_hash blooms serve BloomSidecar.probe's
+    // gate and pruned read
     graft.ext.ManifestTable.append(bandRows, segmentsPath(indexDir),
-      java.util.UUID.randomUUID().toString, bloomCols = Seq("band_hash"),
-      sidecarBloom = Some(graft.ext.ManifestTable.SidecarBloomSpec(
-        col("band_hash"), BloomSidecar.ExpectedItems, BloomSidecar.Fpp,
-        bf => BloomSidecar.write(spark, bloomPath(indexDir), bf))))
+      java.util.UUID.randomUUID().toString, bloomCols = Seq("band_hash"))
     kept.unpersist()
     rows.unpersist()
     within.unpersist()
@@ -163,9 +157,9 @@ object NearDupSink {
     * representative), cross-batch [[StreamNearDup.probeEmbed]] against
     * the accumulated hyperplane bucket index (exact-cosine verify against
     * the vector riding on the index row), corpus commit keyed by
-    * `batchId`, O(batch) segment + sidecar append. The bloom keys are
-    * `tbl:bucket` strings, so the gate skips the index read when no
-    * batch vector lands in any occupied bucket of any table.
+    * `batchId`, O(batch) segment append. The gate keys on the segments'
+    * per-file `bk` blooms, so it skips the index read when no batch
+    * vector lands in a bucket id any table occupies.
     *
     * Same preconditions and commit contract as [[ingestBatchCommitted]]:
     * an identical replayed vector re-emerges only while its indexed copy
@@ -193,13 +187,11 @@ object NearDupSink {
     val rows = graft.core.Caches.track(
       StreamNearDup.buildEmbedIndex(within, idCol, vecCol, bits, dims, tables)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-    val bloomKey = concat_ws(":", col("tbl"), col("bk"))
-    // the sidecar keys are `tbl:bucket` composites while the pruned read
-    // keys on `bk`: a row routes to the probe iff its own table's
-    // composite might hit, and the bucketed join is inner on (tbl, bk),
-    // so reading every index row of the routed buckets keeps every match
-    val survivors = BloomSidecar.probe(spark, bloomPath(indexDir),
-        segmentsPath(indexDir), rows, bloomKey, "bk")
+    // the gate keys on `bk` alone, a superset of the (tbl, bk) the
+    // bucketed join is inner on: reading every index row of the routed
+    // buckets keeps every match
+    val survivors = BloomSidecar.probe(spark, segmentsPath(indexDir), rows,
+        "bk")
       .fold(within) { index =>
         val hits = StreamNearDup.probeEmbedRows(
             rows.select(col("corpus_id").as("probe_id"),
@@ -212,19 +204,14 @@ object NearDupSink {
     val kept = graft.core.Caches.track(survivors
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
     val committed = graft.ext.ManifestTable.append(kept, corpusDir, batchId)
-    // single consumer (the append) since the sidecar build moved inside
-    // the append's bloom pass — no persist needed; the sidecar key stays
-    // the `tbl:bucket` composite the gate checks
+    // single consumer (the append) — no persist needed
     val bandRows =
       rows.join(kept.select(col(idCol).cast("long").as("corpus_id")),
           Seq("corpus_id"), "left_semi")
         .select(col("tbl"), col("bk"), col("corpus_id"),
           col("v_idx"), col("bks_idx"))
     graft.ext.ManifestTable.append(bandRows, segmentsPath(indexDir),
-      java.util.UUID.randomUUID().toString, bloomCols = Seq("bk"),
-      sidecarBloom = Some(graft.ext.ManifestTable.SidecarBloomSpec(
-        bloomKey, BloomSidecar.ExpectedItems, BloomSidecar.Fpp,
-        bf => BloomSidecar.write(spark, bloomPath(indexDir), bf))))
+      java.util.UUID.randomUUID().toString, bloomCols = Seq("bk"))
     kept.unpersist()
     rows.unpersist()
     within.unpersist()
@@ -233,8 +220,8 @@ object NearDupSink {
 
   /** Segments → right-sized files clustered on the probe key (the
     * banded join's point lookups then prune on stats alone), per-file
-    * blooms rebuilt, routing sidecars → one; safe against concurrent
-    * appends (one manifest swap; a conflicting compaction aborts),
+    * blooms rebuilt at the compacted files' row counts; safe against
+    * concurrent appends (one manifest swap; a conflicting compaction aborts),
     * exactly as [[Ingest.compactIndex]]. `keyCol` is `band_hash` for
     * the MinHash index, `bk` for the embed index.
     */
@@ -245,7 +232,6 @@ object NearDupSink {
       segmentsPath(indexDir), targetFileBytes,
       clusterBy = Seq(keyCol), bloomCols = Seq(keyCol))
     graft.ext.ManifestTable.vacuum(spark, segmentsPath(indexDir))
-    BloomSidecar.fold(spark, bloomPath(indexDir))
     counts
   }
 }

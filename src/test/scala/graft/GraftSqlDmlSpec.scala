@@ -1121,4 +1121,49 @@ class GraftSqlDmlSpec extends SparkSpec {
     assert(sql("SELECT count(*) FROM graft_dml.g_nsafe")
       .as[Long].head() === 6L)
   }
+
+  test("BETWEEN in DELETE, UPDATE and MERGE conditions matches the range form row for row") {
+    spark.range(6).selectExpr("id AS id").createOrReplaceTempView("bt_src")
+    def fresh(t: String): Unit = {
+      fsDel(s"$wh/$t")
+      sql(s"CREATE TABLE graft_dml.$t (id BIGINT, v STRING)")
+      sql(s"INSERT INTO graft_dml.$t SELECT id, 'a' FROM range(6)")
+    }
+    def rows(t: String) = sql(s"SELECT id, v FROM graft_dml.$t ORDER BY id")
+      .as[(Long, String)].collect().toSeq
+    val untouched = (0L until 6L).map(_ -> "a")
+    // %s is the table; each BETWEEN form runs beside its range spelling
+    Seq(
+      "DELETE FROM graft_dml.%s WHERE id BETWEEN 2 AND 3" ->
+        "DELETE FROM graft_dml.%s WHERE id >= 2 AND id <= 3",
+      "UPDATE graft_dml.%s SET v = 'z' WHERE id BETWEEN 2 AND 3" ->
+        "UPDATE graft_dml.%s SET v = 'z' WHERE id >= 2 AND id <= 3",
+      "UPDATE graft_dml.%s SET v = 'z' WHERE NOT (id BETWEEN 2 AND 3)" ->
+        "UPDATE graft_dml.%s SET v = 'z' WHERE NOT (id >= 2 AND id <= 3)",
+      """MERGE INTO graft_dml.%s t USING bt_src s ON t.id = s.id
+        |WHEN MATCHED AND t.id BETWEEN 2 AND 3 THEN UPDATE SET v = 'z'
+        |WHEN MATCHED THEN UPDATE SET v = 'y'""".stripMargin ->
+      """MERGE INTO graft_dml.%s t USING bt_src s ON t.id = s.id
+        |WHEN MATCHED AND t.id >= 2 AND t.id <= 3 THEN UPDATE SET v = 'z'
+        |WHEN MATCHED THEN UPDATE SET v = 'y'""".stripMargin,
+      // uncorrelated subqueries ride as held conditions, printed at run
+      // time: max(id) - 2 = 3
+      ("DELETE FROM graft_dml.%s WHERE id BETWEEN 2 AND " +
+        "(SELECT max(id) FROM bt_src) - 2") ->
+        ("DELETE FROM graft_dml.%s WHERE id >= 2 AND " +
+        "id <= (SELECT max(id) FROM bt_src) - 2"),
+      """MERGE INTO graft_dml.%s t USING bt_src s ON t.id = s.id
+        |WHEN MATCHED AND t.id BETWEEN 2 AND (SELECT max(id) FROM bt_src) - 2
+        |  THEN UPDATE SET v = 'z'""".stripMargin ->
+      """MERGE INTO graft_dml.%s t USING bt_src s ON t.id = s.id
+        |WHEN MATCHED AND t.id >= 2 AND t.id <= (SELECT max(id) FROM bt_src) - 2
+        |  THEN UPDATE SET v = 'z'""".stripMargin
+    ).foreach { case (between, range) =>
+      fresh("bt_between"); fresh("bt_range")
+      sql(between.format("bt_between"))
+      sql(range.format("bt_range"))
+      assert(rows("bt_range") !== untouched, range)
+      assert(rows("bt_between") === rows("bt_range"), between)
+    }
+  }
 }

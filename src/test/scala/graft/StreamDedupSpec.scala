@@ -146,16 +146,21 @@ class StreamDedupSpec extends SparkSpec {
       "per-batch index write must be O(batch survivors), not O(corpus)")
     assert(graft.streaming.Ingest.readIndex(spark, index).count() === 4L)
     assert(graft.ext.ManifestTable.read(spark, corpus).count() === 4L)
-    // each batch also leaves one bloom sidecar (batch 2 ran bloom-routed:
-    // two known docs were candidates, the fresh one took the map-side path)
-    def bloomFiles() = new java.io.File(s"$index/bloom").listFiles()
-      .count(_.getName.endsWith(".bloom"))
-    assert(bloomFiles() === 2)
-    // periodic maintenance folds segments AND sidecars without changing
-    // semantics
+    // every live segment file carries its per-file fp bloom (batch 2 ran
+    // bloom-routed: two known docs were candidates, the fresh one took
+    // the map-side path), and no routing layer is written beside them
+    def everyLiveSegmentBloomed() = {
+      val snap = graft.ext.ManifestTable.snapshot(spark, s"$index/segments")
+      snap.files.nonEmpty && snap.files.forall(f => new java.io.File(
+        s"$index/segments/_bloom/$f.fp.bloom").exists())
+    }
+    assert(everyLiveSegmentBloomed())
+    assert(!new java.io.File(s"$index/bloom").exists())
+    // periodic maintenance folds segments and rebuilds their blooms
+    // without changing semantics
     val (nin, nout) = graft.streaming.Ingest.compactIndex(spark, index)
     assert(nin >= 2 && nout === 1)
-    assert(bloomFiles() === 1)
+    assert(everyLiveSegmentBloomed())
     assert(graft.streaming.Ingest.readIndex(spark, index).count() === 4L)
     // post-compaction, known content still dedups away entirely
     graft.streaming.Ingest.ingestBatchCommitted(

@@ -199,10 +199,16 @@ class StreamNearDupSpec extends SparkSpec {
       .map(_.getName).filter(_.endsWith(".parquet")).toSet -- files1
     assert(spark.read.parquet(
         newFiles.map(f => s"$indexDir/segments/data/$f").toSeq: _*).count() === 4L)
-    // one bloom sidecar per batch; compaction folds them
-    def blooms() = new java.io.File(s"$indexDir/bloom").listFiles()
-      .count(_.getName.endsWith(".bloom"))
-    assert(blooms() === 2)
+    // every live segment file carries its per-file band_hash bloom, and
+    // no routing layer is written beside them
+    def everyLiveSegmentBloomed() = {
+      val snap = graft.ext.ManifestTable.snapshot(spark,
+        s"$indexDir/segments")
+      snap.files.nonEmpty && snap.files.forall(f => new java.io.File(
+        s"$indexDir/segments/_bloom/$f.band_hash.bloom").exists())
+    }
+    assert(everyLiveSegmentBloomed())
+    assert(!new java.io.File(s"$indexDir/bloom").exists())
     // batch 1's content re-sent under a fresh id appends nothing — to
     // the corpus or the index: identical signatures estimate jaccard 1.0
     // against their own indexed copies
@@ -212,7 +218,7 @@ class StreamNearDupSpec extends SparkSpec {
     assert(corpusIds() === Seq(1L, 3L, 11L))
     assert(segRows().count() === segsBefore)
     val (nin, nout) = graft.streaming.NearDupSink.compactIndex(spark, indexDir)
-    assert(nin >= 2 && nout === 1 && blooms() === 1)
+    assert(nin >= 2 && nout === 1 && everyLiveSegmentBloomed())
     // post-compaction the probe still sees everything
     graft.streaming.NearDupSink.ingestBatchCommitted(
       Seq((20L, a)).toDF("id", "text"), corpusDir, indexDir, "b2")
