@@ -36,13 +36,15 @@ private[ext] trait ManifestMaintenance { this: ManifestTable.type =>
     * one small job), 8 bits per dimension, bits interleaved
     * round-robin. The z-value is a transient sort key only — never
     * written.
+    *
+    * Like every rewrite, compaction lands its files with the table's
+    * declared blooms and NDV sketches ([[land]]), at the compacted
+    * files' row counts.
     */
   def compact(spark: SparkSession, dir: String,
               targetFileBytes: Long = 128L * 1024 * 1024,
               beforeSwap: () => Unit = () => (),
               clusterBy: Seq[String] = Nil,
-              bloomCols: Seq[String] = Nil,
-              bloomFpp: Double = 0.01,
               zorder: Boolean = false): (Int, Int) = {
     val f = fs(spark, dir)
     val snap = snapshot(spark, dir)
@@ -52,7 +54,6 @@ private[ext] trait ManifestMaintenance { this: ManifestTable.type =>
     val totalBytes = snap.files.map(n => snap.sizes.getOrElse(n,
       f.getFileStatus(p(dataFilePath(dir, n))).getLen)).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    val stage = s"$dir/_stage/${java.util.UUID.randomUUID()}"
     // schema-aware read: rewritten files MATERIALIZE the full column set,
     // so after one compaction every live file carries every table column
     val base = readFiles(spark, dir, snap, snap.files)
@@ -74,18 +75,9 @@ private[ext] trait ManifestMaintenance { this: ManifestTable.type =>
           clusterBy.map(org.apache.spark.sql.functions.col): _*)
         .sortWithinPartitions(
           clusterBy.map(org.apache.spark.sql.functions.col): _*)
-    val physReshaped = toPhysical(snap, reshaped)
-    stageWrite(physReshaped, stage, snap.partitionCols,
-      sized = true)
-    val (rewritten, rewrittenSizes, rewrittenPvals) = moveToData(f, dir,
-      stage, partFamilies(base.schema, snap.partitionCols))
-    val rewrittenStats = footerStats(spark, dir, rewritten)
-    // range partitioning can leave empty output partitions; drop the
-    // provably-empty files instead of committing unprunable segments
-    val live = dropEmpty(f, dir, rewritten, rewrittenStats)
-    buildBlooms(spark, dir, live, bloomCols.map(physName(snap, _)),
-      rewrittenStats, bloomFpp, fileSchema = Some(physReshaped.schema))
-    val rewrittenNdv = buildNdv(spark, dir, live, snap.ndvCols)
+    // range partitioning can leave empty output partitions; landing
+    // drops the provably-empty files
+    val landed = rewrite(spark, dir, snap, reshaped)
     beforeSwap()
     // replace EXACTLY the files this compaction read; files appended by
     // a concurrent writer (present in `old` but not in the snapshot we
@@ -102,22 +94,23 @@ private[ext] trait ManifestMaintenance { this: ManifestTable.type =>
       if (snap.files.exists(fn => !old.files.contains(fn)) ||
         snap.files.exists(fn => old.dvs.getOrElse(fn, Seq.empty) !=
           snap.dvs.getOrElse(fn, Seq.empty))) None
-      else Some(old.copy(
-        files = old.files.filterNot(snap.files.contains) ++ live,
-        stats = old.stats -- snap.files ++ rewrittenStats,
-        sizes = old.sizes -- snap.files ++
-          rewrittenSizes.filter(kv => live.contains(kv._1)),
-        pvals = old.pvals -- snap.files ++
-          rewrittenPvals.filter(kv => live.contains(kv._1)),
-        ndv = old.ndv -- snap.files ++ rewrittenNdv,
-        // the rewrite read through the DV-applied view, so the deleted
-        // positions are gone from the output: the rewrite RETIRES the
-        // rewritten files' deletion vectors
-        dvs = old.dvs -- snap.files,
+      // the rewrite read through the DV-applied view, so the deleted
+      // positions are gone from the output: the rewrite RETIRES the
+      // rewritten files' deletion vectors
+      else Some(landed.into(old, replaced = snap.files).copy(
         op = "compact", cdcPath = None))
     }
-    if (committed) (snap.files.size, live.size) else (0, 0)
+    if (committed) (snap.files.size, landed.files.size) else (0, 0)
   }
+
+  /** Land a maintenance rewrite of `snap`'s rows (logical names): the
+    * caller already sized its output partitioning, which the landing
+    * step's optimized-write rebalance must keep.
+    */
+  private def rewrite(spark: SparkSession, dir: String, snap: Snapshot,
+                      rows: DataFrame): Landed =
+    land(spark, dir, toPhysical(snap, rows), snap.partitionCols,
+      snap.bloomCols, snap.ndvCols, sized = true)
 
   /** BIN-PACKING compaction — rewrite ONLY the files smaller than
     * `minFileBytes` into ~`targetFileBytes` files, leaving every
@@ -137,9 +130,7 @@ private[ext] trait ManifestMaintenance { this: ManifestTable.type =>
   def compactSmall(spark: SparkSession, dir: String,
                    targetFileBytes: Long = 128L * 1024 * 1024,
                    minFileBytes: Long = 64L * 1024 * 1024,
-                   beforeSwap: () => Unit = () => (),
-                   bloomCols: Seq[String] = Nil,
-                   bloomFpp: Double = 0.01): (Int, Int) = {
+                   beforeSwap: () => Unit = () => ()): (Int, Int) = {
     // an inverted threshold pair makes the packer's own outputs
     // perpetual candidates — every tick rewrites the same data forever;
     // refuse loudly instead (the streaming sink sizes its target up)
@@ -155,39 +146,20 @@ private[ext] trait ManifestMaintenance { this: ManifestTable.type =>
     val candBytes = candidates.map(sizeOf).sum
     val nOut = math.max(1,
       math.ceil(candBytes.toDouble / targetFileBytes).toInt)
-    val stage = s"$dir/_stage/${java.util.UUID.randomUUID()}"
     val base = readFiles(spark, dir, snap, candidates)
-    val reshaped =
+    val landed = rewrite(spark, dir, snap,
       if (snap.partitionCols.isEmpty) base.repartition(nOut)
       else base.repartition(nOut,
-        snap.partitionCols.map(org.apache.spark.sql.functions.col): _*)
-    val physReshaped = toPhysical(snap, reshaped)
-    stageWrite(physReshaped, stage, snap.partitionCols,
-      sized = true)
-    val (rewritten, rewrittenSizes, rewrittenPvals) = moveToData(f, dir,
-      stage, partFamilies(base.schema, snap.partitionCols))
-    val rewrittenStats = footerStats(spark, dir, rewritten)
-    val live = dropEmpty(f, dir, rewritten, rewrittenStats)
-    buildBlooms(spark, dir, live, bloomCols.map(physName(snap, _)),
-      rewrittenStats, bloomFpp, fileSchema = Some(physReshaped.schema))
-    val rewrittenNdv = buildNdv(spark, dir, live, snap.ndvCols)
+        snap.partitionCols.map(org.apache.spark.sql.functions.col): _*))
     beforeSwap()
     val committed = commit(spark, dir) { old =>
       if (candidates.exists(fn => !old.files.contains(fn)) ||
         candidates.exists(fn => old.dvs.getOrElse(fn, Seq.empty) !=
           snap.dvs.getOrElse(fn, Seq.empty))) None
-      else Some(old.copy(
-        files = old.files.filterNot(candidates.contains) ++ live,
-        stats = old.stats -- candidates ++ rewrittenStats,
-        sizes = old.sizes -- candidates ++
-          rewrittenSizes.filter(kv => live.contains(kv._1)),
-        pvals = old.pvals -- candidates ++
-          rewrittenPvals.filter(kv => live.contains(kv._1)),
-        ndv = old.ndv -- candidates ++ rewrittenNdv,
-        dvs = old.dvs -- candidates,
+      else Some(landed.into(old, replaced = candidates).copy(
         op = "compact", cdcPath = None))
     }
-    if (committed) (candidates.size, live.size) else (0, 0)
+    if (committed) (candidates.size, landed.files.size) else (0, 0)
   }
 
   /** DV MAINTENANCE — the targeted flip side of [[compact]]'s full-table
@@ -208,13 +180,10 @@ private[ext] trait ManifestMaintenance { this: ManifestTable.type =>
     */
   def purgeDeletes(spark: SparkSession, dir: String,
                    maxDeletedFraction: Double = 0.3,
-                   beforeSwap: () => Unit = () => (),
-                   bloomCols: Seq[String] = Nil,
-                   bloomFpp: Double = 0.01): (Int, Int) = {
+                   beforeSwap: () => Unit = () => ()): (Int, Int) = {
     require(maxDeletedFraction > 0.0,
       "maxDeletedFraction must be > 0 (0 would rewrite every DV'd file " +
         "— that is compact())")
-    val f = fs(spark, dir)
     val snap = snapshot(spark, dir)
     val candidates = snap.files.filter { fn =>
       val dvRows = snap.dvs.getOrElse(fn, Seq.empty).map(_.rows).sum
@@ -222,19 +191,10 @@ private[ext] trait ManifestMaintenance { this: ManifestTable.type =>
         st.rows > 0L && dvRows.toDouble / st.rows >= maxDeletedFraction)
     }
     if (candidates.isEmpty) return (0, 0)
-    val stage = s"$dir/_stage/${java.util.UUID.randomUUID()}"
-    val purgeRead = readFiles(spark, dir, snap, candidates)
-    val physPurge = toPhysical(snap, purgeRead)
-    stageWrite(physPurge, stage, snap.partitionCols,
-      sized = true)
-    val (rewritten, rewrittenSizes, rewrittenPvals) = moveToData(f, dir,
-      stage, partFamilies(purgeRead.schema, snap.partitionCols))
-    val rewrittenStats = footerStats(spark, dir, rewritten)
-    // a file DV'd down to zero live rows rewrites to nothing: drop it
-    val live = dropEmpty(f, dir, rewritten, rewrittenStats)
-    buildBlooms(spark, dir, live, bloomCols.map(physName(snap, _)),
-      rewrittenStats, bloomFpp, fileSchema = Some(physPurge.schema))
-    val rewrittenNdv = buildNdv(spark, dir, live, snap.ndvCols)
+    // a file DV'd down to zero live rows rewrites to nothing: landing
+    // drops it
+    val landed = rewrite(spark, dir, snap,
+      readFiles(spark, dir, snap, candidates))
     beforeSwap()
     val committed = commit(spark, dir) { old =>
       // same staleness hazards as compact: a candidate rewritten away,
@@ -243,22 +203,13 @@ private[ext] trait ManifestMaintenance { this: ManifestTable.type =>
       if (candidates.exists(c => !old.files.contains(c) ||
         old.dvs.getOrElse(c, Seq.empty) != snap.dvs.getOrElse(c, Seq.empty)))
         None
-      else Some(old.copy(
-        files = old.files.filterNot(candidates.contains) ++ live,
-        stats = old.stats -- candidates ++
-          rewrittenStats.filter(kv => live.contains(kv._1)),
-        sizes = old.sizes -- candidates ++
-          rewrittenSizes.filter(kv => live.contains(kv._1)),
-        pvals = old.pvals -- candidates ++
-          rewrittenPvals.filter(kv => live.contains(kv._1)),
-        ndv = old.ndv -- candidates ++ rewrittenNdv,
-        // the rewrite applied the vectors; they retire with their files
-        dvs = old.dvs -- candidates,
-        // a row-preserving rewrite, exactly like compact: the feeds
-        // skip it instead of re-surfacing survivor rows
+      // the rewrite applied the vectors; they retire with their files.
+      // A row-preserving rewrite, exactly like compact: the feeds skip
+      // it instead of re-surfacing survivor rows
+      else Some(landed.into(old, replaced = candidates).copy(
         op = "compact", cdcPath = None))
     }
-    if (committed) (candidates.size, live.size) else (0, 0)
+    if (committed) (candidates.size, landed.files.size) else (0, 0)
   }
 
   /** Delete data files no longer referenced by any version a reader

@@ -39,32 +39,15 @@ private[ext] trait ManifestRowOps { this: ManifestTable.type =>
     * `cdc` (rows already carrying `_change_type`) lands as a sidecar
     * dataset under `_cdc/<uuid>` BEFORE the swap and is referenced by
     * the commit's `cdc:` manifest line — a crash strands an orphan
-    * sidecar, never a commit claiming changes it didn't write.
+    * sidecar, never a commit claiming changes it didn't write. The
+    * rewritten files carry the table's declared sketches ([[land]]).
     */
   private def cowCommit(spark: SparkSession, dir: String, snap: Snapshot,
                         candidates: Seq[String], out: Option[DataFrame],
                         op: String, opId: String, beforeSwap: () => Unit,
-                        bloomCols: Seq[String], bloomFpp: Double,
                         cdc: Option[DataFrame] = None): Boolean = {
-    val f = fs(spark, dir)
-    var stagedSchema: Option[org.apache.spark.sql.types.StructType] = None
-    val (moved, sizes, pvals) = out match {
-      case None => (Seq.empty[String], Map.empty[String, Long],
-        Map.empty[String, Map[String, PartValue]])
-      case Some(df) =>
-        val stage = s"$dir/_stage/${java.util.UUID.randomUUID()}"
-        val physDf = toPhysical(snap, df)
-        stagedSchema = Some(physDf.schema)
-        stageWrite(physDf, stage, snap.partitionCols)
-        moveToData(f, dir, stage,
-          partFamilies(df.schema, snap.partitionCols))
-    }
-    val stats = footerStats(spark, dir, moved)
-    val live = dropEmpty(f, dir, moved, stats)
-    // the staged schema skips the read-back's schema-inference job
-    buildBlooms(spark, dir, live, bloomCols.map(physName(snap, _)), stats,
-      bloomFpp, fileSchema = stagedSchema)
-    val ndvMap = buildNdv(spark, dir, live, snap.ndvCols)
+    val landed = out.fold(Landed.empty)(df => land(spark, dir,
+      toPhysical(snap, df), snap.partitionCols, snap.bloomCols, snap.ndvCols))
     val cdcName = cdc.map { changes =>
       // _change_type is RESERVED when CDC is on: a table column of that
       // name would be silently replaced in the sidecar, corrupting the
@@ -93,19 +76,10 @@ private[ext] trait ManifestRowOps { this: ManifestTable.type =>
         old.dvs.getOrElse(c, Seq.empty) != snap.dvs.getOrElse(c, Seq.empty))) {
         opConflicted.set(true); None
       }
-      else Some(old.copy(
-        files = old.files.filterNot(candidates.contains) ++ live,
+      // rewrites read through the DV-applied view, so the rewritten
+      // candidates' deletion vectors are retired with their files
+      else Some(landed.into(old, replaced = candidates).copy(
         batchIds = old.batchIds + opId,
-        stats = old.stats -- candidates ++ stats.filter(kv => live.contains(kv._1)),
-        sizes = old.sizes -- candidates ++
-          sizes.filter(kv => live.contains(kv._1)),
-        pvals = old.pvals -- candidates ++
-          pvals.filter(kv => live.contains(kv._1)),
-        ndv = old.ndv -- candidates ++
-          ndvMap.view.filterKeys(live.toSet).toMap,
-        // rewrites read through the DV-applied view, so the rewritten
-        // candidates' deletion vectors are retired with their files
-        dvs = old.dvs -- candidates,
         // a row-level op never changes the schema, but a table CREATED
         // by one (merge into an empty table) must still record it —
         // otherwise later appends adding columns would silently lose
@@ -197,8 +171,6 @@ private[ext] trait ManifestRowOps { this: ManifestTable.type =>
     */
   def deleteWhere(spark: SparkSession, dir: String, predicateSql: String,
                   opId: String, beforeSwap: () => Unit = () => (),
-                  bloomCols: Seq[String] = Nil,
-                  bloomFpp: Double = 0.01,
                   cdc: Boolean = false): Boolean = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
     val snap = snapshot(spark, dir)
@@ -241,7 +213,7 @@ private[ext] trait ManifestRowOps { this: ManifestTable.type =>
             }
         }
       cowCommit(spark, dir, snap, candidates, out, "delete", opId,
-        beforeSwap, bloomCols, bloomFpp, changes)
+        beforeSwap, changes)
     } finally if (cdc) candDf.foreach(_.unpersist(false))
   }
 
@@ -256,8 +228,6 @@ private[ext] trait ManifestRowOps { this: ManifestTable.type =>
   def updateWhere(spark: SparkSession, dir: String, predicateSql: String,
                   set: Map[String, String], opId: String,
                   beforeSwap: () => Unit = () => (),
-                  bloomCols: Seq[String] = Nil,
-                  bloomFpp: Double = 0.01,
                   cdc: Boolean = false): Boolean = {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit, when}
     require(set.nonEmpty, "updateWhere needs at least one SET column")
@@ -311,7 +281,7 @@ private[ext] trait ManifestRowOps { this: ManifestTable.type =>
           .unionByName(applied(df, onlyMatched = true)
             .withColumn("_change_type", lit("update_postimage"))))
       cowCommit(spark, dir, snap, candidates, out, "update", opId,
-        beforeSwap, bloomCols, bloomFpp, changes)
+        beforeSwap, changes)
     } finally if (cdc) candDf.foreach(_.unpersist(false))
   }
 
@@ -512,12 +482,9 @@ private[ext] trait ManifestRowOps { this: ManifestTable.type =>
   def updateWhereDV(spark: SparkSession, dir: String, predicateSql: String,
                     set: Map[String, String], opId: String,
                     beforeSwap: () => Unit = () => (),
-                    bloomCols: Seq[String] = Nil,
-                    bloomFpp: Double = 0.01,
                     cdc: Boolean = false): Boolean = {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit}
     require(set.nonEmpty, "updateWhereDV needs at least one SET column")
-    val f = fs(spark, dir)
     val snap = snapshot(spark, dir)
     if (snap.batchIds.contains(opId)) return declined()
     rejectGeneratedAssign(snap, set.keys, "updateWhereDV")
@@ -527,7 +494,7 @@ private[ext] trait ManifestRowOps { this: ManifestTable.type =>
     if (dvBasenameCollision(candidates)) {
       warnDvFallback("updateWhereDV", dir)
       return updateWhere(spark, dir, predicateSql, set, opId, beforeSwap,
-        bloomCols, bloomFpp, cdc)
+        cdc)
     }
     val cond = coalesce(expr(predicateSql), lit(false))
     val fm = "_graft_meta_file"
@@ -552,17 +519,8 @@ private[ext] trait ManifestRowOps { this: ManifestTable.type =>
       // no coalesce(1): parallel positions write, same as deleteWhereDV
       matched.select(col(fm).as(DvFileCol), col(pm).as(DvPosCol))
         .write.parquet(s"${dvDir(dir)}/$dvName")
-      val stage = s"$dir/_stage/${java.util.UUID.randomUUID()}"
-      val physUpdated = toPhysical(snap, updated)
-      stageWrite(physUpdated, stage, snap.partitionCols)
-      val (moved, sizes, pvals) = moveToData(f, dir, stage,
-        partFamilies(updated.schema, snap.partitionCols))
-      val stats = footerStats(spark, dir, moved)
-      val live = dropEmpty(f, dir, moved, stats)
-      // the staged schema skips the read-back's schema-inference job
-      buildBlooms(spark, dir, live, bloomCols.map(physName(snap, _)), stats,
-        bloomFpp, fileSchema = Some(physUpdated.schema))
-      val ndvMap = buildNdv(spark, dir, live, snap.ndvCols)
+      val landed = land(spark, dir, toPhysical(snap, updated),
+        snap.partitionCols, snap.bloomCols, snap.ndvCols)
       val cdcName =
         if (!cdc) None
         else {
@@ -585,13 +543,8 @@ private[ext] trait ManifestRowOps { this: ManifestTable.type =>
           old.dvs.getOrElse(c, Seq.empty) != snap.dvs.getOrElse(c, Seq.empty))) {
           opConflicted.set(true); None
         }
-        else Some(old.copy(
-          files = old.files ++ live,
+        else Some(landed.into(old, replaced = Nil).copy(
           batchIds = old.batchIds + opId,
-          stats = old.stats ++ stats.filter(kv => live.contains(kv._1)),
-          sizes = old.sizes ++ sizes.filter(kv => live.contains(kv._1)),
-          pvals = old.pvals ++ pvals.filter(kv => live.contains(kv._1)),
-          ndv = old.ndv ++ ndvMap.view.filterKeys(live.toSet).toMap,
           dvs = counts.foldLeft(old.dvs) { case (acc, (file, n)) =>
             acc.updated(file, acc.getOrElse(file, Seq.empty) :+
               DvRef(dvName, n))
@@ -623,8 +576,6 @@ private[ext] trait ManifestRowOps { this: ManifestTable.type =>
     */
   def overwriteWhere(df0: DataFrame, dir: String, predicateSql: String,
                      opId: String, beforeSwap: () => Unit = () => (),
-                     bloomCols: Seq[String] = Nil,
-                     bloomFpp: Double = 0.01,
                      cdc: Boolean = false): Boolean = {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit, not}
     val spark = df0.sparkSession
@@ -702,7 +653,7 @@ private[ext] trait ManifestRowOps { this: ManifestTable.type =>
           Some(dels.map(_.unionByName(ins)).getOrElse(ins))
         }
       cowCommit(spark, dir, snap, candidates, out, "overwrite", opId,
-        beforeSwap, bloomCols, bloomFpp, changes)
+        beforeSwap, changes)
     } finally if (cdc) candDf.foreach(_.unpersist(false))
   }
 
@@ -812,7 +763,6 @@ private[ext] trait ManifestRowOps { this: ManifestTable.type =>
     */
   def deleteMatching(source: DataFrame, dir: String, keyCols: Seq[String],
                      opId: String, beforeSwap: () => Unit = () => (),
-                     bloomCols: Seq[String] = Nil, bloomFpp: Double = 0.01,
                      maxProbeKeys: Int = 1024,
                      cdc: Boolean = false): Boolean = {
     import org.apache.spark.sql.functions.{col, lit}
@@ -848,13 +798,12 @@ private[ext] trait ManifestRowOps { this: ManifestTable.type =>
         else Some(candDf.join(keyDf, tableKeyCols, "left_semi")
           .withColumn("_change_type", lit("delete")))
       cowCommit(spark, dir, snap, candidates, Some(out), "delete", opId,
-        beforeSwap, bloomCols, bloomFpp, changes)
+        beforeSwap, changes)
     } finally if (cdc) candDf.unpersist(false)
   }
 
   def merge(source: DataFrame, dir: String, keyCols: Seq[String],
             opId: String, beforeSwap: () => Unit = () => (),
-            bloomCols: Seq[String] = Nil, bloomFpp: Double = 0.01,
             maxProbeKeys: Int = 1024, cdc: Boolean = false): Boolean = {
     import org.apache.spark.sql.functions.{col, lit, max, min}
     import org.apache.spark.sql.types._
@@ -896,7 +845,7 @@ private[ext] trait ManifestRowOps { this: ManifestTable.type =>
       withNotNull(snap, aligned, snap.constraints), "merge source")
     if (snap.files.isEmpty)
       return cowCommit(spark, dir, snap, Nil, Some(aligned), "merge", opId,
-        beforeSwap, bloomCols, bloomFpp,
+        beforeSwap,
         if (cdc) Some(aligned.withColumn("_change_type", lit("insert")))
         else None)
     val keyDf = aligned.select(keyCols.map(col).toSeq: _*).distinct()
@@ -934,7 +883,7 @@ private[ext] trait ManifestRowOps { this: ManifestTable.type =>
         Some((pre.toSeq ++ post.toSeq :+ ins).reduce(_ unionByName _))
       }
     cowCommit(spark, dir, snap, candidates, out, "merge", opId,
-      beforeSwap, bloomCols, bloomFpp, changes)
+      beforeSwap, changes)
     } finally if (cdc) candDf.foreach(_.unpersist(false))
   }
 
@@ -990,7 +939,6 @@ private[ext] trait ManifestRowOps { this: ManifestTable.type =>
                    matched: Seq[MergeClause], notMatched: Seq[MergeClause],
                    notMatchedBySource: Seq[MergeClause], opId: String,
                    beforeSwap: () => Unit = () => (),
-                   bloomCols: Seq[String] = Nil, bloomFpp: Double = 0.01,
                    maxProbeKeys: Int = 1024, cdc: Boolean = false,
                    sourceKeyCols: Seq[String] = Nil,
                    residueSql: Option[String] = None,
@@ -1319,7 +1267,7 @@ private[ext] trait ManifestRowOps { this: ManifestTable.type =>
         }
       cowCommit(spark, dir, snap,
         if (rewriting) candidates else Nil, out, "merge", opId,
-        beforeSwap, bloomCols, bloomFpp, changes)
+        beforeSwap, changes)
     } finally if (cdc) joined.foreach(_.unpersist(false))
   }
 

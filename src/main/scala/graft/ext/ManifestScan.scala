@@ -359,7 +359,9 @@ class ManifestSource extends RelationProvider with StreamSourceProvider
     * (the same transactional-sink contract as Delta's txn version).
     * `.partitionBy(cols)` on the writer declares the table's partition
     * layout on the first batch; later batches inherit it. Option
-    * `bloomCols` (comma-separated) builds bloom sidecars per batch.
+    * `bloomCols` (comma-separated) declares the table's bloom columns
+    * the same way: every later batch, and every maintenance rewrite,
+    * lands its files with their per-file blooms.
     * Append output mode only — a manifest table is an append-feed log,
     * not a keyed store.
     *

@@ -115,6 +115,12 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     * (merge-on-read: the file's rows at those positions are deleted
     * without rewriting the file). `constraints` are the table's named
     * CHECK expressions, enforced at append/merge/update.
+    *
+    * `ndvCols` and `bloomCols` DECLARE which columns every landed data
+    * file carries a per-file sketch for (an HLL sketch in `ndv`, a bloom
+    * filter under `_bloom/`): lower-cased physical names, declared by
+    * the first write that names them and built by every later one —
+    * appends and rewrites alike ([[land]]).
     */
   final case class Snapshot(version: Long, files: Seq[String],
                             batchIds: Set[String],
@@ -131,7 +137,8 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
                             ndv: Map[String, Map[String, String]] = Map.empty,
                             properties: Map[String, String] = Map.empty,
                             colMap: Seq[(String, String)] = Nil,
-                            retiredCols: Seq[String] = Nil)
+                            retiredCols: Seq[String] = Nil,
+                            bloomCols: Seq[String] = Nil)
 
   /** COLUMN MAPPING (`colMap`: logical name → physical parquet name;
     * `retiredCols`: physical names of dropped columns, never reusable):
@@ -147,7 +154,7 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     * non-empty it lists EVERY current column, so a delta carrying any
     * `colmap:` line is a full redefinition and absence inherits.
     * Manifest-side invariant: `stats`/`ndv`/`pvals`/bloom sidecars and
-    * the `ndvCols` declaration are keyed by PHYSICAL names; the
+    * the `ndvCols`/`bloomCols` declarations are keyed by PHYSICAL names; the
     * recorded `schemaJson` is LOGICAL.
     */
   private[graft] def physName(s: Snapshot, logical: String): String =
@@ -467,9 +474,9 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     if (name.startsWith("/") || name.contains("://")) name
     else s"${dataDir(dir)}/$name"
   private[ext] def bloomDir(dir: String) = s"$dir/_bloom"
-  // colName lowercased so the write side (caller-supplied bloomCols case)
-  // and the probe side (eqConjuncts' lowercased attribute names) agree on
-  // the sidecar name; without it a Seq("UserId") sidecar is never consulted.
+  // colName lowercased so the write side (the declaration, recorded
+  // lower-cased) and the probe side (eqConjuncts' lowercased attribute
+  // names) agree on the sidecar name whatever case a caller declared.
   private[ext] def bloomPath(dir: String, file: String, colName: String) =
     s"${bloomDir(dir)}/$file.${enc(colName.toLowerCase)}.bloom"
 
@@ -856,6 +863,9 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     *                                     null partition)
     *   ndvcols:<colEnc>[\t<colEnc>...]   columns tracking NDV sketches
     *                                     (declared once, inherited)
+    *   bloomcols:<colEnc>[\t<colEnc>...] columns carrying per-file bloom
+    *                                     filters (declared once,
+    *                                     inherited)
     *   ndv:<name>\t<colEnc>\t<b64>       one file's per-column HLL
     *                                     sketch (Datasketches compact
     *                                     bytes, base64) — mergeable, so
@@ -891,7 +901,8 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
       propsSet: Seq[(String, String)],
       propsUnset: Set[String],
       colMap: Option[Seq[(String, String)]],
-      retired: Option[Seq[String]])
+      retired: Option[Seq[String]],
+      bloomCols: Option[Seq[String]])
 
   private[ext] def parseLog(lines: List[String]): ParsedLog = {
     // limit -1: trailing empty fields SURVIVE the split. A column whose
@@ -911,6 +922,13 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
       file -> FileStats(n,
         cols.getOrElse(file, Nil).map(c => c._2 -> c._3).toMap)
     }
+    // a column-list line (partcols:/ndvcols:/bloomcols:); filter("")
+    // makes the EMPTY list round-trip: colsLine(key, Nil) serializes as
+    // a bare "key:" (REPLACE TABLE resets a declaration), and "" is
+    // never a real column name
+    def colList(key: String): Option[Seq[String]] =
+      lines.find(_.startsWith(key + ":")).map(_.stripPrefix(key + ":")
+        .split("\t", -1).toSeq.map(dec).filter(_.nonEmpty))
     ParsedLog(
       files = lines.filter(_.startsWith("file:")).map(_.stripPrefix("file:")),
       adds = lines.filter(_.startsWith("add:")).map(_.stripPrefix("add:")),
@@ -939,12 +957,7 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
       },
       consDrop = lines.filter(_.startsWith("dropconstraint:"))
         .map(l => dec(l.stripPrefix("dropconstraint:"))).toSet,
-      // filter("" ) makes the EMPTY list round-trip: partColsLine(Nil)
-      // serializes as a bare "partcols:" (REPLACE TABLE un-partitions),
-      // and "" is never a real column name
-      partitionCols = lines.find(_.startsWith("partcols:"))
-        .map(_.stripPrefix("partcols:").split("\t", -1).toSeq.map(dec)
-          .filter(_.nonEmpty)),
+      partitionCols = colList("partcols"),
       pvals = lines.filter(_.startsWith("pv:")).map { l =>
         val a = l.stripPrefix("pv:").split("\t", -1)
         (a(0), dec(a(1)),
@@ -952,9 +965,7 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
       }.groupBy(_._1).map { case (file, vs) =>
         file -> vs.map(v => v._2 -> v._3).toMap
       },
-      ndvCols = lines.find(_.startsWith("ndvcols:"))
-        .map(_.stripPrefix("ndvcols:").split("\t", -1).toSeq.map(dec)
-          .filter(_.nonEmpty)),
+      ndvCols = colList("ndvcols"),
       ndv = lines.filter(_.startsWith("ndv:")).map { l =>
         val a = l.stripPrefix("ndv:").split("\t", -1)
         (a(0), dec(a(1)), a(2))
@@ -972,7 +983,8 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
         (dec(a(0)), dec(a(1)))
       }).filter(_.nonEmpty),
       retired = Some(lines.filter(_.startsWith("retired:"))
-        .map(l => dec(l.stripPrefix("retired:")))).filter(_.nonEmpty))
+        .map(l => dec(l.stripPrefix("retired:")))).filter(_.nonEmpty),
+      bloomCols = colList("bloomcols"))
   }
 
   private[ext] def readLogLines(spark: SparkSession, dir: String,
@@ -994,7 +1006,8 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
       pl.cdcPath, pl.sizes, pl.dvs, pl.consAdd.toMap,
       pl.partitionCols.getOrElse(Nil), pl.pvals,
       pl.ndvCols.getOrElse(Nil), pl.ndv, pl.propsSet.toMap,
-      pl.colMap.getOrElse(Nil), pl.retired.getOrElse(Nil))
+      pl.colMap.getOrElse(Nil), pl.retired.getOrElse(Nil),
+      pl.bloomCols.getOrElse(Nil))
   }
 
   /** One commit's ACTIONS (the delta file for `v`). */
@@ -1027,7 +1040,8 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
       ndv = base.ndv -- gone ++ d.ndv,
       properties = base.properties ++ d.propsSet -- d.propsUnset,
       colMap = d.colMap.getOrElse(base.colMap),
-      retiredCols = d.retired.getOrElse(base.retiredCols))
+      retiredCols = d.retired.getOrElse(base.retiredCols),
+      bloomCols = d.bloomCols.getOrElse(base.bloomCols))
   }
 
   /** The snapshot's rows (schema comes from the listed files). A table
@@ -1102,10 +1116,12 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     * vacuum only ever deletes from the clone's own data directory, so
     * cloned (absolute) files are never its candidates; conversely a
     * vacuum of the SOURCE cannot see the clone's references, the same
-    * documented caveat Delta shallow clones carry. Bloom sidecars do
-    * not travel (pruning falls back to stats until the clone rewrites
-    * a file); deletion-vector sidecars cannot cross the boundary at
-    * all, so a DV-carrying source must `purge_deletes` first — loud.
+    * documented caveat Delta shallow clones carry. The bloom
+    * DECLARATION travels but the source's bloom files do not (pruning
+    * falls back to stats, and [[keyGate]] stays off, until the clone
+    * rewrites a file; its own appends land with blooms);
+    * deletion-vector sidecars cannot cross the boundary at all, so a
+    * DV-carrying source must `purge_deletes` first — loud.
     * Returns the clone's head version (always 1).
     */
   def shallowClone(spark: SparkSession, srcDir: String,
@@ -1139,7 +1155,8 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
         ndv = re(s.ndv),
         properties = s.properties,
         colMap = s.colMap,
-        retiredCols = s.retiredCols))
+        retiredCols = s.retiredCols,
+        bloomCols = s.bloomCols))
     }
     require(done, s"clone commit to $dstDir did not land")
     snapshot(spark, dstDir).version
@@ -1251,7 +1268,8 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
 
   /** `[CREATE OR] REPLACE TABLE [AS SELECT]` as ONE atomic manifest
     * commit — the whole definition (schema, partition layout,
-    * properties; constraints and NDV tracking reset with it) and the
+    * properties; constraints and the NDV/bloom declarations reset with
+    * it) and the
     * whole contents swap together, and the table's HISTORY SURVIVES:
     * the replace is just the next version, so time travel still answers
     * below it, [[restore]] can undo it, and the old data files stay on
@@ -1277,36 +1295,21 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
                    mayExist: Boolean = true): Boolean = {
     import org.apache.spark.sql.functions.col
     validatePartitionDecl(schema, partitionBy)
-    val f = fs(spark, dir)
     val head0 = snapshot(spark, dir)
     if (head0.batchIds.contains(opId)) return false
     if (mustExist) require(head0.version > 0L,
       s"REPLACE TABLE: no table at $dir (use CREATE OR REPLACE)")
     if (!mayExist) require(head0.version == 0L,
       s"ManifestTable at $dir already exists (v${head0.version})")
-    val staged = data.map { df =>
-      val aligned = df.select(schema.fields.map(fd =>
-        col(fd.name).cast(fd.dataType).as(fd.name)).toSeq: _*)
-      val stage = s"$dir/_stage/${java.util.UUID.randomUUID()}"
-      stageWrite(aligned, stage, partitionBy)
-      val (moved, sizes, pvals) =
-        moveToData(f, dir, stage, partFamilies(schema, partitionBy))
-      val stats = footerStats(spark, dir, moved)
-      val live = dropEmpty(f, dir, moved, stats)
-      (live, stats, sizes, pvals)
+    val landed = data.fold(Landed.empty) { df =>
+      land(spark, dir, df.select(schema.fields.map(fd =>
+          col(fd.name).cast(fd.dataType).as(fd.name)).toSeq: _*),
+        partitionBy, blooms = Nil, ndvCols = Nil)
     }
-    val (live, stats, sizes, pvals) = staged.getOrElse(
-      (Seq.empty[String], Map.empty[String, FileStats],
-        Map.empty[String, Long], Map.empty[String, Map[String, PartValue]]))
     commit(spark, dir) { old =>
       if (old.batchIds.contains(opId)) None
-      else Some(old.copy(
-        files = live,
-        stats = stats.view.filterKeys(live.toSet).toMap,
-        sizes = sizes.view.filterKeys(live.toSet).toMap,
-        pvals = pvals.view.filterKeys(live.toSet).toMap,
-        ndv = Map.empty, ndvCols = Nil,
-        dvs = Map.empty,
+      else Some(landed.into(old, replaced = old.files).copy(
+        ndvCols = Nil, bloomCols = Nil,
         schemaJson = Some(schema.json),
         partitionCols = partitionBy,
         constraints = Map.empty,
@@ -1592,9 +1595,10 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
       Some(old.copy(schemaJson = Some(newSchema.json),
         colMap = newMap,
         retiredCols = (old.retiredCols :+ phys).distinct,
-        // NDV tracking on the dropped column stops (new files will not
-        // carry it); existing per-file sketches age out with rewrites
+        // sketching the dropped column stops (new files will not carry
+        // it); existing per-file sketches and blooms age out with rewrites
         ndvCols = old.ndvCols.filterNot(_.equalsIgnoreCase(phys)),
+        bloomCols = old.bloomCols.filterNot(_.equalsIgnoreCase(phys)),
         op = "metadata", cdcPath = None))
     }
 
@@ -1611,11 +1615,17 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     * [[readWhere]] and the planner-integrated [[scan]] — hive-style
     * partition pruning without directories. Later appends inherit the
     * layout automatically (passing a conflicting one raises).
+    *
+    * `bloomCols` and `ndvCols` declare, like `partitionBy`: the first
+    * write naming them records them in the manifest, and every later
+    * append AND rewrite (DML, merge, compaction, DV purge) lands its
+    * files with a bloom filter per declared bloom column and an HLL
+    * sketch per declared NDV column. Later calls may repeat the
+    * declaration or omit it; naming different columns raises.
     */
   def append(df0: DataFrame, dir: String, batchId: String,
              beforeCommit: () => Unit = () => (),
              bloomCols: Seq[String] = Nil,
-             bloomFpp: Double = 0.01,
              partitionBy: Seq[String] = Nil,
              ndvCols: Seq[String] = Nil): Boolean = {
     // IDENTITY tables wrap the attempt in the standard conflict-rebase
@@ -1624,21 +1634,19 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     // retry restages against the fresh mark. Identity-free tables —
     // the overwhelmingly common case — take the attempt directly.
     if (identityOf(snapshot(df0.sparkSession, dir)).isEmpty)
-      appendOnce(df0, dir, batchId, beforeCommit, bloomCols, bloomFpp,
-        partitionBy, ndvCols)
+      appendOnce(df0, dir, batchId, beforeCommit, bloomCols, partitionBy,
+        ndvCols)
     else retryOnConflict(df0.sparkSession, dir, batchId, attempts = 5)(
-      appendOnce(df0, dir, batchId, beforeCommit, bloomCols, bloomFpp,
-        partitionBy, ndvCols))
+      appendOnce(df0, dir, batchId, beforeCommit, bloomCols, partitionBy,
+        ndvCols))
   }
 
   private def appendOnce(df0: DataFrame, dir: String, batchId: String,
              beforeCommit: () => Unit,
              bloomCols: Seq[String],
-             bloomFpp: Double,
              partitionBy: Seq[String],
              ndvCols: Seq[String]): Boolean = {
     val spark = df0.sparkSession
-    val f = fs(spark, dir)
     val snap0 = snapshot(spark, dir)
     if (snap0.batchIds.contains(batchId)) return false
     // IDENTITY columns mint first (a generation expression may read
@@ -1668,35 +1676,19 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     enforceConstraints(df, withNotNull(snap0, df, snap0.constraints),
       s"append batch $batchId")
     val layout = resolveLayout(snap0, df.schema, partitionBy)
-    val stage = s"$dir/_stage/${java.util.UUID.randomUUID()}"
+    // sketch declarations, inherited or declared here — recorded (like
+    // every sidecar/stat key) under PHYSICAL names, so a later rename
+    // costs the sketches nothing
+    def declared(what: String, cur: Seq[String], req: Seq[String]) =
+      declare(what, cur, req.map(c => physName(snap0, c).toLowerCase))
+    val blooms = declared("bloom", snap0.bloomCols, bloomCols)
+    val tracked = declared("NDV", snap0.ndvCols, ndvCols)
     // data files bind by PHYSICAL names (partition columns cannot be
     // renamed, so `layout` needs no translation)
-    val physDf = toPhysical(snap0, df)
-    stageWrite(physDf, stage, layout)
-    val (moved, sizes, pvals) =
-      moveToData(f, dir, stage, partFamilies(df.schema, layout))
-    val stats = footerStats(spark, dir, moved)
-    // a file the footer PROVES empty (0 rows) is dropped before the
-    // commit — a fully-deduplicated batch otherwise litters the manifest
-    // with unprunable empty segments; its batch id still commits, so
-    // replay idempotence is unaffected
-    val live = dropEmpty(f, dir, moved, stats)
-    buildBlooms(spark, dir, live, bloomCols.map(physName(snap0, _)),
-      stats, bloomFpp, fileSchema = Some(physDf.schema))
-    // NDV tracking: declared on the first append (like partitionBy),
-    // inherited by every later one; each batch pays one O(batch) pass.
-    // Recorded (like every sidecar/stat key) under PHYSICAL names, so a
-    // later rename costs the sketches nothing
-    val tracked =
-      if (snap0.ndvCols.nonEmpty) {
-        require(ndvCols.isEmpty ||
-          ndvCols.map(c => physName(snap0, c).toLowerCase) == snap0.ndvCols,
-          s"table already tracks NDV on (${snap0.ndvCols.mkString(", ")})")
-        snap0.ndvCols
-      } else ndvCols.map(c => physName(snap0, c).toLowerCase)
-    val ndvMap = buildNdv(spark, dir, live, tracked,
-      fileSchema = Some(physDf.schema))
-    val idMarks = identityMarks(spark, dir, snap0, live, stats, idAdv)
+    val landed = land(spark, dir, toPhysical(snap0, df), layout, blooms,
+      tracked)
+    val idMarks = identityMarks(spark, dir, snap0, landed.files,
+      landed.stats, idAdv)
     beforeCommit()
     if (idAdv.nonEmpty) opConflicted.set(false) // terminal decision
     commit(spark, dir) { old =>
@@ -1720,13 +1712,13 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
         require(old.colMap == snap0.colMap &&
           old.retiredCols == snap0.retiredCols,
           s"concurrent commit changed the column mapping of $dir")
-        Some(old.copy(files = old.files ++ live,
-          batchIds = old.batchIds + batchId, stats = old.stats ++ stats,
-          sizes = old.sizes ++ sizes.filter(kv => live.contains(kv._1)),
-          pvals = old.pvals ++ pvals.filter(kv => live.contains(kv._1)),
+        // and a racing append that declared DIFFERENT sketch columns
+        // raises through the same check as a re-declaration
+        Some(landed.into(old, replaced = Nil).copy(
+          batchIds = old.batchIds + batchId,
           partitionCols = if (layout.nonEmpty) layout else old.partitionCols,
-          ndvCols = if (tracked.nonEmpty) tracked else old.ndvCols,
-          ndv = old.ndv ++ ndvMap.view.filterKeys(live.toSet).toMap,
+          bloomCols = declare("bloom", old.bloomCols, blooms),
+          ndvCols = declare("NDV", old.ndvCols, tracked),
           properties = old.properties ++ idMarks,
           op = "append", schemaJson = mergedSchemaJson(old, df.schema),
           cdcPath = None))
@@ -1819,7 +1811,7 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     * compactSmall size to `targetFileBytes`; purgeDeletes is
     * contractually zero-shuffle) — the rebalance must not override it.
     */
-  private[ext] def stageWrite(df: DataFrame, stage: String,
+  private def stageWrite(df: DataFrame, stage: String,
                          partCols: Seq[String],
                          sized: Boolean = false): Unit =
     if (partCols.isEmpty) rebalanced(df, Nil, sized).write.parquet(stage)
@@ -1849,7 +1841,7 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     * [[moveToData]] stamps into each file's [[PartValue]]s. Declaration
     * already restricted the columns to these types.
     */
-  private[ext] def partFamilies(schema: org.apache.spark.sql.types.StructType,
+  private def partFamilies(schema: org.apache.spark.sql.types.StructType,
                            partCols: Seq[String]): Map[String, String] = {
     import org.apache.spark.sql.types._
     partCols.flatMap { c =>
@@ -1870,7 +1862,7 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     * the hive-style `_gp_<col>=<value>` directories a partitioned
     * [[stageWrite]] produced (empty map per file on flat stages).
     */
-  private[ext] def moveToData(f: org.apache.hadoop.fs.FileSystem, dir: String,
+  private def moveToData(f: org.apache.hadoop.fs.FileSystem, dir: String,
                          stage: String,
                          partFams: Map[String, String] = Map.empty)
   : (Seq[String], Map[String, Long], Map[String, Map[String, PartValue]]) = {
@@ -1924,12 +1916,76 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
   /** Delete and drop the files whose footer stats prove zero rows;
     * files WITHOUT stats (unreadable footer) are conservatively kept.
     */
-  private[ext] def dropEmpty(f: org.apache.hadoop.fs.FileSystem, dir: String,
+  private def dropEmpty(f: org.apache.hadoop.fs.FileSystem, dir: String,
                         names: Seq[String],
                         stats: Map[String, FileStats]): Seq[String] = {
     val (empty, live) = names.partition(n => stats.get(n).exists(_.rows == 0L))
     empty.foreach(n => f.delete(p(s"${dataDir(dir)}/$n"), false))
     live
+  }
+
+  /** Files a write has [[land]]ed in `data/`, with everything the
+    * manifest records per file — invisible until a commit names them.
+    */
+  private[ext] final case class Landed(
+      files: Seq[String], stats: Map[String, FileStats],
+      sizes: Map[String, Long], pvals: Map[String, Map[String, PartValue]],
+      ndv: Map[String, Map[String, String]]) {
+    /** `old` with the `replaced` files (and their deletion vectors)
+      * swapped for these, which append after the survivors.
+      */
+    def into(old: Snapshot, replaced: Seq[String]): Snapshot = {
+      val gone = replaced.toSet
+      old.copy(files = old.files.filterNot(gone) ++ files,
+        stats = old.stats -- gone ++ stats, sizes = old.sizes -- gone ++ sizes,
+        pvals = old.pvals -- gone ++ pvals, ndv = old.ndv -- gone ++ ndv,
+        dvs = old.dvs -- gone)
+    }
+  }
+
+  private[ext] object Landed {
+    val empty: Landed = Landed(Nil, Map.empty, Map.empty, Map.empty, Map.empty)
+  }
+
+  /** THE landing step of every write that adds data files — append,
+    * REPLACE, the copy-on-write row ops, the DV update, compaction, the
+    * small-file packer and the DV purge: stage `physDf` (physical
+    * column names) out of view, move the files into `data/`, harvest
+    * footer stats, drop files the footer proves empty (a fully
+    * deduplicated batch would otherwise litter the manifest with
+    * unprunable empty segments), then build the declared per-file
+    * sketches in ONE pass ([[buildSketches]]) — blooms land BEFORE the
+    * caller's commit, so a crash strands orphans for [[vacuum]], never
+    * a committed file missing its filter. `sized` = the caller already
+    * shaped the output partitioning (see [[stageWrite]]).
+    */
+  private[ext] def land(spark: SparkSession, dir: String, physDf: DataFrame,
+                        partCols: Seq[String], blooms: Seq[String],
+                        ndvCols: Seq[String], sized: Boolean = false): Landed = {
+    val f = fs(spark, dir)
+    val stage = s"$dir/_stage/${java.util.UUID.randomUUID()}"
+    stageWrite(physDf, stage, partCols, sized)
+    val (moved, sizes, pvals) =
+      moveToData(f, dir, stage, partFamilies(physDf.schema, partCols))
+    val stats = footerStats(spark, dir, moved)
+    val live = dropEmpty(f, dir, moved, stats)
+    val keep = live.toSet
+    Landed(live, stats.view.filterKeys(keep).toMap,
+      sizes.view.filterKeys(keep).toMap, pvals.view.filterKeys(keep).toMap,
+      buildSketches(spark, dir, live, stats, blooms, ndvCols, physDf.schema))
+  }
+
+  /** A sketch declaration as a write resolves it: the table's `cur`
+    * declaration wins; a nonempty `req` on an undeclared table declares
+    * it; a `req` naming other columns than `cur` raises — a declaration
+    * changes only through DROP COLUMN or REPLACE.
+    */
+  private[ext] def declare(what: String, cur: Seq[String],
+                           req: Seq[String]): Seq[String] = {
+    require(req.isEmpty || cur.isEmpty || req == cur,
+      s"table already declares $what columns (${cur.mkString(", ")}); " +
+        s"a write cannot re-declare them as (${req.mkString(", ")})")
+    if (cur.nonEmpty) cur else req
   }
 
   private[ext] def cdcDir(dir: String) = s"$dir/_cdc"
@@ -3013,7 +3069,9 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     * predicate over the per-file blooms, in one broadcast. Blooms have
     * no false negatives, so a row it rejects matches no live file.
     * None — every row routes — when some live file has no bloom for
-    * `keyCol` (appended without `bloomCols`, or a type blooms skip) or
+    * `keyCol` (the table does not declare it in `bloomCols`, the file
+    * landed before the declaration or came in by [[shallowClone]], its
+    * bloom file is gone, or the column's type is one blooms skip) or
     * the blooms together exceed [[KeyGateMaxBytes]]. Typed like
     * [[Skipping.bloomTest]]: string keys probe `mightContainString`,
     * integral keys `mightContainLong`. Costs O(live files) per row.
@@ -3060,57 +3118,6 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     */
   private val NdvLgK = 9
 
-  /** Per-file, per-column HLL sketches over the just-written `names` —
-    * one aggregate pass of O(batch) (never the table), mirroring
-    * [[buildBlooms]]. Values update the sketch by canonical string, so
-    * the estimate is over the column's distinct VALUES whatever the
-    * type; nulls don't count. Sketches are MERGEABLE (Datasketches
-    * union), so table-level NDV is a driver-side fold over the
-    * manifest — zero data I/O at question time ([[metaNdv]]).
-    */
-  private[ext] def buildNdv(spark: SparkSession, dir: String,
-                       names: Seq[String], cols: Seq[String],
-                       fileSchema: Option[org.apache.spark.sql.types.StructType]
-                         = None)
-  : Map[String, Map[String, String]] = {
-    import org.apache.spark.sql.functions.{col, input_file_name}
-    import org.apache.datasketches.hll.{HllSketch, Union}
-    if (cols.isEmpty || names.isEmpty) return Map.empty
-    // explicit staged schema: no schema-inference job (see buildBlooms)
-    val reader = spark.read
-    val df = fileSchema.map(reader.schema).getOrElse(reader)
-      .parquet(names.map(n => dataFilePath(dir, n)): _*)
-    val usable = cols.filter(c =>
-      df.schema.fields.exists(_.name.equalsIgnoreCase(c)))
-    if (usable.isEmpty) return Map.empty
-    val nCols = usable.size
-    val partials = df
-      .select(input_file_name.as("_graft_file") +: usable.map(col): _*)
-      .rdd.mapPartitions { it =>
-        val acc = scala.collection.mutable.Map[(String, Int), HllSketch]()
-        it.foreach { row =>
-          val name = row.getString(0).split('/').last
-          var i = 0
-          while (i < nCols) {
-            if (!row.isNullAt(i + 1))
-              acc.getOrElseUpdate((name, i), new HllSketch(NdvLgK))
-                .update(String.valueOf(row.get(i + 1)))
-            i += 1
-          }
-        }
-        acc.iterator.map { case (k, sk) => (k, sk.toCompactByteArray) }
-      }.collect()
-    partials.groupBy(_._1).toSeq.map { case ((file, i), parts) =>
-      val u = new Union(NdvLgK)
-      parts.foreach { case (_, bytes) => u.update(HllSketch.heapify(bytes)) }
-      (file, usable(i).toLowerCase,
-        java.util.Base64.getEncoder.encodeToString(
-          u.getResult.toCompactByteArray))
-    }.groupBy(_._1).map { case (file, entries) =>
-      file -> entries.map(e => e._2 -> e._3).toMap
-    }
-  }
-
   /** Table-level NDV ESTIMATES from the manifest alone — the per-file
     * sketches union-merged on the driver, zero data I/O, zero jobs. A
     * column's estimate is returned only when EVERY live file carries a
@@ -3139,78 +3146,114 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     }.toMap
   }
 
-  /** Build one bloom sidecar per (new data file, requested column) in a
-    * SINGLE distributed pass over just the written batch — O(batch), not
-    * O(table): rows carry their `input_file_name`, partial filters fold
-    * per partition and merge per file. Only plain integral and string
-    * columns participate (the two kinds with a stable hash contract on
-    * both build and probe side); anything else is silently skipped and
-    * simply never prunes. Sidecars land BEFORE the manifest commit, so a
-    * crash strands orphan blooms for [[vacuum]], never a manifest whose
-    * files lack their filters. Bloom pruning answers the query min/max
-    * cannot: a point lookup on a high-cardinality column across
-    * unclustered appends, where every file's [min, max] spans the whole
-    * key space but each file holds ~1/N of the keys.
+  /** False-positive rate of every per-file bloom filter. */
+  private val BloomFpp = 0.01
+
+  /** Build every declared per-file sketch of the just-landed `names` in
+    * ONE distributed pass over just those files — O(batch), not
+    * O(table), and one job however many columns are declared: rows
+    * carry their `input_file_name`, partial sketches fold per partition
+    * and merge per (file, column, kind) on the executors.
+    *
+    *   - BLOOMS (`blooms`): sized at each file's footer row count, one
+    *     sidecar per (file, column) under `_bloom/`. Only plain integral
+    *     and string columns participate (the two kinds with a stable
+    *     hash contract on build and probe side); anything else is
+    *     skipped and simply never prunes. Bloom pruning answers the
+    *     query min/max cannot: a point lookup on a high-cardinality
+    *     column across unclustered appends, where every file's
+    *     [min, max] spans the key space but each file holds ~1/N of the
+    *     keys.
+    *   - NDV (`ndvCols`): HLL sketches over each value's canonical
+    *     string (distinct VALUES whatever the type; nulls don't count),
+    *     returned as the manifest's per-file `ndv:` entries. Sketches
+    *     are MERGEABLE, so table-level NDV is a driver-side fold over
+    *     the manifest ([[metaNdv]]).
+    *
+    * `fileSchema` is what the caller staged: reading with it skips the
+    * parquet schema-inference JOB a bare read would run.
     */
-  private[ext] def buildBlooms(spark: SparkSession, dir: String,
-                          names: Seq[String], cols: Seq[String],
-                          stats: Map[String, FileStats],
-                          fpp: Double,
-                          fileSchema: Option[org.apache.spark.sql.types.StructType]
-                            = None): Unit = {
+  private def buildSketches(spark: SparkSession, dir: String,
+                            names: Seq[String], stats: Map[String, FileStats],
+                            blooms: Seq[String], ndvCols: Seq[String],
+                            fileSchema: org.apache.spark.sql.types.StructType)
+  : Map[String, Map[String, String]] = {
     import org.apache.spark.sql.functions.{col, input_file_name}
+    import org.apache.spark.sql.types._
     import org.apache.spark.util.sketch.BloomFilter
-    if (cols.isEmpty || names.isEmpty) return
-    val f = fs(spark, dir)
-    // an explicit schema (the append path knows exactly what it staged)
-    // skips the parquet schema-inference JOB the bare read would run —
-    // one fewer action per bloom-building commit (guide §1: actions,
-    // not tasks, dominate micro-batch folds)
-    val reader = spark.read
-    val df = fileSchema.map(reader.schema).getOrElse(reader)
-      .parquet(names.map(n => dataFilePath(dir, n)): _*)
-    val usable = cols.filter(c => df.schema.fields.exists(fd =>
-      fd.name.equalsIgnoreCase(c) && (fd.dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType |
-             org.apache.spark.sql.types.StringType => true
-        case _ => false
-      })))
-    if (usable.isEmpty) return
+    import org.apache.datasketches.hll.HllSketch
+    def field(c: String) = fileSchema.fields.find(_.name.equalsIgnoreCase(c))
+    val bloomable = blooms.filter(c => field(c).exists(_.dataType match {
+      case ByteType | ShortType | IntegerType | LongType | StringType => true
+      case _ => false
+    }))
+    val sketched = ndvCols.filter(field(_).isDefined)
+    if (names.isEmpty || (bloomable.isEmpty && sketched.isEmpty))
+      return Map.empty
+    // one projected column per distinct name; (column index, is-bloom)
+    // per sketch to build. Partials key on (file, i) for a bloom and
+    // (file, -1 - i) for an HLL sketch
+    val cols = (bloomable ++ sketched).map(_.toLowerCase).distinct
+    val kinds = bloomable.map(c => (cols.indexOf(c.toLowerCase), true)) ++
+      sketched.map(c => (cols.indexOf(c.toLowerCase), false))
     val expected = names.map(n =>
       n -> math.max(16L, stats.get(n).map(_.rows).getOrElse(1L << 20))).toMap
-    val nCols = usable.size
-    val merged = df
-      .select(input_file_name.as("_graft_file") +: usable.map(col): _*)
+    val merged = spark.read.schema(fileSchema)
+      .parquet(names.map(n => dataFilePath(dir, n)): _*)
+      .select(input_file_name.as("_graft_file") +: cols.map(col): _*)
       .rdd.mapPartitions { it =>
-        val acc = scala.collection.mutable.Map[(String, Int), BloomFilter]()
+        val bfs = scala.collection.mutable.Map[(String, Int), BloomFilter]()
+        val hlls = scala.collection.mutable.Map[(String, Int), HllSketch]()
         it.foreach { row =>
           val name = row.getString(0).split('/').last
-          var i = 0
-          while (i < nCols) {
+          kinds.foreach { case (i, isBloom) =>
             if (!row.isNullAt(i + 1)) {
-              val bf = acc.getOrElseUpdate((name, i),
-                BloomFilter.create(expected.getOrElse(name, 1L << 20), fpp))
-              row.get(i + 1) match {
-                case s: String => bf.putString(s)
-                case n: java.lang.Number => bf.putLong(n.longValue())
-                case _ => ()
+              val v = row.get(i + 1)
+              if (!isBloom) hlls.getOrElseUpdate((name, i),
+                new HllSketch(NdvLgK)).update(String.valueOf(v))
+              else {
+                val bf = bfs.getOrElseUpdate((name, i),
+                  BloomFilter.create(expected.getOrElse(name, 1L << 20), BloomFpp))
+                v match {
+                  case s: String => bf.putString(s)
+                  case n: java.lang.Number => bf.putLong(n.longValue())
+                  case _ => ()
+                }
               }
             }
-            i += 1
           }
         }
-        acc.iterator
+        // HllSketch is not serializable: its partials travel as bytes
+        bfs.iterator.map { case ((n, i), bf) => ((n, i), bf: Any) } ++
+          hlls.iterator.map { case ((n, i), sk) =>
+            ((n, -1 - i), sk.toCompactByteArray: Any) }
       }
-      .reduceByKey { (a, b) => a.mergeInPlace(b); a }
+      .reduceByKey { (a, b) => (a, b) match {
+        case (x: BloomFilter, y: BloomFilter) => x.mergeInPlace(y)
+        case (x: Array[Byte], y: Array[Byte]) => hllUnion(Seq(x, y))
+      }}
       .collect()
-    f.mkdirs(p(bloomDir(dir)))
-    merged.foreach { case ((file, i), bf) =>
-      val out = f.create(p(bloomPath(dir, file, usable(i))), true)
-      try bf.writeTo(out) finally out.close()
+    val f = fs(spark, dir)
+    if (bloomable.nonEmpty) f.mkdirs(p(bloomDir(dir)))
+    merged.toSeq.flatMap {
+      case ((file, i), bf: BloomFilter) =>
+        val out = f.create(p(bloomPath(dir, file, cols(i))), true)
+        try bf.writeTo(out) finally out.close()
+        None
+      case ((file, i), bytes: Array[Byte]) =>
+        Some((file, cols(-1 - i), java.util.Base64.getEncoder
+          .encodeToString(hllUnion(Seq(bytes)))))
+    }.groupBy(_._1).map { case (file, entries) =>
+      file -> entries.map(e => e._2 -> e._3).toMap
     }
+  }
+
+  /** The union of compact HLL sketches, as compact bytes. */
+  private def hllUnion(parts: Seq[Array[Byte]]): Array[Byte] = {
+    import org.apache.datasketches.hll.{HllSketch, Union}
+    val u = new Union(NdvLgK)
+    parts.foreach(b => u.update(HllSketch.heapify(b)))
+    u.getResult.toCompactByteArray
   }
 
   /** The interleaved-bit z-value of `cols` as one codegen-friendly
@@ -3256,7 +3299,7 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     * data just written. A file whose footer cannot be read yields no
     * stats (it stays readable and unpruned).
     */
-  private[ext] def footerStats(spark: SparkSession, dir: String,
+  private def footerStats(spark: SparkSession, dir: String,
                           names: Seq[String]): Map[String, FileStats] = {
     val conf = spark.sparkContext.hadoopConfiguration
     def one(n: String): Option[(String, FileStats)] =
@@ -3359,11 +3402,9 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
       case (c, b64) => s"ndv:$fn\t${enc(c)}\t$b64"
     }))
 
-  private def ndvColsLine(cols: Seq[String]): String =
-    "ndvcols:" + cols.map(enc).mkString("\t")
-
-  private def partColsLine(cols: Seq[String]): String =
-    "partcols:" + cols.map(enc).mkString("\t")
+  /** A column-list line (`partcols:`, `ndvcols:`, `bloomcols:`). */
+  private def colsLine(key: String, cols: Seq[String]): String =
+    s"$key:" + cols.map(enc).mkString("\t")
 
   /** Stage `lines` and publish them as `_manifest/<name>` with an atomic
     * CREATE-IF-ABSENT, returning whether this writer won. Not
@@ -3414,7 +3455,7 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
           (if (s.op.nonEmpty) Seq("op:" + s.op) else Nil) ++
           s.schemaJson.map(j => "schema:" + enc(j)).toSeq ++
           s.cdcPath.map("cdc:" + _).toSeq ++
-          (if (s.partitionCols.nonEmpty) Seq(partColsLine(s.partitionCols))
+          (if (s.partitionCols.nonEmpty) Seq(colsLine("partcols", s.partitionCols))
            else Nil) ++
           s.batchIds.toSeq.sorted.map("batch:" + _) ++
           s.dvs.toSeq.sortBy(_._1).flatMap { case (file, refs) =>
@@ -3426,7 +3467,9 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
           s.properties.toSeq.sortBy(_._1).map { case (k, v) =>
             s"property:${enc(k)}\t${enc(v)}"
           } ++
-          (if (s.ndvCols.nonEmpty) Seq(ndvColsLine(s.ndvCols)) else Nil) ++
+          (if (s.ndvCols.nonEmpty) Seq(colsLine("ndvcols", s.ndvCols)) else Nil) ++
+          (if (s.bloomCols.nonEmpty) Seq(colsLine("bloomcols", s.bloomCols))
+           else Nil) ++
           s.colMap.map { case (l, ph) => s"colmap:${enc(l)}\t${enc(ph)}" } ++
           s.retiredCols.map(ph => "retired:" + enc(ph)) ++
           pvLines(s.files, s.pvals) ++
@@ -3549,9 +3592,11 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
               .map(j => "schema:" + enc(j)).toSeq ++
             next0.cdcPath.map("cdc:" + _).toSeq ++
             (if (next0.partitionCols != old.partitionCols)
-              Seq(partColsLine(next0.partitionCols)) else Nil) ++
+              Seq(colsLine("partcols", next0.partitionCols)) else Nil) ++
             (if (next0.ndvCols != old.ndvCols)
-              Seq(ndvColsLine(next0.ndvCols)) else Nil) ++
+              Seq(colsLine("ndvcols", next0.ndvCols)) else Nil) ++
+            (if (next0.bloomCols != old.bloomCols)
+              Seq(colsLine("bloomcols", next0.bloomCols)) else Nil) ++
             (if (next0.colMap != old.colMap)
               next0.colMap.map { case (l, ph) =>
                 s"colmap:${enc(l)}\t${enc(ph)}" } else Nil) ++

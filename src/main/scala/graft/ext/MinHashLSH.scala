@@ -258,14 +258,22 @@ object MinHashLSH {
     require(bands * rowsPerBand == numHashes, "bands must divide numHashes")
     sh.withColumn("sig", signature(col("sh"), numHashes))
       .select(col(idCol),
-        posexplode(array((0 until bands).map { b =>
-          md5(concat_ws("-",
-            (0 until rowsPerBand).map(r =>
-              col("sig").getItem(b * rowsPerBand + r).cast("string")): _*))
-        }: _*)))
+        posexplode(array((0 until bands).map(b =>
+          bandHash(col("sig"), b, rowsPerBand)): _*)))
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "band_hash")
   }
+
+  /** The bucket key of signature band `b`: md5 over the '-'-joined
+    * string forms of its `rowsPerBand` signature values. The ONE
+    * band-hash definition — the batch band rows above and the
+    * streaming index ([[graft.streaming.StreamNearDup]]) both call it,
+    * so their buckets agree. concat_ws skips nulls, so the key is never
+    * null.
+    */
+  def bandHash(sig: Column, b: Int, rowsPerBand: Int): Column =
+    md5(concat_ws("-", (0 until rowsPerBand).map(r =>
+      sig.getItem(b * rowsPerBand + r).cast("string")): _*))
 
   /** Production default for `maxBucketSize` on the [[nearDupPairs]] /
     * [[graft.ext.Components.nearDupKeep]] paths: a 10 000-id bucket

@@ -197,7 +197,7 @@ object VectorStore {
                        targetFileBytes: Long = 128L * 1024 * 1024,
                        idCol: String = "vec_id"): (Int, Int) =
     ManifestTable.compact(spark, dir, targetFileBytes,
-      clusterBy = Seq("centroid_id", idCol), bloomCols = Seq(idCol))
+      clusterBy = Seq("centroid_id", idCol))
 
   /** PQ-encode a batch against a frozen codebook: `pq_code[s]` is the
     * cid of subspace `s`'s nearest codeword (squared L2, cid tie-break —
@@ -537,7 +537,7 @@ object VectorStore {
     val committed = ManifestTable.overwriteWhere(
       reassigned.repartitionByRange(filesOut, col("centroid_id"), col(idCol))
         .sortWithinPartitions(col("centroid_id"), col(idCol)),
-      dir, "true", opId, bloomCols = Seq(idCol))
+      dir, "true", opId)
     if (committed) {
       val fs = hadoopFs(spark, dir)
       val tmp = new org.apache.hadoop.fs.Path(s"$dir/_centroids_retrain")

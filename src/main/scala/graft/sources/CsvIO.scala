@@ -75,12 +75,27 @@ object CsvIO {
     * .py:199-209): one logical table, `source_file` column carries the stem.
     */
   def readInputDir(spark: SparkSession, dir: String): DataFrame = {
+    // the folder's CSV files listed here and read by name: a `*.csv`
+    // glob path makes Spark's metadata-directory check stat the literal
+    // glob and log a FileStreamSink warning with a stack trace on every
+    // read. Same file set as the glob, whose `_`/`.` names Spark skips;
+    // a missing or CSV-less folder still goes to Spark as the glob and
+    // fails there with PATH_NOT_FOUND
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files =
+      if (!fs.isDirectory(path)) Nil
+      else fs.listStatus(path).toSeq.filter { st =>
+        val n = st.getPath.getName
+        st.isFile && n.endsWith(".csv") && !n.startsWith("_") &&
+          !n.startsWith(".")
+      }.map(_.getPath.toString).sorted
     val raw = spark.read
       .schema(Schemas.input)
       .option("header", "true")
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .csv(s"$dir/*.csv")
+      .csv((if (files.isEmpty) Seq(s"$dir/*.csv") else files): _*)
       .withColumn("source_file", input_file_name())
     raw
       .filter(col("_corrupt_record").isNull)

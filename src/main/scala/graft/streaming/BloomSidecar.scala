@@ -4,11 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The bloom-routed index probe shared by [[Ingest]] (fingerprints) and
   * both [[NearDupSink]] folds (band hashes, bucket ids), over the
-  * per-file blooms the index's own manifest commits
-  * ([[graft.ext.ManifestTable.append]] with `bloomCols`). Those blooms
-  * are built before each segment's commit, rebuilt at row-count
-  * geometry by compaction and swept by vacuum, so the routing layer
-  * has no files, crash window or maintenance of its own.
+  * per-file blooms the index's own manifest commits: each index
+  * declares its probe key as its one bloom column on its first segment
+  * append ([[graft.ext.ManifestTable.append]] with `bloomCols`), so
+  * every segment, compaction and other rewrite lands its files with
+  * the key's bloom built before the commit; vacuum sweeps them. The
+  * routing layer has no files, crash window or maintenance of its own.
   *
   * A bloom never DECIDES membership: a positive routes rows to the
   * precise anti-join/probe, a negative proves absence (blooms have no
@@ -47,5 +48,29 @@ private[graft] object BloomSidecar {
         case None => Some(graft.ext.ManifestTable.read(spark, segDir))
       }
     }
+  }
+
+  /** Index maintenance shared by [[Ingest.compactIndex]] and
+    * [[NearDupSink.compactIndex]]: many per-batch segments → few
+    * right-sized files CLUSTERED on the index's one declared bloom
+    * column, its probe key (each compacted file then covers a
+    * near-disjoint key range, so even stats-only pruning answers point
+    * probes), per-file blooms rebuilt at the compacted files' row
+    * counts. One manifest swap, so it is safe WHILE the fold appends —
+    * a concurrent append rebases over the swap, a conflicting
+    * compaction aborts — then [[graft.ext.ManifestTable.vacuum]] sweeps
+    * the replaced segments past its grace window. (0, 0) on an index
+    * with no segment yet.
+    */
+  def compact(spark: SparkSession, segDir: String,
+              targetFileBytes: Long): (Int, Int) = {
+    val key = graft.ext.ManifestTable.snapshot(spark, segDir).bloomCols
+    require(key.size <= 1,
+      s"index $segDir declares bloom columns (${key.mkString(", ")}); " +
+        "an index declares exactly its probe key")
+    val counts = graft.ext.ManifestTable.compact(spark, segDir,
+      targetFileBytes, clusterBy = key)
+    graft.ext.ManifestTable.vacuum(spark, segDir)
+    counts
   }
 }

@@ -79,24 +79,12 @@ object Ingest {
           org.apache.spark.sql.types.StringType))))
   }
 
-  /** Periodic index maintenance: many per-batch segments → few
-    * right-sized files CLUSTERED on `fp` (each compacted file then
-    * covers a near-disjoint fingerprint range, so even stats-only
-    * pruning answers point probes), per-file blooms rebuilt at the
-    * compacted files' row counts. The rewrite commits as one manifest swap,
-    * so it is safe WHILE the ingest stream appends — a concurrent
-    * append rebases over the swap, a conflicting compaction aborts —
-    * and orphaned segment files age out through
-    * [[graft.ext.ManifestTable.vacuum]]'s grace window.
+  /** Periodic index maintenance: the segments re-clustered on `fp`, the
+    * index's declared bloom column ([[BloomSidecar.compact]]).
     */
   def compactIndex(spark: SparkSession, indexDir: String,
-                   targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val counts = graft.ext.ManifestTable.compact(spark,
-      segmentsPath(indexDir), targetFileBytes,
-      clusterBy = Seq("fp"), bloomCols = Seq("fp"))
-    graft.ext.ManifestTable.vacuum(spark, segmentsPath(indexDir))
-    counts
-  }
+                   targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) =
+    BloomSidecar.compact(spark, segmentsPath(indexDir), targetFileBytes)
 
   /** Stages 1-2 of the fold — bloom-routed exact dedup vs the index,
     * then the quality filter — returning the PERSISTED pre-scrub
@@ -142,7 +130,8 @@ object Ingest {
 
   /** O(batch): append the survivors' fingerprints as a new
     * manifest-committed segment — nothing over the accumulated index is
-    * read or shuffled. The segment's `fp` bloom is built before its
+    * read or shuffled. The first segment declares `fp` as the index's
+    * bloom column; every segment's `fp` bloom is built before its
     * commit, so a committed segment always routes. The manifest batch
     * id is a fresh UUID on purpose: index appends must stay
     * UNCONDITIONAL so the self-healing backfill ([[ingestBatchCommitted]])

@@ -138,8 +138,8 @@ object NearDupSink {
         .select(col("band"), col("band_hash"), col("corpus_id"), col("sig_idx"))
     // manifest-committed segment append under a fresh UUID: the index
     // append must stay UNCONDITIONAL (the self-healing backfill after a
-    // replay); its per-file band_hash blooms serve BloomSidecar.probe's
-    // gate and pruned read
+    // replay); it declares band_hash as the index's bloom column, whose
+    // per-file blooms serve BloomSidecar.probe's gate and pruned read
     graft.ext.ManifestTable.append(bandRows, segmentsPath(indexDir),
       java.util.UUID.randomUUID().toString, bloomCols = Seq("band_hash"))
     kept.unpersist()
@@ -218,20 +218,12 @@ object NearDupSink {
     committed
   }
 
-  /** Segments → right-sized files clustered on the probe key (the
-    * banded join's point lookups then prune on stats alone), per-file
-    * blooms rebuilt at the compacted files' row counts; safe against
-    * concurrent appends (one manifest swap; a conflicting compaction aborts),
-    * exactly as [[Ingest.compactIndex]]. `keyCol` is `band_hash` for
-    * the MinHash index, `bk` for the embed index.
+  /** Segments → right-sized files clustered on the index's declared
+    * probe key — `band_hash` for the MinHash index, `bk` for the embed
+    * index — so the probe's point lookups prune on stats alone
+    * ([[BloomSidecar.compact]], as [[Ingest.compactIndex]]).
     */
   def compactIndex(spark: SparkSession, indexDir: String,
-                   targetFileBytes: Long = 128L * 1024 * 1024,
-                   keyCol: String = "band_hash"): (Int, Int) = {
-    val counts = graft.ext.ManifestTable.compact(spark,
-      segmentsPath(indexDir), targetFileBytes,
-      clusterBy = Seq(keyCol), bloomCols = Seq(keyCol))
-    graft.ext.ManifestTable.vacuum(spark, segmentsPath(indexDir))
-    counts
-  }
+                   targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) =
+    BloomSidecar.compact(spark, segmentsPath(indexDir), targetFileBytes)
 }

@@ -117,10 +117,9 @@ object StreamNearDup {
   // ------------------------------------------------- MinHash variant
 
   /** (id, sig, band, band_hash) rows — signature banding shared by the
-    * MinHash index and probe sides; band_hash mirrors
-    * [[graft.ext.MinHashLSH.bandRowsFromShingles]] exactly (md5 over the
-    * '-'-joined signature slice). concat_ws skips nulls, so the band key
-    * is NON-nullable by construction — no isnotnull(signature(...))
+    * MinHash index and probe sides; band_hash is
+    * [[graft.ext.MinHashLSH.bandHash]], the batch LSH's own bucket key,
+    * NON-nullable by construction — no isnotnull(signature(...))
     * constraint can be inferred into a second evaluation stage. The
     * isnotnull(text) filter below fully removes the null-signature case
     * (signature is null only for null text); the slice-equality filter
@@ -145,9 +144,7 @@ object StreamNearDup {
       .select(col("id"), col("sig"),
         explode(array((0 until bands).map { b =>
           struct(lit(b).as("band"),
-            md5(concat_ws("-", (0 until rpb).map(r =>
-              col("sig").getItem(b * rpb + r).cast("string")): _*))
-              .as("band_hash"))
+            graft.ext.MinHashLSH.bandHash(col("sig"), b, rpb).as("band_hash"))
         }: _*)).as("bb"))
       .select(col("id"), col("sig"),
         col("bb.band").as("band"), col("bb.band_hash").as("band_hash"))

@@ -43,12 +43,14 @@ class BloomSidecarSpec extends SparkSpec {
     val (corpus, index) = (s"$root/corpus", s"$root/index")
     val seg = s"$index/segments"
     Ingest.ingestBatchCommitted(batch(0), corpus, index, "b0")
-    // a segment committed without `bloomCols`, holding the fingerprints
-    // of content the corpus has never seen
+    // a segment holding the fingerprints of content the corpus has never
+    // seen, its inherited `fp` bloom deleted
     val unseen = batch(100, 5)
     ManifestTable.append(unseen.select(
         org.apache.spark.sql.functions.md5($"text").as("fp")),
       seg, "raw")
+    val raw = ManifestTable.snapshot(spark, seg).files.last
+    assert(new java.io.File(s"$seg/_bloom/$raw.fp.bloom").delete())
     assert(ManifestTable.keyGate(spark, seg,
       ManifestTable.snapshot(spark, seg), "fp").isEmpty)
     // the bloomed segment alone would reject every one of these rows; a

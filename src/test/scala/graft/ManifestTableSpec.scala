@@ -272,21 +272,25 @@ class ManifestTableSpec extends SparkSpec {
     assert(keptA === 0) // min/max already excludes out-of-range ids
     assert(ManifestTable.readWhere(spark, dir, "text = 'no such doc'")
       .count() === 0)
-    // files without sidecars stay unprunable-by-bloom: a bloom-less append
+    // files without sidecars stay unprunable-by-bloom: a later append
+    // inherits the declaration, so its blooms are deleted to make it
+    // bloom-less
     ManifestTable.append(batch(1000L), dir, "nobloom")
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
+    val unbloomed = ManifestTable.snapshot(spark, dir).files.last
+    Seq("id", "text").foreach(c => assert(fs.delete(new org.apache.hadoop
+      .fs.Path(s"$dir/_bloom/$unbloomed.$c.bloom"), false)))
     val (k2, t2) = ManifestTable.pruneInfo(spark, dir, "id = 217")
     assert(t2 === 5 && k2 >= 1 && k2 <= 3) // new file pruned by min/max anyway
-    // compaction with bloomCols rebuilds sidecars for the rewritten files
-    ManifestTable.compact(spark, dir, targetFileBytes = 2048L,
-      bloomCols = Seq("id"))
+    // compaction rebuilds the declared sidecars for the rewritten files
+    ManifestTable.compact(spark, dir, targetFileBytes = 2048L)
     val (k3, t3) = ManifestTable.pruneInfo(spark, dir, "id = 217")
     assert(t3 >= 2 && k3 < t3)
     assert(ManifestTable.readWhere(spark, dir, "id = 217")
       .as[(Long, String)].collect().toSeq === Seq((217L, "doc 217")))
     // vacuum sweeps the orphaned blooms of compacted-away data files
     assert(ManifestTable.vacuum(spark, dir, graceMs = 0L) >= 5)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
     val liveData = ManifestTable.snapshot(spark, dir).files.toSet
     val orphanBlooms = fs.listStatus(
       new org.apache.hadoop.fs.Path(s"$dir/_bloom"))

@@ -390,4 +390,35 @@ class StreamNearDupSpec extends SparkSpec {
       indexDir, "resend-1", bits = 4, dims = 8)
     assert(ids() === Seq(1L, 3L, 11L))
   }
+
+  test("embed index compaction clusters on its declared bk key and keeps the fold exact") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ndembedc").toString
+    val (corpusDir, indexDir) = (s"$root/corpus", s"$root/index")
+    val seg = s"$indexDir/segments"
+    val base = Seq(0.9, 0.1, 0.2, 0.05, 0.3, 0.15, 0.25, 0.1)
+    val ortho = Seq(-0.1, 0.8, -0.3, 0.4, -0.2, 0.5, -0.4, 0.3)
+    val b0 = Seq((1L, base), (3L, ortho)).toDF("id", "v")
+    val b1 = Seq((11L, base.map(-_))).toDF("id", "v")
+    def fold(b: org.apache.spark.sql.DataFrame, id: String) =
+      graft.streaming.NearDupSink.ingestBatchEmbedCommitted(b, corpusDir,
+        indexDir, id, bits = 4, dims = 8)
+    def ids() = graft.ext.ManifestTable.read(spark, corpusDir)
+      .select("id").as[Long].collect().sorted.toSeq
+    assert(fold(b0, "b0") && fold(b1, "b1"))
+    assert(ids() === Seq(1L, 3L, 11L))
+    // the caller names no key: compaction clusters on the index's one
+    // declared bloom column
+    assert(graft.ext.ManifestTable.snapshot(spark, seg).bloomCols === Seq("bk"))
+    val (nin, nout) = graft.streaming.NearDupSink.compactIndex(spark, indexDir)
+    assert(nin >= 2 && nout === 1)
+    val snap = graft.ext.ManifestTable.snapshot(spark, seg)
+    assert(snap.files.forall(f =>
+      new java.io.File(s"$seg/_bloom/$f.bk.bloom").exists()))
+    assert(graft.ext.ManifestTable.keyGate(spark, seg, snap, "bk").isDefined)
+    // a replay of b0 is refused, and the planted near-dup of `base` still
+    // drops against the compacted index
+    assert(!fold(b0, "b0"))
+    assert(fold(Seq((20L, base.map(_ + 0.001))).toDF("id", "v"), "b2"))
+    assert(ids() === Seq(1L, 3L, 11L))
+  }
 }
