@@ -314,15 +314,6 @@ private[ext] trait ManifestMaintenance { this: ManifestTable.type =>
           s.getModificationTime < cutoff)
         .foreach(s => f.delete(s.getPath, true))
     }
-    // bloom sidecars are keyed `<dataFile>.<col>.bloom`: sweep the ones
-    // whose data file is dead (orphaned-then-deleted, or crashed append)
-    val bd = p(bloomDir(dir))
-    if (f.exists(bd)) f.listStatus(bd)
-      .filter { s =>
-        val data = s.getPath.getName.split('.').take(2).mkString(".")
-        s.isFile && s.getModificationTime < cutoff &&
-          !live.contains(data) && !f.exists(p(s"${dataDir(dir)}/$data"))
-      }.foreach(s => f.delete(s.getPath, false))
     removed
   }
 

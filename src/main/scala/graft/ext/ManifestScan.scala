@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.StructType
   * the planner calls AT PLANNING TIME with every filter it could push
   * toward the scan — already resolved, already split into conjuncts.
   * Those expressions feed the exact same one-sided [[Skipping]] stats
-  * pass and bloom-sidecar pass as `readWhere`, so:
+  * pass and in-file bloom pass as `readWhere`, so:
   *
   *   - `ManifestTable.scan(spark, dir).where("doc_id < 40")` scans only
   *     the files whose stats admit the band — the predicate prunes

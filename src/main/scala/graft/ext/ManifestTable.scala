@@ -117,10 +117,9 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     * CHECK expressions, enforced at append/merge/update.
     *
     * `ndvCols` and `bloomCols` DECLARE which columns every landed data
-    * file carries a per-file sketch for (an HLL sketch in `ndv`, a bloom
-    * filter under `_bloom/`): lower-cased physical names, declared by
-    * the first write that names them and built by every later one —
-    * appends and rewrites alike ([[land]]).
+    * file carries a sketch for (an HLL sketch in `ndv`, parquet's bloom
+    * inside the file): lower-cased physical names, declared by the first
+    * write that names them and built by every later one ([[land]]).
     */
   final case class Snapshot(version: Long, files: Seq[String],
                             batchIds: Set[String],
@@ -145,7 +144,7 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     * the Delta/Iceberg design that makes RENAME and DROP COLUMN pure
     * metadata commits. Data files are immutable and carry the PHYSICAL
     * name a column had when written; a rename changes only the logical
-    * name (physical stays, so every recorded stat, bloom sidecar, NDV
+    * name (physical stays, so every recorded stat, in-file bloom, NDV
     * sketch and partition value keeps its key and keeps pruning); a
     * drop removes the logical column and retires its physical name so
     * a later re-ADD of the same name binds a FRESH physical slot
@@ -153,7 +152,7 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     * identity (tables never touched by rename/drop pay nothing); once
     * non-empty it lists EVERY current column, so a delta carrying any
     * `colmap:` line is a full redefinition and absence inherits.
-    * Manifest-side invariant: `stats`/`ndv`/`pvals`/bloom sidecars and
+    * Manifest-side invariant: `stats`/`ndv`/`pvals`, the in-file blooms and
     * the `ndvCols`/`bloomCols` declarations are keyed by PHYSICAL names; the
     * recorded `schemaJson` is LOGICAL.
     */
@@ -473,12 +472,6 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
   private[ext] def dataFilePath(dir: String, name: String): String =
     if (name.startsWith("/") || name.contains("://")) name
     else s"${dataDir(dir)}/$name"
-  private[ext] def bloomDir(dir: String) = s"$dir/_bloom"
-  // colName lowercased so the write side (the declaration, recorded
-  // lower-cased) and the probe side (eqConjuncts' lowercased attribute
-  // names) agree on the sidecar name whatever case a caller declared.
-  private[ext] def bloomPath(dir: String, file: String, colName: String) =
-    s"${bloomDir(dir)}/$file.${enc(colName.toLowerCase)}.bloom"
 
   // ---------------------------------------------- the commit log
   //
@@ -536,18 +529,24 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
   // one getFileStatus per version SINCE that checkpoint (forward
   // existence probes — versions are dense by CAS construction, so the
   // first missing delta IS the head), never a listing of the whole log
-  // directory. The pointer is a HINT, not a commit: it is overwritten
-  // in place (monotonically — a racing writer can only lose to a newer
-  // checkpoint), and any torn read, missing file or stale value falls
-  // back to the full listing / extra delta replays, costing speed only.
+  // directory. The pointer is a HINT, not a commit: it only moves
+  // forward, and a missing or stale one costs a listing / extra delta
+  // replays, speed only. It is staged and renamed over the old one, so a
+  // reader never sees it torn; both sides skip the local checksum file,
+  // which a rename would move in a second step.
 
   private def lastCheckpointPath(dir: String) =
     p(s"${manifestDir(dir)}/_last_checkpoint")
 
+  private def rawFs(spark: SparkSession, dir: String) = fs(spark, dir) match {
+    case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+    case f => f
+  }
+
   private[ext] def readLastCheckpoint(spark: SparkSession,
                                  dir: String): Option[Long] =
     try {
-      val f = fs(spark, dir)
+      val f = rawFs(spark, dir)
       val in = f.open(lastCheckpointPath(dir))
       val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
               finally in.close()
@@ -559,9 +558,16 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
                                   v: Long): Unit =
     try {
       if (readLastCheckpoint(spark, dir).forall(_ < v)) {
-        val f = fs(spark, dir)
-        val out = f.create(lastCheckpointPath(dir), true)
-        try out.write(v.toString.getBytes("UTF-8")) finally out.close()
+        val (f, dst) = (rawFs(spark, dir), lastCheckpointPath(dir))
+        val staged = p(s"$dst.${java.util.UUID.randomUUID()}")
+        try {
+          val out = f.create(staged, true)
+          try out.write(v.toString.getBytes("UTF-8")) finally out.close()
+          // rename(2) replaces atomically; HDFS refuses an existing target
+          if (!f.rename(staged, dst))
+            org.apache.hadoop.fs.FileContext.getFileContext(dst.toUri, f.getConf)
+              .rename(staged, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+        } finally f.delete(staged, false)
       }
     } catch { case scala.util.control.NonFatal(_) => () }
 
@@ -643,13 +649,18 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
       }
     }
 
-  private def cachePut(key: Option[String], s: Snapshot): Unit = key.foreach {
-    k =>
-      while (snapCache.size >= snapCacheMaxForTest) {
-        val it = snapCache.keySet.iterator
-        if (it.hasNext) snapCache.remove(it.next()) else snapCache.clear()
-      }
-      snapCache.put(k, s)
+  private def cachePut(key: Option[String], s: Snapshot): Unit =
+    key.foreach(boundedPut(snapCache, snapCacheMaxForTest, _, s))
+
+  // at the bound evict ONE entry, not the map: a multi-table driver keeps
+  // its working set warm
+  private def boundedPut[V](m: java.util.concurrent.ConcurrentHashMap[String, V],
+                            max: Int, k: String, v: V): Unit = {
+    while (m.size >= max) {
+      val it = m.keySet.iterator
+      if (it.hasNext) m.remove(it.next()) else m.clear()
+    }
+    m.put(k, v)
   }
 
   private[graft] def snapshotCacheSizeForTest: Int = snapCache.size
@@ -863,9 +874,9 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     *                                     null partition)
     *   ndvcols:<colEnc>[\t<colEnc>...]   columns tracking NDV sketches
     *                                     (declared once, inherited)
-    *   bloomcols:<colEnc>[\t<colEnc>...] columns carrying per-file bloom
-    *                                     filters (declared once,
-    *                                     inherited)
+    *   bloomcols:<colEnc>[\t<colEnc>...] columns whose data files carry
+    *                                     parquet bloom filters (declared
+    *                                     once, inherited)
     *   ndv:<name>\t<colEnc>\t<b64>       one file's per-column HLL
     *                                     sketch (Datasketches compact
     *                                     bytes, base64) — mergeable, so
@@ -1117,11 +1128,10 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     * cloned (absolute) files are never its candidates; conversely a
     * vacuum of the SOURCE cannot see the clone's references, the same
     * documented caveat Delta shallow clones carry. The bloom
-    * DECLARATION travels but the source's bloom files do not (pruning
-    * falls back to stats, and [[keyGate]] stays off, until the clone
-    * rewrites a file; its own appends land with blooms);
-    * deletion-vector sidecars cannot cross the boundary at all, so a
-    * DV-carrying source must `purge_deletes` first — loud.
+    * declaration travels, and so do the blooms inside the shared data
+    * files: bloom pruning and [[keyGate]] work on the clone from its
+    * first commit; deletion-vector sidecars cannot cross the boundary at
+    * all, so a DV-carrying source must `purge_deletes` first — loud.
     * Returns the clone's head version (always 1).
     */
   def shallowClone(spark: SparkSession, srcDir: String,
@@ -1519,7 +1529,7 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
   /** ALTER TABLE ... RENAME COLUMN as ONE metadata commit — column
     * mapping (Delta/Iceberg): the logical name changes, the PHYSICAL
     * parquet name stays, so no data file rewrites and every recorded
-    * stat, bloom sidecar, NDV sketch and partition value keeps its
+    * stat, in-file bloom, NDV sketch and partition value keeps its
     * (physical) key — predicates on the NEW name keep pruning through
     * [[keptFiles]]' logical→physical translation. Time travel below the
     * commit answers with the OLD name (the mapping is versioned state).
@@ -1619,7 +1629,8 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     * `bloomCols` and `ndvCols` declare, like `partitionBy`: the first
     * write naming them records them in the manifest, and every later
     * append AND rewrite (DML, merge, compaction, DV purge) lands its
-    * files with a bloom filter per declared bloom column and an HLL
+    * files with parquet's bloom filter inside them for each declared
+    * bloom column and an HLL
     * sketch per declared NDV column. Later calls may repeat the
     * declaration or omit it; naming different columns raises.
     */
@@ -1812,9 +1823,11 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     * contractually zero-shuffle) — the rebalance must not override it.
     */
   private def stageWrite(df: DataFrame, stage: String,
-                         partCols: Seq[String],
-                         sized: Boolean = false): Unit =
-    if (partCols.isEmpty) rebalanced(df, Nil, sized).write.parquet(stage)
+                         partCols: Seq[String], blooms: Seq[String],
+                         sized: Boolean = false): Unit = {
+    val opts = bloomOptions(df.schema, blooms)
+    if (partCols.isEmpty)
+      rebalanced(df, Nil, sized).write.options(opts).parquet(stage)
     else {
       import org.apache.spark.sql.functions.{col, concat, lit, when}
       // the directory key is "v" + canonical value, null kept null:
@@ -1828,8 +1841,28 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
         d.withColumn(PartPrefix + c,
           when(col(c).isNull, lit(null: String))
             .otherwise(concat(lit(PartValueTag), col(c).cast("string")))))
-      dup.write.partitionBy(partCols.map(PartPrefix + _): _*).parquet(stage)
+      dup.write.options(opts).partitionBy(partCols.map(PartPrefix + _): _*)
+        .parquet(stage)
     }
+  }
+
+  /** Writer options giving each declared integral or string bloom column
+    * parquet's bloom (default 1% fpp) in every row group: the smallest of
+    * 12 adaptive candidates (1 MB halving to 512 B) that holds the chunk's
+    * distinct values, and no dictionary (an all-dictionary chunk gets no
+    * bloom). Parquet reads the candidate count per column only.
+    */
+  private def bloomOptions(schema: org.apache.spark.sql.types.StructType,
+                           blooms: Seq[String]): Map[String, String] = {
+    import org.apache.spark.sql.types._
+    schema.fields.filter(fd => blooms.contains(fd.name.toLowerCase) &&
+      Seq(ByteType, ShortType, IntegerType, LongType, StringType)
+        .contains(fd.dataType)).flatMap(fd => Seq(
+      "parquet.bloom.filter.adaptive.enabled" -> "true",
+      s"parquet.bloom.filter.enabled#${fd.name}" -> "true",
+      s"parquet.bloom.filter.candidates.number#${fd.name}" -> "12",
+      s"parquet.enable.dictionary#${fd.name}" -> "false")).toMap
+  }
 
   /** Prefix on every non-null `_gp_` directory value (see [[stageWrite]]).
     * Exists only in the transient stage path, never in manifests or data.
@@ -1950,29 +1983,28 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
   /** THE landing step of every write that adds data files — append,
     * REPLACE, the copy-on-write row ops, the DV update, compaction, the
     * small-file packer and the DV purge: stage `physDf` (physical
-    * column names) out of view, move the files into `data/`, harvest
-    * footer stats, drop files the footer proves empty (a fully
-    * deduplicated batch would otherwise litter the manifest with
-    * unprunable empty segments), then build the declared per-file
-    * sketches in ONE pass ([[buildSketches]]) — blooms land BEFORE the
-    * caller's commit, so a crash strands orphans for [[vacuum]], never
-    * a committed file missing its filter. `sized` = the caller already
-    * shaped the output partitioning (see [[stageWrite]]).
+    * column names, each declared bloom written into every file) out of
+    * view, move the files into `data/`, harvest footer stats and blooms,
+    * drop files the footer proves empty (a fully deduplicated batch
+    * would otherwise litter the manifest with unprunable empty
+    * segments), then build the declared NDV sketches ([[buildNdv]]).
+    * `sized` = the caller already shaped the output partitioning (see
+    * [[stageWrite]]).
     */
   private[ext] def land(spark: SparkSession, dir: String, physDf: DataFrame,
                         partCols: Seq[String], blooms: Seq[String],
                         ndvCols: Seq[String], sized: Boolean = false): Landed = {
     val f = fs(spark, dir)
     val stage = s"$dir/_stage/${java.util.UUID.randomUUID()}"
-    stageWrite(physDf, stage, partCols, sized)
+    stageWrite(physDf, stage, partCols, blooms, sized)
     val (moved, sizes, pvals) =
       moveToData(f, dir, stage, partFamilies(physDf.schema, partCols))
-    val stats = footerStats(spark, dir, moved)
+    val stats = footerStats(spark, dir, moved, blooms)
     val live = dropEmpty(f, dir, moved, stats)
     val keep = live.toSet
     Landed(live, stats.view.filterKeys(keep).toMap,
       sizes.view.filterKeys(keep).toMap, pvals.view.filterKeys(keep).toMap,
-      buildSketches(spark, dir, live, stats, blooms, ndvCols, physDf.schema))
+      buildNdv(spark, dir, live, ndvCols, physDf.schema))
   }
 
   /** A sketch declaration as a write resolves it: the table's `cur`
@@ -2589,7 +2621,7 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
                 predicateSql: String,
                 asOf: Option[Long] = None): DataFrame = {
     // `asOf` pins a historical version (see [[snapshotAt]]) — its files
-    // are immutable, so commit-time stats and bloom sidecars prune a
+    // are immutable, so commit-time stats and in-file blooms prune a
     // time-travel read exactly as they prune the head
     val s = asOf.fold(snapshot(spark, dir))(snapshotAt(spark, dir, _))
     require(s.files.nonEmpty, s"ManifestTable at $dir has no committed data")
@@ -2762,9 +2794,9 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
   }
 
   /** Two pruning passes, cheap one first: footer min/max stats (pure
-    * in-memory manifest math), then bloom sidecars for the survivors'
-    * required equality conjuncts. Both are one-sided: a file is dropped
-    * only on proof no row can match.
+    * in-memory manifest math), then the survivors' in-file blooms for
+    * the required equality conjuncts on declared bloom columns. Both
+    * are one-sided: a file is dropped only on proof no row can match.
     */
   private[ext] def keptFiles(spark: SparkSession, dir: String, s: Snapshot,
                         predicateSql: String): Seq[String] =
@@ -2995,120 +3027,116 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     val kept = partKept.filter(f =>
       !s.stats.get(f).exists(st =>
         st.rows == 0L || Skipping.skips(pred, st)))
-    val eqs = Skipping.eqConjuncts(pred)
+    // only a declared column has blooms to open footers for
+    val eqs = Skipping.eqConjuncts(pred).filter(e => s.bloomCols.contains(e._1))
     if (eqs.isEmpty) kept
     else kept.filter { file =>
       eqs.forall { case (c, lits) =>
         // the conjunct must hold, so the file may match only if SOME
-        // literal might be present; no sidecar / unknown kind => keep
-        s.stats.get(file).flatMap(_.cols.get(c)) match {
-          case Some(cs) =>
-            val tests = lits.flatMap(l => Skipping.bloomTest(cs.typ, l))
-            if (tests.size != lits.size) true // some literal untestable
-            else readBloom(spark, dir, file, c) match {
-              case Some(bf) => tests.exists(t => t(bf))
-              case None => true
-            }
-          case None => true
-        }
+        // literal might be present; no bloom / untestable literal => keep
+        val tests = lits.flatMap(Skipping.bloomTest)
+        tests.size != lits.size ||
+          readBloom(spark, dir, file, c).forall(bf => tests.exists(_(bf)))
       }
     }
   }
 
-  // Sidecar cache: data files are immutable and UUID-named (names are
-  // never reused), so a loaded bloom can be cached forever; the bound
-  // just caps memory. Keyed per table+file+column.
+  // Bloom cache: data files are immutable and UUID-named, so a loaded
+  // bloom caches forever; the bound caps memory. Keyed `<data file>#<col>`
+  // (clones share entries), columns lower-cased by every caller.
   private val bloomCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      Option[org.apache.spark.util.sketch.BloomFilter]]()
+    new java.util.concurrent.ConcurrentHashMap[String, Option[FileBloom]]()
   private val BloomCacheMax = 4096
 
-  /** Bloom files opened since JVM start — the observable side of the
-    * cache contract (a fold opens each segment's bloom once, not once
-    * per batch).
+  /** Blooms read from data files since JVM start, by a landing write's
+    * footer harvest or [[readBloom]] — the observable side of the cache
+    * contract (a fold reads each segment's bloom once, not per batch).
     */
   private[graft] val bloomFilesOpened =
     new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** The bloom an open parquet file carries for `colName`; None when a
+    * row group has none (the file predates the declaration, or the
+    * column's type is one blooms skip): that file counts as bloom-less.
+    */
+  private def bloomOf(r: org.apache.parquet.hadoop.ParquetFileReader,
+                      colName: String): Option[FileBloom] = {
+    import scala.jdk.CollectionConverters._
+    bloomFilesOpened.incrementAndGet()
+    val groups = r.getFooter.getBlocks.asScala.toSeq.map(b => b.getColumns
+      .asScala.find(_.getPath.toDotString.equalsIgnoreCase(colName))
+      .flatMap(c => Option(r.getBloomFilterDataReader(b).readBloomFilter(c))
+        .map { bf =>
+          val out = new java.io.ByteArrayOutputStream()
+          bf.writeTo(out)
+          (c.getPrimitiveType.getPrimitiveTypeName, out.toByteArray)
+        }))
+    if (groups.isEmpty || groups.exists(_.isEmpty)) None
+    else Some(FileBloom(groups.head.get._1, groups.flatten.map(_._2)))
+  }
+
+  /** `file`'s bloom for `colName`, read once (clone entries from their
+    * source's data file, [[dataFilePath]]) and cached. */
   private[ext] def readBloom(spark: SparkSession, dir: String, file: String,
-                        colName: String)
-  : Option[org.apache.spark.util.sketch.BloomFilter] = {
-    val key = bloomPath(dir, file, colName)
+                             colName: String): Option[FileBloom] = {
+    val key = s"${dataFilePath(dir, file)}#$colName"
     val cached = bloomCache.get(key)
     if (cached != null) return cached
-    val f = fs(spark, dir)
     val loaded =
       try {
-        val path = p(key)
-        if (!f.exists(path)) None
-        else {
-          bloomFilesOpened.incrementAndGet()
-          val in = f.open(path)
-          try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(in))
-          finally in.close()
-        }
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            p(dataFilePath(dir, file)), spark.sparkContext.hadoopConfiguration))
+        try bloomOf(r, colName) finally r.close()
       } catch { case scala.util.control.NonFatal(_) => None }
-    // evict one entry, not the map: a multi-table driver at the bound
-    // keeps its working set warm instead of re-reading every sidecar
-    while (bloomCache.size >= BloomCacheMax) {
-      val it = bloomCache.keySet.iterator
-      if (it.hasNext) bloomCache.remove(it.next()) else bloomCache.clear()
-    }
-    bloomCache.put(key, loaded)
+    boundedPut(bloomCache, BloomCacheMax, key, loaded)
     loaded
   }
 
   /** Bytes of per-file blooms [[keyGate]] may broadcast. A large,
     * uncompacted index would otherwise ship its whole bloom layer to
     * the executors every micro-batch; past this the gate routes every
-    * row instead. Well above the ~1.2 MB of a 1M-key, 1% filter.
+    * row instead. Well above the ~1 MB of a 1M-key, 1% filter.
     */
   private val KeyGateMaxBytes = 16L << 20
 
   /** A map-side "might any live file of `s` hold this `keyCol` value"
-    * predicate over the per-file blooms, in one broadcast. Blooms have
-    * no false negatives, so a row it rejects matches no live file.
-    * None — every row routes — when some live file has no bloom for
-    * `keyCol` (the table does not declare it in `bloomCols`, the file
-    * landed before the declaration or came in by [[shallowClone]], its
-    * bloom file is gone, or the column's type is one blooms skip) or
-    * the blooms together exceed [[KeyGateMaxBytes]]. Typed like
-    * [[Skipping.bloomTest]]: string keys probe `mightContainString`,
-    * integral keys `mightContainLong`. Costs O(live files) per row.
+    * predicate over the files' blooms, in one broadcast of their bitsets.
+    * Blooms have no false negatives, so a row it rejects matches no live
+    * file. None — every row routes — when the table does not declare
+    * `keyCol` or is empty, some live file has no bloom for it
+    * ([[bloomOf]]) or the blooms together exceed [[KeyGateMaxBytes]]. A key is hashed once per
+    * physical type the files store the column as ([[FileBloom.hash]])
+    * and tested against every file's bloom: O(live files) per row.
     */
   private[graft] def keyGate(spark: SparkSession, dir: String, s: Snapshot,
                              keyCol: String): Option[Column] = {
     import org.apache.spark.sql.functions.{col, udf}
-    import org.apache.spark.sql.types._
-    import org.apache.spark.util.sketch.BloomFilter
     val c = physName(s, keyCol).toLowerCase
-    // the build side's hash contract: strings putString, integrals putLong
-    val isString = tableSchema(s)
-      .flatMap(_.fields.find(_.name.equalsIgnoreCase(keyCol))).map(_.dataType)
-      .collect {
-        case StringType => true
-        case ByteType | ShortType | IntegerType | LongType => false
-      }
-    isString.flatMap { str =>
-      val blooms = Array.newBuilder[BloomFilter]
-      var bytes = 0L
-      val complete = s.files.forall { f =>
+    val blooms = Array.newBuilder[FileBloom]
+    var bytes = 0L
+    val complete = s.bloomCols.contains(c) && s.files.nonEmpty &&
+      s.files.forall { f =>
         readBloom(spark, dir, f, c).exists { bf =>
-          bytes += bf.bitSize() / 8
+          bytes += bf.bitsets.map(_.length).sum
           blooms += bf
           bytes <= KeyGateMaxBytes
         }
       }
-      if (!complete) None
-      else {
-        val bc = spark.sparkContext.broadcast(blooms.result())
-        val gate =
-          if (str) udf((k: String) =>
-            k != null && bc.value.exists(_.mightContainString(k)))
-          else udf((k: java.lang.Long) =>
-            k != null && bc.value.exists(_.mightContainLong(k)))
-        Some(gate(col(keyCol).cast(if (str) "string" else "long")))
+    if (!complete) None
+    else {
+      // blooms exist only on integral and string columns: BINARY = string
+      val byType = blooms.result().groupBy(_.typ)
+      val str = byType.contains(
+        org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.BINARY)
+      val bc = spark.sparkContext.broadcast(byType)
+      val hit: Any => Boolean = k => bc.value.exists { case (typ, bs) =>
+        FileBloom.hash(typ, k).forall(h => bs.exists(_.has(h)))
       }
+      val gate =
+        if (str) udf((k: String) => k != null && hit(k))
+        else udf((k: java.lang.Long) => k != null && hit(k))
+      Some(gate(col(keyCol).cast(if (str) "string" else "long")))
     }
   }
 
@@ -3146,105 +3174,49 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     }.toMap
   }
 
-  /** False-positive rate of every per-file bloom filter. */
-  private val BloomFpp = 0.01
-
-  /** Build every declared per-file sketch of the just-landed `names` in
-    * ONE distributed pass over just those files — O(batch), not
-    * O(table), and one job however many columns are declared: rows
-    * carry their `input_file_name`, partial sketches fold per partition
-    * and merge per (file, column, kind) on the executors.
-    *
-    *   - BLOOMS (`blooms`): sized at each file's footer row count, one
-    *     sidecar per (file, column) under `_bloom/`. Only plain integral
-    *     and string columns participate (the two kinds with a stable
-    *     hash contract on build and probe side); anything else is
-    *     skipped and simply never prunes. Bloom pruning answers the
-    *     query min/max cannot: a point lookup on a high-cardinality
-    *     column across unclustered appends, where every file's
-    *     [min, max] spans the key space but each file holds ~1/N of the
-    *     keys.
-    *   - NDV (`ndvCols`): HLL sketches over each value's canonical
-    *     string (distinct VALUES whatever the type; nulls don't count),
-    *     returned as the manifest's per-file `ndv:` entries. Sketches
-    *     are MERGEABLE, so table-level NDV is a driver-side fold over
-    *     the manifest ([[metaNdv]]).
+  /** Build the declared NDV sketches of the just-landed `names` in ONE
+    * pass over just those files — O(batch), not O(table), one job however
+    * many columns (none when none is declared): rows carry their
+    * `input_file_name`, HLL sketches over each value's canonical string
+    * (distinct VALUES whatever the type; nulls don't count) fold per
+    * partition and merge per (file, column), returned as the manifest's
+    * per-file `ndv:` entries. Sketches are MERGEABLE, so table-level NDV
+    * is a driver-side fold over the manifest ([[metaNdv]]).
     *
     * `fileSchema` is what the caller staged: reading with it skips the
     * parquet schema-inference JOB a bare read would run.
     */
-  private def buildSketches(spark: SparkSession, dir: String,
-                            names: Seq[String], stats: Map[String, FileStats],
-                            blooms: Seq[String], ndvCols: Seq[String],
-                            fileSchema: org.apache.spark.sql.types.StructType)
+  private def buildNdv(spark: SparkSession, dir: String, names: Seq[String],
+                       ndvCols: Seq[String],
+                       fileSchema: org.apache.spark.sql.types.StructType)
   : Map[String, Map[String, String]] = {
     import org.apache.spark.sql.functions.{col, input_file_name}
-    import org.apache.spark.sql.types._
-    import org.apache.spark.util.sketch.BloomFilter
     import org.apache.datasketches.hll.HllSketch
-    def field(c: String) = fileSchema.fields.find(_.name.equalsIgnoreCase(c))
-    val bloomable = blooms.filter(c => field(c).exists(_.dataType match {
-      case ByteType | ShortType | IntegerType | LongType | StringType => true
-      case _ => false
-    }))
-    val sketched = ndvCols.filter(field(_).isDefined)
-    if (names.isEmpty || (bloomable.isEmpty && sketched.isEmpty))
-      return Map.empty
-    // one projected column per distinct name; (column index, is-bloom)
-    // per sketch to build. Partials key on (file, i) for a bloom and
-    // (file, -1 - i) for an HLL sketch
-    val cols = (bloomable ++ sketched).map(_.toLowerCase).distinct
-    val kinds = bloomable.map(c => (cols.indexOf(c.toLowerCase), true)) ++
-      sketched.map(c => (cols.indexOf(c.toLowerCase), false))
-    val expected = names.map(n =>
-      n -> math.max(16L, stats.get(n).map(_.rows).getOrElse(1L << 20))).toMap
+    val cols = ndvCols.filter(c => fileSchema.fields
+      .exists(_.name.equalsIgnoreCase(c))).map(_.toLowerCase).distinct
+    if (names.isEmpty || cols.isEmpty) return Map.empty
     val merged = spark.read.schema(fileSchema)
       .parquet(names.map(n => dataFilePath(dir, n)): _*)
       .select(input_file_name.as("_graft_file") +: cols.map(col): _*)
       .rdd.mapPartitions { it =>
-        val bfs = scala.collection.mutable.Map[(String, Int), BloomFilter]()
         val hlls = scala.collection.mutable.Map[(String, Int), HllSketch]()
         it.foreach { row =>
           val name = row.getString(0).split('/').last
-          kinds.foreach { case (i, isBloom) =>
-            if (!row.isNullAt(i + 1)) {
-              val v = row.get(i + 1)
-              if (!isBloom) hlls.getOrElseUpdate((name, i),
-                new HllSketch(NdvLgK)).update(String.valueOf(v))
-              else {
-                val bf = bfs.getOrElseUpdate((name, i),
-                  BloomFilter.create(expected.getOrElse(name, 1L << 20), BloomFpp))
-                v match {
-                  case s: String => bf.putString(s)
-                  case n: java.lang.Number => bf.putLong(n.longValue())
-                  case _ => ()
-                }
-              }
-            }
+          cols.indices.foreach { i =>
+            if (!row.isNullAt(i + 1)) hlls.getOrElseUpdate((name, i),
+              new HllSketch(NdvLgK)).update(String.valueOf(row.get(i + 1)))
           }
         }
         // HllSketch is not serializable: its partials travel as bytes
-        bfs.iterator.map { case ((n, i), bf) => ((n, i), bf: Any) } ++
-          hlls.iterator.map { case ((n, i), sk) =>
-            ((n, -1 - i), sk.toCompactByteArray: Any) }
+        hlls.iterator.map { case (k, sk) => k -> sk.toCompactByteArray }
       }
-      .reduceByKey { (a, b) => (a, b) match {
-        case (x: BloomFilter, y: BloomFilter) => x.mergeInPlace(y)
-        case (x: Array[Byte], y: Array[Byte]) => hllUnion(Seq(x, y))
-      }}
+      .reduceByKey((a, b) => hllUnion(Seq(a, b)))
       .collect()
-    val f = fs(spark, dir)
-    if (bloomable.nonEmpty) f.mkdirs(p(bloomDir(dir)))
-    merged.toSeq.flatMap {
-      case ((file, i), bf: BloomFilter) =>
-        val out = f.create(p(bloomPath(dir, file, cols(i))), true)
-        try bf.writeTo(out) finally out.close()
-        None
-      case ((file, i), bytes: Array[Byte]) =>
-        Some((file, cols(-1 - i), java.util.Base64.getEncoder
-          .encodeToString(hllUnion(Seq(bytes)))))
-    }.groupBy(_._1).map { case (file, entries) =>
-      file -> entries.map(e => e._2 -> e._3).toMap
+    merged.toSeq.groupBy(_._1._1).map { case (file, entries) =>
+      file -> entries.map { case ((_, i), bytes) =>
+        cols(i) -> java.util.Base64.getEncoder
+          .encodeToString(hllUnion(Seq(bytes)))
+      }.toMap
     }
   }
 
@@ -3300,10 +3272,11 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     * stats (it stays readable and unpruned).
     */
   private def footerStats(spark: SparkSession, dir: String,
-                          names: Seq[String]): Map[String, FileStats] = {
+                          names: Seq[String],
+                          blooms: Seq[String]): Map[String, FileStats] = {
     val conf = spark.sparkContext.hadoopConfiguration
     def one(n: String): Option[(String, FileStats)] =
-      scala.util.Try(collectFooter(conf, p(dataFilePath(dir, n))))
+      scala.util.Try(collectFooter(conf, dataFilePath(dir, n), blooms))
         .toOption.map(n -> _)
     // the footer harvest is driver-side small I/O; a commit that lands
     // many files (a compaction, a large backfill) must not pay it one
@@ -3320,12 +3293,18 @@ object ManifestTable extends ManifestRowOps with ManifestFeeds with ManifestMain
     }
   }
 
+  /** The file's [[FileStats]]; also caches its bloom for each column of
+    * `blooms` while the file is open: a just-landed file's probe reads
+    * nothing.
+    */
   private def collectFooter(conf: org.apache.hadoop.conf.Configuration,
-                            path: org.apache.hadoop.fs.Path): FileStats = {
+                            path: String, blooms: Seq[String]): FileStats = {
     import scala.jdk.CollectionConverters._
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf))
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p(path), conf))
     try {
+      blooms.foreach(c => scala.util.Try(bloomOf(r, c))
+        .foreach(boundedPut(bloomCache, BloomCacheMax, s"$path#$c", _)))
       val md = r.getFooter
       val schema = md.getFileMetaData.getSchema
       val blocks = md.getBlocks.asScala.toSeq

@@ -1,5 +1,9 @@
 package graft.ext
 
+import org.apache.parquet.column.values.bloomfilter.BlockSplitBloomFilter
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types._
@@ -320,22 +324,17 @@ object Skipping {
     case _ => None
   }
 
-  /** A probe for one literal against a bloom built over a column of
-    * stats family `typ`, or None when the literal's kind does not match
-    * the build-side hash contract (integral -> putLong, string ->
-    * putString) and the bloom therefore cannot be consulted.
+  /** A probe for one literal against a file's bloom: integral literals
+    * probe as longs and strings as strings, each hashed the way the file
+    * stores the column ([[FileBloom.hash]]; a kind the column does not
+    * store is kept). None for any other literal, which no bloom answers.
     */
-  def bloomTest(typ: String, l: Literal)
-  : Option[org.apache.spark.util.sketch.BloomFilter => Boolean] =
-    (typ, l.dataType) match {
-      case ("long", ByteType | ShortType | IntegerType | LongType) =>
-        val v = l.value.toString.toLong
-        Some(bf => bf.mightContainLong(v))
-      case ("string", _: StringType) =>
-        val v = l.value.toString
-        Some(bf => bf.mightContainString(v))
-      case _ => None
-    }
+  def bloomTest(l: Literal): Option[FileBloom => Boolean] = (l.dataType match {
+    case ByteType | ShortType | IntegerType | LongType =>
+      Some(l.value.asInstanceOf[Number].longValue)
+    case _: StringType => Some(l.value.toString)
+    case _ => None
+  }).map(v => bf => FileBloom.hash(bf.typ, v).forall(bf.has))
 
   /** Normalize `a op b` to column-on-the-left, then test the literal
     * against the column's file interval.
@@ -522,5 +521,33 @@ object Skipping {
       out(i) = (out(i) + 1).toByte
       Some(out)
     }
+  }
+}
+
+/** A data file's parquet bloom for one column: each row group's bitset
+  * and the physical type the writer hashed values as. Bitsets travel (the
+  * filter is not Serializable); each thread probes through its own filters
+  * because `hash` and `findHash` share scratch buffers. */
+final case class FileBloom(typ: PrimitiveTypeName, bitsets: Seq[Array[Byte]]) {
+  @transient private lazy val filters = ThreadLocal.withInitial[
+    Seq[BlockSplitBloomFilter]](() => bitsets.map(new BlockSplitBloomFilter(_)))
+
+  /** True when some row group may hold the value hashed to `h`. */
+  def has(h: Long): Boolean = filters.get.exists(_.findHash(h))
+}
+
+object FileBloom {
+  private val hasher = ThreadLocal.withInitial[BlockSplitBloomFilter](() =>
+    new BlockSplitBloomFilter(BlockSplitBloomFilter.LOWER_BOUND_BYTES))
+
+  /** Parquet's hash of `v` as a `typ` column stores it: INT32 for byte,
+    * short and int columns (hashing those as a long misses every key),
+    * INT64, or a string's UTF-8 bytes. None when `v` does not fit `typ`.
+    */
+  def hash(typ: PrimitiveTypeName, v: Any): Option[Long] = (typ, v) match {
+    case (INT32, n: Long) if n.isValidInt => Some(hasher.get.hash(n.toInt))
+    case (INT64, n: Long) => Some(hasher.get.hash(n))
+    case (BINARY, s: String) => Some(hasher.get.hash(Binary.fromString(s)))
+    case _ => None
   }
 }

@@ -4,11 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The bloom-routed index probe shared by [[Ingest]] (fingerprints) and
   * both [[NearDupSink]] folds (band hashes, bucket ids), over the
-  * per-file blooms the index's own manifest commits: each index
-  * declares its probe key as its one bloom column on its first segment
-  * append ([[graft.ext.ManifestTable.append]] with `bloomCols`), so
-  * every segment, compaction and other rewrite lands its files with
-  * the key's bloom built before the commit; vacuum sweeps them. The
+  * blooms inside the index's own data files: each index declares its
+  * probe key as its one bloom column on its first segment append
+  * ([[graft.ext.ManifestTable.append]] with `bloomCols`), so every
+  * segment, compaction and other rewrite writes the key's parquet bloom
+  * into each file it lands. A bloom lives and dies with its file: the
   * routing layer has no files, crash window or maintenance of its own.
   *
   * A bloom never DECIDES membership: a positive routes rows to the
@@ -55,10 +55,10 @@ private[graft] object BloomSidecar {
     * right-sized files CLUSTERED on the index's one declared bloom
     * column, its probe key (each compacted file then covers a
     * near-disjoint key range, so even stats-only pruning answers point
-    * probes), per-file blooms rebuilt at the compacted files' row
-    * counts. One manifest swap, so it is safe WHILE the fold appends —
-    * a concurrent append rebases over the swap, a conflicting
-    * compaction aborts — then [[graft.ext.ManifestTable.vacuum]] sweeps
+    * probes), each compacted file written with its own bloom. One
+    * manifest swap, so it is safe WHILE the fold appends — a concurrent
+    * append rebases over the swap, a conflicting compaction aborts —
+    * then [[graft.ext.ManifestTable.vacuum]] sweeps
     * the replaced segments past its grace window. (0, 0) on an index
     * with no segment yet.
     */

@@ -131,8 +131,8 @@ object Ingest {
   /** O(batch): append the survivors' fingerprints as a new
     * manifest-committed segment — nothing over the accumulated index is
     * read or shuffled. The first segment declares `fp` as the index's
-    * bloom column; every segment's `fp` bloom is built before its
-    * commit, so a committed segment always routes. The manifest batch
+    * bloom column; every segment file carries its `fp` bloom inside
+    * it, so a committed segment always routes. The manifest batch
     * id is a fresh UUID on purpose: index appends must stay
     * UNCONDITIONAL so the self-healing backfill ([[ingestBatchCommitted]])
     * still lands after a replay — idempotence belongs to the corpus

@@ -49,7 +49,7 @@ class BloomDeclarationSpec extends SparkSpec {
   }
 
   private def bloomed(dir: String, file: String, col: String): Boolean =
-    new java.io.File(s"$dir/_bloom/$file.$col.bloom").exists()
+    ParquetBlooms.has(spark, dir, file, col)
 
   /** Every live file carries its `id` bloom, the key gate is on, and a
     * point lookup on a key no rewrite touched prunes below the file
@@ -177,14 +177,58 @@ class BloomDeclarationSpec extends SparkSpec {
     val dst = fresh("clone_dst")
     ManifestTable.shallowClone(spark, src, dst)
     assert(ManifestTable.snapshot(spark, dst).bloomCols === Seq("id"))
-    // the source's bloom files do not travel: the gate stays off ...
-    assert(ManifestTable.keyGate(spark, dst,
-      ManifestTable.snapshot(spark, dst), "id").isEmpty)
+    // every clone entry is an absolute path into the source's data files,
+    // whose blooms travel with them: the gate is on from the first commit
+    assert(ManifestTable.snapshot(spark, dst).files.forall(f =>
+      f.startsWith("/") || f.contains("://")))
+    assertBloomsLive("shallow clone", dst)
     ManifestTable.append(docs(1000L until 1010L), dst, "c0")
     assert(bloomed(dst, ManifestTable.snapshot(spark, dst).files.last, "id"))
-    // ... until the clone rewrites its files
     ManifestTable.compact(spark, dst, targetFileBytes = 2048L)
     assertBloomsLive("compacted clone", dst)
+  }
+
+  /** One table, one bloom column per key kind the probes hash: a string,
+    * a long, an int and a short. Four interleaved files of 50 rows, so
+    * min/max prunes nothing and only a bloom can.
+    */
+  test("every declared key kind hashes as its file stores it: the gate passes and lookups find every present key") {
+    import org.apache.spark.sql.functions.{col, not}
+    val dir = fresh("hash_contract")
+    def rows(ks: Seq[Int]) = ks.map(k => (f"k$k%04d", k.toLong * 7919L,
+      k * 31, k.toShort)).toDF("s", "l", "i", "h").coalesce(1)
+    (0 until 4).foreach { j =>
+      ManifestTable.append(rows((0 until 200).filter(_ % 4 == j)), dir, s"b$j",
+        bloomCols = if (j == 0) Seq("s", "l", "i", "h") else Nil)
+    }
+    val s = ManifestTable.snapshot(spark, dir)
+    val table = ManifestTable.read(spark, dir)
+    val absent = rows(1000 until 1200)
+    def lit(c: String, k: Int): String = c match {
+      case "s" => f"'k$k%04d'"
+      case "l" => s"${k.toLong * 7919L}"
+      case "i" => s"${k * 31}"
+      case "h" => s"$k"
+    }
+    Seq("s", "l", "i", "h").foreach { c =>
+      assert(s.files.forall(bloomed(dir, _, c)), s"$c: a file lacks its bloom")
+      val gate = ManifestTable.keyGate(spark, dir, s, c)
+      assert(gate.isDefined, s"$c: the key gate is off")
+      assert(table.where(not(gate.get)).count() === 0L,
+        s"$c: the gate rejects keys the table holds")
+      assert(absent.where(gate.get).count() <= 20L,
+        s"$c: the gate passes most absent keys")
+      // every point lookup prunes below the file count, and together
+      // they find every row
+      (0 until 200).foreach { k =>
+        val (kept, total) = ManifestTable.pruneInfo(spark, dir, s"$c = ${lit(c, k)}")
+        assert(total === 4 && kept >= 1 && kept < 4, s"$c = ${lit(c, k)}: kept $kept")
+      }
+      val found = (0 until 200).map(k =>
+        ManifestTable.readWhere(spark, dir, s"$c = ${lit(c, k)}").select("s"))
+        .reduce(_ union _).as[String].collect().sorted.toSeq
+      assert(found === (0 until 200).map(k => f"k$k%04d"), c)
+    }
   }
 
   test("REPLACE resets the declaration") {
@@ -262,6 +306,13 @@ class BloomDeclarationSpec extends SparkSpec {
       finally batch.unpersist()
     }
     val plain = appendJobs("jobs_plain", Nil, Nil)
+    // blooms are written by the stage itself: declaring them costs no job
+    val bloomOnly = appendJobs("jobs_bloom_only", Seq("id", "text"), Nil)
+    assert(bloomOnly === plain,
+      s"bloom-declared append ran $bloomOnly jobs, undeclared $plain")
+    val bd = s"$wh/jobs_bloom_only"
+    assert(ManifestTable.snapshot(spark, bd).files.forall(f =>
+      bloomed(bd, f, "id") && bloomed(bd, f, "text")))
     val sketched = appendJobs("jobs_sketched", Seq("id"), Seq("id", "text"))
     assert(sketched - plain === 1,
       s"declared append ran $sketched jobs, undeclared $plain")

@@ -26,11 +26,11 @@ class BloomSidecarSpec extends SparkSpec {
       Ingest.ingestBatchCommitted(batch(b * 40), corpus, index, s"b$b")
       if (b == 0) assert(corpusRows() === 40L, "batch 0 must land its rows")
     }
-    // batch 0 finds an empty index; batches 1-3 each open exactly the
-    // ONE segment bloom appended since their previous call (the
-    // uncached cost would be 0+1+2+3 = 6 opens)
-    assert(ManifestTable.bloomFilesOpened.get() === n0 + 3,
-      s"expected 3 opens across 4 batches, got ${ManifestTable.bloomFilesOpened.get() - n0}")
+    // each batch lands one segment, whose bloom is read once, by the
+    // footer harvest of its own landing write; no probe reads one again
+    // (uncached, batches 1-3 would add 1+2+3 = 6 reads)
+    assert(ManifestTable.bloomFilesOpened.get() === n0 + 4,
+      s"expected 4 bloom reads across 4 batches, got ${ManifestTable.bloomFilesOpened.get() - n0}")
     assert(corpusRows() === 160L)
     // and the fold still deduplicates: batch 2's content re-sent under a
     // fresh batch id appends nothing
@@ -42,15 +42,17 @@ class BloomSidecarSpec extends SparkSpec {
     val root = mkDir("unbloomed")
     val (corpus, index) = (s"$root/corpus", s"$root/index")
     val seg = s"$index/segments"
-    Ingest.ingestBatchCommitted(batch(0), corpus, index, "b0")
     // a segment holding the fingerprints of content the corpus has never
-    // seen, its inherited `fp` bloom deleted
+    // seen, appended before the index declares its `fp` bloom (the
+    // table's first append names no bloom column), so it carries none
     val unseen = batch(100, 5)
     ManifestTable.append(unseen.select(
         org.apache.spark.sql.functions.md5($"text").as("fp")),
       seg, "raw")
     val raw = ManifestTable.snapshot(spark, seg).files.last
-    assert(new java.io.File(s"$seg/_bloom/$raw.fp.bloom").delete())
+    Ingest.ingestBatchCommitted(batch(0), corpus, index, "b0")
+    assert(ManifestTable.snapshot(spark, seg).bloomCols === Seq("fp"))
+    assert(!ParquetBlooms.has(spark, seg, raw, "fp"))
     assert(ManifestTable.keyGate(spark, seg,
       ManifestTable.snapshot(spark, seg), "fp").isEmpty)
     // the bloomed segment alone would reject every one of these rows; a

@@ -232,4 +232,61 @@ class ManifestLogSpec extends SparkSpec {
     assert(ManifestTable.snapshot(spark, dir).version === 57L)
     assert(ManifestTable.read(spark, dir).count() === 4L)
   }
+
+  test("_last_checkpoint: a reader racing checkpointing commits never opens a torn pointer") {
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    val dir = tmp("pointer_race")
+    ManifestTable.append(batch(1L), dir, "b0") // v1
+    // v10 writes the first checkpoint and its pointer
+    (2 to 10).foreach(v => ManifestTable.setProperties(spark, dir, Map("k" -> s"$v")))
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "pointer-race-capture", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        warnings.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val logger = org.apache.logging.log4j.LogManager
+      .getLogger("org.apache.hadoop.fs.FSInputChecker").asInstanceOf[Logger]
+    logger.addAppender(capture)
+    val l0 = ManifestTable.logListings.get()
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reads = new java.util.concurrent.atomic.AtomicLong()
+    val failure = new java.util.concurrent.atomic.AtomicReference[String]()
+    // the reader resolves the head as fast as it can: every resolve
+    // reads the pointer, so it races every pointer publish
+    val reader = new Thread(() => {
+      var last = 10L
+      while (!done.get && failure.get == null) {
+        val h = ManifestTable.headVersion(spark, dir)
+        if (h < last) failure.set(s"head went back from $last to $h")
+        last = h
+        reads.incrementAndGet()
+      }
+    })
+    try {
+      reader.start()
+      // 40 commits: four of them (v20, v30, v40, v50) checkpoint and
+      // publish a new pointer
+      (11 to 50).foreach(v =>
+        ManifestTable.setProperties(spark, dir, Map("k" -> s"$v")))
+    } finally {
+      done.set(true)
+      reader.join(30000L)
+      logger.removeAppender(capture)
+      capture.stop()
+    }
+    import scala.jdk.CollectionConverters._
+    assert(Option(failure.get).isEmpty, s"${failure.get}")
+    assert(reads.get > 0L)
+    assert(warnings.isEmpty, warnings.asScala.mkString("\n"))
+    // a torn or missing pointer would send the resolve to a listing
+    assert(ManifestTable.logListings.get() === l0,
+      s"${ManifestTable.logListings.get() - l0} head resolutions listed _manifest/")
+    assert(ManifestTable.headVersion(spark, dir) === 50L)
+    val staged = new java.io.File(s"$dir/_manifest").list()
+      .filter(_.startsWith("_last_checkpoint."))
+    assert(staged.isEmpty, s"staged pointers stayed behind: ${staged.mkString(", ")}")
+  }
 }

@@ -243,6 +243,9 @@ class ManifestTableSpec extends SparkSpec {
 
   test("bloom sidecars prune point lookups that min/max cannot") {
     val dir = tmp("bloom")
+    // the table's first append declares no bloom column, so its one file
+    // carries none and stays unprunable-by-bloom
+    ManifestTable.append(batch(1000L), dir, "nobloom")
     // interleaved appends: every file's [min, max] spans nearly the whole
     // id range, so stats pruning keeps everything for an equality probe
     (0 until 4).foreach { i =>
@@ -250,11 +253,12 @@ class ManifestTableSpec extends SparkSpec {
         batch((0L until 400L).filter(_ % 4 == i): _*).coalesce(1),
         dir, s"b$i", bloomCols = Seq("id", "text"))
     }
-    // id 217 % 4 = 1: exactly one file holds it; stats keep all 4, the
-    // bloom pass drops the other three (fpp makes >1 astronomically rare
-    // at 100 ids/file, and NEVER drops the true file — one-sided)
+    // id 217 % 4 = 1: exactly one file holds it; stats keep the 4
+    // interleaved files (the bloom-less one is pruned by min/max anyway),
+    // the bloom pass drops the other three (fpp makes >1 astronomically
+    // rare at 100 ids/file, and NEVER drops the true file — one-sided)
     val (kept, total) = ManifestTable.pruneInfo(spark, dir, "id = 217")
-    assert(total === 4 && kept <= 2 && kept >= 1)
+    assert(total === 5 && kept <= 2 && kept >= 1)
     assert(ManifestTable.readWhere(spark, dir, "id = 217")
       .as[(Long, String)].collect().toSeq === Seq((217L, "doc 217")))
     // string bloom: same story on the text column
@@ -266,37 +270,30 @@ class ManifestTableSpec extends SparkSpec {
       Seq((217L, "doc 217"), (218L, "doc 218")))
     // a bloom conjunct under OR must NOT prune (it is not required)
     assert(ManifestTable.pruneInfo(spark, dir, "id = 217 OR id = 218")
-      === ((4, 4)))
+      === ((4, 5)))
     // absent key: blooms can drop every file; result stays empty+typed
     val (keptA, _) = ManifestTable.pruneInfo(spark, dir, "id = 9999999")
     assert(keptA === 0) // min/max already excludes out-of-range ids
     assert(ManifestTable.readWhere(spark, dir, "text = 'no such doc'")
       .count() === 0)
-    // files without sidecars stay unprunable-by-bloom: a later append
-    // inherits the declaration, so its blooms are deleted to make it
-    // bloom-less
-    ManifestTable.append(batch(1000L), dir, "nobloom")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    val unbloomed = ManifestTable.snapshot(spark, dir).files.last
-    Seq("id", "text").foreach(c => assert(fs.delete(new org.apache.hadoop
-      .fs.Path(s"$dir/_bloom/$unbloomed.$c.bloom"), false)))
+    // files without blooms stay unprunable-by-bloom: a lookup their
+    // stats admit keeps the bloom-less file
     val (k2, t2) = ManifestTable.pruneInfo(spark, dir, "id = 217")
     assert(t2 === 5 && k2 >= 1 && k2 <= 3) // new file pruned by min/max anyway
-    // compaction rebuilds the declared sidecars for the rewritten files
+    assert(ManifestTable.readWhere(spark, dir, "text = 'doc 1000'")
+      .as[(Long, String)].collect().toSeq === Seq((1000L, "doc 1000")))
+    // compaction writes the declared blooms into the rewritten files
     ManifestTable.compact(spark, dir, targetFileBytes = 2048L)
     val (k3, t3) = ManifestTable.pruneInfo(spark, dir, "id = 217")
     assert(t3 >= 2 && k3 < t3)
     assert(ManifestTable.readWhere(spark, dir, "id = 217")
       .as[(Long, String)].collect().toSeq === Seq((217L, "doc 217")))
-    // vacuum sweeps the orphaned blooms of compacted-away data files
+    // the blooms live inside the data files: vacuum sweeps the
+    // compacted-away files, and no bloom layer exists beside them
     assert(ManifestTable.vacuum(spark, dir, graceMs = 0L) >= 5)
-    val liveData = ManifestTable.snapshot(spark, dir).files.toSet
-    val orphanBlooms = fs.listStatus(
-      new org.apache.hadoop.fs.Path(s"$dir/_bloom"))
-      .filterNot(s => liveData.contains(
-        s.getPath.getName.split('.').take(2).mkString(".")))
-    assert(orphanBlooms.isEmpty)
+    assert(ManifestTable.snapshot(spark, dir).files.forall(f =>
+      ParquetBlooms.has(spark, dir, f, "id")))
+    assert(!new java.io.File(s"$dir/_bloom").exists())
   }
 
   test("time travel: historical versions stay readable until vacuumed") {

@@ -151,8 +151,8 @@ class StreamDedupSpec extends SparkSpec {
     // the map-side path), and no routing layer is written beside them
     def everyLiveSegmentBloomed() = {
       val snap = graft.ext.ManifestTable.snapshot(spark, s"$index/segments")
-      snap.files.nonEmpty && snap.files.forall(f => new java.io.File(
-        s"$index/segments/_bloom/$f.fp.bloom").exists())
+      snap.files.nonEmpty && snap.files.forall(f =>
+        ParquetBlooms.has(spark, s"$index/segments", f, "fp"))
     }
     assert(everyLiveSegmentBloomed())
     assert(!new java.io.File(s"$index/bloom").exists())

@@ -204,8 +204,8 @@ class StreamNearDupSpec extends SparkSpec {
     def everyLiveSegmentBloomed() = {
       val snap = graft.ext.ManifestTable.snapshot(spark,
         s"$indexDir/segments")
-      snap.files.nonEmpty && snap.files.forall(f => new java.io.File(
-        s"$indexDir/segments/_bloom/$f.band_hash.bloom").exists())
+      snap.files.nonEmpty && snap.files.forall(f =>
+        ParquetBlooms.has(spark, s"$indexDir/segments", f, "band_hash"))
     }
     assert(everyLiveSegmentBloomed())
     assert(!new java.io.File(s"$indexDir/bloom").exists())
@@ -412,8 +412,7 @@ class StreamNearDupSpec extends SparkSpec {
     val (nin, nout) = graft.streaming.NearDupSink.compactIndex(spark, indexDir)
     assert(nin >= 2 && nout === 1)
     val snap = graft.ext.ManifestTable.snapshot(spark, seg)
-    assert(snap.files.forall(f =>
-      new java.io.File(s"$seg/_bloom/$f.bk.bloom").exists()))
+    assert(snap.files.forall(f => ParquetBlooms.has(spark, seg, f, "bk")))
     assert(graft.ext.ManifestTable.keyGate(spark, seg, snap, "bk").isDefined)
     // a replay of b0 is refused, and the planted near-dup of `base` still
     // drops against the compacted index
