@@ -3,6 +3,7 @@ package graft.core
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
+import org.apache.spark.storage.StorageLevel
 
 /** Registry for plan intermediates that operators persist because the
   * returned DataFrame re-reads them on every action (Batching's
@@ -21,6 +22,16 @@ object Caches {
 
   def track[T](r: RDD[T]): RDD[T] = { rdds.add(r); r }
   def track[T](df: Dataset[T]): Dataset[T] = { frames.add(df); df }
+
+  /** `df` persisted (MEMORY_AND_DISK_SER) and tracked — or `df` as is
+    * when an identical plan is cached already (the same batch folded
+    * again while an earlier call's intermediates are still held): it
+    * reads that cache, where a second persist would only log a re-cache
+    * warning.
+    */
+  def persist[T](df: Dataset[T]): Dataset[T] =
+    if (df.storageLevel != StorageLevel.NONE) df
+    else track(df.persist(StorageLevel.MEMORY_AND_DISK_SER))
 
   /** Unpersist every tracked intermediate (non-blocking). Safe to call at
     * any point where no returned-but-unmaterialized plan from a previous

@@ -266,12 +266,9 @@ private[ext] trait ManifestMaintenance { this: ManifestTable.type =>
           // log file mentions — maximally conservative, sweeps less
           head.files.toSet ++ (log.ckpt.keys ++ log.delta.keys)
             .flatMap { v =>
-              val name = if (log.delta.contains(v))
-                s"d${"%08d".format(v)}" else s"v${"%08d".format(v)}"
-              try readLogLines(spark, dir, name).collect {
-                case l if l.startsWith("add:") => l.stripPrefix("add:")
-                case l if l.startsWith("file:") => l.stripPrefix("file:")
-              } catch { case scala.util.control.NonFatal(_) => Nil }
+              val name = if (log.delta.contains(v)) deltaName(v) else ckptName(v)
+              try parseLog(readLogLines(spark, dir, name)).adds
+              catch { case scala.util.control.NonFatal(_) => Nil }
             }
       }
     // TAGGED versions stay restorable forever: their full file sets
@@ -298,41 +295,21 @@ private[ext] trait ManifestMaintenance { this: ManifestTable.type =>
     // cowCommit's unreferenced dir — or a sidecar whose last referencing
     // log file was expired — gets swept past the grace. Same story for
     // deletion-vector sidecars under `_dv/`.
+    lazy val (cdcRefs, dvRefs) = referencedSidecars(spark, dir)
     val cd = p(cdcDir(dir))
     if (f.exists(cd)) {
-      val referenced = referencedNames(spark, dir, "cdc:", 0)
       f.listStatus(cd)
-        .filter(s => !referenced.contains(s.getPath.getName) &&
+        .filter(s => !cdcRefs.contains(s.getPath.getName) &&
           s.getModificationTime < cutoff)
         .foreach(s => f.delete(s.getPath, true))
     }
     val dvd = p(dvDir(dir))
     if (f.exists(dvd)) {
-      val referenced = referencedNames(spark, dir, "dv:", 1)
       f.listStatus(dvd)
-        .filter(s => !referenced.contains(s.getPath.getName) &&
+        .filter(s => !dvRefs.contains(s.getPath.getName) &&
           s.getModificationTime < cutoff)
         .foreach(s => f.delete(s.getPath, true))
     }
     removed
   }
-
-  /** Sidecar names referenced by ANY log file's `<prefix>` lines (tab
-    * field `field`) — the conservative liveness set vacuum sweeps
-    * against. Raw line scan, no snapshot resolution: O(versions) small
-    * reads, never O(files x versions) parse work.
-    */
-  private def referencedNames(spark: SparkSession, dir: String,
-                              prefix: String, field: Int): Set[String] = {
-    val f = fs(spark, dir)
-    val md = p(manifestDir(dir))
-    if (!f.exists(md)) return Set.empty
-    f.listStatus(md)
-      .filter(s => s.isFile && s.getPath.getName.matches("[vd]\\d{8,}"))
-      .flatMap(s => readLogLines(spark, dir, s.getPath.getName)
-        .filter(_.startsWith(prefix))
-        .map(l => l.stripPrefix(prefix).split("\t", -1)(field)))
-      .toSet
-  }
-
 }

@@ -396,17 +396,15 @@ object MinHashLSH {
                    shingleFn: Column => Column = wordShingles(_, 3),
                    maxBucketSize: Int = DefaultMaxBucketSize,
                    droppedSink: DataFrame => Unit = logDroppedSink): DataFrame = {
-    val buckets = graft.core.Caches.track(
+    val buckets = graft.core.Caches.persist(
       collidingBuckets(
-        bandRows(df, idCol, textCol, numHashes, bands, shingleFn), idCol)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+        bandRows(df, idCol, textCol, numHashes, bands, shingleFn), idCol))
     droppedSink(buckets
       .filter(size(col("ids")) > maxBucketSize)
       .select(col("band"), col("band_hash"),
         size(col("ids")).cast("long").as("n_ids")))
-    val cand = graft.core.Caches.track(
-      pairsFromBuckets(buckets, maxBucketSize)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+    val cand = graft.core.Caches.persist(
+      pairsFromBuckets(buckets, maxBucketSize))
     // cand's id set, read off the capped buckets: every member of a
     // bucket of 2..maxBucketSize ids is in one of its pairs. At most one
     // row per band row, never one per pair, so the semi-join's right
@@ -416,10 +414,9 @@ object MinHashLSH {
     // candidate-only shingles, used by BOTH verify sides: persisting this
     // output-sized frame keeps the corpus at two column-pruned scans total
     // (bands + the one semi-join pass) instead of three
-    val shCand = graft.core.Caches.track(
+    val shCand = graft.core.Caches.persist(
       shingleFrame(df.join(candIds, Seq(idCol), "left_semi"),
-        idCol, textCol, shingleFn)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+        idCol, textCol, shingleFn))
     cand
       .join(shCand.select(col(idCol).as("a"), col("sh").as("sh_a")), Seq("a"))
       .join(shCand.select(col(idCol).as("b"), col("sh").as("sh_b")), Seq("b"))

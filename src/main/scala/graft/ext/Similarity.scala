@@ -503,11 +503,10 @@ object Similarity {
                    vecCol: String = "embedding", minCos: Double = 0.9,
                    bits: Int = 6, dims: Int = 64, tables: Int = 1): DataFrame = {
     // the only corpus-sized pass: bucket every vector in every table
-    val withBuckets = graft.core.Caches.track(
+    val withBuckets = graft.core.Caches.persist(
       vecs.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
         .withColumn("bks", array((0 until tables).map(t =>
-          bucket(col("v"), bits, dims, planeOffset = t * bits)): _*))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+          bucket(col("v"), bits, dims, planeOffset = t * bits)): _*)))
     // bucket rows: (tbl, bk, id) only — the shuffle payload is ~24 B/row
     val cand = withBuckets
       .select(col("id"), posexplode(col("bks")))

@@ -114,18 +114,20 @@ object NearDupSink {
     // gate and pruned read decided by ONE bounded-collect job (see
     // BloomSidecar.probe): the sink's own jobs on the benchmark's
     // 2000-doc batch are 4 per fold, this probe included
-    val survivors = BloomSidecar.probe(spark, segmentsPath(indexDir), rows,
+    // an empty index or no bloom-positive key leaves `within`, already
+    // persisted, as the survivors; only the probed anti-join is cached
+    val probed = BloomSidecar.probe(spark, segmentsPath(indexDir), rows,
         "band_hash")
-      .fold(within) { index =>
+      .map { index =>
         val hits = StreamNearDup.probeMinHashRows(
             rows.select(col("corpus_id").as("probe_id"),
               col("sig_idx").as("sig_p"), col("band"), col("band_hash")),
             index, numHashes, bands, minEstJaccard)
           .select(col("probe_id").as(idCol)).distinct()
-        within.join(hits, Seq(idCol), "left_anti")
+        graft.core.Caches.track(within.join(hits, Seq(idCol), "left_anti")
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
       }
-    val kept = graft.core.Caches.track(survivors
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+    val kept = probed.getOrElse(within)
     statsDir.foreach(d => StatsSink.appendCommitted(kept, d, batchId, textCol))
     val committed = graft.ext.ManifestTable.append(kept, corpusDir, batchId)
     // the fold's survivor band rows: a semi-join against the persisted
@@ -142,7 +144,7 @@ object NearDupSink {
     // per-file blooms serve BloomSidecar.probe's gate and pruned read
     graft.ext.ManifestTable.append(bandRows, segmentsPath(indexDir),
       java.util.UUID.randomUUID().toString, bloomCols = Seq("band_hash"))
-    kept.unpersist()
+    probed.foreach(_.unpersist())
     rows.unpersist()
     within.unpersist()
     committed
@@ -190,19 +192,19 @@ object NearDupSink {
     // the gate keys on `bk` alone, a superset of the (tbl, bk) the
     // bucketed join is inner on: reading every index row of the routed
     // buckets keeps every match
-    val survivors = BloomSidecar.probe(spark, segmentsPath(indexDir), rows,
+    val probed = BloomSidecar.probe(spark, segmentsPath(indexDir), rows,
         "bk")
-      .fold(within) { index =>
+      .map { index =>
         val hits = StreamNearDup.probeEmbedRows(
             rows.select(col("corpus_id").as("probe_id"),
               col("v_idx").as("v_p"), col("bks_idx").as("bks_p"),
               col("tbl"), col("bk")),
             index, tables, minCos)
           .select(col("probe_id").as(idCol)).distinct()
-        within.join(hits, Seq(idCol), "left_anti")
+        graft.core.Caches.track(within.join(hits, Seq(idCol), "left_anti")
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
       }
-    val kept = graft.core.Caches.track(survivors
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+    val kept = probed.getOrElse(within)
     val committed = graft.ext.ManifestTable.append(kept, corpusDir, batchId)
     // single consumer (the append) — no persist needed
     val bandRows =
@@ -212,7 +214,7 @@ object NearDupSink {
           col("v_idx"), col("bks_idx"))
     graft.ext.ManifestTable.append(bandRows, segmentsPath(indexDir),
       java.util.UUID.randomUUID().toString, bloomCols = Seq("bk"))
-    kept.unpersist()
+    probed.foreach(_.unpersist())
     rows.unpersist()
     within.unpersist()
     committed

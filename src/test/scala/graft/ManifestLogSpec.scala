@@ -91,6 +91,54 @@ class ManifestLogSpec extends SparkSpec {
     assert(ManifestTable.logFileReads.get() === n1)
   }
 
+  test("a checkpoint in the older file: format resolves to the same table; head + 3 replays from it") {
+    val dir = tmp("file_ckpt")
+    val rows = (1L to 8L).map(i => (i, s"doc $i", i % 2, s"k$i"))
+      .toDF("id", "text", "p", "key").coalesce(1)
+    // footer stats, a partition layout, NDV and bloom declarations (v1),
+    // a DV delete, a rename (colmap + retired physical slot), a
+    // constraint and a property
+    ManifestTable.append(rows, dir, "b0", partitionBy = Seq("p"),
+      ndvCols = Seq("id"), bloomCols = Seq("key"))
+    assert(ManifestTable.deleteWhereDV(spark, dir, "id = 3", "d0"))
+    assert(ManifestTable.renameColumn(spark, dir, "text", "body"))
+    assert(ManifestTable.dropColumn(spark, dir, "body"))
+    ManifestTable.addConstraint(spark, dir, "pos", "id > 0")
+    ManifestTable.setProperties(spark, dir, Map("owner" -> "ingest team\t1"))
+    val orig = ManifestTable.snapshot(spark, dir)
+    assert(orig.stats.nonEmpty && orig.sizes.nonEmpty && orig.pvals.nonEmpty &&
+      orig.partitionCols === Seq("p") && orig.dvs.nonEmpty &&
+      orig.ndvCols === Seq("id") && orig.ndv.nonEmpty &&
+      orig.bloomCols === Seq("key") && orig.colMap.nonEmpty &&
+      orig.retiredCols.nonEmpty && orig.constraints.nonEmpty &&
+      orig.properties.nonEmpty)
+    val preds = Seq("id = 2", "p = 1", "key = 'k4'", "id >= 3")
+    def answers() = preds.map(q => (ManifestTable.pruneInfo(spark, dir, q),
+      ManifestTable.readWhere(spark, dir, q).collect().map(_.toString).sorted.toSeq))
+    val v = ManifestTable.checkpoint(spark, dir)
+    val before = answers()
+    // what the older writer left: the same checkpoint with every add:
+    // line spelled file:
+    val name = f"v$v%08d"
+    val lines = logLines(dir, name)
+    assert(lines.exists(_.startsWith("add:")) && !lines.exists(_.startsWith("file:")))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/_manifest/$name"),
+      lines.map(l => if (l.startsWith("add:")) "file:" + l.drop(4) else l)
+        .mkString("\n").getBytes("UTF-8"))
+    ManifestTable.clearSnapshotCacheForTest()
+    assert(ManifestTable.snapshot(spark, dir) === orig)
+    assert(answers() === before)
+    // three more commits; a cold driver resolves the head from that
+    // checkpoint plus three deltas
+    (1 to 3).foreach(i => ManifestTable.setProperties(spark, dir, Map("k" -> s"$i")))
+    val head = ManifestTable.snapshot(spark, dir)
+    assert(head.version === v + 3)
+    ManifestTable.clearSnapshotCacheForTest()
+    val n0 = ManifestTable.logFileReads.get()
+    assert(ManifestTable.snapshot(spark, dir) === head)
+    assert(ManifestTable.logFileReads.get() - n0 === 4)
+  }
+
   test("headVersion and a committing writer parse nothing on a warm driver") {
     val dir = tmp("warm")
     (1 to 3).foreach(i => ManifestTable.append(batch(i.toLong), dir, s"b$i"))
@@ -234,22 +282,10 @@ class ManifestLogSpec extends SparkSpec {
   }
 
   test("_last_checkpoint: a reader racing checkpointing commits never opens a torn pointer") {
-    import org.apache.logging.log4j.core.{LogEvent, Logger}
     val dir = tmp("pointer_race")
     ManifestTable.append(batch(1L), dir, "b0") // v1
     // v10 writes the first checkpoint and its pointer
     (2 to 10).foreach(v => ManifestTable.setProperties(spark, dir, Map("k" -> s"$v")))
-    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val capture = new org.apache.logging.log4j.core.appender.AbstractAppender(
-        "pointer-race-capture", null, null, true,
-        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        warnings.add(e.getMessage.getFormattedMessage)
-    }
-    capture.start()
-    val logger = org.apache.logging.log4j.LogManager
-      .getLogger("org.apache.hadoop.fs.FSInputChecker").asInstanceOf[Logger]
-    logger.addAppender(capture)
     val l0 = ManifestTable.logListings.get()
     val done = new java.util.concurrent.atomic.AtomicBoolean(false)
     val reads = new java.util.concurrent.atomic.AtomicLong()
@@ -265,22 +301,21 @@ class ManifestLogSpec extends SparkSpec {
         reads.incrementAndGet()
       }
     })
-    try {
-      reader.start()
-      // 40 commits: four of them (v20, v30, v40, v50) checkpoint and
-      // publish a new pointer
-      (11 to 50).foreach(v =>
-        ManifestTable.setProperties(spark, dir, Map("k" -> s"$v")))
-    } finally {
-      done.set(true)
-      reader.join(30000L)
-      logger.removeAppender(capture)
-      capture.stop()
+    val (_, warnings) = LogCapture.during("org.apache.hadoop.fs.FSInputChecker") {
+      try {
+        reader.start()
+        // 40 commits: four of them (v20, v30, v40, v50) checkpoint and
+        // publish a new pointer
+        (11 to 50).foreach(v =>
+          ManifestTable.setProperties(spark, dir, Map("k" -> s"$v")))
+      } finally {
+        done.set(true)
+        reader.join(30000L)
+      }
     }
-    import scala.jdk.CollectionConverters._
     assert(Option(failure.get).isEmpty, s"${failure.get}")
     assert(reads.get > 0L)
-    assert(warnings.isEmpty, warnings.asScala.mkString("\n"))
+    assert(warnings.isEmpty, warnings.mkString("\n"))
     // a torn or missing pointer would send the resolve to a listing
     assert(ManifestTable.logListings.get() === l0,
       s"${ManifestTable.logListings.get() - l0} head resolutions listed _manifest/")

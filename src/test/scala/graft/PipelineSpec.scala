@@ -83,7 +83,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("folder scan reads its CSV files by name: no file-source warning, same file set, same failures") {
-    import org.apache.logging.log4j.core.{LogEvent, Logger}
     val dir = java.nio.file.Files.createTempDirectory("graft-folder-list").toString
     def write(name: String, id: String) = java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/$name"),
@@ -94,27 +93,13 @@ class PipelineSpec extends SparkSpec {
     write("_staged.csv", "S1")
     write(".hidden.csv", "H1")
     write("notes.txt", "N1")
-    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val capture = new org.apache.logging.log4j.core.appender.AbstractAppender(
-        "folder-scan-capture", null, null, true,
-        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        lines.add(e.getMessage.getFormattedMessage)
-    }
-    capture.start()
-    val loggers = Seq("org.apache.spark.sql.execution.datasources.DataSource",
-        "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink")
-      .map(org.apache.logging.log4j.LogManager.getLogger(_).asInstanceOf[Logger])
-    loggers.foreach(_.addAppender(capture))
-    val ids =
-      try graft.sources.CsvIO.readInputDir(spark, dir)
+    val (ids, lines) = LogCapture.during(
+        "org.apache.spark.sql.execution.datasources.DataSource",
+        "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink") {
+      graft.sources.CsvIO.readInputDir(spark, dir)
         .select("description_id").as[String].collect().sorted.toSeq
-      finally {
-        loggers.foreach(_.removeAppender(capture))
-        capture.stop()
-      }
-    import scala.jdk.CollectionConverters._
-    assert(lines.isEmpty, lines.asScala.mkString("\n"))
+    }
+    assert(lines.isEmpty, lines.mkString("\n"))
     assert(ids === Seq("A1", "B1"))
     // a missing folder and a folder without CSV files still fail
     intercept[org.apache.spark.sql.AnalysisException](

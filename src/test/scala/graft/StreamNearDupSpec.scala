@@ -420,4 +420,26 @@ class StreamNearDupSpec extends SparkSpec {
     assert(fold(Seq((20L, base.map(_ + 0.001))).toDF("id", "v"), "b2"))
     assert(ids() === Seq(1L, 3L, 11L))
   }
+
+  test("a first fold on an empty index caches the batch once: no re-cache warning, both folds commit") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ndcache").toString
+    val docs = Seq((1L, "one cached frame per fold keeps the block manager honest"),
+      (2L, "an empty index routes every survivor straight to the corpus"))
+      .toDF("id", "text")
+    val vecs = Seq((1L, Seq(0.9, 0.1, 0.2, 0.05, 0.3, 0.15, 0.25, 0.1)),
+      (2L, Seq(-0.1, 0.8, -0.3, 0.4, -0.2, 0.5, -0.4, 0.3))).toDF("id", "v")
+    val (committed, lines) =
+      LogCapture.during("org.apache.spark.sql.execution.CacheManager") {
+        (graft.streaming.NearDupSink.ingestBatchCommitted(docs,
+            s"$root/corpus", s"$root/index", "b0"),
+          graft.streaming.NearDupSink.ingestBatchEmbedCommitted(vecs,
+            s"$root/vcorpus", s"$root/vindex", "b0", bits = 4, dims = 8))
+      }
+    assert(!lines.exists(_.contains("Asked to cache already cached data")),
+      lines.mkString("\n"))
+    assert(committed === ((true, true)))
+    Seq("corpus", "vcorpus").foreach { c =>
+      assert(graft.ext.ManifestTable.read(spark, s"$root/$c").count() === 2L)
+    }
+  }
 }

@@ -306,26 +306,15 @@ class VectorStoreSpec extends SparkSpec {
   }
 
   test("appends and searches read the _centroids and _pq tables without a file-source warning") {
-    import org.apache.logging.log4j.core.{LogEvent, Logger}
     val dir = java.nio.file.Files.createTempDirectory("graft-vstore-warn").toString + "/s"
     val vecs = mkVecs(0 until 40)
     graft.ext.VectorStore.initPq(graft.ext.Similarity.pqTrain(vecs, m = 4,
       ksub = 4, iters = 2, dims = 8), dir)
-    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val capture = new org.apache.logging.log4j.core.appender.AbstractAppender(
-        "vstore-datasource-capture", null, null, true,
-        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        lines.add(e.getMessage.getFormattedMessage)
-    }
-    capture.start()
     // the directory read's warning, and the one a glob read would trade
     // it for
-    val loggers = Seq("org.apache.spark.sql.execution.datasources.DataSource",
-        "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink")
-      .map(org.apache.logging.log4j.LogManager.getLogger(_).asInstanceOf[Logger])
-    loggers.foreach(_.addAppender(capture))
-    try {
+    val (_, lines) = LogCapture.during(
+        "org.apache.spark.sql.execution.datasources.DataSource",
+        "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink") {
       graft.ext.VectorStore.appendCommitted(vecs, dir, "b0", k = 2)
       val qs = mkVecs(4 until 7).select($"vec_id".as("qid"),
         transform($"embedding", x => x.cast("double")).as("q_vec"))
@@ -334,12 +323,8 @@ class VectorStoreSpec extends SparkSpec {
       assert(graft.ext.VectorStore.searchPq(spark, dir,
         Seq(1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0), nprobe = 2, topK = 3,
         rerank = 6).count() === 3L)
-    } finally {
-      loggers.foreach(_.removeAppender(capture))
-      capture.stop()
     }
-    import scala.jdk.CollectionConverters._
-    assert(lines.isEmpty, lines.asScala.mkString("\n"))
+    assert(lines.isEmpty, lines.mkString("\n"))
   }
 
   test("searchMany excludeSelf=false keeps a neighbor whose vec_id collides with a qid") {
