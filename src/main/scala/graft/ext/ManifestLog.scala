@@ -529,7 +529,7 @@ private[ext] trait ManifestLog { this: ManifestTable.type =>
     // one as a bare "key:")
     def declared(key: String, o: Seq[String], n: Seq[String]) =
       if (n != o) Seq(s"$key:" + n.map(enc).mkString("\t")) else Nil
-    (if (next.op.nonEmpty) Seq("op:" + next.op) else Nil) ++
+    val lines = (if (next.op.nonEmpty) Seq("op:" + next.op) else Nil) ++
       next.schemaJson.filterNot(old.schemaJson.contains)
         .map(j => "schema:" + enc(j)).toSeq ++
       next.cdcPath.map("cdc:" + _).toSeq ++
@@ -569,7 +569,20 @@ private[ext] trait ManifestLog { this: ManifestTable.type =>
             }
           }
       }
+    // the op, file / sidecar names and batch ids ride raw: refuse to
+    // publish one that would split its line
+    lines.foreach(requireOneLine("a manifest log line", _))
+    lines
   }
+
+  /** Refuses `s` when it holds a line break: a log line carries it raw,
+    * so it would split there, and a cold reader would parse another
+    * value (a batch id `b\n1` reads back as `b`, and a replay under the
+    * same id commits a second copy).
+    */
+  private[ext] def requireOneLine(what: String, s: String): Unit =
+    require(!s.exists(c => c == '\n' || c == '\r'),
+      s"$what holds a line break: ${enc(s)}")
 
   /** Stage `lines` and publish them as `_manifest/<name>` with an atomic
     * CREATE-IF-ABSENT, returning whether this writer won. Not

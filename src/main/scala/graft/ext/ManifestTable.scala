@@ -1150,12 +1150,16 @@ object ManifestTable extends ManifestLog with ManifestRowOps with ManifestFeeds
     * bloom column and an HLL
     * sketch per declared NDV column. Later calls may repeat the
     * declaration or omit it; naming different columns raises.
+    *
+    * A `batchId` holding a line break raises before anything is staged
+    * (the log records batch ids one per line).
     */
   def append(df0: DataFrame, dir: String, batchId: String,
              beforeCommit: () => Unit = () => (),
              bloomCols: Seq[String] = Nil,
              partitionBy: Seq[String] = Nil,
              ndvCols: Seq[String] = Nil): Boolean = {
+    requireOneLine("batch id", batchId)
     // IDENTITY tables wrap the attempt in the standard conflict-rebase
     // loop: a racing append that advanced a mark aborts this one's
     // commit (overlapping minted ranges must never publish), and the
@@ -1287,14 +1291,35 @@ object ManifestTable extends ManifestLog with ManifestRowOps with ManifestFeeds
     * per value per input partition. `graft.write.rebalance=false`
     * restores the raw pass-through (e.g. when an upstream layout must
     * be preserved exactly).
+    *
+    * One exception: an unpartitioned write whose input is already
+    * MEASURED small ([[measuredSmall]]) is staged as `coalesce(1)` —
+    * the same single file the rebalance would size it to, without the
+    * shuffle-map job that only measures it again (a fold's corpus and
+    * index appends, which read its built caches).
     */
   private def rebalanced(df: DataFrame, partCols: Seq[String],
                          sized: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.col
     if (!rebalanceOn(df) || sized || callerSized(df.queryExecution.logical)) df
-    else if (partCols.isEmpty) df.hint("rebalance")
-    else df.hint("rebalance", partCols.map(col): _*)
+    else if (partCols.nonEmpty) df.hint("rebalance", partCols.map(col): _*)
+    else if (measuredSmall(df)) df.coalesce(1)
+    else df.hint("rebalance")
   }
+
+  /** True when every leaf of `df`'s plan is a BUILT cache or a local
+    * relation ([[graft.core.Caches.readsOnlyBuilt]]) and the plan's size
+    * statistic is at most `spark.sql.adaptive.advisoryPartitionSizeInBytes`:
+    * a built cache reports the measured size of its cached batches, so
+    * the frame is known to fit one advisory-sized file before anything
+    * runs. An unbuilt cache (or any scan) has only an estimate, and keeps
+    * the rebalance that measures at runtime.
+    */
+  private def measuredSmall(df: DataFrame): Boolean =
+    graft.core.Caches.readsOnlyBuilt(df) &&
+      df.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        df.sparkSession.sessionState.conf.getConf(
+          org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
 
   /** The optimized-write gate: the `graft.write.rebalance` kill switch
     * AND adaptive execution itself — with AQE off, a REBALANCE hint

@@ -86,16 +86,20 @@ object Ingest {
                    targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) =
     BloomSidecar.compact(spark, segmentsPath(indexDir), targetFileBytes)
 
-  /** Stages 1-2 of the fold — bloom-routed exact dedup vs the index,
-    * then the quality filter — returning the PERSISTED pre-scrub
-    * survivors (callers write/scrub/index and then unpersist).
+  /** Stages 1-3 of the fold — bloom-routed exact dedup vs the index,
+    * the quality filter, then the PII scrub — returning the PERSISTED
+    * scrubbed survivors, each still carrying `fp`, the md5 of its
+    * PRE-scrub text (callers write `drop("fp")`, index `fp`, then
+    * unpersist). One cache serves the whole fold: the stats, corpus and
+    * near-dup stages read it without `fp`, [[appendExactIndex]] reads
+    * `fp` alone.
     *
     * The index keys ARRIVAL content, so fingerprints are taken BEFORE
     * the scrub: the corpus stores scrubbed text, and md5(scrubbed)
     * would never match a re-arriving raw document — a repeat of any
     * PII-bearing document would re-ingest forever. (This is also why
     * the fold decomposes pipeline() rather than calling it: the
-    * pre-scrub survivors must be observable.) Batch-local exact dedup
+    * pre-scrub fingerprints must be observable.) Batch-local exact dedup
     * first; which surviving row carries a duplicated text is arbitrary,
     * as with any content-keyed dedup.
     *
@@ -118,12 +122,12 @@ object Ingest {
     // the probe reads (none, the bloom-positive fingerprints', or all)
     val deduped = BloomSidecar.probe(spark, segmentsPath(indexDir), local, "fp")
       .fold(local)(idx => local.join(idx, Seq("fp"), "left_anti"))
-      .drop("fp")
     val release = () => { local.unpersist(); () }
     (graft.core.Caches.track(
       QualityFilter.withQualityAudit(deduped, textCol)
         .filter(col("keep"))
         .drop("drop_reasons", "keep")
+        .withColumn(textCol, TextAnalysis.scrubPii(col(textCol)))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)),
       release)
   }
@@ -141,9 +145,8 @@ object Ingest {
     * [[BloomSidecar.probe]]: the map-side gate and the point-probe
     * pruning.
     */
-  private def appendExactIndex(indexDir: String, kept: DataFrame,
-                               textCol: String): Unit = {
-    graft.ext.ManifestTable.append(kept.select(md5(col(textCol)).as("fp")),
+  private def appendExactIndex(indexDir: String, survivors: DataFrame): Unit = {
+    graft.ext.ManifestTable.append(survivors.select("fp"),
       segmentsPath(indexDir), java.util.UUID.randomUUID().toString,
       bloomCols = Seq("fp"))
     ()
@@ -197,14 +200,14 @@ object Ingest {
                            indexDir: String, batchId: String,
                            textCol: String = "text",
                            statsDir: Option[String] = None): Boolean = {
-    val (kept, release) = dedupQuality(batch, indexDir, textCol)
-    val scrubbed = kept.withColumn(textCol, TextAnalysis.scrubPii(col(textCol)))
+    val (survivors, release) = dedupQuality(batch, indexDir, textCol)
+    val scrubbed = survivors.drop("fp")
     statsDir.foreach(d => StatsSink.appendCommitted(scrubbed, d, batchId))
     val committed =
       graft.ext.ManifestTable.append(scrubbed, corpusDir, batchId)
     release()
-    appendExactIndex(indexDir, kept, textCol)
-    kept.unpersist()
+    appendExactIndex(indexDir, survivors)
+    survivors.unpersist()
     committed
   }
 
@@ -247,17 +250,13 @@ object Ingest {
                                threshold: Double = 0.6,
                                minEstJaccard: Double = 0.5,
                                statsDir: Option[String] = None): Boolean = {
-    val (kept, release) = dedupQuality(batch, exactIndexDir, textCol)
-    val scrubbed = graft.core.Caches.track(
-      kept.withColumn(textCol, TextAnalysis.scrubPii(col(textCol)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-    val committed = NearDupSink.ingestBatchCommitted(scrubbed, corpusDir,
-      nearIndexDir, batchId, idCol, textCol, threshold, minEstJaccard,
-      statsDir = statsDir)
+    val (survivors, release) = dedupQuality(batch, exactIndexDir, textCol)
+    val committed = NearDupSink.ingestBatchCommitted(survivors.drop("fp"),
+      corpusDir, nearIndexDir, batchId, idCol, textCol, threshold,
+      minEstJaccard, statsDir = statsDir)
     release()
-    appendExactIndex(exactIndexDir, kept, textCol)
-    scrubbed.unpersist()
-    kept.unpersist()
+    appendExactIndex(exactIndexDir, survivors)
+    survivors.unpersist()
     committed
   }
 

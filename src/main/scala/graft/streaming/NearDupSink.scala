@@ -112,10 +112,11 @@ object NearDupSink {
           numHashes, bands, shingleFn)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
     // gate and pruned read decided by ONE bounded-collect job (see
-    // BloomSidecar.probe): the sink's own jobs on the benchmark's
-    // 2000-doc batch are 4 per fold, this probe included
-    // an empty index or no bloom-positive key leaves `within`, already
-    // persisted, as the survivors; only the probed anti-join is cached
+    // BloomSidecar.probe): 4 jobs per fold on the benchmark's 2000-doc
+    // batch, AQE stages included; the anti-join on its hits runs inside
+    // the first append, the first action on `kept`. An empty index or no
+    // bloom-positive key leaves `within`, already persisted, as the
+    // survivors; only the probed anti-join is cached
     val probed = BloomSidecar.probe(spark, segmentsPath(indexDir), rows,
         "band_hash")
       .map { index =>
@@ -124,8 +125,12 @@ object NearDupSink {
               col("sig_idx").as("sig_p"), col("band"), col("band_hash")),
             index, numHashes, bands, minEstJaccard)
           .select(col("probe_id").as(idCol)).distinct()
-        graft.core.Caches.track(within.join(hits, Seq(idCol), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+        // `hits` is at most one id per batch row: broadcast it, or the
+        // planner picks a sort-merge join and AQE shuffles `within` by
+        // id before turning the join into a broadcast anyway
+        graft.core.Caches.track(
+          within.join(broadcast(hits), Seq(idCol), "left_anti")
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
       }
     val kept = probed.getOrElse(within)
     statsDir.foreach(d => StatsSink.appendCommitted(kept, d, batchId, textCol))
@@ -201,8 +206,10 @@ object NearDupSink {
               col("tbl"), col("bk")),
             index, tables, minCos)
           .select(col("probe_id").as(idCol)).distinct()
-        graft.core.Caches.track(within.join(hits, Seq(idCol), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+        // broadcast `hits`, as in [[ingestBatchCommitted]]
+        graft.core.Caches.track(
+          within.join(broadcast(hits), Seq(idCol), "left_anti")
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
       }
     val kept = probed.getOrElse(within)
     val committed = graft.ext.ManifestTable.append(kept, corpusDir, batchId)

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import graft.ext.ManifestTable
 
@@ -265,57 +262,30 @@ class BloomDeclarationSpec extends SparkSpec {
     assert(s.bloomCols === Seq("text") && s.batchIds === Set("b"))
   }
 
-  /** Spark jobs started while `body` runs, counted by a listener; a
-    * marker job drains the bus (events arrive in order).
-    */
-  private def jobsDuring(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val (group, marker) = ("bloom-decl-jobs", "bloom-decl-marker")
-    val jobs = new AtomicInteger()
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(`marker`) => drained.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(30, TimeUnit.SECONDS), "listener bus did not drain")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("an append to a table declaring bloom and NDV columns runs one sketch job") {
     def appendJobs(name: String, bloomCols: Seq[String],
-                   ndvCols: Seq[String]): Int = {
+                   ndvCols: Seq[String]): JobCount.Jobs = {
       val dir = fresh(name)
       ManifestTable.append(docs(0L until 100L), dir, "b0",
         bloomCols = bloomCols, ndvCols = ndvCols)
       val batch = docs(100L until 200L).persist()
       batch.count()
       // repeating the bloom declaration (the NDV one is inherited)
-      try jobsDuring(ManifestTable.append(batch, dir, "b1",
-        bloomCols = bloomCols))
+      try JobCount.during(ManifestTable.append(batch, dir, "b1",
+        bloomCols = bloomCols))._2
       finally batch.unpersist()
     }
     val plain = appendJobs("jobs_plain", Nil, Nil)
     // blooms are written by the stage itself: declaring them costs no job
     val bloomOnly = appendJobs("jobs_bloom_only", Seq("id", "text"), Nil)
-    assert(bloomOnly === plain,
-      s"bloom-declared append ran $bloomOnly jobs, undeclared $plain")
+    assert(bloomOnly.count === plain.count,
+      s"bloom-declared append ran $bloomOnly\nundeclared $plain")
     val bd = s"$wh/jobs_bloom_only"
     assert(ManifestTable.snapshot(spark, bd).files.forall(f =>
       bloomed(bd, f, "id") && bloomed(bd, f, "text")))
     val sketched = appendJobs("jobs_sketched", Seq("id"), Seq("id", "text"))
-    assert(sketched - plain === 1,
-      s"declared append ran $sketched jobs, undeclared $plain")
+    assert(sketched.count - plain.count === 1,
+      s"declared append ran $sketched\nundeclared $plain")
     val dir = s"$wh/jobs_sketched"
     val s = ManifestTable.snapshot(spark, dir)
     assert(s.files.forall(f => bloomed(dir, f, "id") &&

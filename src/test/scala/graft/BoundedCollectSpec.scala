@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import org.apache.spark.Success
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions.{lit, repeat, when}
 import graft.core.BoundedCollect
 
@@ -41,14 +38,13 @@ class BoundedCollectSpec extends SparkSpec {
     val df = spark.range(0, 1000, 1, 4).toDF("v").persist()
     try {
       df.count() // materialize the cache first
-      for (sites <- Seq(jobsOf(BoundedCollect.rows(df, 5000)),
-          jobsOf(BoundedCollect.rows(df, 10)),
-          jobsOf(BoundedCollect.distinct(df, "v", 5000)),
-          jobsOf(BoundedCollect.distinct(df, "v", 10)))) {
-        assert(sites.size === 1)
+      for (jobs <- Seq(JobCount.during(BoundedCollect.rows(df, 5000))._2,
+          JobCount.during(BoundedCollect.rows(df, 10))._2,
+          JobCount.during(BoundedCollect.distinct(df, "v", 5000))._2,
+          JobCount.during(BoundedCollect.distinct(df, "v", 10))._2)) {
+        assert(jobs.count === 1, jobs)
         // the job names its caller, as a Dataset action would
-        assert(sites.head.linesIterator.next().contains("BoundedCollectSpec.scala"),
-          sites.head)
+        assert(jobs.frames.head.contains("BoundedCollectSpec.scala"), jobs)
       }
     } finally df.unpersist()
   }
@@ -75,68 +71,11 @@ class BoundedCollectSpec extends SparkSpec {
     assert(bd2 < 800L * 1536 / 4, s"shipped $bd2 bytes")
   }
 
-  /** `body`'s result and the serialized result bytes of its successful
-    * tasks (`taskMetrics.resultSize`), drained as in [[jobsOf]].
+  /** `body`'s result and the serialized result bytes of its jobs' successful
+    * tasks.
     */
   private def shipped[T](body: => T): (T, Long) = {
-    val sc = spark.sparkContext
-    val (group, marker) = ("bounded-collect-bytes", "bounded-collect-marker")
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0)
-    val groups = new java.util.concurrent.ConcurrentHashMap[Int, String]
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g != null) groups.put(e.jobId, g)
-        if (g == group) e.stageIds.foreach(stages.add(_))
-      }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (stages.contains(e.stageId) && e.reason == Success)
-          bytes.addAndGet(e.taskMetrics.resultSize)
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (groups.get(e.jobId) == marker) drained.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(30, TimeUnit.SECONDS), "listener bus did not drain")
-      (out, bytes.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
-  /** Long call sites of the Spark jobs started while `body` runs,
-    * recorded by a listener. The bus delivers events in order, so once
-    * a marker job's end arrives every job `body` started is recorded.
-    */
-  private def jobsOf(body: => Any): Seq[String] = {
-    val sc = spark.sparkContext
-    val (group, marker) = ("bounded-collect-spec", "bounded-collect-marker")
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val drained = new CountDownLatch(1)
-    def groupOf(p: java.util.Properties) =
-      Option(p).map(_.getProperty("spark.jobGroup.id")).orNull
-    val groups = new java.util.concurrent.ConcurrentHashMap[Int, String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val g = groupOf(e.properties)
-        if (g != null) groups.put(e.jobId, g)
-        if (g == group) started.add(e.properties.getProperty("callSite.long", ""))
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (groups.get(e.jobId) == marker) drained.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(30, TimeUnit.SECONDS), "listener bus did not drain")
-      started.toArray(Array.empty[String]).toSeq
-    } finally sc.removeSparkListener(listener)
+    val (out, jobs) = JobCount.during(body)
+    (out, jobs.resultBytes)
   }
 }

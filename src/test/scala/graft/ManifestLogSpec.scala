@@ -56,6 +56,26 @@ class ManifestLogSpec extends SparkSpec {
     assert(!d6.exists(_.startsWith("schema:")))
   }
 
+  test("a batch id holding a line break raises before anything is staged") {
+    val dir = tmp("linebreak")
+    assert(ManifestTable.append(batch(1L), dir, "b0"))
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
+    def tree(): Seq[String] = {
+      val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString)
+        .toSeq.sorted
+    }
+    val before = tree()
+    for (bad <- Seq("b\n1", "b\r1", "b1\r\n"))
+      intercept[IllegalArgumentException](ManifestTable.append(batch(2L), dir, bad))
+    assert(tree() === before) // nothing staged, landed or logged
+    // an ordinary id still replays as a no-op on a cold driver
+    ManifestTable.clearSnapshotCacheForTest()
+    assert(!ManifestTable.append(batch(1L), dir, "b0"))
+    assert(ManifestTable.read(spark, dir).count() === 1L)
+  }
+
   test("a compact's delta is adds + removes; replay equals the head state") {
     val dir = tmp("compactdelta")
     (1 to 4).foreach(i => ManifestTable.append(batch(i.toLong), dir, s"b$i"))

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, RebalancePartitions, Repartition}
 import org.apache.spark.sql.functions._
 import graft.ext.ManifestTable
 
@@ -66,6 +68,80 @@ class OptimizedWriteSpec extends SparkSpec {
         spark.range(1000).toDF("id").repartition(8), dir, "b0")
       assert(ManifestTable.snapshot(spark, dir).files.size === 8)
     } finally spark.conf.unset("graft.write.rebalance")
+  }
+
+  /** `body`'s jobs and the optimized plans of the writes it ran. */
+  private def writes(body: => Any): (JobCount.Jobs, Seq[LogicalPlan]) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.command.DataWritingCommand
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.optimizedPlan.foreach {
+          case w: DataWritingCommand => plans.add(w.query)
+          case _ => ()
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // the listener shares the job listeners' bus queue, so it has seen
+    // every write once JobCount's marker job has drained that queue
+    try (JobCount.during(body)._2, plans.toArray(Array.empty[LogicalPlan]).toSeq)
+    finally spark.listenerManager.unregister(listener)
+  }
+
+  /** How a staged write sized its output: "coalesce(1)", "rebalance", or
+    * "as is".
+    */
+  private def sizing(plan: LogicalPlan): String =
+    if (plan.exists(_.isInstanceOf[RebalancePartitions])) "rebalance"
+    else if (plan.exists {
+      case r: Repartition => !r.shuffle && r.numPartitions == 1
+      case _ => false
+    }) "coalesce(1)"
+    else "as is"
+
+  test("a built cache or local rows under the advisory size stage in one job, one file") {
+    val cached = spark.range(0, 1000, 1, 8).toDF("id").persist()
+    try {
+      cached.count() // build the cache
+      for ((name, df) <- Seq("cached" -> cached,
+          "local" -> (0L until 1000L).toDF("id"))) {
+        val dir = tmp(s"small_$name")
+        val (jobs, plans) = writes(ManifestTable.append(df, dir, "b0"))
+        assert(plans.map(sizing) === Seq("coalesce(1)"), name)
+        assert(jobs.count === 1, jobs)
+        assert(ManifestTable.snapshot(spark, dir).files.size === 1, name)
+        assert(ManifestTable.read(spark, dir).as[Long].collect().sorted.toSeq ===
+          (0L until 1000L), name)
+      }
+    } finally cached.unpersist()
+  }
+
+  test("an unbuilt cache, an over-advisory frame, a partitioned write and the kill switch keep their sizing") {
+    val adv = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    def staged(name: String, df: DataFrame, partitionBy: Seq[String] = Nil) = {
+      val dir = tmp(name)
+      val plans = writes(ManifestTable.append(df, dir, "b0",
+        partitionBy = partitionBy))._2
+      (plans.map(sizing), ManifestTable.snapshot(spark, dir).files.size)
+    }
+    val unbuilt = spark.range(0, 1000, 1, 8).toDF("id").persist()
+    try assert(staged("unbuilt", unbuilt) === (Seq("rebalance"), 1))
+    finally unbuilt.unpersist()
+    val built = spark.range(0, 1000, 1, 8).toDF("id").persist()
+    try {
+      built.count()
+      // a measured size past the advisory one: the rebalance splits it
+      spark.conf.set(adv, "1k")
+      val (over, files) = try staged("over", built) finally spark.conf.set(adv, "64MB")
+      assert(over === Seq("rebalance") && files > 1, s"$over, $files files")
+      val grp = built.select(col("id"), (col("id") % 5).cast("string").as("grp"))
+      assert(staged("built_partitioned", grp, Seq("grp")) === (Seq("rebalance"), 5))
+      spark.conf.set("graft.write.rebalance", "false")
+      try assert(staged("built_off", built) === (Seq("as is"), 8))
+      finally spark.conf.unset("graft.write.rebalance")
+    } finally built.unpersist()
   }
 
   test("compact still sizes its own output under the rebalance") {

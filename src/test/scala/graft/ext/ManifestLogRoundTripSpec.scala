@@ -158,6 +158,16 @@ class ManifestLogRoundTripSpec extends AnyFunSuite {
     assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
   }
 
+  test("a raw field holding a line break is refused, not written as two lines") {
+    val one = Snapshot.empty.copy(version = 1L, files = Seq("f"))
+    for (bad <- Seq[Snapshot](one.copy(batchIds = Set("b\n1")),
+        one.copy(files = Seq("f\r")), one.copy(op = "app\nend"),
+        one.copy(cdcPath = Some("c\n")),
+        one.copy(dvs = Map("f" -> Seq(DvRef("d\r\n", 1L))))))
+      intercept[IllegalArgumentException](ManifestTable.deltaLines(Snapshot.empty, bad))
+    assert(ManifestTable.deltaLines(Snapshot.empty, one) === Seq("add:f"))
+  }
+
   test("the generated pairs exercise every line kind and every awkward value") {
     val lines = Iterator.iterate(Seed(7L))(_.next).take(300)
       .map(pairs.pureApply(Gen.Parameters.default, _))
