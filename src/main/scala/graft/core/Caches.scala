@@ -33,19 +33,6 @@ object Caches {
     if (df.storageLevel != StorageLevel.NONE) df
     else track(df.persist(StorageLevel.MEMORY_AND_DISK_SER))
 
-  /** True when every leaf of `df`'s plan is a BUILT cache or a local
-    * relation: reading it again runs no scan and no upstream job.
-    */
-  def readsOnlyBuilt(df: Dataset[_]): Boolean = {
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    df.queryExecution.optimizedPlan.collectLeaves().forall {
-      case m: InMemoryRelation => m.cacheBuilder.isCachedColumnBuffersLoaded
-      case _: LocalRelation => true
-      case _ => false
-    }
-  }
-
   /** Unpersist every tracked intermediate (non-blocking). Safe to call at
     * any point where no returned-but-unmaterialized plan from a previous
     * operator call is still needed.

@@ -1307,19 +1307,34 @@ object ManifestTable extends ManifestLog with ManifestRowOps with ManifestFeeds
     else df.hint("rebalance")
   }
 
-  /** True when every leaf of `df`'s plan is a BUILT cache or a local
-    * relation ([[graft.core.Caches.readsOnlyBuilt]]) and the plan's size
-    * statistic is at most `spark.sql.adaptive.advisoryPartitionSizeInBytes`:
-    * a built cache reports the measured size of its cached batches, so
-    * the frame is known to fit one advisory-sized file before anything
-    * runs. An unbuilt cache (or any scan) has only an estimate, and keeps
-    * the rebalance that measures at runtime.
+  /** True when `df` reads only BUILT caches or local relations through
+    * Projects, Filters and left semi/anti joins — operators that never
+    * add rows — and the plan's size statistic is at most
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`: a built cache
+    * reports the measured size of its cached batches, so the frame is
+    * known to fit one advisory-sized file before anything runs. An
+    * unbuilt cache or a scan has only an estimate, and an operator that
+    * can add rows (a Generate, a join, a union) an estimate of its
+    * output; both keep the rebalance that measures at runtime.
     */
-  private def measuredSmall(df: DataFrame): Boolean =
-    graft.core.Caches.readsOnlyBuilt(df) &&
-      df.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        df.sparkSession.sessionState.conf.getConf(
-          org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+  private def measuredSmall(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
+    import org.apache.spark.sql.catalyst.plans.logical._
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    def rowBounded(plan: LogicalPlan): Boolean = plan match {
+      case m: InMemoryRelation => m.cacheBuilder.isCachedColumnBuffersLoaded
+      case _: LocalRelation => true
+      case p: Project => rowBounded(p.child)
+      case f: Filter => rowBounded(f.child)
+      case j: Join if j.joinType == LeftSemi || j.joinType == LeftAnti =>
+        rowBounded(j.left) && rowBounded(j.right)
+      case _ => false
+    }
+    val plan = df.queryExecution.optimizedPlan
+    rowBounded(plan) && plan.stats.sizeInBytes <=
+      df.sparkSession.sessionState.conf.getConf(
+        org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+  }
 
   /** The optimized-write gate: the `graft.write.rebalance` kill switch
     * AND adaptive execution itself — with AQE off, a REBALANCE hint

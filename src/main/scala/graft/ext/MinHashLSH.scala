@@ -378,12 +378,12 @@ object MinHashLSH {
     * at scale). Only output-scale frames persist: the colliding-bucket
     * frame (singleton buckets filtered out before it materializes),
     * which the audit, the candidate pairs and the candidate ids all
-    * read, and the candidate shingles when re-reading `df` would scan
-    * it again. The pairs feed one join and are not cached (a cache
-    * costs a job of its own to fill). The verify step re-shingles JUST
-    * the candidate documents by semi-joining the input down to
-    * candidate ids first, so the repeated shingling work — like the
-    * shingle-array shuffle — is output-sized, not corpus-sized.
+    * read. The candidate pairs and the candidate shingles each feed one
+    * plan and are not cached (a cache costs a job of its own to fill).
+    * The verify step re-shingles JUST the candidate documents by semi-
+    * joining the input down to candidate ids first, so the repeated
+    * shingling work — like the shingle-array shuffle — is output-sized,
+    * not corpus-sized.
     * Shingling a candidate doc twice costs microseconds (one
     * native-codegen loop); caching every doc's shingles costs a second
     * copy of the corpus.
@@ -416,15 +416,9 @@ object MinHashLSH {
     val candIds = buckets.filter(size(col("ids")) <= maxBucketSize)
       .select(explode(col("ids")).as(idCol))
     // candidate-only shingles, read by BOTH verify sides of the one plan
-    // below. Over a scan, caching them keeps the input at two
-    // column-pruned scans total (bands + the one semi-join pass) instead
-    // of three; over an input that reads only built caches (a fold's
-    // survivors), the second read re-runs just the semi-join and the
-    // candidate shingling, cheaper than the job that fills a cache
-    val sh = shingleFrame(df.join(candIds, Seq(idCol), "left_semi"),
+    // below; not cached, since a cache costs a job of its own to fill
+    val shCand = shingleFrame(df.join(candIds, Seq(idCol), "left_semi"),
       idCol, textCol, shingleFn)
-    val shCand =
-      if (graft.core.Caches.readsOnlyBuilt(df)) sh else graft.core.Caches.persist(sh)
     cand
       .join(shCand.select(col(idCol).as("a"), col("sh").as("sh_a")), Seq("a"))
       .join(shCand.select(col(idCol).as("b"), col("sh").as("sh_b")), Seq("b"))

@@ -127,7 +127,11 @@ object NearDupSink {
           .select(col("probe_id").as(idCol)).distinct()
         // `hits` is at most one id per batch row: broadcast it, or the
         // planner picks a sort-merge join and AQE shuffles `within` by
-        // id before turning the join into a broadcast anyway
+        // id before turning the join into a broadcast anyway. The hint
+        // holds whatever the batch size, so it assumes a micro-batch:
+        // 8 bytes per batch row go through the driver to every executor
+        // (a 1M-row batch ships about 8 MB, plus the hash table), a
+        // small share of the batch text the fold already holds cached
         graft.core.Caches.track(
           within.join(broadcast(hits), Seq(idCol), "left_anti")
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
@@ -206,7 +210,8 @@ object NearDupSink {
               col("tbl"), col("bk")),
             index, tables, minCos)
           .select(col("probe_id").as(idCol)).distinct()
-        // broadcast `hits`, as in [[ingestBatchCommitted]]
+        // broadcast `hits`, as in [[ingestBatchCommitted]] (and under
+        // the same micro-batch assumption: 8 bytes per batch row)
         graft.core.Caches.track(
           within.join(broadcast(hits), Seq(idCol), "left_anti")
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))

@@ -115,10 +115,17 @@ class OptimizedWriteSpec extends SparkSpec {
         assert(ManifestTable.read(spark, dir).as[Long].collect().sorted.toSeq ===
           (0L until 1000L), name)
       }
+      // a semi-join never adds rows to its left side
+      val dir = tmp("small_semi")
+      val semi = cached.join(cached.filter(col("id") % 2 === 0), Seq("id"), "left_semi")
+      assert(writes(ManifestTable.append(semi, dir, "b0"))._2.map(sizing) ===
+        Seq("coalesce(1)"))
+      assert(ManifestTable.read(spark, dir).as[Long].collect().sorted.toSeq ===
+        (0L until 1000L by 2L))
     } finally cached.unpersist()
   }
 
-  test("an unbuilt cache, an over-advisory frame, a partitioned write and the kill switch keep their sizing") {
+  test("an unbuilt cache, an over-advisory frame, a row-adding operator, a partitioned write and the kill switch keep their sizing") {
     val adv = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     def staged(name: String, df: DataFrame, partitionBy: Seq[String] = Nil) = {
       val dir = tmp(name)
@@ -136,6 +143,17 @@ class OptimizedWriteSpec extends SparkSpec {
       spark.conf.set(adv, "1k")
       val (over, files) = try staged("over", built) finally spark.conf.set(adv, "64MB")
       assert(over === Seq("rebalance") && files > 1, s"$over, $files files")
+      // an explode over the built cache: its size statistic is about the
+      // input's (8 KB, under a 1 MB advisory size), its output 1000 times
+      // that (distinct values, so the shuffle does not compress it away),
+      // and the runtime measure splits it into advisory-sized files
+      val exploded = built.select(
+        explode(sequence(col("id") * 1000, col("id") * 1000 + 999)).as("id"))
+      spark.conf.set(adv, "1m")
+      val (grown, grownFiles) =
+        try staged("exploded", exploded) finally spark.conf.set(adv, "64MB")
+      assert(grown === Seq("rebalance") && grownFiles > 1, s"$grown, $grownFiles files")
+      assert(ManifestTable.read(spark, "/tmp/graft_test/ow_exploded").count() === 1000000L)
       val grp = built.select(col("id"), (col("id") % 5).cast("string").as("grp"))
       assert(staged("built_partitioned", grp, Seq("grp")) === (Seq("rebalance"), 5))
       spark.conf.set("graft.write.rebalance", "false")
