@@ -1264,16 +1264,6 @@ object ManifestTable extends ManifestLog with ManifestRowOps with ManifestFeeds
     */
   private[ext] val PartPrefix = "_gp_"
 
-  /** Stage `df` for a table partitioned on `partCols` (flat parquet when
-    * empty). Spark's `partitionBy` strips its key columns from the file
-    * bytes, which would break every flat read of `data/` — so the write
-    * partitions on a DUPLICATED copy of each column instead: the copy
-    * becomes the `_gp_<col>=<value>` directory (consumed by the layout,
-    * decoded into manifest `pv:` lines by [[moveToData]]), the original
-    * column stays physically in every file. Result: each data file holds
-    * exactly ONE partition tuple, and all read paths (plain, DV-applied,
-    * feeds, time travel) keep working unchanged on the flat directory.
-    */
   /** OPTIMIZED WRITE (guide §6 — small files hurt twice; coalesce on
     * write with a REBALANCE): every staged write otherwise emits one
     * file per input partition, so a small batch flowing through a
@@ -1374,7 +1364,17 @@ object ManifestTable extends ManifestLog with ManifestRowOps with ManifestFeeds
     }
   }
 
-  /** `sized = true` marks a caller that already computed its own output
+  /** Stage `df` for a table partitioned on `partCols` (flat parquet when
+    * empty). Spark's `partitionBy` strips its key columns from the file
+    * bytes, which would break every flat read of `data/` — so the write
+    * partitions on a DUPLICATED copy of each column instead: the copy
+    * becomes the `_gp_<col>=<value>` directory (consumed by the layout,
+    * decoded into manifest `pv:` lines by [[moveToData]]), the original
+    * column stays physically in every file. Result: each data file holds
+    * exactly ONE partition tuple, and all read paths (plain, DV-applied,
+    * feeds, time travel) keep working unchanged on the flat directory.
+    *
+    * `sized = true` marks a caller that already computed its own output
     * partitioning for file sizing (the maintenance rewrites: compact /
     * compactSmall size to `targetFileBytes`; purgeDeletes is
     * contractually zero-shuffle) — the rebalance must not override it.

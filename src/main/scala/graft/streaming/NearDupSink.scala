@@ -45,23 +45,18 @@ import org.apache.spark.sql.functions._
   * Crash ordering is corpus-commit THEN index-append, the same
   * self-healing choice (and for the same reason) as
   * [[Ingest.ingestBatchCommitted]]: the corpus absorbs a replayed batch
-  * id, the unconditional index append backfills.
+  * id, the unconditional index append ([[BloomSidecar.append]])
+  * backfills. Each fold runs in one [[graft.core.Caches.scoped]] scope,
+  * so everything it caches, its operators' intermediates included, is
+  * freed when it returns or throws.
   */
 object NearDupSink {
 
-  private def segmentsPath(indexDir: String) = s"$indexDir/segments"
-
   /** The accumulated signature index (band, band_hash, corpus_id,
-    * sig_idx), or None before the first batch. The segment store is a
-    * [[graft.ext.ManifestTable]] (data under `segments/data`, atomic
-    * manifest commits): reads are explicit snapshot file lists.
+    * sig_idx), or None before the first batch ([[BloomSidecar.read]]).
     */
-  def readIndex(spark: SparkSession, indexDir: String): Option[DataFrame] = {
-    val seg = segmentsPath(indexDir)
-    if (graft.ext.ManifestTable.snapshot(spark, seg).files.nonEmpty)
-      Some(graft.ext.ManifestTable.read(spark, seg))
-    else None
-  }
+  def readIndex(spark: SparkSession, indexDir: String): Option[DataFrame] =
+    BloomSidecar.read(spark, indexDir)
 
   /** Fold one batch into the corpus. See the object doc for semantics.
     *
@@ -75,14 +70,10 @@ object NearDupSink {
     * the difference between one and three passes of per-batch latency.
     *
     * The corpus lands through [[graft.ext.ManifestTable]] keyed by
-    * `batchId` — effectively-once, the same contract (and the same
-    * self-healing index argument) as [[Ingest.ingestBatchCommitted]]: a
-    * crash between the corpus commit and the signature-segment append
-    * leaves the replay's survivors re-emerging from the probe (their
-    * signatures are missing), the corpus no-oping on the absorbed batch
-    * id, and the index append backfilling the signatures; a second
-    * replay probes est 1.0 against its own indexed copy and converges to
-    * a full no-op. Returns true iff this call committed `batchId`.
+    * `batchId` — effectively-once, with the self-healing signature
+    * append of [[BloomSidecar.append]]; a second replay probes est 1.0
+    * against its own indexed copy and converges to a full no-op.
+    * Returns true iff this call committed `batchId`.
     *
     * `statsDir`, when set, maintains a manifest-committed [[StatsSink]]
     * store under the SAME batch id, committed BEFORE the corpus — the
@@ -98,65 +89,26 @@ object NearDupSink {
                              graft.ext.MinHashLSH.wordShingles(_, 3),
                            statsDir: Option[String] = None): Boolean = {
     // guard HERE, not only in StreamNearDup's row builders: the raw
-    // cast("long") below must never be reached with a string id that
-    // would null out and empty the index
+    // cast("long") in the tail must never be reached with a string id
+    // that would null out and empty the index
     graft.core.Ids.requireNumericId(batch, idCol,
       "NearDupSink.ingestBatchCommitted")
-    val spark = batch.sparkSession
-    val within = graft.core.Caches.track(
-      graft.ext.Components.nearDupKeep(batch, idCol, textCol, threshold,
-          shingleFn = shingleFn)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-    val rows = graft.core.Caches.track(
-      StreamNearDup.buildMinHashIndex(within, idCol, textCol,
-          numHashes, bands, shingleFn)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-    // gate and pruned read decided by ONE bounded-collect job (see
-    // BloomSidecar.probe): 4 jobs per fold on the benchmark's 2000-doc
-    // batch, AQE stages included; the anti-join on its hits runs inside
-    // the first append, the first action on `kept`. An empty index or no
-    // bloom-positive key leaves `within`, already persisted, as the
-    // survivors; only the probed anti-join is cached
-    val probed = BloomSidecar.probe(spark, segmentsPath(indexDir), rows,
-        "band_hash")
-      .map { index =>
-        val hits = StreamNearDup.probeMinHashRows(
-            rows.select(col("corpus_id").as("probe_id"),
-              col("sig_idx").as("sig_p"), col("band"), col("band_hash")),
-            index, numHashes, bands, minEstJaccard)
-          .select(col("probe_id").as(idCol)).distinct()
-        // `hits` is at most one id per batch row: broadcast it, or the
-        // planner picks a sort-merge join and AQE shuffles `within` by
-        // id before turning the join into a broadcast anyway. The hint
-        // holds whatever the batch size, so it assumes a micro-batch:
-        // 8 bytes per batch row go through the driver to every executor
-        // (a 1M-row batch ships about 8 MB, plus the hash table), a
-        // small share of the batch text the fold already holds cached
-        graft.core.Caches.track(
-          within.join(broadcast(hits), Seq(idCol), "left_anti")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+    graft.core.Caches.scoped {
+      val within = graft.core.Caches.persist(
+        graft.ext.Components.nearDupKeep(batch, idCol, textCol, threshold,
+          shingleFn = shingleFn))
+      val rows = graft.core.Caches.persist(StreamNearDup.buildMinHashIndex(
+        within, idCol, textCol, numHashes, bands, shingleFn))
+      commitTail(within, rows, corpusDir, indexDir, batchId, idCol,
+          "band_hash", Seq("band", "band_hash", "corpus_id", "sig_idx"),
+          kept => statsDir.foreach(d =>
+            StatsSink.appendCommitted(kept, d, batchId, textCol))) { index =>
+        StreamNearDup.probeMinHashRows(
+          rows.select(col("corpus_id").as("probe_id"),
+            col("sig_idx").as("sig_p"), col("band"), col("band_hash")),
+          index, numHashes, bands, minEstJaccard)
       }
-    val kept = probed.getOrElse(within)
-    statsDir.foreach(d => StatsSink.appendCommitted(kept, d, batchId, textCol))
-    val committed = graft.ext.ManifestTable.append(kept, corpusDir, batchId)
-    // the fold's survivor band rows: a semi-join against the persisted
-    // batch rows, NOT a re-shingle of kept; column order re-pinned so
-    // every appended segment file carries the identical schema. Single
-    // consumer (the append) — no persist needed
-    val bandRows =
-      rows.join(kept.select(col(idCol).cast("long").as("corpus_id")),
-          Seq("corpus_id"), "left_semi")
-        .select(col("band"), col("band_hash"), col("corpus_id"), col("sig_idx"))
-    // manifest-committed segment append under a fresh UUID: the index
-    // append must stay UNCONDITIONAL (the self-healing backfill after a
-    // replay); it declares band_hash as the index's bloom column, whose
-    // per-file blooms serve BloomSidecar.probe's gate and pruned read
-    graft.ext.ManifestTable.append(bandRows, segmentsPath(indexDir),
-      java.util.UUID.randomUUID().toString, bloomCols = Seq("band_hash"))
-    probed.foreach(_.unpersist())
-    rows.unpersist()
-    within.unpersist()
-    committed
+    }
   }
 
   /** The cosine-family sibling of [[ingestBatchCommitted]] — near-dedup
@@ -184,51 +136,69 @@ object NearDupSink {
                                 dims: Int = 64, tables: Int = 2): Boolean = {
     graft.core.Ids.requireNumericId(batch, idCol,
       "NearDupSink.ingestBatchEmbedCommitted")
-    val spark = batch.sparkSession
-    val pairs = graft.ext.Similarity.embedNearDup(batch, idCol, vecCol,
-      minCos, bits, dims, tables)
-    val drop = graft.ext.Components.components(pairs, "id_a", "id_b")
-      .filter(col("rep") =!= col("id"))
-      .select(col("id").as(idCol))
-    val within = graft.core.Caches.track(
-      batch.join(drop, Seq(idCol), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-    // one bucket pass over the batch, reused by gate + probe + segment
-    // append — same single-pass layout as [[ingestBatchCommitted]]
-    val rows = graft.core.Caches.track(
-      StreamNearDup.buildEmbedIndex(within, idCol, vecCol, bits, dims, tables)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-    // the gate keys on `bk` alone, a superset of the (tbl, bk) the
-    // bucketed join is inner on: reading every index row of the routed
-    // buckets keeps every match
-    val probed = BloomSidecar.probe(spark, segmentsPath(indexDir), rows,
-        "bk")
-      .map { index =>
-        val hits = StreamNearDup.probeEmbedRows(
-            rows.select(col("corpus_id").as("probe_id"),
-              col("v_idx").as("v_p"), col("bks_idx").as("bks_p"),
-              col("tbl"), col("bk")),
-            index, tables, minCos)
-          .select(col("probe_id").as(idCol)).distinct()
-        // broadcast `hits`, as in [[ingestBatchCommitted]] (and under
-        // the same micro-batch assumption: 8 bytes per batch row)
-        graft.core.Caches.track(
-          within.join(broadcast(hits), Seq(idCol), "left_anti")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+    graft.core.Caches.scoped {
+      val pairs = graft.ext.Similarity.embedNearDup(batch, idCol, vecCol,
+        minCos, bits, dims, tables)
+      val drop = graft.ext.Components.components(pairs, "id_a", "id_b")
+        .filter(col("rep") =!= col("id"))
+        .select(col("id").as(idCol))
+      val within = graft.core.Caches.persist(
+        batch.join(drop, Seq(idCol), "left_anti"))
+      // one bucket pass over the batch, reused by gate + probe + segment
+      // append — same single-pass layout as [[ingestBatchCommitted]]
+      val rows = graft.core.Caches.persist(
+        StreamNearDup.buildEmbedIndex(within, idCol, vecCol, bits, dims, tables))
+      // the gate keys on `bk` alone, a superset of the (tbl, bk) the
+      // bucketed join is inner on: reading every index row of the routed
+      // buckets keeps every match
+      commitTail(within, rows, corpusDir, indexDir, batchId, idCol, "bk",
+          Seq("tbl", "bk", "corpus_id", "v_idx", "bks_idx"), _ => ()) { index =>
+        StreamNearDup.probeEmbedRows(
+          rows.select(col("corpus_id").as("probe_id"),
+            col("v_idx").as("v_p"), col("bks_idx").as("bks_p"),
+            col("tbl"), col("bk")),
+          index, tables, minCos)
       }
-    val kept = probed.getOrElse(within)
+    }
+  }
+
+  /** Both folds' tail, after the within-batch keep-one `within` and its
+    * persisted index rows `rows` (`corpus_id` = the document id): the
+    * probe on `keyCol` (one bounded-collect job, [[BloomSidecar.probe]]),
+    * `within` anti-joined to the `probe_id`s `hits` finds in the probed
+    * index rows (cached; with nothing to probe, `within` is the
+    * survivors), `stats`, the corpus commit (its flag is the result),
+    * then the survivors' `segCols` rows appended as one segment.
+    */
+  private def commitTail(within: DataFrame, rows: DataFrame,
+                         corpusDir: String, indexDir: String, batchId: String,
+                         idCol: String, keyCol: String, segCols: Seq[String],
+                         stats: DataFrame => Unit)(
+                         hits: DataFrame => DataFrame): Boolean = {
+    val kept = BloomSidecar.probe(within.sparkSession, indexDir, rows, keyCol)
+      .fold(within) { index =>
+        // `hits` is at most one id per batch row: broadcast it, or the
+        // planner picks a sort-merge join and AQE shuffles `within` by
+        // id before turning the join into a broadcast anyway. The hint
+        // holds whatever the batch size, so it assumes a micro-batch:
+        // 8 bytes per batch row go through the driver to every executor
+        // (a 1M-row batch ships about 8 MB, plus the hash table), a
+        // small share of the batch text the fold already holds cached
+        graft.core.Caches.persist(within.join(
+          broadcast(hits(index).select(col("probe_id").as(idCol)).distinct()),
+          Seq(idCol), "left_anti"))
+      }
+    stats(kept)
     val committed = graft.ext.ManifestTable.append(kept, corpusDir, batchId)
-    // single consumer (the append) — no persist needed
-    val bandRows =
+    // the fold's survivor index rows: a semi-join against the persisted
+    // batch rows, NOT a rebuild from kept; column order re-pinned so
+    // every appended segment file carries the identical schema. Single
+    // consumer (the append) — no persist needed
+    BloomSidecar.append(indexDir,
       rows.join(kept.select(col(idCol).cast("long").as("corpus_id")),
           Seq("corpus_id"), "left_semi")
-        .select(col("tbl"), col("bk"), col("corpus_id"),
-          col("v_idx"), col("bks_idx"))
-    graft.ext.ManifestTable.append(bandRows, segmentsPath(indexDir),
-      java.util.UUID.randomUUID().toString, bloomCols = Seq("bk"))
-    probed.foreach(_.unpersist())
-    rows.unpersist()
-    within.unpersist()
+        .select(segCols.map(col): _*),
+      keyCol)
     committed
   }
 
@@ -239,5 +209,5 @@ object NearDupSink {
     */
   def compactIndex(spark: SparkSession, indexDir: String,
                    targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) =
-    BloomSidecar.compact(spark, segmentsPath(indexDir), targetFileBytes)
+    BloomSidecar.compact(spark, indexDir, targetFileBytes)
 }

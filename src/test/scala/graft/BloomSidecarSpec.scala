@@ -16,7 +16,7 @@ class BloomSidecarSpec extends SparkSpec {
       "in the set so that the test has a real body of text to read"))
     .toDF("id", "text")
 
-  test("a 4-batch ingest fold pays O(1) sidecar opens per batch, not O(#segments)") {
+  test("a 4-batch ingest fold pays O(1) bloom reads per batch, not O(#segments)") {
     val root = mkDir("ingest")
     val corpus = s"$root/corpus"
     val index = s"$root/index"
@@ -75,7 +75,7 @@ class BloomSidecarSpec extends SparkSpec {
     val fresh = batch(1000, 5)
       .select(org.apache.spark.sql.functions.md5($"text").as("fp"))
     CountingFs.reset()
-    assert(BloomSidecar.probe(spark, seg, fresh, "fp").isEmpty)
+    assert(BloomSidecar.probe(spark, index, fresh, "fp").isEmpty)
     Ingest.ingestBatchCommitted(batch(1000, 5), corpus, index, "b1")
     assert(CountingFs.opensUnder(
       new java.net.URI(seg).getPath + "/data/", before) === 0L)

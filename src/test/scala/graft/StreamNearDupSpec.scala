@@ -297,7 +297,7 @@ class StreamNearDupSpec extends SparkSpec {
 
   test("committed near-dup sink on batches past the point-probe key bound") {
     // 4 bands x 300 docs = ~1200 band hashes per batch, past
-    // Ingest.PointProbeMaxKeys (1024) — the benchmark's batch shape,
+    // BloomSidecar.PointProbeMaxKeys (1024) — the benchmark's batch shape,
     // which the small fixtures above never reach
     val root = java.nio.file.Files.createTempDirectory("graft-ndbig").toString
     val (corpusDir, indexDir) = (s"$root/corpus", s"$root/index")
@@ -314,7 +314,7 @@ class StreamNearDupSpec extends SparkSpec {
     val b1 = (planted ++ fresh).toDF("id", "text")
     val keys = StreamNearDup.buildMinHashIndex(b1, "id", "text")
       .select("band_hash").distinct().count()
-    assert(keys > graft.streaming.Ingest.PointProbeMaxKeys,
+    assert(keys > graft.streaming.BloomSidecar.PointProbeMaxKeys,
       s"fixture must exceed the point-probe bound, has $keys band hashes")
     def corpusIds() = graft.ext.ManifestTable.read(spark, corpusDir)
       .select("id").as[Long].collect().toSet
