@@ -8,16 +8,18 @@ import org.apache.spark.storage.StorageLevel
 /** Registry for plan intermediates that operators persist because the
   * plan they build re-reads them on every action (Batching's
   * range-partitioned RDD, MinHashLSH's colliding buckets, the bucketed
-  * vectors of `Similarity.embedNearDup`). The blocks must outlive the
-  * operator call — the caller's action is what consumes them — so the
-  * operator cannot unpersist eagerly. Inside [[scoped]] a registration
-  * lives as long as the innermost open scope: a micro-batch fold runs
-  * in one, so nothing it caches outlives the batch, whichever operator
-  * cached it. Outside any scope, Spark's ContextCleaner drops an
-  * intermediate once its plan is garbage-collected; long-lived sessions
-  * that run many queries (bench, verify, a REPL) bound accumulation
-  * deterministically by calling [[release]] once the results of
-  * previous queries are materialized (ADVICE r2 — Batching.scala:55).
+  * vectors of `Similarity.embedNearDup`, the reconcile join shared by
+  * the output and the reports). The blocks must outlive the operator
+  * call — the caller's action is what consumes them — so the operator
+  * cannot unpersist eagerly. Inside [[scoped]] a registration lives as
+  * long as the innermost open scope: a micro-batch fold runs in one, so
+  * nothing it caches outlives the batch, whichever operator cached it.
+  * Outside any scope a registration lives until [[release]]: this
+  * registry references every tracked RDD and frame, and the session's
+  * CacheManager every persisted `Dataset`, so Spark's ContextCleaner
+  * drops neither. Long-lived sessions that run many queries (bench,
+  * verify, a REPL) call [[release]] once the results of previous
+  * queries are materialized (ADVICE r2 — Batching.scala:55).
   */
 object Caches {
 

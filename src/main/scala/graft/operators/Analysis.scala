@@ -14,8 +14,8 @@ import graft.functions.ParseFunctions
   * error) produced by JsonlIO.readResponses.
   *
   * Scale notes: classification is a single projection (no shuffle); the
-  * rollup shuffles once on the low-cardinality `outcome` key with partial
-  * aggregation, so it reduces map-side to ≤7 rows per partition.
+  * rollup and the summary are each one global aggregate, partial per
+  * partition, so one row per partition crosses the shuffle.
   */
 object Analysis {
 
@@ -42,15 +42,19 @@ object Analysis {
       .drop(ParsedCol, RepairedCol, FallbackCol)
   }
 
-  /** A4 — rollup: one row per outcome class with count and share (%). */
-  def rollup(flat: DataFrame): DataFrame = {
-    val classified = classify(flat)
-    classified
-      .groupBy("outcome")
-      .agg(count(lit(1)).as("n"))
-      .withColumn("pct",
-        round(col("n") * lit(100.0) / sum("n").over(), 2))
-  }
+  /** A4 — rollup: one row per outcome class present, with count and
+    * share (%). One global aggregate counts every class and the total,
+    * so no second exchange gathers the total.
+    */
+  def rollup(flat: DataFrame): DataFrame =
+    classify(flat)
+      .agg(count(lit(1)).as("total"), array(outcomes.map(o =>
+        struct(lit(o).as("outcome"), count_if(col("outcome") === o).as("n"))): _*)
+        .as("classes"))
+      .select(col("total"), explode(col("classes")).as("c"))
+      .select(col("c.outcome").as("outcome"), col("c.n").as("n"),
+        round(col("c.n") * lit(100.0) / col("total"), 2).as("pct"))
+      .filter(col("n") > 0)
 
   /** Summary of derived rates (auto_translate.py:1504-1543): repairable
     * failures are rows that reached the parse cascade and missed the cheap

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.Schemas
+import graft.core.{Caches, Schemas}
 import graft.functions.ParseFunctions
 
 /** The reconciliation core (SURVEY.md §2.3 J1/J3/J4, §2.4 A3/A9, §2.5
@@ -12,11 +12,17 @@ import graft.functions.ParseFunctions
   * expected rows of each batch, sentinel the failures, and flag missing /
   * extra / shifted values.
   *
-  * Scale notes: `expected` and `translations` are both keyed by
-  * (custom_id, description_id); the join shuffles on that composite key
-  * once and every downstream op (missing, shift windows) reuses the same
-  * partitioning. The reference's O(n²) nested-loop English lookup
-  * (auto_translate.py:972-974) disappears into a hash join.
+  * Scale notes: one join serves the output and all three reports. The
+  * expected rows, marked, are full-outer joined with the translations on
+  * (custom_id, description_id): the marked rows are J1's left-outer join,
+  * the unmarked ones J3's left-anti join. [[extra]] over the frames of an
+  * earlier [[reconcile]] call persists that join, so the output, missing,
+  * extra and summary frames all read one cache and the parse cascade and
+  * the join run once per batch set. A frame read alone pays no cache
+  * fill: a lone [[reconcile]] plans as a left-outer join (its filter on
+  * the marker rejects the rows the full outer join adds) and a lone
+  * [[extra]] is a left-anti join. The reference's O(n²) nested-loop
+  * English lookup (auto_translate.py:972-974) disappears into a hash join.
   */
 object Reconcile {
 
@@ -48,15 +54,50 @@ object Reconcile {
         .as("translation"))
   }
 
+  private val Keys = Seq("custom_id", "description_id")
+
+  /** Set on every expected row of [[joined]]; null on a translation row
+    * that matched none. */
+  private val Expected = "__expected"
+
+  /** `translationRows`' non-key columns, paired with their names inside
+    * [[joined]], where they cannot collide with an expected column. */
+  private def renamed(translationRows: DataFrame): Seq[(String, String)] =
+    translationRows.columns.toSeq.filterNot(Keys.contains).zipWithIndex
+      .map { case (c, i) => c -> s"__t$i" }
+
+  /** Per translation frame, the expected frame that [[reconcile]] last
+    * joined it with; weak both ways, so an entry goes with its frames. */
+  private val lastReconciled =
+    new java.util.WeakHashMap[DataFrame, java.lang.ref.WeakReference[DataFrame]]()
+
+  /** The one reconcile join: marked `expected` full-outer joined with
+    * `translationRows` on (custom_id, description_id). Marked rows are
+    * J1's left-outer join, unmarked ones J3's left-anti join. */
+  private def joined(expected: DataFrame, translationRows: DataFrame): DataFrame =
+    expected.withColumn(Expected, lit(true))
+      .join(translationRows.select(Keys.map(col) ++ renamed(translationRows)
+        .map { case (c, t) => col(c).as(t) }: _*), Keys, "full_outer")
+
   /** J1 — reconciliation left-outer join + sentinel
     * (auto_translate.py:971-999). `expected` columns: custom_id, pos,
-    * description_id, english_sentence.
+    * description_id, english_sentence. The marked rows of [[joined]]:
+    * read alone, a left-outer join; once [[extra]] over the same two
+    * frames has persisted the join, a read of that cache, which lives
+    * until `Caches.release()` or the end of the enclosing
+    * `Caches.scoped`.
     */
-  def reconcile(expected: DataFrame, translationRows: DataFrame): DataFrame =
-    expected
-      .join(translationRows, Seq("custom_id", "description_id"), "left_outer")
+  def reconcile(expected: DataFrame, translationRows: DataFrame): DataFrame = {
+    lastReconciled.synchronized {
+      lastReconciled.put(translationRows, new java.lang.ref.WeakReference(expected))
+    }
+    joined(expected, translationRows)
+      .filter(col(Expected).isNotNull)
+      .select(Keys.map(col) ++ expected.columns.filterNot(Keys.contains).map(col) ++
+        renamed(translationRows).map { case (c, t) => col(t).as(c) }: _*)
       .withColumn("translated_sentence",
         coalesce(col("translation"), lit(Schemas.FailedSentinel)))
+  }
 
   /** J4 — expected ids with no translation (auto_translate.py:977-992). */
   def missing(reconciled: DataFrame): DataFrame =
@@ -64,10 +105,24 @@ object Reconcile {
       .select("custom_id", "pos", "description_id", "english_sentence")
 
   /** J3 — translations whose id is not in the batch's expected set
-    * (auto_translate.py:1007-1009).
+    * (auto_translate.py:1007-1009): the key columns, then
+    * `translationRows`' others. Over the same two frames as an earlier
+    * [[reconcile]] call, the unmarked rows of [[joined]], which this call
+    * persists (`Caches.persist`) for the output, missing, extra and
+    * summary frames to share until `Caches.release()` or the end of the
+    * enclosing `Caches.scoped`. Otherwise a left-anti join: a lone reader
+    * pays no cache fill.
     */
-  def extra(expected: DataFrame, translationRows: DataFrame): DataFrame =
-    translationRows.join(expected, Seq("custom_id", "description_id"), "left_anti")
+  def extra(expected: DataFrame, translationRows: DataFrame): DataFrame = {
+    val shared = lastReconciled.synchronized {
+      Option(lastReconciled.get(translationRows)).exists(_.get eq expected)
+    }
+    if (!shared) translationRows.join(expected, Keys, "left_anti")
+    else Caches.persist(joined(expected, translationRows))
+      .filter(col(Expected).isNull)
+      .select(Keys.map(col) ++
+        renamed(translationRows).map { case (c, t) => col(t).as(c) }: _*)
+  }
 
   /** W1/W2 — shift detection (auto_translate.py:1012-1032): within a batch
     * in input order, a failed row followed by a healthy one (or a failed
