@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * is MBs while the corpus is the 100 TB side — so the benchmark
   * collapses to ONE row holding its sorted distinct n-gram array
   * (a single small agg), which joins the corpus by a broadcast crossJoin
-  * of that 1-row frame (the `Reconcile.summary` pattern). Flagging is
+  * of that 1-row frame. Flagging is
   * then a pure `arrays_overlap` projection inside the corpus scan:
   * zero shuffle, zero state, embarrassingly parallel. For a benchmark
   * too large for one array (hundreds of millions of distinct n-grams),

@@ -1,21 +1,25 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.functions.ParseFunctions
 
 /** The error-analysis pass (SURVEY.md §3.2, A4) — the reference's whole
   * `analyze` mode (auto_translate.py:1137-1636) as one declarative
   * DataFrame pass: every response row gets an `outcome` class, each error
-  * bucket is a filter view over the classified frame, the rollup is one
-  * aggregation, and derived rates follow auto_translate.py:1504-1543.
+  * bucket is a filter view over the classified frame, the rollup and the
+  * summary are one counting pass each, and derived rates follow
+  * auto_translate.py:1504-1543.
   *
   * Input shape: the flat response table (custom_id, status_code, content,
   * error) produced by JsonlIO.readResponses.
   *
-  * Scale notes: classification is a single projection (no shuffle); the
-  * rollup and the summary are each one global aggregate, partial per
-  * partition, so one row per partition crosses the shuffle.
+  * Scale notes: classification is a single projection (no shuffle). The
+  * rollup and the summary each count the classes in one pass with no
+  * exchange: every partition's partial counts reach the driver as
+  * observed metrics of a noop write, one Spark job per report, and the
+  * report is a local frame projected from those counts.
   */
 object Analysis {
 
@@ -42,40 +46,61 @@ object Analysis {
       .drop(ParsedCol, RepairedCol, FallbackCol)
   }
 
-  /** A4 — rollup: one row per outcome class present, with count and
-    * share (%). One global aggregate counts every class and the total,
-    * so no second exchange gathers the total.
+  /** The total and one count per class of `outcomes`, in one Spark job
+    * that ships no rows: an `Observation` on the classified frame, driven
+    * by a noop write, merges each partition's partial counts on the
+    * driver, so no exchange gathers them.
     */
-  def rollup(flat: DataFrame): DataFrame =
-    classify(flat)
-      .agg(count(lit(1)).as("total"), array(outcomes.map(o =>
-        struct(lit(o).as("outcome"), count_if(col("outcome") === o).as("n"))): _*)
-        .as("classes"))
-      .select(col("total"), explode(col("classes")).as("c"))
-      .select(col("c.outcome").as("outcome"), col("c.n").as("n"),
-        round(col("c.n") * lit(100.0) / col("total"), 2).as("pct"))
-      .filter(col("n") > 0)
+  private def outcomeCounts(flat: DataFrame): (Long, Seq[Long]) = {
+    val seen = Observation()
+    classify(flat).observe(seen, count(lit(1)).as("total"),
+      outcomes.map(o => count_if(col("outcome") === o).as(o)): _*)
+      .write.format("noop").mode("overwrite").save()
+    val row = seen.get
+    (row("total").asInstanceOf[Long], outcomes.map(row(_).asInstanceOf[Long]))
+  }
+
+  /** `rows` as a local frame: a projection over it is evaluated on the
+    * driver, so reading it runs no Spark job. */
+  private def local(flat: DataFrame, schema: StructType, rows: Seq[Row]): DataFrame =
+    flat.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** A4 — rollup: one row per outcome class present, with count and
+    * share (%). Eager: the counting pass ([[outcomeCounts]]) runs here,
+    * and the returned frame is a local projection of its counts.
+    */
+  def rollup(flat: DataFrame): DataFrame = {
+    val (total, ns) = outcomeCounts(flat)
+    local(flat, StructType(Seq(StructField("outcome", StringType, nullable = false),
+        StructField("n", LongType, nullable = false))),
+      outcomes.zip(ns).collect { case (o, n) if n > 0 => Row(o, n) })
+      .select(col("outcome"), col("n"),
+        round(col("n") * lit(100.0) / lit(total), 2).as("pct"))
+  }
 
   /** Summary of derived rates (auto_translate.py:1504-1543): repairable
     * failures are rows that reached the parse cascade and missed the cheap
     * JSON path; repair_rate is repairs over those failures; the effective
-    * rate counts every recovered row.
+    * rate counts every recovered row. Eager, like [[rollup]]; over no rows
+    * each class count is null, as a `sum` over no rows is.
     */
   def summary(flat: DataFrame): DataFrame = {
-    val c = classify(flat)
-    def n(o: String): Column = sum(when(col("outcome") === o, 1L).otherwise(0L))
-    c.agg(
-      count(lit(1)).as("total"),
-      n("parsed_json").as("successful"),
-      n("repaired").as("repaired"),
-      n("fallback_lines").as("fallback"),
-      (n("http_error") + n("missing_content") + n("empty_content") +
-        n("unparseable")).as("failed"),
-      round(n("parsed_json") * lit(100.0) / count(lit(1)), 2).as("success_rate"),
-      round(n("repaired") * lit(100.0) /
-        greatest(n("repaired") + n("fallback_lines") + n("unparseable"), lit(1L)), 2)
+    val (total, ns) = outcomeCounts(flat)
+    val counts = local(flat, StructType(StructField("total", LongType, nullable = false) +:
+        outcomes.map(StructField(_, LongType))),
+      Seq(Row.fromSeq(total +: ns.map(n => if (total == 0) null else n))))
+    counts.select(
+      col("total"),
+      col("parsed_json").as("successful"),
+      col("repaired"),
+      col("fallback_lines").as("fallback"),
+      (col("http_error") + col("missing_content") + col("empty_content") +
+        col("unparseable")).as("failed"),
+      round(col("parsed_json") * lit(100.0) / col("total"), 2).as("success_rate"),
+      round(col("repaired") * lit(100.0) /
+        greatest(col("repaired") + col("fallback_lines") + col("unparseable"), lit(1L)), 2)
         .as("repair_rate"),
-      round((n("parsed_json") + n("repaired") + n("fallback_lines")) * lit(100.0)
-        / count(lit(1)), 2).as("effective_success_rate"))
+      round((col("parsed_json") + col("repaired") + col("fallback_lines")) * lit(100.0)
+        / col("total"), 2).as("effective_success_rate"))
   }
 }

@@ -145,20 +145,28 @@ object Reconcile {
   }
 
   /** A3 — pipeline scalar aggregates (auto_translate.py:955-960, 1070-1076).
-    * The extra-row count is a lazy 1-row aggregate cross-joined in (both
-    * sides are single rows so the cross join is trivial) — no eager
-    * `.count()` action at plan-build time (VERDICT r1 §wrong #4).
+    * One lazy global aggregate over the shift-flagged rows unioned with
+    * `extraRows`, each marked, so the extra count rides the same pass as
+    * the other totals; no eager `.count()` action at plan-build time
+    * (VERDICT r1 §wrong #4).
     */
   def summary(reconciled: DataFrame, extraRows: DataFrame): DataFrame = {
-    val ok = sum(when(col("translated_sentence") =!= Schemas.FailedSentinel, 1L).otherwise(0L))
-    val flagged = extraRows.agg(count(lit(1)).as("extra"))
-    shiftFlags(reconciled).agg(
-      count(lit(1)).as("total"),
-      ok.as("successful"),
-      (count(lit(1)) - ok).as("failed"),
-      sum(when(col("shift_suspected"), 1L).otherwise(0L)).as("shift_suspected"),
-      round(ok * lit(100.0) / count(lit(1)), 2).as("success_rate"))
-      .crossJoin(flagged)
+    val isExtra = "__extra"
+    def rows(c: Column): Column = when(!col(isExtra), c)
+    val ok = sum(rows(when(col("translated_sentence") =!= Schemas.FailedSentinel, 1L)
+      .otherwise(0L)))
+    val total = count(rows(lit(1)))
+    shiftFlags(reconciled)
+      .select(col("translated_sentence"), col("shift_suspected"), lit(false).as(isExtra))
+      .unionByName(extraRows.select(lit(null).cast("string").as("translated_sentence"),
+        lit(null).cast("boolean").as("shift_suspected"), lit(true).as(isExtra)))
+      .agg(
+        total.as("total"),
+        ok.as("successful"),
+        (total - ok).as("failed"),
+        sum(rows(when(col("shift_suspected"), 1L).otherwise(0L))).as("shift_suspected"),
+        round(ok * lit(100.0) / total, 2).as("success_rate"),
+        count_if(col(isExtra)).as("extra"))
   }
 
   /** Full reconcile pass: returns (result, missing, extra, summary). */

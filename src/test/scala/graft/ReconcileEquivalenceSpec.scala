@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.core.{Caches, Schemas}
@@ -8,11 +9,12 @@ import graft.operators.Reconcile
 
 /** `Reconcile.reconcile`, `missing`, `extra` and `summary` against the
   * plain formulation, computed inline: J1 as a left-outer join of the
-  * expected rows with the translations, J3 as a left-anti join. Both the
-  * shared path (extra over the frames of an earlier reconcile) and a
-  * lone extra are checked, on generated batches with repeated, blank,
-  * null and ghost ids, duplicate responses and a response for a batch
-  * nobody asked for.
+  * expected rows with the translations, J3 as a left-anti join, and the
+  * summary as the shift window, one aggregate over its rows and the
+  * extra rows' count cross-joined in. Both the shared path (extra over
+  * the frames of an earlier reconcile) and a lone extra are checked, on
+  * generated batches with repeated, blank, null and ghost ids, duplicate
+  * responses and a response for a batch nobody asked for.
   */
 class ReconcileEquivalenceSpec extends SparkSpec {
 
@@ -25,6 +27,28 @@ class ReconcileEquivalenceSpec extends SparkSpec {
 
   private def plainExtra(expected: DataFrame, tr: DataFrame): DataFrame =
     tr.join(expected, Keys, "left_anti")
+
+  private def plainSummary(rec: DataFrame, ext: DataFrame): DataFrame = {
+    val w = Window.partitionBy("custom_id").orderBy("pos")
+    val bad: Column => Column = c => c === Schemas.FailedSentinel
+    val flagged = rec
+      .withColumn("next_t", lead(col("translated_sentence"), 1).over(w))
+      .withColumn("prev_t", lag(col("translated_sentence"), 1).over(w))
+      .withColumn("rn", row_number().over(w))
+      .withColumn("n_rows", count(lit(1)).over(Window.partitionBy("custom_id")))
+      .withColumn("shift_suspected",
+        (bad(col("translated_sentence")) && col("next_t").isNotNull && !bad(col("next_t"))) ||
+        (col("rn") === col("n_rows") && bad(col("translated_sentence")) &&
+          col("prev_t").isNotNull && !bad(col("prev_t"))))
+    val ok = sum(when(col("translated_sentence") =!= Schemas.FailedSentinel, 1L).otherwise(0L))
+    flagged.agg(
+      count(lit(1)).as("total"),
+      ok.as("successful"),
+      (count(lit(1)) - ok).as("failed"),
+      sum(when(col("shift_suspected"), 1L).otherwise(0L)).as("shift_suspected"),
+      round(ok * lit(100.0) / count(lit(1)), 2).as("success_rate"))
+      .crossJoin(ext.agg(count(lit(1)).as("extra")))
+  }
 
   /** Column names and types, and the rows as a multiset. */
   private def same(got: DataFrame, want: DataFrame, what: String): Unit = {
@@ -76,8 +100,6 @@ class ReconcileEquivalenceSpec extends SparkSpec {
       Row("batch-0001", 200L, """{"7": "seven first", "": "blank value"}""", null),
       Row("batch-0001", 200L, """{"7": "seven last", "ghost-id": "spurious"}""", null),
       Row("batch-0099", 200L, """{"1": "nobody asked"}""", null))
-    def frame(rows: Seq[Row], schema: StructType) =
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
     (frame(expected, expectedSchema), frame(responses, responseSchema))
   }
 
@@ -90,7 +112,7 @@ class ReconcileEquivalenceSpec extends SparkSpec {
       same(rec, pRec, s"reconcile, seed $seed")
       same(Reconcile.missing(rec), Reconcile.missing(pRec), s"missing, seed $seed")
       same(ext, pExt, s"extra, seed $seed")
-      same(Reconcile.summary(rec, ext), Reconcile.summary(pRec, pExt), s"summary, seed $seed")
+      same(Reconcile.summary(rec, ext), plainSummary(pRec, pExt), s"summary, seed $seed")
       assert(ext.filter(col("custom_id") === "batch-0099").count() === 1)
       // a lone extra, over fresh frames
       val (e2, r2) = fixture(seed)
@@ -129,5 +151,46 @@ class ReconcileEquivalenceSpec extends SparkSpec {
     assert(ext.collect().map(_.toSeq) === Array(Seq("b1", "9", "ghost note", "nine")))
     same(Reconcile.extra(expected, tr), plainExtra(expected, tr), "alone")
     Caches.release()
+  }
+
+  private def frame(rows: Seq[Row], schema: StructType) =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** `summary` over the shared frames equals the plain formula; returns
+    * its one row. */
+  private def summaryOf(expected: Seq[Row], translations: Seq[(String, String, String)],
+                        what: String): Seq[Any] = {
+    import spark.implicits._
+    val ex = frame(expected, expectedSchema)
+    val tr = translations.toDF("custom_id", "description_id", "translation")
+    val (rec, ext) = (Reconcile.reconcile(ex, tr), Reconcile.extra(ex, tr))
+    val got = Reconcile.summary(rec, ext)
+    same(got, plainSummary(plainReconcile(ex, tr), plainExtra(ex, tr)), what)
+    val rows = got.collect()
+    Caches.release()
+    assert(rows.length === 1, what)
+    rows(0).toSeq
+  }
+
+  test("summary on edge batches: one row, a failed last row, no expected rows, no extras") {
+    // (total, successful, failed, shift_suspected, success_rate, extra)
+    assert(summaryOf(Seq(Row("b1", 1L, "1", "one")), Nil, "one-row batch") ===
+      Seq(1L, 0L, 1L, 0L, 0.0, 0L))
+    assert(summaryOf(Seq(Row("b1", 1L, "1", "one"), Row("b1", 2L, "2", "two")),
+      Seq(("b1", "1", "eins")), "failed last row after a healthy one") ===
+      Seq(2L, 1L, 1L, 1L, 50.0, 0L))
+    assert(summaryOf(Seq(Row("b1", 1L, "1", "one")),
+      Seq(("b1", "1", "eins"), ("b9", "1", "nobody asked"), ("b9", "2", "nor this")),
+      "a batch with no expected rows") === Seq(1L, 1L, 0L, 0L, 100.0, 2L))
+    assert(summaryOf(Seq(Row("b1", 1L, "1", "one"), Row("b1", 2L, "2", "two"),
+      Row("b2", 3L, "3", "three")), Seq(("b1", "2", "zwei"), ("b2", "3", "drei")),
+      "zero extra rows") === Seq(3L, 2L, 1L, 1L, 66.67, 0L))
+  }
+
+  test("summary with zero expected rows, and over empty input") {
+    // no reconciled rows: the count is 0 and every sum over them is null
+    assert(summaryOf(Nil, Seq(("b1", "1", "eins"), ("b1", "2", "zwei")),
+      "zero expected rows") === Seq(0L, null, null, null, null, 2L))
+    assert(summaryOf(Nil, Nil, "empty input") === Seq(0L, null, null, null, null, 0L))
   }
 }

@@ -11,10 +11,12 @@ import graft.translate.MockTranslator
 
 /** The Spark-job budget of the reference lifecycle, CSV to CSV: every job
   * is a fixed driver cost, so the count of one warm run is pinned exactly
-  * and a change that adds one has to say why. The two single-reader
-  * callers of the reconcile join (the folder fan-out's collect, an extra
-  * report read once) are pinned too: sharing the join must not cost them
-  * a job. The output and the three reports must read one cached join.
+  * and a change that adds one has to say why. Each analysis report read
+  * alone is one counting job, and the summary report over the filled
+  * shared join is pinned too. The two single-reader callers of the
+  * reconcile join (the folder fan-out's collect, an extra report read
+  * once) are pinned: sharing the join must not cost them a job. The
+  * output and the three reports must read one cached join.
   */
 class TranslateJobBudgetSpec extends SparkSpec {
 
@@ -52,11 +54,11 @@ class TranslateJobBudgetSpec extends SparkSpec {
     rows.collect { case (id, _, true) => id }.toSet
   }
 
-  /** The benchmark's operation: request and response JSONL round trips,
-    * the four reconcile frames, both analysis collects, the output CSV and
-    * the reports.
+  /** The lifecycle up to the responses: batching, the request JSONL out
+    * and back, the mock translator and the response JSONL out and back.
+    * Returns the expected rows and the responses read back.
     */
-  private def lifecycle(csv: String, dir: String): (Long, Int) = {
+  private def translated(csv: String, dir: String): (DataFrame, DataFrame) = {
     val input = CsvIO.readInput(spark, csv)
     val baseCost = math.ceil(Pipeline.DefaultSystemPrompt.length / 4.0).toLong
     val assigned = Batching.assignBatches(
@@ -68,10 +70,17 @@ class TranslateJobBudgetSpec extends SparkSpec {
     val requests = JsonlIO.readRequests(spark, s"$dir/requests")
     JsonlIO.toResponseEnvelope(new MockTranslator(injectFaults = true).translate(requests))
       .write.mode("overwrite").json(s"$dir/responses")
-    val responses = JsonlIO.readResponses(spark, s"$dir/responses")
+    (assigned.select("custom_id", "pos", "description_id", "english_sentence"),
+      JsonlIO.readResponses(spark, s"$dir/responses"))
+  }
+
+  /** The benchmark's operation: request and response JSONL round trips,
+    * the four reconcile frames, both analysis collects, the output CSV and
+    * the reports.
+    */
+  private def lifecycle(csv: String, dir: String): (Long, Int) = {
+    val (expected, responses) = translated(csv, dir)
     val tr = Reconcile.translations(responses)
-    val expected = assigned.select("custom_id", "pos", "description_id",
-      "english_sentence")
     val rec = Reconcile.reconcile(expected, tr)
     val ext = Reconcile.extra(expected, tr)
     val miss = Reconcile.missing(rec)
@@ -85,7 +94,7 @@ class TranslateJobBudgetSpec extends SparkSpec {
     (analysed, rollup.length)
   }
 
-  test("a warm CSV-to-CSV run with injected faults runs 22 Spark jobs") {
+  test("a warm CSV-to-CSV run with injected faults runs 19 Spark jobs") {
     pinned {
       val root = java.nio.file.Files.createTempDirectory("graft-translate-jobs").toString
       val clean = writeCsv(s"$root/input.csv")
@@ -110,7 +119,48 @@ class TranslateJobBudgetSpec extends SparkSpec {
       val batches = JsonlIO.readRequests(spark, s"$root/run/requests").count()
       assert(analysed === batches && classes >= 1)
       assert(summary(0).getAs[Long]("extra") === extra.length.toLong)
-      assert(jobs.count === 22, jobs)
+      assert(jobs.count === 19, jobs)
+    }
+  }
+
+  test("a lone rollup collect and a lone summary collect run 1 Spark job each") {
+    pinned {
+      val root = java.nio.file.Files.createTempDirectory("graft-analysis-jobs").toString
+      writeCsv(s"$root/input.csv")
+      lifecycle(s"$root/input.csv", s"$root/warm")
+      Caches.release()
+      val responses = JsonlIO.readResponses(spark, s"$root/warm/responses")
+      val (rollup, rollupJobs) = JobCount.during(Analysis.rollup(responses).collect())
+      val (summary, summaryJobs) = JobCount.during(Analysis.summary(responses).collect())
+      val batches = JsonlIO.readRequests(spark, s"$root/warm/requests").count()
+      assert(rollup.map(_.getLong(1)).sum === batches)
+      assert(summary.length === 1 && summary(0).getLong(0) === batches)
+      assert(rollupJobs.count === 1, rollupJobs)
+      assert(summaryJobs.count === 1, summaryJobs)
+    }
+  }
+
+  test("the summary report written alone over the shared join: 3 Spark jobs") {
+    pinned {
+      val root = java.nio.file.Files.createTempDirectory("graft-summary-jobs").toString
+      val clean = writeCsv(s"$root/input.csv")
+      lifecycle(s"$root/input.csv", s"$root/warm")
+      Caches.release()
+      val (expected, responses) = translated(s"$root/input.csv", s"$root/run")
+      val tr = Reconcile.translations(responses)
+      val rec = Reconcile.reconcile(expected, tr)
+      val ext = Reconcile.extra(expected, tr)
+      CsvIO.writeOutputCsv(rec.orderBy("pos")
+        .select("description_id", "english_sentence", "translated_sentence"),
+        s"$root/run/output")
+      val (_, jobs) = JobCount.during(
+        Reconcile.summary(rec, ext).write.mode("overwrite").json(s"$root/run/summary"))
+      val summary = spark.read.json(s"$root/run/summary").collect()
+      Caches.release()
+      assert(summary.length === 1)
+      assert(summary(0).getAs[Long]("total") === clean.size.toLong)
+      assert(summary(0).getAs[Long]("extra") > 0)
+      assert(jobs.count === 3, jobs)
     }
   }
 
