@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.Tables
 import graft.ext.{MinHashLSH, Multimodal, Sampling, Similarity, TextAnalysis}
 import graft.functions.TextFunctions
@@ -18,20 +19,9 @@ import graft.functions.TextFunctions
   * must find; the oracle plants the same pairs.
   */
 object ExtQueries {
+  import Fixtures._
 
   private def t(s: SparkSession, d: String, name: String) = Tables.load(s, d, name)
-
-  private def fsOf(s: SparkSession, path: String) =
-    org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-
-  /** `path`, deleted recursively first: the fixture's working root,
-    * fresh on every pass.
-    */
-  private def freshRoot(s: SparkSession, path: String): String = {
-    fsOf(s, path).delete(new org.apache.hadoop.fs.Path(path), true)
-    path
-  }
 
   /** documents ∪ mutated copies — the planted near-dup corpus. */
   private def plantedDocs(s: SparkSession, d: String): DataFrame = {
@@ -932,11 +922,7 @@ object ExtQueries {
     val total = graft.ext.ManifestTable.snapshot(s, root).files.size
     val df = graft.ext.ManifestTable.scan(s, root)
       .where("doc_id >= 100 AND doc_id < 220 AND lang <> 'de'")
-    df.collect()
-    val read = df.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.metrics("numFiles").value
-    }.sum
+    val read = filesRead(df).sum
     require(total == 1 || read < total,
       s"planner-path skipping read $read of $total files — pruned nothing")
     df.orderBy("doc_id")
@@ -977,11 +963,7 @@ object ExtQueries {
     val nParts = graft.ext.ManifestTable.partitions(s, root).count()
     require(nParts > 1, s"partitions() listed $nParts tuples")
     val df = graft.ext.ManifestTable.scan(s, root).where("lang = 'de'")
-    df.collect()
-    val read = df.queryExecution.executedPlan.collect {
-      case fsc: org.apache.spark.sql.execution.FileSourceScanExec =>
-        fsc.metrics("numFiles").value
-    }.sum
+    val read = filesRead(df).sum
     require(read == deFiles,
       s"planner scan read $read files; partition pruning promised $deFiles")
     df.orderBy("doc_id")
@@ -995,37 +977,20 @@ object ExtQueries {
     * through [[graft.ext.ManifestFileIndex]] (a FileSourceScanExec
     * exists) and that a partition-predicate SELECT read EXACTLY the
     * partition's files (numFiles metric) — SQL callers get the same
-    * pruned plan Scala callers do, not a compatibility bridge. Every
-    * statement is re-runnable (DROP IF EXISTS; fresh opIds), so warm
-    * bench passes replay the whole DDL/DML cycle.
+    * pruned plan Scala callers do, not a compatibility bridge.
     */
   def manifestSqlDdlQ(s: SparkSession, d: String): DataFrame = {
-    // ONE warehouse for every graft_fix query: Spark caches a catalog
-    // instance at first reference, so a per-query warehouse conf would
-    // silently lose to whichever query ran first (queries run in map
-    // order — effectively arbitrary). Distinct table names isolate.
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqlddl")
-    t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("sqlddl_src")
-    s.sql("CREATE TABLE graft_fix.sqlddl " +
-      "(doc_id BIGINT, lang STRING, n_chars BIGINT) PARTITIONED BY (lang)")
+    create(s, d, "sqlddl", s"$DocSchema PARTITIONED BY (lang)")
     s.sql("INSERT INTO graft_fix.sqlddl " +
       "SELECT doc_id, lang, n_chars FROM sqlddl_src")
     // partition-pruned SQL read: exactly the partition's files
-    val snap = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlddl")
+    val snap = snapshot(s, "sqlddl")
     val deFiles = snap.files.count(f =>
       snap.pvals(f)("lang").value.contains("de"))
     require(deFiles > 0 && deFiles < snap.files.size,
       s"fixture degenerate: $deFiles de files of ${snap.files.size}")
-    val probe = s.sql("SELECT * FROM graft_fix.sqlddl WHERE lang = 'de'")
-    probe.collect()
-    val read = probe.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.metrics("numFiles").value
-    }
+    val read =
+      filesRead(s.sql("SELECT * FROM graft_fix.sqlddl WHERE lang = 'de'"))
     require(read.nonEmpty,
       "SQL read did not plan through ManifestFileIndex/FileSourceScanExec")
     require(read.sum == deFiles,
@@ -1044,18 +1009,10 @@ object ExtQueries {
     * evaluated against the OLD row and cast back to the column type.
     * The REQUIREs pin that the candidate pruning PROVED the non-matching
     * partition untouchable before the statement ran (kept < total) and
-    * that the commit landed as an `update` op. Re-runnable for warm
-    * bench passes (DROP IF EXISTS + fresh statement ids).
+    * that the commit landed as an `update` op.
     */
   def manifestSqlUpdateQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqlupd")
-    t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("sqlupd_src")
-    s.sql("CREATE TABLE graft_fix.sqlupd " +
-      "(doc_id BIGINT, lang STRING, n_chars BIGINT) PARTITIONED BY (lang)")
+    create(s, d, "sqlupd", s"$DocSchema PARTITIONED BY (lang)")
     s.sql("INSERT INTO graft_fix.sqlupd " +
       "SELECT doc_id, lang, n_chars FROM sqlupd_src")
     // the partition predicate must PRUNE before the update rewrites
@@ -1065,9 +1022,7 @@ object ExtQueries {
       s"fixture degenerate: update candidates $kept of $total files")
     s.sql("UPDATE graft_fix.sqlupd " +
       "SET n_chars = n_chars * 2 + 7 WHERE lang = 'de' AND doc_id % 3 = 0")
-    val last = graft.ext.ManifestTable.history(s, s"$wh/sqlupd")
-      .orderBy(col("version").desc).select("op").first().getString(0)
-    require(last == "update", s"SQL UPDATE landed as '$last', not 'update'")
+    landed(s, "sqlupd", "update", "SQL UPDATE")
     s.sql("SELECT doc_id, lang, n_chars FROM graft_fix.sqlupd ORDER BY doc_id")
   }
 
@@ -1078,30 +1033,10 @@ object ExtQueries {
     * atomic commit. The REQUIREs pin that the merge REWROTE a strict
     * subset of the table's files (source-key pruning held: an upsert
     * batch is O(matched files), never O(table)) and landed as a
-    * `merge` op. Re-runnable for warm bench passes.
+    * `merge` op.
     */
   def manifestSqlMergeQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqlmrg")
-    val docs = t(s, d, "documents")
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    docs.createOrReplaceTempView("sqlmrg_src")
-    s.sql("CREATE TABLE graft_fix.sqlmrg " +
-      "(doc_id BIGINT, lang STRING, n_chars BIGINT)")
-    // four BANDED inserts: each commit writes >= 1 file whose doc_id
-    // stats span only its band, so the file split (and therefore the
-    // strict-subset pruning proof below) holds at ANY parallelism and
-    // scale factor — a single insert + compact split depends on the
-    // session's task count (local[4] in graft.Explain compacted this
-    // fixture to 2 files and tripped the degenerate require)
-    Seq(0, 100, 200, 300).foreach(lo =>
-      s.sql("INSERT INTO graft_fix.sqlmrg SELECT doc_id, lang, n_chars " +
-        s"FROM sqlmrg_src WHERE doc_id >= $lo AND doc_id < ${lo + 100}"))
-    val before = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlmrg")
-    require(before.files.size >= 4,
-      s"fixture degenerate: ${before.files.size} files pre-merge")
+    val before = banded(s, d, "sqlmrg")
     s.sql("""MERGE INTO graft_fix.sqlmrg AS tgt
             |USING (SELECT doc_id, lang,
             |         CAST(n_chars + 5000 AS BIGINT) AS n_chars
@@ -1110,14 +1045,8 @@ object ExtQueries {
             |ON tgt.doc_id = src.doc_id
             |WHEN MATCHED THEN UPDATE SET *
             |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-    val after = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlmrg")
-    val rewritten = before.files.toSet.diff(after.files.toSet).size
-    require(rewritten < before.files.size,
-      s"merge rewrote all ${before.files.size} files — source-key " +
-        "pruning did not hold")
-    val last = graft.ext.ManifestTable.history(s, s"$wh/sqlmrg")
-      .orderBy(col("version").desc).select("op").first().getString(0)
-    require(last == "merge", s"SQL MERGE landed as '$last', not 'merge'")
+    rewrote(before, landed(s, "sqlmrg", "merge", "SQL MERGE"),
+      before.files.size, "SQL MERGE")
     s.sql("SELECT doc_id, lang, n_chars FROM graft_fix.sqlmrg ORDER BY doc_id")
   }
 
@@ -1126,38 +1055,17 @@ object ExtQueries {
     * to [[graft.ext.ManifestTable.deleteMatching]] — delete-by-source-
     * keys over the source-key-pruned candidates. The REQUIREs pin the
     * strict-subset rewrite (a tombstone batch is O(matched files)) and
-    * the `delete` op provenance. Re-runnable for warm bench passes.
+    * the `delete` op provenance.
     */
   def manifestSqlMergeDeleteQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqlmdel")
-    t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("sqlmdel_src")
-    s.sql("CREATE TABLE graft_fix.sqlmdel " +
-      "(doc_id BIGINT, lang STRING, n_chars BIGINT)")
-    // banded inserts: parallelism-invariant file split with per-band
-    // doc_id stats (see manifestSqlMergeQ for why compact-based splits
-    // are not)
-    Seq(0, 100, 200, 300).foreach(lo =>
-      s.sql("INSERT INTO graft_fix.sqlmdel SELECT doc_id, lang, n_chars " +
-        s"FROM sqlmdel_src WHERE doc_id >= $lo AND doc_id < ${lo + 100}"))
-    val before = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlmdel")
-    require(before.files.size >= 4,
-      s"fixture degenerate: ${before.files.size} files pre-delete")
+    val before = banded(s, d, "sqlmdel")
     s.sql("""MERGE INTO graft_fix.sqlmdel AS tgt
             |USING (SELECT doc_id FROM sqlmdel_src
             |       WHERE doc_id >= 150 AND doc_id < 250) AS src
             |ON tgt.doc_id = src.doc_id
             |WHEN MATCHED THEN DELETE""".stripMargin)
-    val after = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlmdel")
-    require(after.op == "delete",
-      s"SQL MERGE-DELETE landed as '${after.op}', not 'delete'")
-    val rewritten = before.files.toSet.diff(after.files.toSet).size
-    require(rewritten < before.files.size,
-      s"tombstone apply rewrote all ${before.files.size} files — " +
-        "source-key pruning did not hold")
+    rewrote(before, landed(s, "sqlmdel", "delete", "SQL MERGE-DELETE"),
+      before.files.size, "tombstone apply")
     s.sql("SELECT doc_id, lang, n_chars FROM graft_fix.sqlmdel " +
       "ORDER BY doc_id")
   }
@@ -1171,25 +1079,10 @@ object ExtQueries {
     * partial-insert null-avoidance (every column assigned here, values
     * computed). The REQUIREs pin that source-key pruning still held for
     * the general path (strict-subset rewrite: the [0,100) band file is
-    * untouched) and the `merge` op provenance. Banded inserts make the
-    * file split parallelism- and scale-invariant. Re-runnable for warm
-    * bench passes.
+    * untouched) and the `merge` op provenance.
     */
   def manifestSqlMergePartialQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqlmgp")
-    t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("sqlmgp_src")
-    s.sql("CREATE TABLE graft_fix.sqlmgp " +
-      "(doc_id BIGINT, lang STRING, n_chars BIGINT)")
-    Seq(0, 100, 200, 300).foreach(lo =>
-      s.sql("INSERT INTO graft_fix.sqlmgp SELECT doc_id, lang, n_chars " +
-        s"FROM sqlmgp_src WHERE doc_id >= $lo AND doc_id < ${lo + 100}"))
-    val before = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlmgp")
-    require(before.files.size >= 4,
-      s"fixture degenerate: ${before.files.size} files pre-merge")
+    val before = banded(s, d, "sqlmgp")
     s.sql("""MERGE INTO graft_fix.sqlmgp AS t
             |USING (SELECT doc_id, lang, n_chars,
             |         CAST(doc_id * 3 AS BIGINT) AS bump
@@ -1202,13 +1095,8 @@ object ExtQueries {
             |WHEN NOT MATCHED AND s.doc_id < 480
             |  THEN INSERT (doc_id, lang, n_chars)
             |       VALUES (s.doc_id, s.lang, s.n_chars + 9)""".stripMargin)
-    val after = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlmgp")
-    val rewritten = before.files.toSet.diff(after.files.toSet).size
-    require(rewritten > 0 && rewritten < before.files.size,
-      s"general merge rewrote $rewritten of ${before.files.size} files — " +
-        "source-key pruning did not hold on the general path")
-    require(after.op == "merge",
-      s"general SQL MERGE landed as '${after.op}', not 'merge'")
+    rewrote(before, landed(s, "sqlmgp", "merge", "general SQL MERGE"),
+      before.files.size, "general merge")
     s.sql("SELECT doc_id, lang, n_chars FROM graft_fix.sqlmgp ORDER BY doc_id")
   }
 
@@ -1220,20 +1108,10 @@ object ExtQueries {
     * rewrite scope is the full file list by necessity (the documented
     * NMBS cost; no subset require here). The REQUIREs pin the clause
     * effects with scale-invariant counts (both NMBS bands bounded) and
-    * the `merge` provenance. Re-runnable for warm bench passes.
+    * the `merge` provenance.
     */
   def manifestSqlMergeCondQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqlmgc")
-    t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("sqlmgc_src")
-    s.sql("CREATE TABLE graft_fix.sqlmgc " +
-      "(doc_id BIGINT, lang STRING, n_chars BIGINT)")
-    Seq(0, 100, 200, 300).foreach(lo =>
-      s.sql("INSERT INTO graft_fix.sqlmgc SELECT doc_id, lang, n_chars " +
-        s"FROM sqlmgc_src WHERE doc_id >= $lo AND doc_id < ${lo + 100}"))
+    banded(s, d, "sqlmgc")
     s.sql("""MERGE INTO graft_fix.sqlmgc AS t
             |USING (SELECT doc_id, n_chars FROM sqlmgc_src
             |       WHERE doc_id >= 100 AND doc_id < 300) AS s
@@ -1244,9 +1122,7 @@ object ExtQueries {
             |  THEN UPDATE SET n_chars = CAST(0 AS BIGINT)
             |WHEN NOT MATCHED BY SOURCE AND t.doc_id >= 390
             |  THEN DELETE""".stripMargin)
-    val after = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlmgc")
-    require(after.op == "merge",
-      s"general SQL MERGE landed as '${after.op}', not 'merge'")
+    landed(s, "sqlmgc", "merge", "general SQL MERGE")
     val zeroed = s.sql(
       "SELECT count(*) FROM graft_fix.sqlmgc WHERE n_chars = 0")
       .first().getLong(0)
@@ -1269,23 +1145,10 @@ object ExtQueries {
     * the clause condition), and the 400-450 band inserts. The REQUIREs
     * pin that the key equalities ALONE still drive file pruning — a
     * strict-subset rewrite (the sub-150 band's file must survive) —
-    * and the `merge` provenance. Re-runnable for warm bench passes.
+    * and the `merge` provenance.
     */
   def manifestSqlMergeOnExprQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqlmox")
-    t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("sqlmox_src")
-    s.sql("CREATE TABLE graft_fix.sqlmox " +
-      "(doc_id BIGINT, lang STRING, n_chars BIGINT)")
-    Seq(0, 100, 200, 300).foreach(lo =>
-      s.sql("INSERT INTO graft_fix.sqlmox SELECT doc_id, lang, n_chars " +
-        s"FROM sqlmox_src WHERE doc_id >= $lo AND doc_id < ${lo + 100}"))
-    val before = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlmox")
-    require(before.files.size >= 4,
-      s"fixture degenerate: ${before.files.size} files pre-merge")
+    val before = banded(s, d, "sqlmox")
     s.sql("""MERGE INTO graft_fix.sqlmox AS t
             |USING (SELECT doc_id AS src_id, lang AS slang,
             |         CAST(n_chars + CASE WHEN doc_id % 3 = 0
@@ -1297,13 +1160,8 @@ object ExtQueries {
             |WHEN NOT MATCHED AND s.src_id >= 400
             |  THEN INSERT (doc_id, lang, n_chars)
             |       VALUES (s.src_id, s.slang, s.sn)""".stripMargin)
-    val after = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlmox")
-    val rewritten = before.files.toSet.diff(after.files.toSet).size
-    require(rewritten > 0 && rewritten < before.files.size,
-      s"rich-ON merge rewrote $rewritten of ${before.files.size} files — " +
-        "key-equality pruning did not survive the residue")
-    require(after.op == "merge",
-      s"rich-ON SQL MERGE landed as '${after.op}', not 'merge'")
+    rewrote(before, landed(s, "sqlmox", "merge", "rich-ON SQL MERGE"),
+      before.files.size, "rich-ON merge")
     s.sql("SELECT doc_id, lang, n_chars FROM graft_fix.sqlmox ORDER BY doc_id")
   }
 
@@ -1315,23 +1173,11 @@ object ExtQueries {
     * matched rows update through SET *, the 400-500 band inserts.
     * DuckDB replays the same ALTER+UPDATE+INSERT as one frame. The
     * REQUIREs pin the evolved schema, the strict-subset rewrite (the
-    * sub-200 bands survive) and the `merge` provenance. Re-runnable
-    * for warm bench passes.
+    * sub-200 bands survive) and the `merge` provenance.
     */
   def manifestSqlMergeEvolveQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqlmev")
-    t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("sqlmev_src")
-    s.sql("CREATE TABLE graft_fix.sqlmev (doc_id BIGINT, lang STRING)")
-    Seq(0, 100, 200, 300).foreach(lo =>
-      s.sql("INSERT INTO graft_fix.sqlmev SELECT doc_id, lang " +
-        s"FROM sqlmev_src WHERE doc_id >= $lo AND doc_id < ${lo + 100}"))
-    val before = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlmev")
-    require(before.files.size >= 4,
-      s"fixture degenerate: ${before.files.size} files pre-merge")
+    val before = banded(s, d, "sqlmev", "(doc_id BIGINT, lang STRING)",
+      rows = "SELECT doc_id, lang")
     s.sql("""MERGE WITH SCHEMA EVOLUTION
             |INTO graft_fix.sqlmev AS t
             |USING (SELECT doc_id, lang, n_chars FROM sqlmev_src
@@ -1339,16 +1185,11 @@ object ExtQueries {
             |ON t.doc_id = s.doc_id
             |WHEN MATCHED THEN UPDATE SET *
             |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-    val after = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlmev")
     require(s.table("graft_fix.sqlmev").columns.toSeq ==
       Seq("doc_id", "lang", "n_chars"),
       "schema evolution did not add the source-new column")
-    val rewritten = before.files.toSet.diff(after.files.toSet).size
-    require(rewritten > 0 && rewritten < before.files.size,
-      s"evolving merge rewrote $rewritten of ${before.files.size} files — " +
-        "source-key pruning did not survive schema evolution")
-    require(after.op == "merge",
-      s"evolving SQL MERGE landed as '${after.op}', not 'merge'")
+    rewrote(before, landed(s, "sqlmev", "merge", "evolving SQL MERGE"),
+      before.files.size, "evolving merge")
     s.sql("SELECT doc_id, lang, n_chars FROM graft_fix.sqlmev ORDER BY doc_id")
   }
 
@@ -1358,34 +1199,16 @@ object ExtQueries {
     * IN gets — the REQUIREs pin a strict-subset rewrite (only the
     * 100-200 band's file holds matching keys) and the `delete`
     * provenance. Correlated subqueries stay a loud rejection (pinned
-    * in the suite). Re-runnable for warm bench passes.
+    * in the suite).
     */
   def manifestSqlDeleteInSubqueryQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqldsq")
-    t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("sqldsq_src")
-    s.sql("CREATE TABLE graft_fix.sqldsq " +
-      "(doc_id BIGINT, lang STRING, n_chars BIGINT)")
-    Seq(0, 100, 200, 300).foreach(lo =>
-      s.sql("INSERT INTO graft_fix.sqldsq SELECT doc_id, lang, n_chars " +
-        s"FROM sqldsq_src WHERE doc_id >= $lo AND doc_id < ${lo + 100}"))
-    val before = graft.ext.ManifestTable.snapshot(s, s"$wh/sqldsq")
-    require(before.files.size >= 4,
-      s"fixture degenerate: ${before.files.size} files pre-delete")
+    val before = banded(s, d, "sqldsq")
     s.sql("""DELETE FROM graft_fix.sqldsq
             |WHERE doc_id IN (SELECT doc_id FROM sqldsq_src
             |                 WHERE doc_id >= 120 AND doc_id < 180
             |                   AND doc_id % 2 = 0)""".stripMargin)
-    val after = graft.ext.ManifestTable.snapshot(s, s"$wh/sqldsq")
-    val rewritten = before.files.toSet.diff(after.files.toSet).size
-    require(rewritten > 0 && rewritten < before.files.size / 2,
-      s"IN-subquery DELETE rewrote $rewritten of ${before.files.size} " +
-        "files — the literalized IN-list did not prune")
-    require(after.op == "delete",
-      s"IN-subquery DELETE landed as '${after.op}', not 'delete'")
+    rewrote(before, landed(s, "sqldsq", "delete", "IN-subquery DELETE"),
+      before.files.size / 2, "IN-subquery DELETE")
     s.sql("SELECT doc_id, lang, n_chars FROM graft_fix.sqldsq ORDER BY doc_id")
   }
 
@@ -1398,43 +1221,25 @@ object ExtQueries {
     * WHERE NOT EXISTS` — anti, a NOT-MATCHED-BY-SOURCE delete (full
     * scope, inherent to the quantifier); (3) correlated `UPDATE WHERE
     * EXISTS` — a conditional matched-update merge. DuckDB replays all
-    * three as one frame. Re-runnable for warm bench passes.
+    * three as one frame.
     */
   def manifestSqlDeleteExistsQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqldex")
-    t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("sqldex_src")
-    s.sql("CREATE TABLE graft_fix.sqldex " +
-      "(doc_id BIGINT, lang STRING, n_chars BIGINT)")
-    Seq(0, 100, 200, 300).foreach(lo =>
-      s.sql("INSERT INTO graft_fix.sqldex SELECT doc_id, lang, n_chars " +
-        s"FROM sqldex_src WHERE doc_id >= $lo AND doc_id < ${lo + 100}"))
-    val before = graft.ext.ManifestTable.snapshot(s, s"$wh/sqldex")
-    require(before.files.size >= 4,
-      s"fixture degenerate: ${before.files.size} files pre-delete")
+    val before = banded(s, d, "sqldex")
     // (1) SEMI: equality-correlated EXISTS → deleteMatching
     s.sql("""DELETE FROM graft_fix.sqldex t WHERE EXISTS
             |  (SELECT 1 FROM sqldex_src s
             |   WHERE s.doc_id = t.doc_id
             |     AND s.doc_id >= 120 AND s.doc_id < 180
             |     AND s.doc_id % 2 = 0)""".stripMargin)
-    val afterSemi = graft.ext.ManifestTable.snapshot(s, s"$wh/sqldex")
-    val rewritten = before.files.toSet.diff(afterSemi.files.toSet).size
-    require(rewritten > 0 && rewritten < before.files.size / 2,
-      s"correlated-EXISTS DELETE rewrote $rewritten of " +
-        s"${before.files.size} files — source-key pruning did not hold")
-    require(afterSemi.op == "delete",
-      s"correlated-EXISTS DELETE landed as '${afterSemi.op}', not 'delete'")
+    rewrote(before,
+      landed(s, "sqldex", "delete", "correlated-EXISTS DELETE"),
+      before.files.size / 2, "correlated-EXISTS DELETE")
     // (2) ANTI: NOT EXISTS → NOT-MATCHED-BY-SOURCE delete (the >= 350
     // tail has no witness in the bounded source)
     s.sql("""DELETE FROM graft_fix.sqldex t WHERE NOT EXISTS
             |  (SELECT 1 FROM sqldex_src s
             |   WHERE s.doc_id = t.doc_id AND s.doc_id < 350)""".stripMargin)
-    require(graft.ext.ManifestTable.snapshot(s, s"$wh/sqldex").op == "merge",
-      "NOT-EXISTS DELETE must land as a 'merge' (NMBS) commit")
+    landed(s, "sqldex", "merge", "NOT-EXISTS DELETE (an NMBS merge)")
     // (3) correlated UPDATE: matched rows only, SET sees the OLD row
     s.sql("""UPDATE graft_fix.sqldex t SET n_chars = n_chars + 50
             |WHERE EXISTS (SELECT 1 FROM sqldex_src s
@@ -1446,34 +1251,16 @@ object ExtQueries {
     * oracle-replayed: the single-column literalizer is not its ceiling
     * — the tuple IN routes through the same key-joined lowering as the
     * correlated shapes (`deleteMatching` on both columns), with range
-    * pruning on the key band. Re-runnable for warm bench passes.
+    * pruning on the key band.
     */
   def manifestSqlDeleteInMultiQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqldim")
-    t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("sqldim_src")
-    s.sql("CREATE TABLE graft_fix.sqldim " +
-      "(doc_id BIGINT, lang STRING, n_chars BIGINT)")
-    Seq(0, 100, 200, 300).foreach(lo =>
-      s.sql("INSERT INTO graft_fix.sqldim SELECT doc_id, lang, n_chars " +
-        s"FROM sqldim_src WHERE doc_id >= $lo AND doc_id < ${lo + 100}"))
-    val before = graft.ext.ManifestTable.snapshot(s, s"$wh/sqldim")
-    require(before.files.size >= 4,
-      s"fixture degenerate: ${before.files.size} files pre-delete")
+    val before = banded(s, d, "sqldim")
     s.sql("""DELETE FROM graft_fix.sqldim t
             |WHERE (doc_id, lang) IN
             |  (SELECT doc_id, lang FROM sqldim_src
             |   WHERE doc_id >= 150 AND doc_id < 250)""".stripMargin)
-    val after = graft.ext.ManifestTable.snapshot(s, s"$wh/sqldim")
-    val rewritten = before.files.toSet.diff(after.files.toSet).size
-    require(rewritten > 0 && rewritten < before.files.size,
-      s"tuple-IN DELETE rewrote $rewritten of ${before.files.size} " +
-        "files — key-range pruning did not hold")
-    require(after.op == "delete",
-      s"tuple-IN DELETE landed as '${after.op}', not 'delete'")
+    rewrote(before, landed(s, "sqldim", "delete", "tuple-IN DELETE"),
+      before.files.size, "tuple-IN DELETE")
     s.sql("SELECT doc_id, lang, n_chars FROM graft_fix.sqldim ORDER BY doc_id")
   }
 
@@ -1485,34 +1272,19 @@ object ExtQueries {
     * history keeps 5 — the two-field divergence), and a post-ADD
     * insert with an explicit NULL stays NULL (the fill is per-file
     * ABSENCE, never a coalesce). DuckDB replays the same timeline as
-    * CASE arms over `documents`. Re-runnable for warm bench passes.
+    * CASE arms over `documents`.
     */
   def manifestSqlAddDefaultQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqladf")
-    t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("sqladf_src")
-    s.sql("CREATE TABLE graft_fix.sqladf (doc_id BIGINT, lang STRING)")
-    Seq(0, 100, 200, 300).foreach(lo =>
-      s.sql("INSERT INTO graft_fix.sqladf SELECT doc_id, lang " +
-        s"FROM sqladf_src WHERE doc_id >= $lo AND doc_id < ${lo + 100}"))
-    val before = graft.ext.ManifestTable.snapshot(s, s"$wh/sqladf")
-    require(before.files.size >= 4,
-      s"fixture degenerate: ${before.files.size} files pre-ALTER")
+    val before = banded(s, d, "sqladf", "(doc_id BIGINT, lang STRING)",
+      rows = "SELECT doc_id, lang")
     s.sql("ALTER TABLE graft_fix.sqladf ADD COLUMN score BIGINT DEFAULT 5")
-    val afterAdd = graft.ext.ManifestTable.snapshot(s, s"$wh/sqladf")
-    require(afterAdd.files == before.files,
+    require(snapshot(s, "sqladf").files == before.files,
       "ADD COLUMN DEFAULT moved data files — it must be metadata-only")
     // materialize one band: candidate pruning must hold under the fill
     s.sql("UPDATE graft_fix.sqladf SET score = score + 1 " +
       "WHERE doc_id >= 100 AND doc_id < 200")
-    val afterUpd = graft.ext.ManifestTable.snapshot(s, s"$wh/sqladf")
-    val rewritten = before.files.toSet.diff(afterUpd.files.toSet).size
-    require(rewritten > 0 && rewritten < before.files.size / 2,
-      s"UPDATE over the filled column rewrote $rewritten of " +
-        s"${before.files.size} files — pruning did not hold")
+    rewrote(before, snapshot(s, "sqladf"), before.files.size / 2,
+      "UPDATE over the filled column")
     // CURRENT_DEFAULT fills the omitted column on insert (still 5)
     s.sql("INSERT INTO graft_fix.sqladf (doc_id, lang) " +
       "SELECT doc_id, lang FROM sqladf_src " +
@@ -1535,32 +1307,16 @@ object ExtQueries {
     * RECOMPUTES it (never assignable directly), and a general MERGE
     * recomputes matched updates and computes partial inserts. DuckDB
     * replays the whole timeline as arithmetic over `documents`.
-    * Re-runnable for warm bench passes.
     */
   def manifestSqlGeneratedQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqlgen")
-    t(s, d, "documents").select(col("doc_id"), col("n_chars"))
-      .createOrReplaceTempView("sqlgen_src")
-    s.sql("CREATE TABLE graft_fix.sqlgen (doc_id BIGINT, n_chars BIGINT, " +
-      "nc2 BIGINT GENERATED ALWAYS AS (n_chars * 2 + doc_id % 7))")
-    Seq(0, 100, 200, 300).foreach(lo =>
-      s.sql("INSERT INTO graft_fix.sqlgen (doc_id, n_chars) " +
-        "SELECT doc_id, n_chars FROM sqlgen_src " +
-        s"WHERE doc_id >= $lo AND doc_id < ${lo + 100}"))
-    val before = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlgen")
-    require(before.files.size >= 4,
-      s"fixture degenerate: ${before.files.size} files pre-update")
+    val before = banded(s, d, "sqlgen", "(doc_id BIGINT, n_chars BIGINT, " +
+      "nc2 BIGINT GENERATED ALWAYS AS (n_chars * 2 + doc_id % 7))",
+      "(doc_id, n_chars) SELECT doc_id, n_chars")
     // recompute on UPDATE, with candidate pruning intact
     s.sql("UPDATE graft_fix.sqlgen SET n_chars = n_chars + 10 " +
       "WHERE doc_id >= 100 AND doc_id < 200")
-    val after = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlgen")
-    val rewritten = before.files.toSet.diff(after.files.toSet).size
-    require(rewritten > 0 && rewritten < before.files.size / 2,
-      s"generated-column UPDATE rewrote $rewritten of " +
-        s"${before.files.size} files — pruning did not hold")
+    rewrote(before, snapshot(s, "sqlgen"), before.files.size / 2,
+      "generated-column UPDATE")
     // general MERGE: matched partial SET recomputes, partial INSERT
     // computes
     s.sql("""MERGE INTO graft_fix.sqlgen t
@@ -1584,36 +1340,26 @@ object ExtQueries {
     * and the next band continues from it. The final frame is id-band
     * AGGREGATES (count/min/max/sum per 50-id band), which the id
     * MULTISET fully determines — DuckDB replays the multiset from
-    * doc_id arithmetic. Re-runnable for warm bench passes.
+    * doc_id arithmetic.
     */
   def manifestSqlIdentityQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqlidn")
-    t(s, d, "documents").select(col("doc_id"), col("n_chars"))
-      .createOrReplaceTempView("sqlidn_src")
-    s.sql("CREATE TABLE graft_fix.sqlidn (" +
+    val mark = banded(s, d, "sqlidn", "(" +
       "id BIGINT GENERATED ALWAYS AS IDENTITY (START WITH 1 INCREMENT BY 1), " +
-      "doc_id BIGINT, n_chars BIGINT)")
-    Seq(0, 100, 200, 300).foreach(lo =>
-      s.sql("INSERT INTO graft_fix.sqlidn (doc_id, n_chars) " +
-        "SELECT doc_id, n_chars FROM sqlidn_src " +
-        s"WHERE doc_id >= $lo AND doc_id < ${lo + 100}"))
-    val mark = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlidn")
+      "doc_id BIGINT, n_chars BIGINT)",
+      "(doc_id, n_chars) SELECT doc_id, n_chars")
       .properties.get("graft.identity.hwm.id")
     require(mark.contains("401"),
       s"identity mark after 400 minted rows should be 401, got $mark")
     // a DELETE (by id band — assignment-independent, stats-prunable)
     // does not move the mark; the next band continues from it
     s.sql("DELETE FROM graft_fix.sqlidn WHERE id > 100 AND id <= 150")
-    require(graft.ext.ManifestTable.snapshot(s, s"$wh/sqlidn")
+    require(snapshot(s, "sqlidn")
       .properties.get("graft.identity.hwm.id").contains("401"),
       "DELETE must not move the identity mark")
     s.sql("INSERT INTO graft_fix.sqlidn (doc_id, n_chars) " +
       "SELECT doc_id, n_chars FROM sqlidn_src " +
       "WHERE doc_id >= 400 AND doc_id < 450")
-    require(graft.ext.ManifestTable.snapshot(s, s"$wh/sqlidn")
+    require(snapshot(s, "sqlidn")
       .properties.get("graft.identity.hwm.id").contains("451"),
       "the post-delete band must continue from the standing mark")
     // uniqueness sanity, assignment-free
@@ -1637,34 +1383,17 @@ object ExtQueries {
     * projection, doc_id-banded candidate pruning) and `SET meta.lang`
     * under a struct-leaf WHERE. DuckDB replays the leaves as scalars
     * (the final SELECT projects them out — struct values never cross
-    * the comparator). Re-runnable for warm bench passes.
+    * the comparator).
     */
   def manifestStructUpdateQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqlstu")
-    t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("sqlstu_src")
-    s.sql("CREATE TABLE graft_fix.sqlstu " +
-      "(doc_id BIGINT, meta STRUCT<lang: STRING, n: BIGINT>)")
-    Seq(0, 100, 200, 300).foreach(lo =>
-      s.sql("INSERT INTO graft_fix.sqlstu SELECT doc_id, " +
-        "named_struct('lang', lang, 'n', doc_id) " +
-        s"FROM sqlstu_src WHERE doc_id >= $lo AND doc_id < ${lo + 100}"))
-    val before = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlstu")
-    require(before.files.size >= 4,
-      s"fixture degenerate: ${before.files.size} files pre-update")
+    val before = banded(s, d, "sqlstu",
+      "(doc_id BIGINT, meta STRUCT<lang: STRING, n: BIGINT>)",
+      rows = "SELECT doc_id, named_struct('lang', lang, 'n', doc_id)")
     // struct-LEAF pruning on the planner path: the footer keys leaf
     // stats by dot path (meta.n), the skipping evaluator resolves the
     // resolved GetStructField to the same key
-    val probe = s.sql("SELECT doc_id FROM graft_fix.sqlstu " +
-      "WHERE meta.n >= 120 AND meta.n < 180")
-    probe.collect()
-    val read = probe.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.metrics("numFiles").value
-    }
+    val read = filesRead(s.sql("SELECT doc_id FROM graft_fix.sqlstu " +
+      "WHERE meta.n >= 120 AND meta.n < 180"))
     require(read.nonEmpty && read.sum < before.files.size,
       s"struct-leaf probe read ${read.sum} of ${before.files.size} " +
         "files — meta.n footer stats did not prune")
@@ -1672,26 +1401,16 @@ object ExtQueries {
     // candidates on the banded doc_id
     s.sql("""UPDATE graft_fix.sqlstu SET meta.n = meta.n + 1000
             |WHERE doc_id >= 100 AND doc_id < 200""".stripMargin)
-    val after = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlstu")
-    val rewritten = before.files.toSet.diff(after.files.toSet).size
-    require(rewritten > 0 && rewritten < before.files.size / 2,
-      s"struct-field UPDATE rewrote $rewritten of ${before.files.size} " +
-        "files — candidate pruning did not hold")
-    require(after.op == "update",
-      s"struct-field UPDATE landed as '${after.op}', not 'update'")
+    val preLeaf = landed(s, "sqlstu", "update", "struct-field UPDATE")
+    rewrote(before, preLeaf, before.files.size / 2, "struct-field UPDATE")
     // a struct-leaf WHERE drives the row op — and PRUNES on the same
     // dotted leaf stats (resolveStructPaths binds meta.n on the
     // SQL-string seam too): only the band the first UPDATE bumped past
     // 1150 can match
-    val preLeaf = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlstu")
     s.sql("UPDATE graft_fix.sqlstu SET meta.lang = 'xx' " +
       "WHERE meta.n >= 1150")
-    val postLeaf = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlstu")
-    val leafRewritten = preLeaf.files.toSet.diff(postLeaf.files.toSet).size
-    require(leafRewritten > 0 && leafRewritten < preLeaf.files.size / 2,
-      s"struct-leaf UPDATE rewrote $leafRewritten of " +
-        s"${preLeaf.files.size} files — leaf-stats pruning did not " +
-        "hold on the SQL-string seam")
+    rewrote(preLeaf, snapshot(s, "sqlstu"), preLeaf.files.size / 2,
+      "struct-leaf UPDATE")
     s.sql("SELECT doc_id, meta.lang AS mlang, meta.n AS mn " +
       "FROM graft_fix.sqlstu ORDER BY doc_id")
   }
@@ -1705,23 +1424,10 @@ object ExtQueries {
     * as the candidate SCOPE (REQUIREd: the NMBS rewrite stays a strict
     * subset of the files). Statement 2 exercises the AGGREGATE-rooted
     * shape (group-by decorrelation) with a shifted key. DuckDB replays
-    * both as a self-join. Re-runnable for warm bench passes.
+    * both as a self-join.
     */
   def manifestSqlUpdateCorrSetQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqlucs")
-    t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("sqlucs_src")
-    s.sql("CREATE TABLE graft_fix.sqlucs " +
-      "(doc_id BIGINT, lang STRING, n_chars BIGINT)")
-    Seq(0, 100, 200, 300).foreach(lo =>
-      s.sql("INSERT INTO graft_fix.sqlucs SELECT doc_id, lang, n_chars " +
-        s"FROM sqlucs_src WHERE doc_id >= $lo AND doc_id < ${lo + 100}"))
-    val before = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlucs")
-    require(before.files.size >= 4,
-      s"fixture degenerate: ${before.files.size} files pre-update")
+    val before = banded(s, d, "sqlucs")
     // enrichment: rows 120-180 match the bounded source (+1000); rows
     // 100-120 and 180-200 are in the WHERE but match nothing → NULL;
     // everything else is out of scope and untouched
@@ -1730,14 +1436,8 @@ object ExtQueries {
             |               WHERE s.doc_id = t.doc_id
             |                 AND s.doc_id >= 120 AND s.doc_id < 180)
             |WHERE t.doc_id >= 100 AND t.doc_id < 200""".stripMargin)
-    val after = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlucs")
-    val rewritten = before.files.toSet.diff(after.files.toSet).size
-    require(rewritten > 0 && rewritten < before.files.size / 2,
-      s"correlated-SET UPDATE rewrote $rewritten of " +
-        s"${before.files.size} files — the WHERE scope did not bound " +
-        "the NMBS candidates")
-    require(after.op == "merge",
-      s"correlated-SET UPDATE landed as '${after.op}', not 'merge'")
+    rewrote(before, landed(s, "sqlucs", "merge", "correlated-SET UPDATE"),
+      before.files.size / 2, "correlated-SET UPDATE")
     // aggregate shape: per-row max over a SHIFTED key — rows >= 300
     // read the lang of doc_id - 300 (always present: 0-100)
     s.sql("""UPDATE graft_fix.sqlucs t
@@ -1755,23 +1455,10 @@ object ExtQueries {
     * rows are never matched — exactly SQL's NULL-comparison filtering —
     * and candidates stay SOURCE-KEY-PRUNED (no NMBS: REQUIREd strict
     * subset). The aggregate-rooted UPDATE shape groups per key. DuckDB
-    * replays both as self-joins. Re-runnable for warm bench passes.
+    * replays both as self-joins.
     */
   def manifestSqlWhereScalarQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqlwsc")
-    t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("sqlwsc_src")
-    s.sql("CREATE TABLE graft_fix.sqlwsc " +
-      "(doc_id BIGINT, lang STRING, n_chars BIGINT)")
-    Seq(0, 100, 200, 300).foreach(lo =>
-      s.sql("INSERT INTO graft_fix.sqlwsc SELECT doc_id, lang, n_chars " +
-        s"FROM sqlwsc_src WHERE doc_id >= $lo AND doc_id < ${lo + 100}"))
-    val before = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlwsc")
-    require(before.files.size >= 4,
-      s"fixture degenerate: ${before.files.size} files pre-delete")
+    val before = banded(s, d, "sqlwsc")
     // DELETE rows shorter than their 150-shifted witness: only doc_ids
     // with a witness (>= 150, < 250 after the shift bound) can match —
     // the 100-250 band, so candidates prune to a strict subset
@@ -1779,13 +1466,8 @@ object ExtQueries {
             |WHERE n_chars < (SELECT s.n_chars FROM sqlwsc_src s
             |                 WHERE s.doc_id - 150 = t.doc_id
             |                   AND s.doc_id < 400)""".stripMargin)
-    val after = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlwsc")
-    val rewritten = before.files.toSet.diff(after.files.toSet).size
-    require(rewritten > 0 && rewritten < before.files.size,
-      s"scalar-WHERE DELETE rewrote $rewritten of " +
-        s"${before.files.size} files — source-key pruning did not hold")
-    require(after.op == "merge",
-      s"scalar-WHERE DELETE landed as '${after.op}', not 'merge'")
+    rewrote(before, landed(s, "sqlwsc", "merge", "scalar-WHERE DELETE"),
+      before.files.size, "scalar-WHERE DELETE")
     // UPDATE under an aggregate-rooted scalar comparison: bump the
     // surviving rows at least as long as their 200-below witness
     // (grouped per correlation key; rows without one stay untouched)
@@ -1800,20 +1482,10 @@ object ExtQueries {
     * values and INSERT VALUES, oracle-replayed: they ride the command
     * as held expressions and literalize once per statement — exact
     * integer scalars (min/max/count), so DuckDB computes the identical
-    * values in its replay. Re-runnable for warm bench passes.
+    * values in its replay.
     */
   def manifestSqlMergeSubqueryQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqlmsq")
-    t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("sqlmsq_src")
-    s.sql("CREATE TABLE graft_fix.sqlmsq " +
-      "(doc_id BIGINT, lang STRING, n_chars BIGINT)")
-    Seq(0, 100, 200, 300).foreach(lo =>
-      s.sql("INSERT INTO graft_fix.sqlmsq SELECT doc_id, lang, n_chars " +
-        s"FROM sqlmsq_src WHERE doc_id >= $lo AND doc_id < ${lo + 100}"))
+    banded(s, d, "sqlmsq")
     // matched rows split on an n_chars threshold from a scalar
     // subquery; updates add another scalar; inserts carry a third
     s.sql("""MERGE INTO graft_fix.sqlmsq t
@@ -1828,8 +1500,7 @@ object ExtQueries {
             |WHEN NOT MATCHED THEN INSERT (doc_id, lang, n_chars)
             |  VALUES (s.doc_id, s.lang,
             |    (SELECT count(*) FROM sqlmsq_src WHERE doc_id < 50))""".stripMargin)
-    require(graft.ext.ManifestTable.snapshot(s, s"$wh/sqlmsq").op == "merge",
-      "subquery MERGE must land as a 'merge' commit")
+    landed(s, "sqlmsq", "merge", "subquery MERGE")
     s.sql("SELECT doc_id, lang, n_chars FROM graft_fix.sqlmsq " +
       "ORDER BY doc_id")
   }
@@ -1840,21 +1511,10 @@ object ExtQueries {
     * are unchanged — overlapping ranges raise), and an out-of-range
     * source row INSERTs through the same full-ON anti join. Full-scope
     * candidates by construction (no key stat bounds a non-equi match —
-    * the documented Delta-parity cost). Re-runnable for warm bench
-    * passes.
+    * the documented Delta-parity cost).
     */
   def manifestSqlMergeThetaQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqlmth")
-    t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("sqlmth_src")
-    s.sql("CREATE TABLE graft_fix.sqlmth " +
-      "(doc_id BIGINT, lang STRING, n_chars BIGINT)")
-    Seq(0, 100, 200, 300).foreach(lo =>
-      s.sql("INSERT INTO graft_fix.sqlmth SELECT doc_id, lang, n_chars " +
-        s"FROM sqlmth_src WHERE doc_id >= $lo AND doc_id < ${lo + 100}"))
+    banded(s, d, "sqlmth")
     s.sql("""MERGE INTO graft_fix.sqlmth t
             |USING (SELECT * FROM VALUES
             |         (150L, 250L, 1000L), (300L, 320L, 2000L),
@@ -1864,8 +1524,7 @@ object ExtQueries {
             |WHEN MATCHED THEN UPDATE SET n_chars = t.n_chars + s.bump
             |WHEN NOT MATCHED THEN INSERT (doc_id, lang, n_chars)
             |  VALUES (s.lo, 'theta', s.bump)""".stripMargin)
-    require(graft.ext.ManifestTable.snapshot(s, s"$wh/sqlmth").op == "merge",
-      "theta MERGE must land as a 'merge' commit")
+    landed(s, "sqlmth", "merge", "theta MERGE")
     s.sql("SELECT doc_id, lang, n_chars FROM graft_fix.sqlmth " +
       "ORDER BY doc_id, lang")
   }
@@ -1875,20 +1534,11 @@ object ExtQueries {
     * output with IS NOT NULL, so the anti-join lowering is exact —
     * per correlation group, rows whose doc_id the subquery does not
     * name are deleted (NOT IN over the empty set is TRUE: rows with no
-    * group at all go too). Re-runnable for warm bench passes.
+    * group at all go too).
     */
   def manifestSqlDeleteNotInQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqldni")
-    t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("sqldni_src")
-    s.sql("CREATE TABLE graft_fix.sqldni " +
+    banded(s, d, "sqldni",
       "(doc_id BIGINT NOT NULL, lang STRING, n_chars BIGINT)")
-    Seq(0, 100, 200, 300).foreach(lo =>
-      s.sql("INSERT INTO graft_fix.sqldni SELECT doc_id, lang, n_chars " +
-        s"FROM sqldni_src WHERE doc_id >= $lo AND doc_id < ${lo + 100}"))
     // keep only the doc_ids the bounded subquery names WITHIN the
     // row's own lang group (each surviving row matches itself): < 260
     // and not in the excluded 40-80 band. The lang correlation makes
@@ -1898,8 +1548,7 @@ object ExtQueries {
             |   WHERE s.doc_id IS NOT NULL AND s.lang = t.lang
             |     AND s.doc_id < 260
             |     AND NOT (s.doc_id >= 40 AND s.doc_id < 80))""".stripMargin)
-    require(graft.ext.ManifestTable.snapshot(s, s"$wh/sqldni").op == "merge",
-      "NOT IN DELETE must land through the NMBS merge path")
+    landed(s, "sqldni", "merge", "NOT IN DELETE (the NMBS merge path)")
     s.sql("SELECT doc_id, lang, n_chars FROM graft_fix.sqldni " +
       "ORDER BY doc_id")
   }
@@ -1912,21 +1561,11 @@ object ExtQueries {
     * (stats travel, so candidate pruning holds), and (c) un-shares
     * exactly the touched entries (absolute and relative names coexist,
     * REQUIREd). DuckDB replays the clone's final state as arithmetic.
-    * Re-runnable for warm bench passes.
     */
   def manifestSqlCloneQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqlcln")
+    catalog(s)
     s.sql("DROP TABLE IF EXISTS graft_fix.sqlcln2")
-    t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("sqlcln_src")
-    s.sql("CREATE TABLE graft_fix.sqlcln " +
-      "(doc_id BIGINT, lang STRING, n_chars BIGINT)")
-    Seq(0, 100, 200, 300).foreach(lo =>
-      s.sql("INSERT INTO graft_fix.sqlcln SELECT doc_id, lang, n_chars " +
-        s"FROM sqlcln_src WHERE doc_id >= $lo AND doc_id < ${lo + 100}"))
+    banded(s, d, "sqlcln")
     s.sql("CALL graft_fix.system.clone(" +
       "source => 'sqlcln', target => 'sqlcln2')")
     // ZERO data-file copies
@@ -1934,17 +1573,14 @@ object ExtQueries {
     val dd = new org.apache.hadoop.fs.Path(s"$wh/sqlcln2/data")
     require(!fs.exists(dd) || fs.listStatus(dd).isEmpty,
       "shallow clone copied data files")
-    val cloneBefore = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlcln2")
+    val cloneBefore = snapshot(s, "sqlcln2")
     // divergent banded UPDATE on the clone: pruned rewrite, source
     // untouched
     s.sql("UPDATE graft_fix.sqlcln2 SET n_chars = n_chars + 1000 " +
       "WHERE doc_id >= 100 AND doc_id < 200")
-    val cloneAfter = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlcln2")
-    val rewritten =
-      cloneBefore.files.toSet.diff(cloneAfter.files.toSet).size
-    require(rewritten > 0 && rewritten < cloneBefore.files.size / 2,
-      s"clone UPDATE rewrote $rewritten of ${cloneBefore.files.size} " +
-        "files — the copied stats did not prune")
+    val cloneAfter = snapshot(s, "sqlcln2")
+    rewrote(cloneBefore, cloneAfter, cloneBefore.files.size / 2,
+      "clone UPDATE")
     require(cloneAfter.files.exists(_.startsWith("/")) &&
       cloneAfter.files.exists(!_.startsWith("/")),
       "COW must un-share exactly the touched files")
@@ -1967,16 +1603,9 @@ object ExtQueries {
     * ([[graft.ext.ManifestTable.withGeneratedDerived]]). A ts-band
     * DELETE proves the same bound on the row-op candidate path.
     * DuckDB replays the timestamps as arithmetic over `documents`.
-    * Re-runnable for warm bench passes.
     */
   def manifestSqlGeneratedPruningQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqlgpp")
-    t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("sqlgpp_src")
-    s.sql("CREATE TABLE graft_fix.sqlgpp (doc_id BIGINT, ts TIMESTAMP, " +
+    create(s, d, "sqlgpp", "(doc_id BIGINT, ts TIMESTAMP, " +
       "n_chars BIGINT, day DATE GENERATED ALWAYS AS (CAST(ts AS DATE))) " +
       "PARTITIONED BY (day)")
     // one insert, ts = 2024-03-01 + doc_id hours (500 docs ≈ 21 days);
@@ -1991,19 +1620,14 @@ object ExtQueries {
       "FROM sqlgpp_src WHERE doc_id < 500 " +
       "DISTRIBUTE BY CAST(TIMESTAMP'2024-03-01 00:00:00' + " +
       "make_interval(0, 0, 0, 0, CAST(doc_id AS INT)) AS DATE)")
-    val snap = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlgpp")
+    val snap = snapshot(s, "sqlgpp")
     require(snap.files.size >= 10,
       s"fixture degenerate: ${snap.files.size} day-partition files")
     // SCAN: the probe filters on ts ALONE; the derived day bound must
     // prune to the ±1-day file neighborhood
-    val probe = s.sql("SELECT doc_id, n_chars FROM graft_fix.sqlgpp " +
+    val read = filesRead(s.sql("SELECT doc_id, n_chars FROM graft_fix.sqlgpp " +
       "WHERE ts >= TIMESTAMP'2024-03-05 00:00:00' " +
-      "AND ts < TIMESTAMP'2024-03-07 00:00:00'")
-    probe.collect()
-    val read = probe.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.metrics("numFiles").value
-    }
+      "AND ts < TIMESTAMP'2024-03-07 00:00:00'"))
     require(read.nonEmpty && read.sum <= 3,
       s"ts-band probe read ${read.sum} of ${snap.files.size} files — " +
         "the derived day bound did not prune the date partitions")
@@ -2011,11 +1635,7 @@ object ExtQueries {
     s.sql("DELETE FROM graft_fix.sqlgpp " +
       "WHERE ts >= TIMESTAMP'2024-03-10 00:00:00' " +
       "AND ts < TIMESTAMP'2024-03-12 00:00:00'")
-    val after = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlgpp")
-    val rewritten = snap.files.toSet.diff(after.files.toSet).size
-    require(rewritten > 0 && rewritten <= 3,
-      s"ts-band DELETE rewrote $rewritten of ${snap.files.size} files " +
-        "— the derived day bound did not prune the candidates")
+    rewrote(snap, snapshot(s, "sqlgpp"), 4, "ts-band DELETE")
     s.sql("SELECT doc_id, CAST(day AS STRING) AS day_s, n_chars " +
       "FROM graft_fix.sqlgpp ORDER BY doc_id")
   }
@@ -2027,24 +1647,11 @@ object ExtQueries {
     * prune on the renamed column (physical keys are stable; the
     * logical→physical translation happens at predicate entry). The
     * final read hash-matches a DuckDB replay under the new name.
-    * Re-runnable for warm bench passes.
     */
   def manifestSqlRenameColumnQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqlrnc")
-    t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("sqlrnc_src")
-    s.sql("CREATE TABLE graft_fix.sqlrnc " +
-      "(doc_id BIGINT, lang STRING, n_chars BIGINT)")
-    Seq(0, 100, 200, 300).foreach(lo =>
-      s.sql("INSERT INTO graft_fix.sqlrnc SELECT doc_id, lang, n_chars " +
-        s"FROM sqlrnc_src WHERE doc_id >= $lo AND doc_id < ${lo + 100}"))
-    val before = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlrnc")
+    val before = banded(s, d, "sqlrnc")
     s.sql("ALTER TABLE graft_fix.sqlrnc RENAME COLUMN doc_id TO row_id")
-    val after = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlrnc")
-    require(after.files == before.files,
+    require(snapshot(s, "sqlrnc").files == before.files,
       "RENAME COLUMN moved data files — it must be metadata-only")
     // an insert THROUGH the new name (new files bind the stable
     // physical slot)
@@ -2053,14 +1660,9 @@ object ExtQueries {
       "WHERE doc_id >= 400 AND doc_id < 500")
     // planner probe on the RENAMED column: numFiles < total proves the
     // stats (keyed by the old physical name) still prune
-    val probe = s.sql("SELECT row_id, lang, n_chars FROM graft_fix.sqlrnc " +
-      "WHERE row_id >= 100 AND row_id < 200")
-    probe.collect()
-    val read = probe.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.metrics("numFiles").value
-    }
-    val total = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlrnc").files.size
+    val read = filesRead(s.sql("SELECT row_id, lang, n_chars " +
+      "FROM graft_fix.sqlrnc WHERE row_id >= 100 AND row_id < 200"))
+    val total = snapshot(s, "sqlrnc").files.size
     require(read.nonEmpty && read.sum < total,
       s"renamed-column probe read ${read.sum} of $total files — " +
         "pruning did not survive the rename")
@@ -2075,39 +1677,22 @@ object ExtQueries {
     * OLD narrow files' stats still prune (numFiles REQUIRE: the
     * `n > 2.5e9` band provably lives only in the post-widening files —
     * the family-canonical stats contract). The final read upcasts the
-    * narrow physical files and hash-matches DuckDB. Re-runnable for
-    * warm bench passes.
+    * narrow physical files and hash-matches DuckDB.
     */
   def manifestSqlWidenTypeQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqlwdn")
-    t(s, d, "documents").select(col("doc_id"), col("n_chars"))
-      .createOrReplaceTempView("sqlwdn_src")
-    s.sql("CREATE TABLE graft_fix.sqlwdn (doc_id BIGINT, n INT)")
-    Seq(0, 100, 200, 300).foreach(lo =>
-      s.sql("INSERT INTO graft_fix.sqlwdn " +
-        "SELECT doc_id, CAST(n_chars AS INT) FROM sqlwdn_src " +
-        s"WHERE doc_id >= $lo AND doc_id < ${lo + 100}"))
-    val before = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlwdn")
+    val before = banded(s, d, "sqlwdn", "(doc_id BIGINT, n INT)",
+      "SELECT doc_id, CAST(n_chars AS INT)")
     s.sql("ALTER TABLE graft_fix.sqlwdn ALTER COLUMN n TYPE BIGINT")
-    val after = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlwdn")
-    require(after.files == before.files,
+    require(snapshot(s, "sqlwdn").files == before.files,
       "ALTER COLUMN TYPE moved data files — widening must be metadata-only")
     s.sql("INSERT INTO graft_fix.sqlwdn " +
       "SELECT doc_id, CAST(n_chars + 3000000000 AS BIGINT) FROM sqlwdn_src " +
       "WHERE doc_id >= 400 AND doc_id < 500")
     // the wide band lives only in post-widening files; the narrow
     // files' INT-era stats must prove that and prune
-    val probe = s.sql(
-      "SELECT doc_id, n FROM graft_fix.sqlwdn WHERE n > 2500000000")
-    probe.collect()
-    val read = probe.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.metrics("numFiles").value
-    }
-    val total = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlwdn").files.size
+    val read = filesRead(s.sql(
+      "SELECT doc_id, n FROM graft_fix.sqlwdn WHERE n > 2500000000"))
+    val total = snapshot(s, "sqlwdn").files.size
     require(read.nonEmpty && read.sum < total,
       s"wide-band probe read ${read.sum} of $total files — narrow-era " +
         "stats did not prune the widened predicate")
@@ -2121,24 +1706,17 @@ object ExtQueries {
     * atomicity evidence — exactly one version advanced, op `replace`,
     * and the PRE-replace contents still time-travel (Spark's default
     * DROP+CREATE fallback erases them) — then the post-replace rows,
-    * re-derived from `documents`, hash-match DuckDB. Re-runnable for
-    * warm bench passes.
+    * re-derived from `documents`, hash-match DuckDB.
     */
   def manifestSqlReplaceQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqlrpl")
-    t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("sqlrpl_src")
-    s.sql("CREATE TABLE graft_fix.sqlrpl (doc_id BIGINT, lang STRING)")
+    create(s, d, "sqlrpl", "(doc_id BIGINT, lang STRING)")
     s.sql("INSERT INTO graft_fix.sqlrpl " +
       "SELECT doc_id, lang FROM sqlrpl_src WHERE doc_id < 100")
     val vBefore = graft.ext.ManifestTable.headVersion(s, s"$wh/sqlrpl")
     s.sql("""CREATE OR REPLACE TABLE graft_fix.sqlrpl AS
             |SELECT doc_id, lang, CAST(n_chars * 2 AS BIGINT) AS n2
             |FROM sqlrpl_src WHERE doc_id >= 50 AND doc_id < 350""".stripMargin)
-    val after = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlrpl")
+    val after = snapshot(s, "sqlrpl")
     require(after.version == vBefore + 1 && after.op == "replace",
       s"REPLACE landed as ${after.op}@v${after.version} (from v$vBefore) " +
         "— not one atomic commit")
@@ -2156,27 +1734,14 @@ object ExtQueries {
     * REQUIREs pin each pass's observable effect (packing reduced the
     * file count, expiry dropped log entries, vacuum collected the
     * orphaned bytes) so a hash match certifies the maintained table,
-    * not a lucky read. Re-runnable for warm bench passes.
+    * not a lucky read.
     */
   def manifestSqlMaintenanceQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqlmnt")
-    t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("sqlmnt_src")
-    s.sql("CREATE TABLE graft_fix.sqlmnt " +
-      "(doc_id BIGINT, lang STRING, n_chars BIGINT)")
-    // banded inserts give the lifecycle a parallelism-invariant >= 4
-    // file, 4-commit starting log (a single insert's file count depends
-    // on the session's task count — local[4] in graft.Explain); the
-    // open top band is fine here, no require pins its row count
-    Seq("doc_id < 100", "doc_id >= 100 AND doc_id < 220",
-        "doc_id >= 220 AND doc_id < 350", "doc_id >= 350").foreach(p =>
-      s.sql("INSERT INTO graft_fix.sqlmnt " +
-        s"SELECT doc_id, lang, n_chars FROM sqlmnt_src WHERE $p"))
-    require(graft.ext.ManifestTable.snapshot(s, s"$wh/sqlmnt").files.size >= 4,
-      "fixture degenerate: banded inserts left < 4 files")
+    // a 4-commit starting log over every document: the open top band is
+    // fine here, no require pins its row count
+    banded(s, d, "sqlmnt", bands = Seq("doc_id < 100",
+      "doc_id >= 100 AND doc_id < 220", "doc_id >= 220 AND doc_id < 350",
+      "doc_id >= 350"))
     // clustered full compact: doc_id-ranged files. The output count is
     // a function of total bytes vs target (parallelism-proof only as
     // >= 2: ~500 tiny rows never fit one 4 KiB bin)
@@ -2209,20 +1774,12 @@ object ExtQueries {
     * exactly the snapshot's live files and `history` ends in the insert
     * commit, then DuckDB certifies the per-partition row counts the
     * `partitions` face claims without opening one data file.
-    * Re-runnable for warm bench passes.
     */
   def manifestSqlMetaQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqlmeta")
-    t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("sqlmeta_src")
-    s.sql("CREATE TABLE graft_fix.sqlmeta " +
-      "(doc_id BIGINT, lang STRING, n_chars BIGINT) PARTITIONED BY (lang)")
+    create(s, d, "sqlmeta", s"$DocSchema PARTITIONED BY (lang)")
     s.sql("INSERT INTO graft_fix.sqlmeta " +
       "SELECT doc_id, lang, n_chars FROM sqlmeta_src")
-    val snap = graft.ext.ManifestTable.snapshot(s, s"$wh/sqlmeta")
+    val snap = snapshot(s, "sqlmeta")
     val files = s.sql("SELECT file FROM graft_fix.sqlmeta.files")
       .collect().map(_.getString(0)).toSet
     require(files == snap.files.toSet,
@@ -2233,12 +1790,11 @@ object ExtQueries {
     require(lastOp == "append", s"history face ends in '$lastOp'")
     // column COMMENT: a metadata-only commit that DESCRIBE surfaces
     // (zero files move) — the SQL face of setColumnComment
-    val filesBefore = graft.ext.ManifestTable
-      .snapshot(s, s"$wh/sqlmeta").files.toSet
+    val filesBefore = snapshot(s, "sqlmeta").files.toSet
     s.sql("ALTER TABLE graft_fix.sqlmeta ALTER COLUMN n_chars " +
       "COMMENT 'character count'")
-    require(graft.ext.ManifestTable.snapshot(s, s"$wh/sqlmeta")
-      .files.toSet == filesBefore, "COMMENT moved data files")
+    require(snapshot(s, "sqlmeta").files.toSet == filesBefore,
+      "COMMENT moved data files")
     val described = s.sql("DESCRIBE TABLE graft_fix.sqlmeta").collect()
       .collectFirst { case r if r.getString(0) == "n_chars" =>
         r.getString(2) }
@@ -2256,37 +1812,17 @@ object ExtQueries {
     * passing through. The collected feed (inserts + update pre/post
     * images) replays in DuckDB. A sidecar-less UPDATE would FAIL the
     * stream, so a hash match certifies the whole property→DML→feed
-    * chain. Re-runnable for warm bench passes.
+    * chain.
     */
   def manifestTableStreamQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqlstrm")
-    t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("sqlstrm_src")
-    s.sql("CREATE TABLE graft_fix.sqlstrm " +
-      "(doc_id BIGINT, lang STRING, n_chars BIGINT) " +
-      "TBLPROPERTIES ('graft.enableChangeFeed' = 'true')")
+    create(s, d, "sqlstrm",
+      s"$DocSchema TBLPROPERTIES ('graft.enableChangeFeed' = 'true')")
     s.sql("INSERT INTO graft_fix.sqlstrm " +
       "SELECT doc_id, lang, n_chars FROM sqlstrm_src WHERE doc_id < 300")
     s.sql("UPDATE graft_fix.sqlstrm SET n_chars = n_chars + 1000 " +
       "WHERE doc_id % 5 = 0")
-    val sink = "mt_sqlstrm_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = s.readStream.option("readChangeFeed", "true")
-      .table("graft_fix.sqlstrm")
-      .writeStream.format("memory").queryName(sink)
-      .outputMode("append").start()
-    val rows = try {
-      q.processAllAvailable()
-      s.table(sink).collect().toSeq
-    } finally { q.stop(); s.catalog.dropTempView(sink) }
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(rows.asJava,
-      new org.apache.spark.sql.types.StructType()
-        .add("doc_id", "long").add("lang", "string").add("n_chars", "long")
-        .add("_change_type", "string").add("commit_version", "long"))
+    drained(s, s.readStream.option("readChangeFeed", "true")
+      .table("graft_fix.sqlstrm"), cdfSchema)
       .select(col("doc_id"), col("lang"), col("n_chars"),
         col("_change_type"))
       .orderBy(col("_change_type"), col("doc_id"))
@@ -2299,17 +1835,9 @@ object ExtQueries {
     * vacuum keeps its files. The returned frame is the tagged read
     * AFTER both maintenance passes and a later overwrite of the live
     * table; DuckDB certifies it is byte-exact the pre-tag state.
-    * Re-runnable for warm bench passes.
     */
   def manifestSqlTagQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    s.sql("DROP TABLE IF EXISTS graft_fix.sqltag")
-    t(s, d, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("sqltag_src")
-    s.sql("CREATE TABLE graft_fix.sqltag " +
-      "(doc_id BIGINT, lang STRING, n_chars BIGINT)")
+    create(s, d, "sqltag")
     s.sql("INSERT INTO graft_fix.sqltag " +
       "SELECT doc_id, lang, n_chars FROM sqltag_src WHERE doc_id < 250")
     val tagged = s.sql("CALL graft_fix.system.create_tag(" +
@@ -2360,11 +1888,7 @@ object ExtQueries {
     require(dvd.nonEmpty, "fixture degenerate: no outstanding DVs")
     val clean = snap.files.size - dvd.size
     val df = graft.ext.ManifestTable.scan(s, root).where("doc_id >= 150")
-    df.collect()
-    val read = df.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.metrics("numFiles").value
-    }.sum
+    val read = filesRead(df).sum
     require(read < clean,
       s"DV-aware scan read $read of $clean clean files — no pruning")
     df.orderBy("doc_id")
@@ -2745,6 +2269,31 @@ object ExtQueries {
       .orderBy("doc_id")
   }
 
+  /** [[manifestCdfQ]]'s five-version fold, built fresh at `root`. */
+  private def buildCdfFixture(s: SparkSession, d: String,
+                              root: String): Unit = {
+    freshRoot(s, root)
+    val docs = t(s, d, "documents")
+      .select(col("doc_id"), col("lang"), col("n_chars"))
+    graft.ext.ManifestTable.append(docs, root, "docs")           // v1
+    graft.ext.ManifestTable.compact(s, root,
+      targetFileBytes = 4L * 1024, clusterBy = Seq("doc_id"))    // v2
+    require(graft.ext.ManifestTable.deleteWhere(s, root,
+      "doc_id >= 100 AND doc_id < 150", "d0", cdc = true))       // v3
+    require(graft.ext.ManifestTable.updateWhere(s, root, "lang = 'de'",
+      Map("n_chars" -> "n_chars + 7"), "u0", cdc = true))        // v4
+    val src = docs.filter(col("doc_id") >= 200 && col("doc_id") < 220)
+      .withColumn("n_chars", col("n_chars") + 1000)
+      .unionByName(docs.filter(col("doc_id") % 31 === 0)
+        .withColumn("doc_id", col("doc_id") + 1000000))
+    require(graft.ext.ManifestTable.merge(src, root, Seq("doc_id"),
+      "m0", cdc = true))                                         // v5
+  }
+
+  private val cdfSchema = new StructType()
+    .add("doc_id", "long").add("lang", "string").add("n_chars", "long")
+    .add("_change_type", "string").add("commit_version", "long")
+
   /** The FULL CHANGE DATA FEED, oracle-replayed: a five-version fold —
     * append, clustered compaction, CDC delete of a doc_id band, CDC
     * update of the `de` rows, CDC merge (band of updates + re-keyed
@@ -2758,22 +2307,8 @@ object ExtQueries {
     * the table's row-level history — the CDC contract itself.
     */
   def manifestCdfQ(s: SparkSession, d: String): DataFrame = {
-    val root = freshRoot(s, "/tmp/graft_fix/manifest_cdf")
-    val docs = t(s, d, "documents")
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    graft.ext.ManifestTable.append(docs, root, "docs")           // v1
-    graft.ext.ManifestTable.compact(s, root,
-      targetFileBytes = 4L * 1024, clusterBy = Seq("doc_id"))    // v2
-    require(graft.ext.ManifestTable.deleteWhere(s, root,
-      "doc_id >= 100 AND doc_id < 150", "d0", cdc = true))       // v3
-    require(graft.ext.ManifestTable.updateWhere(s, root, "lang = 'de'",
-      Map("n_chars" -> "n_chars + 7"), "u0", cdc = true))        // v4
-    val src = docs.filter(col("doc_id") >= 200 && col("doc_id") < 220)
-      .withColumn("n_chars", col("n_chars") + 1000)
-      .unionByName(docs.filter(col("doc_id") % 31 === 0)
-        .withColumn("doc_id", col("doc_id") + 1000000))
-    require(graft.ext.ManifestTable.merge(src, root, Seq("doc_id"),
-      "m0", cdc = true))                                         // v5
+    val root = "/tmp/graft_fix/manifest_cdf"
+    buildCdfFixture(s, d, root)
     graft.ext.ManifestTable.changesBetween(s, root, 0L, 5L)
       .orderBy("commit_version", "_change_type", "doc_id")
   }
@@ -2786,28 +2321,12 @@ object ExtQueries {
     * consumption paths (batch API, stream, catalog name) — a hash match
     * certifies the option-driven read IS the feed, column-for-column
     * (`SELECT *` expands over the CDC schema, which is why the rewrite
-    * must happen at resolution). Re-runnable for warm bench passes.
+    * must happen at resolution).
     */
   def manifestTableCdfBatchQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
-    val root = freshRoot(s, s"$wh/cdfb")
-    val docs = t(s, d, "documents")
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    graft.ext.ManifestTable.append(docs, root, "docs")           // v1
-    graft.ext.ManifestTable.compact(s, root,
-      targetFileBytes = 4L * 1024, clusterBy = Seq("doc_id"))    // v2
-    require(graft.ext.ManifestTable.deleteWhere(s, root,
-      "doc_id >= 100 AND doc_id < 150", "d0", cdc = true))       // v3
-    require(graft.ext.ManifestTable.updateWhere(s, root, "lang = 'de'",
-      Map("n_chars" -> "n_chars + 7"), "u0", cdc = true))        // v4
-    val src = docs.filter(col("doc_id") >= 200 && col("doc_id") < 220)
-      .withColumn("n_chars", col("n_chars") + 1000)
-      .unionByName(docs.filter(col("doc_id") % 31 === 0)
-        .withColumn("doc_id", col("doc_id") + 1000000))
-    require(graft.ext.ManifestTable.merge(src, root, Seq("doc_id"),
-      "m0", cdc = true))                                         // v5
+    catalog(s)
+    val root = s"$wh/cdfb"
+    buildCdfFixture(s, d, root)
     s.read.option("readChangeFeed", "true").table("graft_fix.cdfb")
       .orderBy("commit_version", "_change_type", "doc_id")
   }
@@ -2824,37 +2343,10 @@ object ExtQueries {
     * dropped across the row ops.
     */
   def manifestCdfStreamReplayQ(s: SparkSession, d: String): DataFrame = {
-    val root = freshRoot(s, "/tmp/graft_fix/manifest_cdf_stream")
-    val docs = t(s, d, "documents")
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    graft.ext.ManifestTable.append(docs, root, "docs")           // v1
-    graft.ext.ManifestTable.compact(s, root,
-      targetFileBytes = 4L * 1024, clusterBy = Seq("doc_id"))    // v2
-    require(graft.ext.ManifestTable.deleteWhere(s, root,
-      "doc_id >= 100 AND doc_id < 150", "d0", cdc = true))       // v3
-    require(graft.ext.ManifestTable.updateWhere(s, root, "lang = 'de'",
-      Map("n_chars" -> "n_chars + 7"), "u0", cdc = true))        // v4
-    val src = docs.filter(col("doc_id") >= 200 && col("doc_id") < 220)
-      .withColumn("n_chars", col("n_chars") + 1000)
-      .unionByName(docs.filter(col("doc_id") % 31 === 0)
-        .withColumn("doc_id", col("doc_id") + 1000000))
-    require(graft.ext.ManifestTable.merge(src, root, Seq("doc_id"),
-      "m0", cdc = true))                                         // v5
-    val sink = "mt_cdf_replay_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = s.readStream.format("graft-manifest")
-      .option("readChangeFeed", "true").load(root)
-      .writeStream.format("memory").queryName(sink)
-      .outputMode("append").start()
-    val rows = try {
-      q.processAllAvailable()
-      s.table(sink).collect().toSeq
-    } finally { q.stop(); s.catalog.dropTempView(sink) }
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(rows.asJava,
-      new org.apache.spark.sql.types.StructType()
-        .add("doc_id", "long").add("lang", "string").add("n_chars", "long")
-        .add("_change_type", "string").add("commit_version", "long"))
+    val root = "/tmp/graft_fix/manifest_cdf_stream"
+    buildCdfFixture(s, d, root)
+    drained(s, s.readStream.format("graft-manifest")
+      .option("readChangeFeed", "true").load(root), cdfSchema)
       .orderBy("commit_version", "_change_type", "doc_id")
   }
 
@@ -2914,21 +2406,8 @@ object ExtQueries {
   def manifestCdfDvStreamReplayQ(s: SparkSession, d: String): DataFrame = {
     val root = "/tmp/graft_fix/manifest_cdf_dv_stream"
     buildCdfDvFixture(s, d, root)
-    val sink = "mt_cdf_dv_replay_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = s.readStream.format("graft-manifest")
-      .option("readChangeFeed", "true").load(root)
-      .writeStream.format("memory").queryName(sink)
-      .outputMode("append").start()
-    val rows = try {
-      q.processAllAvailable()
-      s.table(sink).collect().toSeq
-    } finally { q.stop(); s.catalog.dropTempView(sink) }
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(rows.asJava,
-      new org.apache.spark.sql.types.StructType()
-        .add("doc_id", "long").add("lang", "string").add("n_chars", "long")
-        .add("_change_type", "string").add("commit_version", "long"))
+    drained(s, s.readStream.format("graft-manifest")
+      .option("readChangeFeed", "true").load(root), cdfSchema)
       .orderBy("commit_version", "_change_type", "doc_id")
   }
 
@@ -2982,21 +2461,8 @@ object ExtQueries {
   def manifestRestoreCdfStreamQ(s: SparkSession, d: String): DataFrame = {
     val root = "/tmp/graft_fix/manifest_restore_cdf_stream"
     buildRestoreCdfFixture(s, d, root)
-    val sink = "mt_restore_cdf_replay_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = s.readStream.format("graft-manifest")
-      .option("readChangeFeed", "true").load(root)
-      .writeStream.format("memory").queryName(sink)
-      .outputMode("append").start()
-    val rows = try {
-      q.processAllAvailable()
-      s.table(sink).collect().toSeq
-    } finally { q.stop(); s.catalog.dropTempView(sink) }
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(rows.asJava,
-      new org.apache.spark.sql.types.StructType()
-        .add("doc_id", "long").add("lang", "string").add("n_chars", "long")
-        .add("_change_type", "string").add("commit_version", "long"))
+    drained(s, s.readStream.format("graft-manifest")
+      .option("readChangeFeed", "true").load(root), cdfSchema)
       .orderBy("commit_version", "_change_type", "doc_id")
   }
 
@@ -3114,12 +2580,10 @@ object ExtQueries {
     * DECLARED layout partitioned every streamed file (writer passes no
     * partitionBy — the table's recorded layout is the authority). The
     * final rows are read back with plain SQL over the same name and
-    * hash-match the source in DuckDB. Re-runnable for warm bench passes.
+    * hash-match the source in DuckDB.
     */
   def manifestTableStreamSinkReplayQ(s: SparkSession, d: String): DataFrame = {
-    val wh = "/tmp/graft_fix/wh"
-    s.conf.set("spark.sql.catalog.graft_fix", "graft.ext.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_fix.warehouse", wh)
+    catalog(s)
     val src = "/tmp/graft_fix/strmsink_src"
     val ckpt = "/tmp/graft_fix/strmsink_ckpt"
     val dst = s"$wh/strmsink"
@@ -3137,7 +2601,7 @@ object ExtQueries {
       .option("checkpointLocation", ckpt)
       .outputMode("append").toTable("graft_fix.strmsink")
     try q.processAllAvailable() finally q.stop()
-    val snap = graft.ext.ManifestTable.snapshot(s, dst)
+    val snap = snapshot(s, "strmsink")
     require(snap.batchIds.intersect(
       Set("stream-0", "stream-1", "stream-2")).size == 3,
       s"expected one manifest commit per micro-batch, got ${snap.batchIds}")
@@ -3170,19 +2634,8 @@ object ExtQueries {
     graft.ext.ManifestTable.append(b(1), root, "b1") // v2
     graft.ext.ManifestTable.compact(s, root)         // v3: pure rewrite
     graft.ext.ManifestTable.append(b(2), root, "b2") // v4
-    val sink = "mt_replay_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = s.readStream.format("graft-manifest")
-      .option("sinceVersion", "1").load(root)
-      .writeStream.format("memory").queryName(sink)
-      .outputMode("append").start()
-    val rows = try {
-      q.processAllAvailable()
-      s.table(sink).collect().toSeq
-    } finally { q.stop(); s.catalog.dropTempView(sink) }
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(rows.asJava,
-      new org.apache.spark.sql.types.StructType()
+    drained(s, s.readStream.format("graft-manifest")
+      .option("sinceVersion", "1").load(root), new StructType()
         .add("doc_id", "long").add("lang", "string").add("n_chars", "long"))
       .orderBy("doc_id")
   }
@@ -3241,11 +2694,7 @@ object ExtQueries {
     require(deFiles > 0 && deFiles < snap.files.size,
       s"fixture degenerate: $deFiles de files of ${snap.files.size}")
     val df = graft.ext.ManifestTable.scan(s, root).where("lang = 'de'")
-    df.collect()
-    val read = df.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.metrics("numFiles").value
-    }.sum
+    val read = filesRead(df).sum
     require(read == deFiles,
       s"partition read touched $read files across the evolution; " +
         s"pruning promised $deFiles")

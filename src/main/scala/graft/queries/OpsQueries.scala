@@ -22,19 +22,12 @@ import graft.sources.{CsvIO, JsonlIO}
   * under /tmp and read back inside the query.
   */
 object OpsQueries {
+  import Fixtures.{freshRoot, fsOf}
 
   private def t(s: SparkSession, d: String, name: String) = Tables.load(s, d, name)
 
   /** Deterministic per-doc content fixture: the doc's {id: text} JSON. */
   private def docJson = to_json(map(col("doc_id").cast("string"), col("text")))
-
-  private def cleanDir(path: String): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.delete(f))
-    }
-  }
 
   // ------------------------------------------------------------ S series
 
@@ -43,7 +36,7 @@ object OpsQueries {
     */
   def s3ResponseRoundtrip(s: SparkSession, d: String): DataFrame = {
     val out = "/tmp/graft_fix/s3_responses"
-    cleanDir(out)
+    freshRoot(s, out)
     val batched = t(s, d, "documents")
       .groupBy(customId(col("doc_id") % 20 + 1).as("custom_id"))
       // to_json renders long map keys as JSON strings, matching the real
@@ -70,7 +63,7 @@ object OpsQueries {
     */
   def s4RequestRoundtrip(s: SparkSession, d: String): DataFrame = {
     val out = "/tmp/graft_fix/s4_requests"
-    cleanDir(out)
+    freshRoot(s, out)
     val assigned = t(s, d, "documents").select(
       col("doc_id").cast("long").as("pos"),
       col("doc_id").cast("string").as("description_id"),
@@ -88,7 +81,7 @@ object OpsQueries {
     */
   def s8RepairedRoundtrip(s: SparkSession, d: String): DataFrame = {
     val out = "/tmp/graft_fix/s8_repaired"
-    cleanDir(out)
+    freshRoot(s, out)
     val truncated = t(s, d, "documents").select(
       customId(col("doc_id") + 1).as("custom_id"),
       lit(200).as("status_code"),
@@ -124,8 +117,7 @@ object OpsQueries {
   private val docFolderFiles = Seq("even.csv", "odd.csv")
   private def writeDocFolder(s: SparkSession, d: String, root: String): Unit =
     synchronized {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(root), s.sparkContext.hadoopConfiguration)
+      val fs = fsOf(s, root)
       if (docFolderBuilt.get(root).contains(d) &&
           docFolderFiles.forall(f =>
             fs.exists(new org.apache.hadoop.fs.Path(s"$root/$f")))) return
@@ -134,9 +126,7 @@ object OpsQueries {
     }
 
   private def writeDocFolderUncached(s: SparkSession, d: String, root: String): Unit = {
-    cleanDir(root)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
+    val fs = fsOf(s, freshRoot(s, root))
     val docs = t(s, d, "documents").select(
       col("doc_id").cast("string").as("description_id"),
       col("text").as("english_sentence"),
@@ -182,7 +172,7 @@ object OpsQueries {
     */
   def s9TrackingAppend(s: SparkSession, d: String): DataFrame = {
     val out = "/tmp/graft_fix/s9_tracking"
-    cleanDir(out)
+    freshRoot(s, out)
     val recs = t(s, d, "events").filter(col("event_id") < 200).select(
       concat(lit("b"), col("user_id")).as("batch_id"),
       concat(lit("in_"), col("user_id"), lit(".csv")).as("input_file"),
@@ -306,7 +296,7 @@ object OpsQueries {
   private def j7Fixture(s: SparkSession, d: String): Unit = synchronized {
     val root = "/tmp/graft_fix/j7_buckets"
     if (j7Built == d && s.catalog.tableExists("j7_cust")) return
-    cleanDir(root)
+    freshRoot(s, root)
     graft.ext.Bucketing.writeBucketed(
       t(s, d, "customer").select(col("c_custkey"), col("c_mktsegment")),
       "j7_cust", s"$root/cust", "c_custkey")
