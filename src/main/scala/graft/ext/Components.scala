@@ -84,9 +84,10 @@ object Components {
       edges.select(col(aCol).cast("long").as("x"), col(bCol).cast("long").as("y")),
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     // ONE bounded collect answers both "does it fit?" and "what is it?"
-    // (6 jobs on the benchmark's 2000-doc micro-batch: the collect plus
-    // the AQE stages of the verify join that produces the edges, which
-    // run as cachedBatch plans it). The fallback's checkpoint below
+    // (5 jobs on the benchmark's 2000-doc micro-batch, folded on one
+    // partition: the collect plus the AQE stages of the verify join
+    // that produces the edges, which run as cachedBatch plans it, none
+    // of them a shuffle). The fallback's checkpoint below
     // reads the cache, and it also keeps the sym union from re-running
     // the edge plan on its second leg.
     val fast =

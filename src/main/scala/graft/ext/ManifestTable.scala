@@ -576,11 +576,8 @@ object ManifestTable extends ManifestLog with ManifestRowOps with ManifestFeeds
     * with no committed files yet raises — callers gate on
     * [[snapshot]].files.nonEmpty or supply their own empty frame.
     */
-  def read(spark: SparkSession, dir: String): DataFrame = {
-    val s = snapshot(spark, dir)
-    require(s.files.nonEmpty, s"ManifestTable at $dir has no committed data")
-    readFiles(spark, dir, s, s.files)
-  }
+  def read(spark: SparkSession, dir: String): DataFrame =
+    readAt(spark, dir, snapshot(spark, dir), None)._1
 
   /** The layout an append must stage with: an existing table's declared
     * partition columns always win (a conflicting `partitionBy` request
@@ -1283,47 +1280,18 @@ object ManifestTable extends ManifestLog with ManifestRowOps with ManifestFeeds
     * be preserved exactly).
     *
     * One exception: an unpartitioned write whose input is already
-    * MEASURED small ([[measuredSmall]]) is staged as `coalesce(1)` —
-    * the same single file the rebalance would size it to, without the
-    * shuffle-map job that only measures it again (a fold's corpus and
-    * index appends, which read its built caches).
+    * MEASURED small ([[graft.core.Measured.small]]) is staged as
+    * `coalesce(1)` — the same single file the rebalance would size it
+    * to, without the shuffle-map job that only measures it again (a
+    * fold's corpus and index appends, which read its built caches).
     */
   private def rebalanced(df: DataFrame, partCols: Seq[String],
                          sized: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.col
     if (!rebalanceOn(df) || sized || callerSized(df.queryExecution.logical)) df
     else if (partCols.nonEmpty) df.hint("rebalance", partCols.map(col): _*)
-    else if (measuredSmall(df)) df.coalesce(1)
+    else if (graft.core.Measured.small(df)) df.coalesce(1)
     else df.hint("rebalance")
-  }
-
-  /** True when `df` reads only BUILT caches or local relations through
-    * Projects, Filters and left semi/anti joins — operators that never
-    * add rows — and the plan's size statistic is at most
-    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`: a built cache
-    * reports the measured size of its cached batches, so the frame is
-    * known to fit one advisory-sized file before anything runs. An
-    * unbuilt cache or a scan has only an estimate, and an operator that
-    * can add rows (a Generate, a join, a union) an estimate of its
-    * output; both keep the rebalance that measures at runtime.
-    */
-  private def measuredSmall(df: DataFrame): Boolean = {
-    import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
-    import org.apache.spark.sql.catalyst.plans.logical._
-    import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    def rowBounded(plan: LogicalPlan): Boolean = plan match {
-      case m: InMemoryRelation => m.cacheBuilder.isCachedColumnBuffersLoaded
-      case _: LocalRelation => true
-      case p: Project => rowBounded(p.child)
-      case f: Filter => rowBounded(f.child)
-      case j: Join if j.joinType == LeftSemi || j.joinType == LeftAnti =>
-        rowBounded(j.left) && rowBounded(j.right)
-      case _ => false
-    }
-    val plan = df.queryExecution.optimizedPlan
-    rowBounded(plan) && plan.stats.sizeInBytes <=
-      df.sparkSession.sessionState.conf.getConf(
-        org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
   }
 
   /** The optimized-write gate: the `graft.write.rebalance` kill switch
@@ -2181,15 +2149,26 @@ object ManifestTable extends ManifestLog with ManifestRowOps with ManifestFeeds
     // are immutable, so commit-time stats and in-file blooms prune a
     // time-travel read exactly as they prune the head
     val s = asOf.fold(snapshot(spark, dir))(snapshotAt(spark, dir, _))
+    readAt(spark, dir, s, Some(predicateSql))._1
+  }
+
+  /** The rows of snapshot `s` — those [[readWhere]] keeps for
+    * `predicateSql`, or all of them ([[read]]) — and the data files the
+    * read opens, whose recorded sizes (`s.sizes`) measure it.
+    */
+  private[graft] def readAt(spark: SparkSession, dir: String, s: Snapshot,
+                            predicateSql: Option[String])
+  : (DataFrame, Seq[String]) = {
     require(s.files.nonEmpty, s"ManifestTable at $dir has no committed data")
-    val kept = keptFiles(spark, dir, s, predicateSql)
-    if (kept.isEmpty)
-      // keep the schema, scan nothing: the optimizer folds `false` to an
-      // empty relation before any file is opened
-      readFiles(spark, dir, s, s.files)
-        .where(predicateSql)
-        .where(org.apache.spark.sql.functions.lit(false))
-    else readFiles(spark, dir, s, kept).where(predicateSql)
+    predicateSql.fold((readFiles(spark, dir, s, s.files), s.files)) { p =>
+      val kept = keptFiles(spark, dir, s, p)
+      if (kept.isEmpty)
+        // keep the schema, scan nothing: the optimizer folds `false` to
+        // an empty relation before any file is opened
+        (readFiles(spark, dir, s, s.files).where(p)
+          .where(org.apache.spark.sql.functions.lit(false)), Nil)
+      else (readFiles(spark, dir, s, kept).where(p), kept)
+    }
   }
 
   /** The table's COMMIT HISTORY as a DataFrame — one row per manifest

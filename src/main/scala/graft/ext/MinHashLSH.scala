@@ -349,10 +349,12 @@ object MinHashLSH {
     * (cached, output-scale) colliding-bucket frame; logs a WARN with the
     * dropped bucket/member counts when anything was discarded, stays
     * silent otherwise. In [[nearDupPairs]] it is that frame's FIRST
-    * action, so it also pays the band-row pass and the bucket shuffle
-    * that build the cache — 5 jobs in the benchmark's fold on a 2000-doc
+    * action, so it also pays the band-row pass and the bucket aggregate
+    * that build the cache — 4 jobs in the benchmark's fold on a 2000-doc
     * micro-batch, where it is also the first action on the fold's
-    * survivors and fills their cache.
+    * survivors and fills their cache. That batch measures small, so the
+    * fold runs it on one partition and the aggregate shuffles nothing
+    * ([[graft.core.Measured]]).
     * Swap in a custom sink to persist the audit frame
     * (`_.write.parquet(...)`) or to throw on any drop.
     */

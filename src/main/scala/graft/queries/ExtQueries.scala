@@ -1870,7 +1870,8 @@ object ExtQueries {
     * [[graft.ext.ManifestFileIndex]] branch, DV'd files anti-joined —
     * instead of refusing until compaction. The REQUIREs pin that the
     * vectors really were outstanding at read time and that the clean
-    * branch still PRUNED on manifest stats (numFiles strictly below the
+    * branch still PRUNED on manifest stats (its numFiles at most the
+    * clean files whose doc_id range reaches the filter, and below the
     * clean-file count): the one-point-delete-kills-planner-pruning
     * cliff is gone. The oracle replays delete + filter in DuckDB.
     */
@@ -1879,8 +1880,10 @@ object ExtQueries {
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     graft.ext.ManifestTable.append(docs, root, "docs")
+    // 1 KB files: several clean files on each side of the filter, so
+    // the pruning below is observable at every scale factor
     graft.ext.ManifestTable.compact(s, root,
-      targetFileBytes = 4L * 1024, clusterBy = Seq("doc_id"))
+      targetFileBytes = 1024, clusterBy = Seq("doc_id"))
     require(graft.ext.ManifestTable.deleteWhereDV(s, root,
       "doc_id >= 100 AND doc_id < 220", "d0"), "deleteWhereDV did not commit")
     val snap = graft.ext.ManifestTable.snapshot(s, root)
@@ -1888,9 +1891,18 @@ object ExtQueries {
     require(dvd.nonEmpty, "fixture degenerate: no outstanding DVs")
     val clean = snap.files.size - dvd.size
     val df = graft.ext.ManifestTable.scan(s, root).where("doc_id >= 150")
-    val read = filesRead(df).sum
-    require(read < clean,
-      s"DV-aware scan read $read of $clean clean files — no pruning")
+    // the clean branch is the scan through the manifest's file index
+    val reads = filesRead(df,
+      _.relation.location.isInstanceOf[graft.ext.ManifestFileIndex])
+    require(reads.nonEmpty, "the clean branch planned no ManifestFileIndex scan")
+    // it may open only the clean files whose doc_id range reaches 150
+    val reach = snap.files.filterNot(dvd.contains).count(f =>
+      snap.stats.get(f).flatMap(_.cols.get("doc_id")).flatMap(_.max)
+        .forall(_.toLong >= 150))
+    val read = reads.sum
+    require(read <= reach && read < clean,
+      s"DV-aware scan read $read of $clean clean files, $reach of which " +
+        "can hold doc_id >= 150 — no pruning")
     df.orderBy("doc_id")
   }
 

@@ -122,12 +122,20 @@ private[queries] object Fixtures {
   }
 
   /** Runs `df`, then reads the `numFiles` metric of every file scan in
-    * its executed plan: the files the scan really opened.
+    * its executed plan that `scan` selects (all of them by default),
+    * inside adaptive query stages too: the files the scan really opened.
     */
-  def filesRead(df: DataFrame): Seq[Long] = {
+  def filesRead(df: DataFrame,
+                scan: FileSourceScanExec => Boolean = _ => true): Seq[Long] = {
     df.collect()
-    df.queryExecution.executedPlan.collect {
-      case f: FileSourceScanExec => f.metrics("numFiles").value
+    Adaptive.collect(df.queryExecution.executedPlan) {
+      case f: FileSourceScanExec if scan(f) => f.metrics("numFiles").value
     }
   }
+
+  /** Plan traversal that descends into adaptive plans and their query
+    * stages, where a plain `collect` stops at `AdaptiveSparkPlanExec`.
+    */
+  private object Adaptive
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 }

@@ -89,11 +89,26 @@ private[graft] object BloomSidecar {
         .fold(rows)(rows.filter)
       graft.core.BoundedCollect.distinct(hot, keyCol, PointProbeMaxKeys) match {
         case Some(keys) if keys.isEmpty => None
-        case Some(keys) => Some(graft.ext.ManifestTable.readWhere(spark,
-          seg, graft.ext.ManifestTable.inPredicate(keyCol, keys.toSeq)))
-        case None => Some(graft.ext.ManifestTable.read(spark, seg))
+        case keys => Some(indexRead(spark, seg, snap, rows, keys.map(k =>
+          graft.ext.ManifestTable.inPredicate(keyCol, k.toSeq))))
       }
     }
+  }
+
+  /** The index rows at `snap` that `pred` keeps (all of them when None),
+    * on one partition when both sides of the probe are measured small:
+    * `rows`, which the probe's collect has just filled when it is a
+    * cache, and the files the read opens, by their recorded sizes. The
+    * one-partition fold then joins the index with no exchange.
+    */
+  private def indexRead(spark: SparkSession, seg: String,
+                        snap: graft.ext.ManifestTable.Snapshot, rows: DataFrame,
+                        pred: Option[String]): DataFrame = {
+    val (index, files) = graft.ext.ManifestTable.readAt(spark, seg, snap, pred)
+    val small = files.forall(snap.sizes.contains) &&
+      files.map(snap.sizes).sum <= graft.core.Measured.advisory(spark) &&
+      graft.core.Measured.small(rows)
+    if (small) index.coalesce(1) else index
   }
 
   /** Index maintenance shared by [[Ingest.compactIndex]] and

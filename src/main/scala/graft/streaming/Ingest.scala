@@ -58,9 +58,11 @@ object Ingest {
     * PRE-scrub text (callers write `drop("fp")` and index `fp`). One
     * cache serves the whole fold: the stats, corpus and near-dup stages
     * read it without `fp`, the exact index append reads `fp` alone. The
-    * dedup'd+fingerprinted batch is cached too, so the probe's bounded
-    * collect and the anti-join share ONE dropDuplicates shuffle; the
-    * caller's [[graft.core.Caches.scoped]] frees both.
+    * fingerprinted batch is cached too: the probe's bounded collect
+    * fills it, then the batch-local dropDuplicates and the anti-join
+    * read it — on one partition, with no shuffle, when the batch or
+    * the filled cache measures small ([[graft.core.Measured]]). The
+    * caller's [[graft.core.Caches.scoped]] frees both caches.
     *
     * The index keys ARRIVAL content, so fingerprints are taken BEFORE
     * the scrub: the corpus stores scrubbed text, and md5(scrubbed)
@@ -77,11 +79,16 @@ object Ingest {
     // a null fp (null text) never matches, so left_anti keeps it; the
     // quality filter drops it either way
     val local = graft.core.Caches.persist(
-      batch.dropDuplicates(Seq(textCol)).withColumn("fp", md5(col(textCol))))
+      graft.core.Measured.onePartition(batch).withColumn("fp", md5(col(textCol))))
     // every row is anti-joined: routing only picks which index rows
-    // the probe reads (none, the bloom-positive fingerprints', or all)
-    val deduped = BloomSidecar.probe(spark, indexDir, local, "fp")
-      .fold(local)(idx => local.join(idx, Seq("fp"), "left_anti"))
+    // the probe reads (none, the bloom-positive fingerprints', or all).
+    // The probe's collect fills `local`, so the batch-local dedup after
+    // it reads a measured cache: one partition when that measures small
+    val index = BloomSidecar.probe(spark, indexDir, local, "fp")
+    val unique = graft.core.Measured.onePartition(local)
+      .dropDuplicates(Seq(textCol))
+    val deduped =
+      index.fold(unique)(idx => unique.join(idx, Seq("fp"), "left_anti"))
     graft.core.Caches.persist(
       QualityFilter.withQualityAudit(deduped, textCol)
         .filter(col("keep"))

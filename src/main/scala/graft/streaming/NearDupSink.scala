@@ -95,8 +95,8 @@ object NearDupSink {
       "NearDupSink.ingestBatchCommitted")
     graft.core.Caches.scoped {
       val within = graft.core.Caches.persist(
-        graft.ext.Components.nearDupKeep(batch, idCol, textCol, threshold,
-          shingleFn = shingleFn))
+        graft.ext.Components.nearDupKeep(graft.core.Measured.onePartition(batch),
+          idCol, textCol, threshold, shingleFn = shingleFn))
       val rows = graft.core.Caches.persist(StreamNearDup.buildMinHashIndex(
         within, idCol, textCol, numHashes, bands, shingleFn))
       commitTail(within, rows, corpusDir, indexDir, batchId, idCol,
@@ -137,13 +137,14 @@ object NearDupSink {
     graft.core.Ids.requireNumericId(batch, idCol,
       "NearDupSink.ingestBatchEmbedCommitted")
     graft.core.Caches.scoped {
-      val pairs = graft.ext.Similarity.embedNearDup(batch, idCol, vecCol,
+      val one = graft.core.Measured.onePartition(batch)
+      val pairs = graft.ext.Similarity.embedNearDup(one, idCol, vecCol,
         minCos, bits, dims, tables)
       val drop = graft.ext.Components.components(pairs, "id_a", "id_b")
         .filter(col("rep") =!= col("id"))
         .select(col("id").as(idCol))
       val within = graft.core.Caches.persist(
-        batch.join(drop, Seq(idCol), "left_anti"))
+        one.join(drop, Seq(idCol), "left_anti"))
       // one bucket pass over the batch, reused by gate + probe + segment
       // append — same single-pass layout as [[ingestBatchCommitted]]
       val rows = graft.core.Caches.persist(
@@ -178,8 +179,9 @@ object NearDupSink {
     val kept = BloomSidecar.probe(within.sparkSession, indexDir, rows, keyCol)
       .fold(within) { index =>
         // `hits` is at most one id per batch row: broadcast it, or the
-        // planner picks a sort-merge join and AQE shuffles `within` by
-        // id before turning the join into a broadcast anyway. The hint
+        // planner picks a sort-merge join that shuffles `within` by id
+        // (a cache's scan reports no partitioning, even when one
+        // partition built it) and AQE turns it into a broadcast. The hint
         // holds whatever the batch size, so it assumes a micro-batch:
         // 8 bytes per batch row go through the driver to every executor
         // (a 1M-row batch ships about 8 MB, plus the hash table), a

@@ -1,14 +1,22 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import graft.core.Measured
 import graft.ext.ManifestTable
 import graft.streaming.Ingest
 
 /** The Spark-job budget of one warm micro-batch fold
   * ([[Ingest.ingestBatchFullCommitted]] with stats): every job the fold
   * starts is a fixed driver cost, so the count is pinned exactly and a
-  * change that adds one has to say why.
+  * change that adds one has to say why. A batch measured under the
+  * advisory partition size folds on one partition
+  * ([[graft.core.Measured]]); one over it keeps the distributed plan, so
+  * the gate is pinned from both sides.
   */
 class FoldJobBudgetSpec extends SparkSpec {
 
@@ -41,9 +49,21 @@ class FoldJobBudgetSpec extends SparkSpec {
       StructType(Seq(StructField("id", LongType), StructField("text", StringType),
         StructField("lang", StringType))))
 
-  test("a warm fold with stats runs 29 Spark jobs") {
+  /** Two folds into fresh directories with the advisory partition size
+    * at `advisory`: the first builds both indexes, the second — the one
+    * counted — carries exact copies and near-duplicates of the first
+    * fold's documents, quality failures, a PII share, within-batch
+    * near-duplicate pairs and fresh documents, read from parquet files
+    * when `fromFiles` (as a stream's micro-batch is not local rows).
+    * Asserts the second batch measures `small` (a file read measures
+    * only once the fold has cached it, so never up front). Returns the
+    * second fold's jobs and the `Exchange` nodes its SQL executions
+    * planned.
+    */
+  private def warmFold(advisory: String, small: Boolean,
+                       fromFiles: Boolean = false): (JobCount.Jobs, Int) = {
     val confs = Seq("spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64MB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisory,
       "spark.sql.autoBroadcastJoinThreshold" -> "10MB",
       "graft.write.rebalance" -> "true",
       "graft.cc.driverMaxEdges" -> "200000")
@@ -53,23 +73,37 @@ class FoldJobBudgetSpec extends SparkSpec {
       val root = java.nio.file.Files.createTempDirectory("graft-fold-jobs").toString
       val Seq(corpus, exact, near, stats) =
         Seq("corpus", "exact", "near", "stats").map(d => s"$root/$d")
-      def fold(docs: Seq[(Long, String)], id: String) =
-        Ingest.ingestBatchFullCommitted(frame(docs), corpus, exact, near, id,
+      def fold(batch: DataFrame, id: String) =
+        Ingest.ingestBatchFullCommitted(batch, corpus, exact, near, id,
           statsDir = Some(stats))
-      // the first fold builds both indexes
-      assert(fold((0L until 200L).map(i => (i, text(i))), "b0"))
-      // the second: exact copies and near-duplicates of the first fold's
-      // documents, quality failures, a PII share, within-batch
-      // near-duplicate pairs and fresh documents
-      val second =
+      assert(fold(frame((0L until 200L).map(i => (i, text(i)))), "b0"))
+      val second = frame(
         (0L until 20L).map(i => (1000L + i, text(i))) ++
           (20L until 40L).map(i => (1000L + i, mutate(text(i), 3))) ++
           (40L until 60L).map(i => (1000L + i, s"too short $i")) ++
           (60L until 80L).map(i => (1000L + i, s"${text(i + 5000)} mail ann$i@mail.io")) ++
           (80L until 100L).flatMap(i => Seq((1000L + i, text(i + 6000)),
             (2000L + i, mutate(text(i + 6000), 5)))) ++
-          (100L until 200L).map(i => (1000L + i, text(i + 7000)))
-      val (committed, jobs) = JobCount.during(fold(second, "b1"))
+          (100L until 200L).map(i => (1000L + i, text(i + 7000))))
+      val batch = if (!fromFiles) second else {
+        second.write.parquet(s"$root/batch")
+        spark.read.parquet(s"$root/batch")
+      }
+      assert(Measured.small(batch) === (small && !fromFiles))
+      val exchanges = new AtomicInteger()
+      val listener = new SparkListener {
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case s: SparkListenerSQLExecutionStart =>
+            def count(p: SparkPlanInfo): Int =
+              (if (p.nodeName == "Exchange") 1 else 0) + p.children.map(count).sum
+            exchanges.addAndGet(count(s.sparkPlanInfo))
+          case _ => ()
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val (committed, jobs) =
+        try JobCount.during(fold(batch, "b1"))
+        finally spark.sparkContext.removeSparkListener(listener)
       assert(committed)
       // copies and short documents are gone, the e-mail addresses
       // scrubbed, fresh documents kept; LSH may miss a near-duplicate,
@@ -83,10 +117,38 @@ class FoldJobBudgetSpec extends SparkSpec {
         keptOf(1100L until 1200L) === 100)
       assert((1060L until 1080L).forall(kept(_).endsWith("<EMAIL>")))
       assert(keptOf(1020L until 1040L) < 10 && keptOf(2080L until 2100L) < 10)
-      assert(jobs.count === 29, jobs)
+      (jobs, exchanges.get)
     } finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** The one-partition fold's jobs by call: 29 on the distributed plan
+    * (3, 6, 6, 4, 6, 1, 2, 1 in this order).
+    */
+  private val OnePartitionSplit = "exact probe 1, MinHashLSH 4, Components 5, " +
+    "near-dup probe 4, stats append 4, corpus append 1, near-dup index " +
+    "append 2, exact index append 1"
+
+  test("a warm fold with stats runs 22 Spark jobs") {
+    val (jobs, _) = warmFold("64MB", small = true)
+    assert(jobs.count === 22, s"$OnePartitionSplit; $jobs")
+  }
+
+  test("a warm fold over a file-read batch runs 22 Spark jobs") {
+    // the batch measures small once the exact probe has cached it
+    val (jobs, _) = warmFold("64MB", small = true, fromFiles = true)
+    assert(jobs.count === 22, s"$OnePartitionSplit; $jobs")
+  }
+
+  test("a batch over the advisory size keeps the distributed plan") {
+    // 40k is under the second batch's measured bytes. At this size the
+    // distributed plan runs 30 jobs (29 at 64MB: one more write
+    // rebalances) and plans 18 Exchange nodes, as without the
+    // one-partition rule
+    val (jobs, exchanges) = warmFold("40k", small = false)
+    assert(jobs.count === 30, jobs)
+    assert(exchanges >= 1, s"$exchanges Exchange nodes planned")
   }
 }
