@@ -96,18 +96,19 @@ private[graft] object BloomSidecar {
   }
 
   /** The index rows at `snap` that `pred` keeps (all of them when None),
-    * on one partition when both sides of the probe are measured small:
-    * `rows`, which the probe's collect has just filled when it is a
-    * cache, and the files the read opens, by their recorded sizes. The
-    * one-partition fold then joins the index with no exchange.
+    * on one partition when both sides of the probe are measured small
+    * ([[graft.core.Measured.oneTask]]): `rows`, which the probe's
+    * collect has just filled when it is a cache, and the files the read
+    * opens, by their recorded sizes. The one-partition fold then joins
+    * the index with no exchange.
     */
   private def indexRead(spark: SparkSession, seg: String,
                         snap: graft.ext.ManifestTable.Snapshot, rows: DataFrame,
                         pred: Option[String]): DataFrame = {
     val (index, files) = graft.ext.ManifestTable.readAt(spark, seg, snap, pred)
     val small = files.forall(snap.sizes.contains) &&
-      files.map(snap.sizes).sum <= graft.core.Measured.advisory(spark) &&
-      graft.core.Measured.small(rows)
+      files.map(snap.sizes).sum <= graft.core.Measured.oneTaskBytes(spark) &&
+      graft.core.Measured.oneTask(rows)
     if (small) index.coalesce(1) else index
   }
 

@@ -58,11 +58,13 @@ object Ingest {
     * PRE-scrub text (callers write `drop("fp")` and index `fp`). One
     * cache serves the whole fold: the stats, corpus and near-dup stages
     * read it without `fp`, the exact index append reads `fp` alone. The
-    * fingerprinted batch is cached too: the probe's bounded collect
-    * fills it, then the batch-local dropDuplicates and the anti-join
-    * read it — on one partition, with no shuffle, when the batch or
-    * the filled cache measures small ([[graft.core.Measured]]). The
-    * caller's [[graft.core.Caches.scoped]] frees both caches.
+    * fingerprinted batch is cached too, so the probe's bounded collect
+    * and the anti-join share one read of it. A batch measured small
+    * ([[graft.core.Measured.oneTask]]) is cached whole on one partition
+    * and dedup'd after the collect, with no shuffle; any other batch is
+    * dedup'd before the cache, and reads it on one partition only if the
+    * filled cache measures small. The caller's
+    * [[graft.core.Caches.scoped]] frees both caches.
     *
     * The index keys ARRIVAL content, so fingerprints are taken BEFORE
     * the scrub: the corpus stores scrubbed text, and md5(scrubbed)
@@ -78,15 +80,18 @@ object Ingest {
     val spark = batch.sparkSession
     // a null fp (null text) never matches, so left_anti keeps it; the
     // quality filter drops it either way
+    val small = graft.core.Measured.oneTask(batch)
     val local = graft.core.Caches.persist(
-      graft.core.Measured.onePartition(batch).withColumn("fp", md5(col(textCol))))
+      (if (small) batch.coalesce(1) else batch.dropDuplicates(Seq(textCol)))
+        .withColumn("fp", md5(col(textCol))))
     // every row is anti-joined: routing only picks which index rows
     // the probe reads (none, the bloom-positive fingerprints', or all).
-    // The probe's collect fills `local`, so the batch-local dedup after
-    // it reads a measured cache: one partition when that measures small
+    // The probe's collect fills `local`, so what reads it after is
+    // planned over a measured cache
     val index = BloomSidecar.probe(spark, indexDir, local, "fp")
-    val unique = graft.core.Measured.onePartition(local)
-      .dropDuplicates(Seq(textCol))
+    val unique =
+      if (small) local.coalesce(1).dropDuplicates(Seq(textCol))
+      else graft.core.Measured.onePartition(local)
     val deduped =
       index.fold(unique)(idx => unique.join(idx, Seq("fp"), "left_anti"))
     graft.core.Caches.persist(

@@ -14,9 +14,10 @@ import graft.streaming.Ingest
   * ([[Ingest.ingestBatchFullCommitted]] with stats): every job the fold
   * starts is a fixed driver cost, so the count is pinned exactly and a
   * change that adds one has to say why. A batch measured under the
-  * advisory partition size folds on one partition
-  * ([[graft.core.Measured]]); one over it keeps the distributed plan, so
-  * the gate is pinned from both sides.
+  * largest shuffle adaptive coalescing puts in one partition (1 MB by
+  * default) folds on one partition ([[graft.core.Measured.oneTask]]);
+  * one over it keeps the distributed plan, so the gate is pinned from
+  * both sides.
   */
 class FoldJobBudgetSpec extends SparkSpec {
 
@@ -49,21 +50,22 @@ class FoldJobBudgetSpec extends SparkSpec {
       StructType(Seq(StructField("id", LongType), StructField("text", StringType),
         StructField("lang", StringType))))
 
-  /** Two folds into fresh directories with the advisory partition size
-    * at `advisory`: the first builds both indexes, the second — the one
-    * counted — carries exact copies and near-duplicates of the first
-    * fold's documents, quality failures, a PII share, within-batch
-    * near-duplicate pairs and fresh documents, read from parquet files
-    * when `fromFiles` (as a stream's micro-batch is not local rows).
+  /** Two folds into fresh directories with adaptive coalescing's
+    * minimum partition size at `minPartition`: the first builds both
+    * indexes, the second — the one counted — carries exact copies and
+    * near-duplicates of the first fold's documents, quality failures, a
+    * PII share, within-batch near-duplicate pairs and fresh documents,
+    * read from parquet files when `fromFiles` (as a stream's
+    * micro-batch is not local rows).
     * Asserts the second batch measures `small` (a file read measures
     * only once the fold has cached it, so never up front). Returns the
     * second fold's jobs and the `Exchange` nodes its SQL executions
     * planned.
     */
-  private def warmFold(advisory: String, small: Boolean,
+  private def warmFold(minPartition: String, small: Boolean,
                        fromFiles: Boolean = false): (JobCount.Jobs, Int) = {
     val confs = Seq("spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisory,
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> minPartition,
       "spark.sql.autoBroadcastJoinThreshold" -> "10MB",
       "graft.write.rebalance" -> "true",
       "graft.cc.driverMaxEdges" -> "200000")
@@ -89,7 +91,7 @@ class FoldJobBudgetSpec extends SparkSpec {
         second.write.parquet(s"$root/batch")
         spark.read.parquet(s"$root/batch")
       }
-      assert(Measured.small(batch) === (small && !fromFiles))
+      assert(Measured.oneTask(batch) === (small && !fromFiles))
       val exchanges = new AtomicInteger()
       val listener = new SparkListener {
         override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
@@ -132,23 +134,50 @@ class FoldJobBudgetSpec extends SparkSpec {
     "append 2, exact index append 1"
 
   test("a warm fold with stats runs 22 Spark jobs") {
-    val (jobs, _) = warmFold("64MB", small = true)
+    val (jobs, _) = warmFold("1MB", small = true)
     assert(jobs.count === 22, s"$OnePartitionSplit; $jobs")
   }
 
-  test("a warm fold over a file-read batch runs 22 Spark jobs") {
-    // the batch measures small once the exact probe has cached it
-    val (jobs, _) = warmFold("64MB", small = true, fromFiles = true)
-    assert(jobs.count === 22, s"$OnePartitionSplit; $jobs")
+  test("a warm fold over a file-read batch runs 24 Spark jobs") {
+    // not measured up front, so the batch-local dedup shuffles before
+    // the exact probe caches it (exact probe 3 jobs); the filled cache
+    // measures small, and the rest of the fold splits as above
+    val (jobs, _) = warmFold("1MB", small = true, fromFiles = true)
+    assert(jobs.count === 24, s"exact probe 3, then as $OnePartitionSplit; $jobs")
   }
 
-  test("a batch over the advisory size keeps the distributed plan") {
-    // 40k is under the second batch's measured bytes. At this size the
-    // distributed plan runs 30 jobs (29 at 64MB: one more write
-    // rebalances) and plans 18 Exchange nodes, as without the
-    // one-partition rule
+  test("the one-partition bound is the shuffle AQE coalesces into one partition") {
+    def bound(confs: (String, String)*): Long = {
+      val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try Measured.oneTaskBytes(spark)
+      finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    val aqe = "spark.sql.adaptive.enabled" -> "true"
+    val adv = "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64MB"
+    val minSize = "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1MB"
+    // parallelism first (the default): coalescing spreads anything over
+    // the minimum partition size across the cores
+    assert(bound(aqe, adv, minSize) === (1L << 20))
+    assert(bound(aqe, adv, minSize,
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false") === (64L << 20))
+    assert(bound(aqe, adv, minSize,
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+      "spark.sql.adaptive.coalescePartitions.minPartitionNum" -> "4") === (1L << 20))
+    // without coalescing every shuffle keeps its partitions: nothing fits
+    assert(bound(aqe, "spark.sql.adaptive.coalescePartitions.enabled" -> "false") === -1L)
+    assert(bound("spark.sql.adaptive.enabled" -> "false") === -1L)
+  }
+
+  test("a batch over the one-partition bound keeps the distributed plan") {
+    // 40k is under the second batch's measured bytes. The fold then
+    // plans as without the one-partition rule: 29 jobs and 17 Exchange
+    // nodes, the counts of the same fold at this conf before the rule
     val (jobs, exchanges) = warmFold("40k", small = false)
-    assert(jobs.count === 30, jobs)
-    assert(exchanges >= 1, s"$exchanges Exchange nodes planned")
+    assert(jobs.count === 29, jobs)
+    assert(exchanges === 17, s"$exchanges Exchange nodes planned")
   }
 }

@@ -9,9 +9,9 @@ import graft.streaming.{Ingest, NearDupSink, StatsSink}
 /** A fold whose batch is measured small runs on one partition; a larger
   * one keeps the distributed plan. Both plans must fold the same batches
   * into the same corpus, indexes and stats. Each case folds three
-  * batches and a replay of the first twice: at the default advisory
-  * size (one partition) and with the advisory size set below the batch
-  * (distributed).
+  * batches and a replay of the first twice: at the default coalescing
+  * minimum partition size (one partition) and with it set below the
+  * batch (distributed).
   */
 class FoldPlanEquivalenceSpec extends SparkSpec {
 
@@ -76,12 +76,12 @@ class FoldPlanEquivalenceSpec extends SparkSpec {
       StructType(Seq(StructField("id", LongType), StructField("text", StringType),
         StructField("lang", StringType))))
 
-  /** `body` with the advisory partition size below every batch here,
-    * so no batch measures small and the folds keep their distributed
-    * plans.
+  /** `body` with adaptive coalescing's minimum partition size below
+    * every batch here, so no batch measures small and the folds keep
+    * their distributed plans.
     */
   private def distributed[A](body: => A): A = {
-    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "1k")
     try body
@@ -101,7 +101,7 @@ class FoldPlanEquivalenceSpec extends SparkSpec {
   private def foldAll(small: Boolean, batches: Seq[DataFrame])(
                       fold: (DataFrame, String) => Boolean): Unit = {
     batches.zipWithIndex.foreach { case (df, b) =>
-      assert(Measured.small(df) === small)
+      assert(Measured.oneTask(df) === small)
       assert(fold(df, s"b$b"), s"b$b did not commit")
     }
     assert(!fold(batches.head, "b0"), "the replay of b0 committed again")
